@@ -268,7 +268,7 @@ def _register_roundtrip_query() -> None:
     import shutil
     import itertools
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     from kafka_stream_processing_spark.registry import register
     from kafka_stream_processing_spark.sources.tables import normalize_events
@@ -297,11 +297,11 @@ def _register_roundtrip_query() -> None:
         read the sink; production consumers read the topic directly."""
         from kafka_stream_processing_spark.streaming.unique_users import (
             _stream_chunked_source_dir,
-            scoped_state_partitions,
+            file_stream,
+            run_foreach_batch,
         )
 
         path = _stream_chunked_source_dir(sf_dir)
-        raw_schema = spark.read.parquet(path).schema
         run = next(uniq)
         base = os.path.join(
             "/tmp", "kssp_eos_roundtrip", f"{os.getpid()}_{run}"
@@ -317,20 +317,10 @@ def _register_roundtrip_query() -> None:
             row_to_kv=lambda r: (str(r["event_id"]), str(r["user_id"])),
         )
         stream = (
-            normalize_events(
-                spark.readStream.schema(raw_schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(path)
-            )
+            normalize_events(file_stream(spark, path))
             .select("event_id", "user_id")
         )
-        with scoped_state_partitions(spark):
-            q = (
-                stream.writeStream.foreachBatch(sink)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_foreach_batch(stream, sink)
         committed = FileTransactionLog.read_committed(log_dir)
         return spark.createDataFrame(
             [(int(k), int(v)) for k, v in committed],

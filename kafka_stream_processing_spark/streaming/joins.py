@@ -7,8 +7,6 @@ the watermark horizon.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,11 +28,14 @@ from kafka_stream_processing_spark.operators.text import (
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
+    _stream_chunked_source_dir,
     _stream_source_dir,
-    scoped_state_partitions,
+    file_stream,
+    fresh_run_dir,
+    publish_staged_dir,
+    run_foreach_batch,
+    run_to_memory,
 )
-
-_uniq = itertools.count()
 
 
 @register(
@@ -65,12 +66,10 @@ def stream_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataF
     forever (the same unbounded-state disease as the reference's HashSet,
     in join form).  One shuffle per side on user_id."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"ssj_{next(_uniq)}"
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+            normalize_events(file_stream(spark, path, files_per_trigger=None))
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -89,16 +88,7 @@ def stream_stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataF
         & (F.col("click_ts") <= F.col("purchase_ts")),
         "inner",
     )
-    with scoped_state_partitions(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(joined).select(
         "purchase_id",
         F.col("click_id"),
         F.col("purchase_user").alias("user_id"),
@@ -149,17 +139,11 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates would just duplicate source reads and state for a
     count the sink can compute)."""
     from kafka_stream_processing_spark.functions.exact import dec
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-        scoped_state_partitions,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_static_{next(_uniq)}"
 
     profile = (
-        normalize_events(spark.read.schema(raw_schema).parquet(path))
+        normalize_events(spark.read.parquet(path))
         .groupBy("user_id")
         .agg(F.sum(dec("value")).cast("double").alias("total_value"))
         .withColumn(
@@ -171,28 +155,14 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "tier")
     )
     stream = (
-        normalize_events(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        normalize_events(file_stream(spark, path))
         .select("event_id", F.col("user_id").alias("ev_user"))
     )
     enriched = stream.join(
         F.broadcast(profile), stream.ev_user == profile.user_id
     )
-    with scoped_state_partitions(spark):
-        q = (
-            enriched.select("tier", "event_id", "ev_user")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(enriched.select("tier", "event_id", "ev_user"))
         .groupBy("tier")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -258,12 +228,10 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     gate checks both rules.  State bounds identical to the inner
     variant."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"ssloj_{next(_uniq)}"
 
     def side(event_type: str, prefix: str) -> DataFrame:
         return (
-            normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+            normalize_events(file_stream(spark, path, files_per_trigger=None))
             .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -282,16 +250,7 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("click_ts") <= F.col("purchase_ts")),
         "left_outer",
     )
-    with scoped_state_partitions(spark):
-        query = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(joined).select(
         "purchase_id",
         "click_id",
         F.col("purchase_user").alias("user_id"),
@@ -323,9 +282,6 @@ def _stage_doc_chunks(sf_dir: str, where: str, label: str,
     d = os.path.join(
         "/tmp", "kssp_stream_src", key,
         f"{label}{n_chunks}o_{wkey}_{int(st.st_mtime_ns)}_{st.st_size}",
-    )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        publish_staged_dir,
     )
 
     def build(tmp: str) -> None:
@@ -408,8 +364,6 @@ def stream_ingest_dedup_static_corpus(spark: SparkSession, sf_dir: str) -> DataF
     (UniqueUsersCounter.java:56,63), with the dedup contract made
     explicit instead of implicit in producer retries."""
     path = _stream_doc_batch_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_ingest_dedup_{next(_uniq)}"
 
     from kafka_stream_processing_spark.sources.tables import table
 
@@ -424,26 +378,15 @@ def stream_ingest_dedup_static_corpus(spark: SparkSession, sf_dir: str) -> DataF
         .persist()
     )
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select(F.md5(F.col("text").cast("binary")).alias("h"))
         .dropDuplicates(["h"])
         .join(corpus, "h", "left_anti")
     )
     try:
-        with scoped_state_partitions(spark):
-            query = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+        sink = run_to_memory(stream)
     finally:
         corpus.unpersist()
-    sink = spark.table(name)
     checksum = (
         F.conv(F.substring(F.col("h"), 1, 15), 16, 10).cast("bigint")
         % 1000003
@@ -496,8 +439,6 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_contamination_{next(_uniq)}"
     from kafka_stream_processing_spark.session import default_parallelism
 
     # Each micro-batch is ONE staged parquet file = one scan task; the
@@ -506,9 +447,7 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateless shuffle is append-safe).  Measured at sf0.1: 16.4 s ->
     # ~2 s end-to-end for the 3-trigger run.
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .repartition(default_parallelism())
         .select("doc_id", F.split("text", " ").alias("words"))
         .select(
@@ -525,18 +464,10 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_shared") >= 1)
     )
     try:
-        with scoped_state_partitions(spark):
-            query = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+        sink = run_to_memory(stream)
     finally:
         bench_row.unpersist()
-    return spark.table(name).select("doc_id", "n_shingles", "n_shared")
+    return sink.select("doc_id", "n_shingles", "n_shared")
 
 
 @register(
@@ -618,8 +549,6 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_lm_scores_{next(_uniq)}"
     toks = F.split("text", " ")
     # OOV convention: a word missing from the deployed LM artifact makes
     # element_at return NULL — NULLs are FILTERED (not folded, which
@@ -638,9 +567,7 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_found = F.size(found)
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .repartition(default_parallelism())
         .crossJoin(F.broadcast(lm_row))
         .select(
@@ -653,18 +580,10 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     try:
-        with scoped_state_partitions(spark):
-            query = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+        sink = run_to_memory(stream)
     finally:
         lm_row.unpersist()
-    return spark.table(name)
+    return sink
 
 
 @register(
@@ -706,36 +625,10 @@ def stream_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
+    import shutil
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    import tempfile
-
-    import shutil
-    import time
-
-    key = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join("/tmp", "kssp_cdc_target", key)
-    os.makedirs(root, exist_ok=True)
-    # Bounded /tmp footprint: sweep sibling run dirs left by CRASHED
-    # past invocations (mtime > 1h).  A completed run removes its own
-    # dir entirely before returning (the returned table is
-    # localCheckpoint-ed off /tmp first), so the sweep only ever sees
-    # abandoned dirs — no live lazy reader can reference a swept path.
-    cutoff = time.time() - 3600
-    for entry in os.listdir(root):
-        p = os.path.join(root, entry)
-        try:
-            if entry.startswith("run_") and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # raced with a concurrent sweep — already gone
-    # mkdtemp, not a session counter: the counter restarts per process,
-    # and a reused path would silently resume on a stale generation.
-    base = tempfile.mkdtemp(prefix="run_", dir=root)
+    base = fresh_run_dir(sf_dir, "kssp_cdc_target")
     state = {"gen": -1}
 
     w = Window.partitionBy("user_id").orderBy(
@@ -764,18 +657,8 @@ def stream_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state["gen"] += 1
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, merge_batch)
     if state["gen"] < 0:
         shutil.rmtree(base, ignore_errors=True)
         raise RuntimeError(
@@ -932,20 +815,11 @@ def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         results.append((min_doc, nb, d, crit, d > crit))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(test_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, test_batch)
     return spark.createDataFrame(
         results,
         "chunk_min_doc_id bigint, n_batch bigint, ks_d double, "
@@ -985,12 +859,8 @@ def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_report,
     )
     from kafka_stream_processing_spark.sources.tables import table
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     acc: dict[tuple[int, int], int] = {}
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -1001,18 +871,8 @@ def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             key = (row["r"], row["b"])
             acc[key] = acc.get(key, 0) + row["c"]
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
     if not acc:
         raise RuntimeError(
             "stream_countmin_incremental: zero micro-batches delivered "
@@ -1035,10 +895,6 @@ def _stream_embeddings_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
     the source file's (mtime, size), same contract as the events
     staging."""
     import os
-
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        publish_staged_dir,
-    )
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     st = os.stat(src)
@@ -1120,15 +976,11 @@ def stream_ivf_index_maintenance(
     from kafka_stream_processing_spark.operators.similarity import ivf_cell
 
     path = _stream_embeddings_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_ivf_{next(_uniq)}"
 
     from kafka_stream_processing_spark.session import default_parallelism
 
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         # one chunk file = one input split; without the fan-out the whole
         # batch's quantizer arithmetic runs on a single core (real vector
         # ingest arrives as many files/offsets and would not need this)
@@ -1140,17 +992,8 @@ def stream_ivf_index_maintenance(
             ).alias("cell"),
         )
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(stream)
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
@@ -1262,12 +1105,8 @@ def stream_benford_digit_monitor(
     from kafka_stream_processing_spark.operators.quality_kernel import (
         CHI2_CRIT_005,
     )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -1288,18 +1127,8 @@ def stream_benford_digit_monitor(
         for d in range(1, 10):
             rows.append((int(key), d, int(got.get(d, 0))))
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
     hist_df = spark.createDataFrame(
         rows, "chunk_min_event_id bigint, digit int, n_obs bigint"
     )
@@ -1393,8 +1222,6 @@ def stream_split_leakage_incremental(
     before returning (the r07 CDC convention)."""
     import os
     import shutil
-    import tempfile
-    import time
 
     from kafka_stream_processing_spark.operators.dedup import (
         minhash_band_rows,
@@ -1404,20 +1231,7 @@ def stream_split_leakage_incremental(
     )
 
     path = _all_docs_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-
-    key = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join("/tmp", "kssp_leak_idx", key)
-    os.makedirs(root, exist_ok=True)
-    cutoff = time.time() - 3600
-    for entry in os.listdir(root):
-        p = os.path.join(root, entry)
-        try:
-            if entry.startswith("run_") and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # raced with a concurrent sweep — already gone
-    base = tempfile.mkdtemp(prefix="run_", dir=root)
+    base = fresh_run_dir(sf_dir, "kssp_leak_idx")
     pairs_dir = os.path.join(base, "pairs")
     os.makedirs(pairs_dir, exist_ok=True)
     state = {"gen": -1}
@@ -1456,18 +1270,8 @@ def stream_split_leakage_incremental(
         )
         state["gen"] += 1
 
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = file_stream(spark, path)
+    run_foreach_batch(stream, merge_batch)
     if state["gen"] < 0:
         shutil.rmtree(base, ignore_errors=True)
         raise RuntimeError(
@@ -1638,20 +1442,11 @@ def stream_mannwhitney_monitor(
         results.append((min_doc, nb, u2, z, abs(z) > MWU_Z_CRIT_005))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(test_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, test_batch)
     return spark.createDataFrame(
         results,
         "chunk_min_doc_id bigint, n_batch bigint, u2 bigint, "
@@ -1767,24 +1562,9 @@ def stream_good_turing_novelty(
     import os
     import re
     import shutil
-    import tempfile
-    import time
 
     path = _source_path or _all_docs_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-
-    key = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join("/tmp", "kssp_gt_vocab", key)
-    os.makedirs(root, exist_ok=True)
-    cutoff = time.time() - 3600
-    for entry in os.listdir(root):
-        p = os.path.join(root, entry)
-        try:
-            if entry.startswith("run_") and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # raced with a concurrent sweep — already gone
-    base = tempfile.mkdtemp(prefix="run_", dir=root)
+    base = fresh_run_dir(sf_dir, "kssp_gt_vocab")
     ordinals = sorted(
         int(m.group(1))
         for f in os.listdir(path)
@@ -1886,18 +1666,10 @@ def stream_good_turing_novelty(
             state["idx"] += 1
 
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "text")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
     shutil.rmtree(base, ignore_errors=True)
     if state["gen"] < 0:
         raise RuntimeError(
@@ -2056,20 +1828,11 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((int(key), int(r["bucket"]), int(r["cb"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     hist_b = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, bucket bigint, cb bigint"
@@ -2235,12 +1998,8 @@ def stream_ab_ztest_monitor(
     from kafka_stream_processing_spark.operators.quality_kernel import (
         Z_CRIT_005,
     )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2283,18 +2042,8 @@ def stream_ab_ztest_monitor(
             )
         )
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     cells = spark.createDataFrame(
         rows,
@@ -2437,7 +2186,6 @@ def stream_isotonic_recalibration(
     )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2465,18 +2213,10 @@ def stream_isotonic_recalibration(
             )
 
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars", "text")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     bins = spark.createDataFrame(
         rows,
@@ -2596,12 +2336,8 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_processing_spark.operators.windowed import (
         PETTITT_LN40,
     )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2622,18 +2358,8 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             xm = int(r["x"].scaleb(6))  # exact: DECIMAL(_,6) → micro int
             cells.append((ck, r["day"].isoformat(), xm))
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     from pyspark.sql import Window
 
@@ -2768,12 +2494,7 @@ def stream_markov_transition_monitor(
     verdicts per-batch final, restart loses nothing."""
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
-
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2800,18 +2521,8 @@ def stream_markov_transition_monitor(
                     (ck, r["from_type"], r["to_type"], int(r["n"]))
                 )
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     c = spark.createDataFrame(
         cells,
@@ -2886,7 +2597,6 @@ def stream_weighted_sample_merge(
     )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     reservoir: list[tuple[float, int, int]] = []  # (-key, doc_id, w)
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -2916,18 +2626,10 @@ def stream_weighted_sample_merge(
         del reservoir[ES_SAMPLE_K:]
 
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     return spark.createDataFrame(
         [(doc_id, w, -negkey) for negkey, doc_id, w in reservoir],
@@ -3004,12 +2706,8 @@ def stream_funnel_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-trigger executor work is two user-keyed aggregates
     (map-side combined); driver state is two integers per trigger —
     the A/B monitor's shape.  Nothing in the streaming state store."""
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -3039,18 +2737,8 @@ def stream_funnel_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_conv = conv.count()
         cells.append((int(mi), n_clicked, n_conv))
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     c = spark.createDataFrame(
         cells,
@@ -3161,13 +2849,9 @@ def stream_attribution_monitor(
         ATTRIB_LOOKBACK_DAYS,
     )
     from kafka_stream_processing_spark.functions.exact import dec
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
     from pyspark.sql import Window
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -3251,18 +2935,8 @@ def stream_attribution_monitor(
                 )
             )
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     return spark.createDataFrame(
         cells,
@@ -3392,20 +3066,11 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     path = _stage_doc_chunks(sf_dir, "source = 'src0'", "testdocs")
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars", "text")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     cells = spark.createDataFrame(
         rows,
@@ -3555,20 +3220,11 @@ def stream_quantile_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     hist = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, v bigint, c bigint"
@@ -3711,20 +3367,11 @@ def stream_filter_yield_monitor(
         rows.append((int(agg["k"]), int(agg["n"]), int(agg["kept"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "text")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     out = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, n_batch bigint, n_keep bigint"
@@ -3823,29 +3470,11 @@ def stream_scd2_incremental(
     import os
     import re
     import shutil
-    import tempfile
-    import time
 
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
-
     path = _source_path or _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    key = sf_dir.strip("/").replace("/", "_")
-    root = os.path.join("/tmp", "kssp_scd2_target", key)
-    os.makedirs(root, exist_ok=True)
-    cutoff = time.time() - 3600
-    for entry in os.listdir(root):
-        p = os.path.join(root, entry)
-        try:
-            if entry.startswith("run_") and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass  # raced with a concurrent sweep — already gone
-    base = tempfile.mkdtemp(prefix="run_", dir=root)
+    base = fresh_run_dir(sf_dir, "kssp_scd2_target")
     # Expected chunk ordinals, read from the staged filenames once —
     # empty chunks are never written, so the expected list (not a
     # dense 0..n-1 counter) drives the drain.
@@ -3998,18 +3627,8 @@ def stream_scd2_incremental(
             state["stashed"].discard(o)
             state["idx"] += 1
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, merge_batch)
     if state["gen"] < 0:
         shutil.rmtree(base, ignore_errors=True)
         raise RuntimeError(
@@ -4127,12 +3746,8 @@ def stream_bottomk_maintenance(
     foreachBatch."""
     from kafka_stream_processing_spark.operators.corpus import BOTTOMK_K
     from kafka_stream_processing_spark.operators.dedup import hash64
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     sketch: set[int] = set()
     seen: set[int] = set()  # exact prefix count: test-scale audit only
     rows: list[tuple[int, int, int]] = []
@@ -4170,11 +3785,7 @@ def stream_bottomk_maintenance(
         )
         rows.append((int(key), len(seen), len(sketch)))
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = normalize_events(file_stream(spark, path))
     snapshots: list[tuple[int, int, int, int | None]] = []
     state = {"i": 0}
 
@@ -4190,13 +3801,7 @@ def stream_bottomk_maintenance(
             snapshots.append((key, n_seen, k_used, h_k))
             state["i"] = len(rows)
 
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_with_snapshot)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_with_snapshot)
 
     out = spark.createDataFrame(
         snapshots,
@@ -4346,20 +3951,11 @@ def stream_l_diversity_monitor(
         )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "lang", "source", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     out = spark.createDataFrame(
         rows,
@@ -4484,20 +4080,11 @@ def stream_wasserstein_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     cur = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, v bigint, b bigint"
@@ -4679,12 +4266,8 @@ def stream_circadian_monitor(
     from kafka_stream_processing_spark.operators.quality_edf import (
         WATSON_U2_CRIT_005,
     )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     rows: list[tuple[int, int, int, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -4717,18 +4300,8 @@ def stream_circadian_monitor(
                 (int(key), int(r["v"]), int(r["ca_i"]), int(r["cb_i"]))
             )
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     from pyspark.sql import Window
 
@@ -4888,20 +4461,11 @@ def stream_repetition_monitor(
         rows.append((int(agg["k"]), int(agg["n"]), int(agg["nrep"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "text")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     out = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, n_batch bigint, n_repetitive bigint"
@@ -5007,12 +4571,8 @@ def stream_permutation_entropy_monitor(
     from kafka_stream_processing_spark.operators.windowed import (
         _PERM_ENTROPY_EXPR,
     )
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     cells: list[tuple[int, str, int]] = []
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -5033,18 +4593,8 @@ def stream_permutation_entropy_monitor(
             xm = int(r["x"].scaleb(6))  # exact: DECIMAL(_,6) → micro int
             cells.append((ck, r["day"].isoformat(), xm))
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
 
     daily = spark.createDataFrame(
         cells, "ck bigint, day string, xm bigint"
@@ -5134,12 +4684,8 @@ def stream_ams_f2_incremental(
         cm_item_col,
     )
     from kafka_stream_processing_spark.sources.tables import table
-    from kafka_stream_processing_spark.streaming.unique_users import (
-        _stream_chunked_source_dir,
-    )
 
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     acc: dict[int, int] = {}
 
     def fold_batch(batch_df, batch_id: int) -> None:
@@ -5149,18 +4695,8 @@ def stream_ams_f2_incremental(
         for row in z:
             acc[row["r"]] = acc.get(row["r"], 0) + row["zr"]
 
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    stream = normalize_events(file_stream(spark, path))
+    run_foreach_batch(stream, fold_batch)
     if not acc:
         raise RuntimeError(
             "stream_ams_f2_incremental: zero micro-batches delivered "
@@ -5282,20 +4818,11 @@ def stream_tail_es_monitor(
             rows.append((int(key), int(r["v"]), int(r["c"])))
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     hist = spark.createDataFrame(
         rows, "chunk_min_doc_id bigint, v bigint, c bigint"
@@ -5534,20 +5061,11 @@ def stream_extremal_index_monitor(
         )
 
     path = _stream_train_docs_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+        file_stream(spark, path)
         .select("doc_id", "n_chars")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
 
     sums = spark.createDataFrame(
         rows,

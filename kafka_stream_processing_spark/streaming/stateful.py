@@ -13,7 +13,6 @@ aggregate, which is what the oracle checks.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterable
 
 import pandas as pd
@@ -26,10 +25,9 @@ from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
-    scoped_state_partitions,
+    file_stream,
+    run_to_memory,
 )
-
-_uniq = itertools.count()
 
 STATE_SCHEMA = "n bigint, sum_value_micro bigint, last_us bigint"
 OUTPUT_SCHEMA = (
@@ -91,15 +89,8 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission per user must equal the batch aggregate.  State is 3 integers
     per user — bounded, checkpointed, and GC-able via timeouts at scale."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stateful_{next(_uniq)}"
-
     stream = (
-        normalize_events(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        normalize_events(file_stream(spark, path))
         .select("user_id", F.unix_micros("ts").alias("ts_us"), "value")
     )
     updated = stream.groupBy("user_id").applyInPandasWithState(
@@ -109,18 +100,9 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_state_partitions(spark):
-        query = (
-            updated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    sink = run_to_memory(updated, mode="update")
     # The memory sink holds one emission per (user, batch); the final one
     # per user (max n_events — counts are monotone) is the answer.
-    sink = spark.table(name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -232,14 +214,9 @@ def stream_frequent_pairs_stateful(
     extension reuses the same masks (Apriori downward closure prunes
     candidate triples to pairs already frequent)."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"freqpairs_{next(_uniq)}"
-
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    ).select("user_id", "event_type")
+    stream = normalize_events(file_stream(spark, path)).select(
+        "user_id", "event_type"
+    )
     updated = stream.groupBy("user_id").applyInPandasWithState(
         _update_type_mask,
         outputStructType=_PAIR_OUTPUT_SCHEMA,
@@ -247,16 +224,7 @@ def stream_frequent_pairs_stateful(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_state_partitions(spark):
-        query = (
-            updated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    sink = spark.table(name)
+    sink = run_to_memory(updated, mode="update")
     final_masks = sink.groupBy("user_id").agg(
         F.max("mask").alias("mask")
     )
@@ -383,14 +351,9 @@ def stream_frequent_triples_stateful(
     the two folds are conditional aggregates over users — no shuffle
     beyond the user-key state exchange the pairs op already pays."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"freqtriples_{next(_uniq)}"
-
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    ).select("user_id", "event_type")
+    stream = normalize_events(file_stream(spark, path)).select(
+        "user_id", "event_type"
+    )
     updated = stream.groupBy("user_id").applyInPandasWithState(
         _update_type_mask,
         outputStructType=_PAIR_OUTPUT_SCHEMA,
@@ -398,17 +361,8 @@ def stream_frequent_triples_stateful(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_state_partitions(spark):
-        query = (
-            updated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     final_masks = (
-        spark.table(name)
+        run_to_memory(updated, mode="update")
         .groupBy("user_id")
         .agg(F.max("mask").alias("mask"))
     )

@@ -22,7 +22,6 @@ same semantics with the same checkpointed per-key state contract.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Iterable
 
 import pandas as pd
@@ -35,10 +34,10 @@ from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
-    scoped_state_partitions,
+    file_stream,
+    run_foreach_batch,
+    run_to_memory,
 )
-
-_uniq = itertools.count()
 
 _K = 3
 _TOP3_STATE_SCHEMA = "a bigint, b bigint, c bigint, n bigint"
@@ -98,15 +97,8 @@ def stream_user_topk_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 micro-int values plus a monotone seen-counter used to select
     each user's final emission from the update-mode sink."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"user_topk_{next(_uniq)}"
-
     stream = (
-        normalize_events(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        normalize_events(file_stream(spark, path))
         .select("user_id", "value")
     )
     updated = stream.groupBy("user_id").applyInPandasWithState(
@@ -116,16 +108,7 @@ def stream_user_topk_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    with scoped_state_partitions(spark):
-        query = (
-            updated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    sink = spark.table(name)
+    sink = run_to_memory(updated, mode="update")
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         sink.withColumn("rn", F.row_number().over(w))
@@ -156,7 +139,6 @@ def stream_global_topk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
     at termination.  Top-k is order-insensitive to how the stream is
     chunked, which the oracle check proves."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
     # Keyed by batch_id so a replayed micro-batch (transient failure →
     # Spark re-runs the epoch) OVERWRITES its prior contribution instead
     # of double-merging — the same idempotence recipe
@@ -175,20 +157,10 @@ def stream_global_topk_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFra
         ]
 
     stream = (
-        normalize_events(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        normalize_events(file_stream(spark, path))
         .select("event_id", "user_id", "value")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(fold_batch)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+    run_foreach_batch(stream, fold_batch)
     merged = [t for rows in per_batch.values() for t in rows]
     merged.sort(key=lambda t: (-t[2], t[0]))
     return spark.createDataFrame(

@@ -25,17 +25,20 @@ trigger (no broker needed); the Kafka wiring lives in
 from __future__ import annotations
 
 import contextlib
-import itertools
 import os
+import shutil
+import tempfile
 import threading
+import time
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
-
-_run_counter = itertools.count()
 
 #: scoped_state_partitions flips a SESSION-GLOBAL conf; this lock
 #: serializes the engine's own streaming runs so a concurrently planned
@@ -53,7 +56,7 @@ _STATE_SCOPE_LOCK = threading.RLock()
 
 
 @contextlib.contextmanager
-def scoped_state_partitions(spark: SparkSession, n: int | None = None):
+def scoped_state_partitions(spark: SparkSession):
     """Run a streaming query with its own state-store parallelism.
 
     A stateful query's state partition count is `spark.sql.shuffle.
@@ -74,7 +77,7 @@ def scoped_state_partitions(spark: SparkSession, n: int | None = None):
     1.7 s.  On a cluster, size UP per expected keys instead — same
     knob, opposite direction.  Restores the session conf on exit;
     serialized via _STATE_SCOPE_LOCK (see note above)."""
-    n = n or int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
+    n = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
     key = "spark.sql.shuffle.partitions"
     with _STATE_SCOPE_LOCK:
         old = spark.conf.get(key)
@@ -83,6 +86,71 @@ def scoped_state_partitions(spark: SparkSession, n: int | None = None):
             yield
         finally:
             spark.conf.set(key, old)
+
+
+def _run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """The one way the engine runs a streaming query to completion: drain
+    every available input under the availableNow trigger inside
+    scoped_state_partitions, against a private checkpoint directory that
+    is removed afterwards whether the run succeeds or fails.  A query
+    failure surfaces from ``awaitTermination`` as the unchanged
+    StreamingQueryException."""
+    checkpoint = tempfile.mkdtemp(prefix="kssp_ckpt_")
+    try:
+        with scoped_state_partitions(spark):
+            query = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                query.awaitTermination()
+            finally:
+                query.stop()  # no-op once terminated; never orphan a run
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
+
+
+def run_to_memory(df: DataFrame, mode: str = "append") -> DataFrame:
+    """Run streaming ``df`` to completion into a memory sink and return
+    the sink's rows as a batch DataFrame.  The sink's temp view is
+    dropped before returning: the returned frame keeps the sink alive on
+    its own, and a leftover view would pin every sink row in driver
+    memory for the rest of the session."""
+    spark = df.sparkSession
+    name = f"kssp_sink_{uuid.uuid4().hex}"
+    try:
+        _run_available_now(
+            spark,
+            df.writeStream.format("memory").queryName(name).outputMode(mode),
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def run_foreach_batch(
+    df: DataFrame, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Run streaming ``df`` to completion, handing each micro-batch to
+    ``fn(batch_df, batch_id)``.  An exception raised by ``fn`` fails the
+    query and surfaces as StreamingQueryException."""
+    _run_available_now(df.sparkSession, df.writeStream.foreachBatch(fn))
+
+
+def file_stream(
+    spark: SparkSession, path: str, files_per_trigger: int | None = 1
+) -> DataFrame:
+    """Streaming parquet source over a staged directory, with the schema
+    read once from the files already there (a file stream cannot infer
+    it).  The schema is the raw one (events' ts as nanos-long); callers
+    normalize after.  ``files_per_trigger=1`` turns each staged chunk
+    file into its own micro-batch; ``None`` reads everything in one
+    trigger."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return reader.parquet(path)
 
 
 def _stream_source_dir(sf_dir: str) -> str:
@@ -111,9 +179,6 @@ def publish_staged_dir(d: str, build) -> str:
     copy; readers already streaming ``d`` never see files rewritten
     underneath them.  Shared by every chunked-source stager (events,
     redelivery, document slices in streaming/joins.py)."""
-    import shutil
-    import tempfile
-
     marker = os.path.join(d, "_STAGED")
     if os.path.exists(marker):
         return d
@@ -132,6 +197,28 @@ def publish_staged_dir(d: str, build) -> str:
         if os.path.isdir(tmp):
             shutil.rmtree(tmp, ignore_errors=True)
     return d
+
+
+def fresh_run_dir(sf_dir: str, label: str) -> str:
+    """A new private run directory under ``/tmp/<label>/<sf key>/`` for a
+    query that materializes per-batch generations on disk.  First sweeps
+    sibling ``run_*`` dirs older than an hour — left by CRASHED past runs;
+    a completed run removes its own dir before returning, so no live
+    reader can reference a swept path.  mkdtemp, not a session counter:
+    a counter restarts per process, and a reused path would silently
+    resume on a stale generation."""
+    key = sf_dir.strip("/").replace("/", "_")
+    root = os.path.join("/tmp", label, key)
+    os.makedirs(root, exist_ok=True)
+    cutoff = time.time() - 3600
+    for entry in os.listdir(root):
+        p = os.path.join(root, entry)
+        try:
+            if entry.startswith("run_") and os.path.getmtime(p) < cutoff:
+                shutil.rmtree(p, ignore_errors=True)
+        except OSError:
+            pass  # raced with a concurrent sweep — already gone
+    return tempfile.mkdtemp(prefix="run_", dir=root)
 
 
 def _stream_chunked_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
@@ -171,8 +258,6 @@ def _stream_chunked_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
     )
 
     def build(tmp: str) -> None:
-        import time
-
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -249,22 +334,10 @@ def stream_unique_users_per_minute(spark: SparkSession, sf_dir: str) -> DataFram
     Registered with the same oracle as the batch flagship — streaming and
     batch must agree exactly."""
     path = _stream_source_dir(sf_dir)
-    # Raw schema (ts as nanos-long under nanosAsLong), normalized after.
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_unique_users_{next(_run_counter)}"
-
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(file_stream(spark, path, files_per_trigger=None))
     deduped = build_windowed_dedup(stream)
-    with scoped_state_partitions(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return count_per_window(spark.table(name))
+    sink = run_to_memory(deduped)
+    return count_per_window(sink)
 
 
 @register(
@@ -310,10 +383,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator exists to demonstrate, and would not touch the dominant
     cost class."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"chained_{next(_run_counter)}"
-
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(file_stream(spark, path, files_per_trigger=None))
     per_minute = (
         stream.withWatermark("ts", "5 seconds")
         .groupBy(F.window("ts", "1 minute").alias("mw"))
@@ -327,16 +397,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n").alias("total_events"),
         )
     )
-    with scoped_state_partitions(spark):
-        query = (
-            per_hour.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(per_hour).select(
         F.col("hw.start").cast("string").alias("hour_start"),
         "peak_minute_events",
         F.col("total_events").cast("bigint").alias("total_events"),
@@ -394,29 +455,13 @@ def stream_session_windows_per_user(spark: SparkSession, sf_dir: str) -> DataFra
     has at most one open session; closed ones are evicted at watermark) —
     unlike the reference's unbounded per-window HashSet."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_sessions_{next(_run_counter)}"
-
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = normalize_events(file_stream(spark, path))
     sessions = (
         stream.withWatermark("ts", "5 seconds")
         .groupBy("user_id", F.session_window("ts", "5 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    with scoped_state_partitions(spark):
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(sessions).select(
         "user_id",
         F.unix_micros("w.start").alias("session_start_us"),
         "n_events",
@@ -447,21 +492,9 @@ def stream_unique_users_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     real Structured Streaming run — each event enters two windows'
     dedup state; same oracle as the batch sliding query."""
     path = _stream_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_sliding_{next(_run_counter)}"
-
-    stream = normalize_events(spark.readStream.schema(raw_schema).parquet(path))
+    stream = normalize_events(file_stream(spark, path, files_per_trigger=None))
     deduped = build_windowed_dedup(stream, slide="30 seconds")
-    with scoped_state_partitions(spark):
-        query = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return count_per_window(spark.table(name))
+    return count_per_window(run_to_memory(deduped))
 
 
 def _stream_redelivery_source_dir(sf_dir: str) -> str:
@@ -473,8 +506,6 @@ def _stream_redelivery_source_dir(sf_dir: str) -> str:
     d = base + "_redelivered"
 
     def build(tmp: str) -> None:
-        import shutil
-
         for name in sorted(os.listdir(base)):
             if name.startswith("chunk-"):
                 shutil.copy(os.path.join(base, name), os.path.join(tmp, name))
@@ -511,29 +542,12 @@ def stream_dedup_at_least_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the deliberate pairing: unbounded-correctness here, bounded-state
     variant proven in tests."""
     path = _stream_redelivery_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_alo_dedup_{next(_run_counter)}"
-
     stream = (
-        normalize_events(
-            spark.readStream.schema(raw_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
+        normalize_events(file_stream(spark, path))
         .select("event_id", "user_id", "event_type")
         .dropDuplicates(["event_id"])
     )
-    with scoped_state_partitions(spark):
-        query = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    sink = spark.table(name)
-    return sink.groupBy("event_type").agg(
+    return run_to_memory(stream).groupBy("event_type").agg(
         F.countDistinct("event_id").alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),
     )
@@ -668,29 +682,13 @@ def stream_watermark_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     is per-open-window counters, evicted at watermark; lateness bounds
     state, not correctness."""
     path = _stream_late_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_late_{next(_run_counter)}"
-
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = normalize_events(file_stream(spark, path))
     agg = (
         stream.withWatermark("ts", "5 seconds")
         .groupBy(F.window("ts", "1 minute").alias("w"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
     )
-    with scoped_state_partitions(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return run_to_memory(agg).select(
         F.col("w.start").cast("string").alias("window_start"), "n_events"
     )
 
@@ -745,28 +743,12 @@ def stream_update_mode_running_counts(
     key per batch — the changelog volume a Kafka-backed KTable carries)
     for zero emission latency, exactly the trade the reference made."""
     path = _stream_chunked_source_dir(sf_dir)
-    raw_schema = spark.read.parquet(path).schema
-    name = f"stream_update_counts_{next(_run_counter)}"
-
-    stream = normalize_events(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = normalize_events(file_stream(spark, path))
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    with scoped_state_partitions(spark):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(agg, mode="update")
         .groupBy("event_type")
         .agg(
             F.max("n").alias("n_events"),

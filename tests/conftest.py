@@ -37,7 +37,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("kssp-tests", cpus=8, shuffle_partitions=8)
+    spark = get_spark("kssp-tests", shuffle_partitions=8)
     yield spark
 
 

@@ -33,7 +33,8 @@ from kafka_stream_processing_spark.sources.kafka import (
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_source_dir,
-    scoped_state_partitions,
+    file_stream,
+    run_to_memory,
 )
 
 
@@ -118,9 +119,8 @@ def test_unique_users_topology_matches_registered_stream_query(spark, sf_small):
     to the reference's (ISO-8601 key, string count) wire format,
     UniqueUsersCounter.java:91-93)."""
     path = _stream_source_dir(sf_small)
-    raw_schema = spark.read.parquet(path).schema
     stream = normalize_events(
-        spark.readStream.schema(raw_schema).parquet(path)
+        file_stream(spark, path, files_per_trigger=None)
     ).select(
         F.col("ts").alias("kafka_ts"),
         F.col("user_id").cast("string").alias("uid"),
@@ -132,17 +132,9 @@ def test_unique_users_topology_matches_registered_stream_query(spark, sf_small):
     # append would withhold the stream's final, never-watermark-closed
     # window).  The single-file staging is one micro-batch, so each
     # window is emitted exactly once with its final count.
-    with scoped_state_partitions(spark):
-        q = (
-            topo.writeStream.format("memory")
-            .queryName("kafka_topo_contract")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     got = {
-        (r.key, r.value) for r in spark.table("kafka_topo_contract").collect()
+        (r.key, r.value)
+        for r in run_to_memory(topo, mode="update").collect()
     }
 
     ref = registry.all_specs()["stream_unique_users_per_minute"].fn(

@@ -7,18 +7,16 @@ scale configuration is real, not aspirational."""
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import functions as F
 
-from kafka_stream_processing_spark.sources.tables import table
+from kafka_stream_processing_spark.sources.tables import normalize_events, table
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_source_dir,
     build_windowed_dedup,
     count_per_window,
+    file_stream,
+    run_to_memory,
 )
-
-_uniq = itertools.count()
 
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -28,23 +26,13 @@ def test_flagship_streaming_on_rocksdb_state_store(spark, sf_small):
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
     try:
         path = _stream_source_dir(sf_small)
-        raw = spark.read.parquet(path).schema
-        from kafka_stream_processing_spark.sources.tables import normalize_events
-
-        stream = normalize_events(spark.readStream.schema(raw).parquet(path))
-        name = f"rocksdb_{next(_uniq)}"
-        q = (
-            build_windowed_dedup(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        stream = normalize_events(
+            file_stream(spark, path, files_per_trigger=None)
         )
-        q.awaitTermination()
+        sink = run_to_memory(build_windowed_dedup(stream))
         got = {
             r.window_start: r.unique_users
-            for r in count_per_window(spark.table(name)).collect()
+            for r in count_per_window(sink).collect()
         }
         truth = {
             r.ws: r.u

@@ -207,7 +207,8 @@ def test_stream_ingest_dedup_state_spans_micro_batches(spark, sf_small, tmp_path
     import pyarrow as pa
     import pyarrow.parquet as pq
     from kafka_stream_processing_spark.streaming.unique_users import (
-        scoped_state_partitions,
+        file_stream,
+        run_to_memory,
     )
 
     chunks = [
@@ -230,25 +231,13 @@ def test_stream_ingest_dedup_state_spans_micro_batches(spark, sf_small, tmp_path
     corpus = spark.createDataFrame(
         [("gamma delta",)], "text string"
     ).select(F.md5(F.col("text").cast("binary")).alias("h"))
-    schema = spark.read.parquet(str(src)).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+        file_stream(spark, str(src))
         .select(F.md5(F.col("text").cast("binary")).alias("h"))
         .dropDuplicates(["h"])
         .join(corpus, "h", "left_anti")
     )
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("t_ingest_dedup_probe")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    accepted = [r["h"] for r in spark.table("t_ingest_dedup_probe").collect()]
+    accepted = [r["h"] for r in run_to_memory(stream).collect()]
     # alpha-beta admitted ONCE (chunk-2 redelivery suppressed by state);
     # gamma-delta rejected by the static corpus.  Assert on the sink ROW
     # count, not a set of hashes: if dropDuplicates state failed to span

@@ -13,16 +13,21 @@ parquet files and feeding them with maxFilesPerTrigger=1.
 
 from __future__ import annotations
 
-import itertools
 import os
+import pathlib
 import shutil
+import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.sources.tables import table
-
-_uniq = itertools.count()
+from kafka_stream_processing_spark.streaming.unique_users import (
+    file_stream,
+    run_foreach_batch,
+    run_to_memory,
+)
 
 
 def _stage(spark, sf_small, base: str, interleaved: bool) -> str:
@@ -82,13 +87,7 @@ def _batch_truth(spark, sf_small) -> dict[str, int]:
 
 
 def _run_stream(spark, src_dir: str, output_mode: str, with_watermark: bool):
-    raw_schema = spark.read.parquet(src_dir).schema
-    name = f"sem_{output_mode}_{next(_uniq)}"
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    stream = file_stream(spark, src_dir)
     if with_watermark:
         stream = stream.withWatermark("ts", "5 seconds")
     if output_mode == "update":
@@ -115,16 +114,8 @@ def _run_stream(spark, src_dir: str, output_mode: str, with_watermark: bool):
         deduped = stream.select(
             F.window("ts", "1 minute").alias("w"), "user_id"
         ).dropDuplicates(["w", "user_id"])
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         return (
-            spark.table(name)
+            run_to_memory(deduped)
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("unique_users"))
             .select(F.col("w.start").cast("string").alias("window_start"), "unique_users")
@@ -173,25 +164,15 @@ def test_streaming_session_windows_match_batch_for_closed_sessions(spark, sf_sma
     from kafka_stream_processing_spark.streaming.unique_users import _stream_source_dir
 
     path = _stream_source_dir(sf_small)
-    raw = spark.read.parquet(path).schema
-    stream = normalize_events(spark.readStream.schema(raw).parquet(path))
-    name = f"sess_{next(_uniq)}"
+    stream = normalize_events(file_stream(spark, path, files_per_trigger=None))
     agg = (
         stream.withWatermark("ts", "5 seconds")
         .groupBy("user_id", F.session_window("ts", "5 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.unix_micros("w.start").alias("start_us"), "n_events")
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     streamed = {
-        (r.user_id, r.start_us): r.n_events for r in spark.table(name).collect()
+        (r.user_id, r.start_us): r.n_events for r in run_to_memory(agg).collect()
     }
 
     from kafka_stream_processing_spark import registry
@@ -240,27 +221,15 @@ def test_streaming_survives_late_data_within_watermark(spark, tmp_path):
         [3, 4],
     )
 
-    raw_schema = spark.read.parquet(src).schema
-    name = f"late_{next(_uniq)}"
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        file_stream(spark, src)
         .withWatermark("ts", "5 seconds")
         .select(F.window("ts", "1 minute").alias("w"), "user_id")
         .dropDuplicates(["w", "user_id"])
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     counts = {
         r.ws: r.c
-        for r in spark.table(name)
+        for r in run_to_memory(stream)
         .groupBy(F.col("w.start").cast("string").alias("ws"))
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
@@ -295,23 +264,74 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     write(os.path.join(src, "b.parquet"), [2, 3],
           [base + pd.Timedelta("4s"), base + pd.Timedelta("10s")])
 
-    raw_schema = spark.read.parquet(src).schema
-    name = f"dupwm_{next(_uniq)}"
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        file_stream(spark, src)
         .withWatermark("ts", "5 seconds")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table(name).select("event_id").collect()
+    rows = run_to_memory(stream).select("event_id").collect()
     ids = sorted(r.event_id for r in rows)
     assert ids == [1, 2, 3], ids  # the re-delivery of 2 was dropped
+
+
+# ------------------------------------------------ the availableNow runner
+
+
+def test_run_to_memory_leaves_no_view_and_frame_collects(
+    spark, staged_stream_dir
+):
+    """The memory sink's temp view would pin every sink row in driver
+    memory for the rest of the session; the runner drops it, and the
+    returned frame still reads the sink."""
+    before = {t.name for t in spark.catalog.listTables()}
+    sink = run_to_memory(
+        file_stream(spark, staged_stream_dir).select("event_id")
+    )
+    assert {t.name for t in spark.catalog.listTables()} == before
+    want = sorted(
+        r.event_id
+        for r in spark.read.parquet(staged_stream_dir).select("event_id").collect()
+    )
+    assert sorted(r.event_id for r in sink.collect()) == want
+
+
+def test_run_foreach_batch_failure_surfaces_and_cleans_up(
+    spark, staged_stream_dir, monkeypatch
+):
+    """A callback exception fails the query and reaches the caller as
+    StreamingQueryException; the state-partition scope still restores
+    the session conf and the run's checkpoint directory is removed."""
+    made: list[str] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        d = real_mkdtemp(*args, **kwargs)
+        made.append(d)
+        return d
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def boom(batch_df, batch_id):
+        raise ValueError("boom in batch")
+
+    with pytest.raises(StreamingQueryException, match="boom in batch"):
+        run_foreach_batch(file_stream(spark, staged_stream_dir), boom)
+    assert spark.conf.get(key) == before
+    assert made, "the runner made no checkpoint directory"
+    assert not [d for d in made if os.path.exists(d)]
+
+
+def test_package_has_one_available_now_trigger():
+    """Every availableNow run goes through the one runner in
+    streaming/unique_users.py; a second copy of the trigger means a
+    hand-written runner crept back in."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "kafka_stream_processing_spark"
+    hits = [
+        (str(p.relative_to(pkg)), n)
+        for p in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "trigger(availableNow=True)" in line
+    ]
+    assert len(hits) == 1 and hits[0][0].endswith("unique_users.py"), hits
