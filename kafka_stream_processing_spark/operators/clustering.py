@@ -7,11 +7,16 @@ for iterative graph algorithms:
 
     label(v) ← min(label(v), min over neighbors(label(u)))   until fixpoint
 
-Each iteration is one join + one aggregate; ``localCheckpoint`` truncates
-the lineage every round so the plan doesn't grow with the iteration count
-(the classic iterative-Spark failure).  Convergence is diameter-bounded —
-near-dup components are short chains, so a handful of rounds; a hard cap
-turns pathological graphs into an explicit error rather than a hang.
+Each round (hop) is one join + one aggregate over the symmetric edge list,
+which carries a self-loop per node so the aggregate also yields the node's
+previous label.  Three hops are built lazily and then truncated by one
+``localCheckpoint`` (the plan doesn't grow with the iteration count — the
+classic iterative-Spark failure); the last hop's ``changed`` flag is counted
+by the very action that materializes the checkpoint, so a group of three
+rounds costs one driver round trip instead of two per round.  Convergence
+is diameter-bounded — near-dup components are short chains, so a handful of
+rounds; a hard cap turns pathological graphs into an explicit error rather
+than a hang.
 
 Scale: the propagated state is (doc_id, label) pairs — 16 bytes/doc —
 and only documents that appear in at least one near-dup pair enter the
@@ -23,6 +28,7 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.dedup import (
@@ -34,48 +40,55 @@ from kafka_stream_processing_spark.operators.similarity import dist2_exact
 from kafka_stream_processing_spark.registry import register
 
 MAX_ITERATIONS = 15
+#: Min-label rounds per checkpoint, i.e. per Spark action.  MAX_ITERATIONS
+#: must stay a multiple of it, or the cap moves.  On the sf0.01
+#: entity-resolution pass (6 rounds) 2 hops per action cost 35 jobs, 3
+#: cost 30-31 and 4 cost 32-33; 3 was also the fastest.
+_HOPS_PER_ACTION = 3
+
+
+def _min_label_hop(sym: DataFrame, labels: DataFrame | None) -> DataFrame:
+    """One min-label round: (node, label, old).  ``sym`` holds a self-loop
+    per node, so min(label) over (a, b) already includes the node's own
+    label and the a = b row yields its previous label.  With ``labels``
+    None every node's label is its own id (the initial labelling)."""
+    if labels is None:
+        nbr = sym.withColumn("label", F.col("b"))
+    else:
+        nbr = sym.join(labels.withColumnRenamed("node", "b"), "b")
+    return nbr.groupBy(F.col("a").alias("node")).agg(
+        F.min("label").alias("label"),
+        F.min(F.when(F.col("a") == F.col("b"), F.col("label"))).alias("old"),
+    )
 
 
 def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Min-label propagation over an undirected edge list.
-    Returns (node, component) where component = min node id reachable."""
-    spark = edges.sparkSession
+    Returns (node, component) where component = min node id reachable.
+    Raises RuntimeError if labels still change in round MAX_ITERATIONS."""
+    s, d = F.col(src), F.col(dst)
+    # Both directions plus a self-loop per endpoint, from one edge scan.
+    arcs = [
+        F.struct(x.alias("a"), y.alias("b"))
+        for x, y in ((s, d), (d, s), (s, s), (d, d))
+    ]
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.inline(F.array(*arcs)))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(MAX_ITERATIONS):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
+    labels = None
+    for _ in range(MAX_ITERATIONS // _HOPS_PER_ACTION):
+        for _ in range(_HOPS_PER_ACTION):
+            labels = _min_label_hop(sym, labels)
+        labels = labels.select(
+            "node", "label", (F.col("label") < F.col("old")).alias("changed")
+        ).localCheckpoint(eager=False)
+        # This count materializes the checkpoint and is the fixpoint test:
+        # min-label is idempotent at a fixpoint, so "the group's last hop
+        # changed nothing" is the per-round check at that round.
+        changed = labels.filter("changed").count()
+        labels = labels.select("node", "label")
         if changed == 0:
             return labels
     raise RuntimeError(
@@ -116,14 +129,12 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. the canonical survivor) and the component's node count."""
     edges = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(edges, "doc_a", "doc_b")
-    sizes = comp.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(sizes, "label")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
-        )
+    return comp.select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("label"))
+        .alias("cluster_size"),
     )
 
 
@@ -226,8 +237,6 @@ def assign_nearest(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     ``vecs`` (vec_id, emb, *extras) against broadcast ``cents``
     (cluster_id, cvec) → one row per vector carrying its extras plus
     cluster_id and the exact-decimal dist2; ties to lowest cluster_id."""
-    from pyspark.sql import Window
-
     j = vecs.crossJoin(F.broadcast(cents)).withColumn(
         "dist2", dist2_exact(F.col("emb"), F.col("cvec"))
     )
@@ -679,8 +688,10 @@ def dedup_entity_resolution_parts(
     Scale: the match join is Σ_block(block²) (the blocking knob), the
     closure iterates on the EDGE LIST only (cluster diameters are small
     for edit-distance graphs, so min-label converges in a handful of
-    localCheckpoint-truncated rounds), and the final assignment is one
-    left join of the part table against the component labels — bodies
+    rounds, three per localCheckpoint, each group one Spark action that
+    also counts the convergence flag), and the final assignment is one
+    left join of the part table against the component labels plus one
+    window count per canonical key for the cluster size — bodies
     shuffle once."""
     from kafka_stream_processing_spark.operators.dedup import (
         dedup_fuzzy_blocked_names,
@@ -696,13 +707,12 @@ def dedup_entity_resolution_parts(
         "p_partkey",
         F.coalesce("canonical", "p_partkey").alias("canonical_key"),
     )
-    sizes = assigned.groupBy("canonical_key").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return assigned.join(sizes, "canonical_key").select(
+    return assigned.select(
         "p_partkey",
         "canonical_key",
-        F.col("cluster_size").cast("bigint").alias("cluster_size"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("canonical_key"))
+        .alias("cluster_size"),
         (F.col("p_partkey") == F.col("canonical_key")).alias("is_canonical"),
     )
 

@@ -3,7 +3,12 @@ already have oracle parity; these pin the algebraic properties)."""
 
 from __future__ import annotations
 
+import pytest
+
 from kafka_stream_processing_spark import registry
+from kafka_stream_processing_spark.operators.clustering import (
+    connected_components,
+)
 
 SPECS = registry.all_specs()
 
@@ -33,3 +38,71 @@ def test_components_labels_are_canonical_members(spark, sf_small):
         ids = sorted(m.doc_id for m in members)
         assert ids[0] == cid, (cid, ids[:3])
         assert {m.cluster_size for m in members} == {len(members)}
+
+
+def _path_edges(spark, n: int):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+
+
+def test_connected_components_path_at_cap_converges(spark):
+    """A 15-node path needs 14 rounds to carry label 0 to its far end and
+    a 15th to see no change: it converges exactly at MAX_ITERATIONS."""
+    rows = connected_components(_path_edges(spark, 15), "src", "dst").collect()
+    assert sorted(r.node for r in rows) == list(range(15))
+    assert {r.label for r in rows} == {0}
+
+
+def test_connected_components_path_past_cap_raises(spark):
+    """One node more and round 15 still changes a label: the cap holds."""
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_path_edges(spark, 16), "src", "dst").collect()
+
+
+def test_connected_components_matches_union_find(spark):
+    """Several components, duplicate edges, both directions, src > dst
+    and an input self-loop: labels equal a Python union-find's minimum."""
+    edges = [
+        (1, 2), (2, 1), (2, 3), (3, 2), (1, 2),  # duplicates, both ways
+        (9, 4), (7, 4), (8, 9),  # src > dst
+        (20, 20),  # self-loop only
+        (30, 31), (32, 31), (33, 32), (30, 33),  # a cycle
+        (100, 50), (50, 60), (60, 55),
+    ]
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {n: find(n) for n in parent}
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r.node: r.label
+        for r in connected_components(df, "src", "dst").collect()
+    }
+    assert got == want
+
+
+def test_connected_components_job_count_guard(spark):
+    """Rounds are grouped into one Spark action each, with the fixpoint
+    flag counted by that action: the 15-node path (15 rounds) must stay
+    well under the one-checkpoint-plus-one-check-per-round job count
+    (185 jobs on Spark 4.1 with 8 shuffle partitions)."""
+    sc = spark.sparkContext
+    edges = _path_edges(spark, 15)
+    group = "connected_components_job_count_guard"
+    sc.setJobGroup(group, group)
+    try:
+        connected_components(edges, "src", "dst").collect()
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs < 93, n_jobs
