@@ -7,8 +7,11 @@ the watermark horizon.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from kafka_stream_processing_spark.operators.corpus import (
     AMS_F2_ORACLE,
@@ -30,12 +33,111 @@ from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
     _stream_source_dir,
+    _write_chunks,
     file_stream,
     fresh_run_dir,
     publish_staged_dir,
     run_foreach_batch,
     run_to_memory,
 )
+
+
+def _per_batch_cells(
+    stream: DataFrame, key: str, cells: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Run ``stream`` to completion and fold each micro-batch to the rows
+    of ``cells(batch_df)``, every row tagged with the batch's ``min(key)``
+    as ``chunk_min_<key>``.  The tag is data-derived, so results do not
+    depend on batch order and an oracle can rebuild the same chunks
+    relationally.  Returns all batches' rows as one batch DataFrame: the
+    tag first, then the cells columns, with the cells frame's types.
+
+    One Spark action per batch: the key is observed on the batch input
+    (``DataFrame.observe``) while the cells frame is collected, so it
+    costs no job of its own.  A batch that yields no cells, or whose key
+    is null, contributes nothing.  The cells are collected to the
+    driver, so ``cells`` must fold a batch to histogram- or sketch-sized
+    output.  Avoid a global aggregate over a filtered groupBy: when the
+    filter leaves nothing it still returns a row, but the planner has
+    pruned the observed scan, and the batch fails on the missing key."""
+    tag = f"chunk_min_{key}"
+    rows: list[tuple] = []
+    schema: StructType | None = None
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal schema
+        seen = Observation()
+        frame = cells(batch_df.observe(seen, F.min(key).alias(tag)))
+        schema = schema or StructType(
+            [StructField(tag, batch_df.schema[key].dataType)]
+            + frame.schema.fields
+        )
+        got = frame.collect()
+        # Read the key only when cells exist: an empty result can let the
+        # planner drop the observed scan, and with it the observation.
+        if got and (k := seen.get[tag]) is not None:
+            rows.extend((k, *r) for r in got)
+
+    run_foreach_batch(stream, fold)
+    if schema is None:
+        raise RuntimeError("per-batch cells: the stream delivered no batch")
+    return stream.sparkSession.createDataFrame(rows, schema)
+
+
+def _daily_revenue_cells(batch_df: DataFrame) -> DataFrame:
+    """Cells ``(day, xm)``: revenue per calendar day of the batch, as
+    exact micro-unit integers (a DECIMAL(_,6) sum scaled by 10^6)."""
+    from kafka_stream_processing_spark.functions.exact import dec
+
+    return batch_df.groupBy(
+        F.date_trunc("day", "ts").cast("date").cast("string").alias("day")
+    ).agg((F.sum(dec("value")) * F.lit(10**6)).cast("bigint").alias("xm"))
+
+
+def _walk_against_src0(
+    spark: SparkSession, sf_dir: str, hist: DataFrame
+) -> DataFrame:
+    """Merge each chunk's length histogram (``chunk_min_doc_id, v, c``,
+    from _train_length_histograms) with the src0 reference histogram
+    and walk both in value order: one row per chunk and per value
+    present in either, with the reference count ``a`` and batch count
+    ``b`` (0 where absent), the running counts ``ca``/``cb`` up to and
+    including ``v``, and the chunk totals ``na``/``nb``.  All integers."""
+    from pyspark.sql import Window
+
+    from kafka_stream_processing_spark.sources.tables import table
+
+    ref = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("source") == "src0")
+        .groupBy(F.col("n_chars").alias("v"))
+        .agg(F.count(F.lit(1)).alias("a"))
+    )
+    zero = F.lit(0).cast("bigint")
+    merged = (
+        hist.select("chunk_min_doc_id", "v", zero.alias("a"),
+                    F.col("c").alias("b"))
+        .unionByName(
+            hist.select("chunk_min_doc_id").distinct().crossJoin(ref)
+            .select("chunk_min_doc_id", "v", "a", zero.alias("b"))
+        )
+        .groupBy("chunk_min_doc_id", "v")
+        .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
+    )
+    chunk = Window.partitionBy("chunk_min_doc_id")
+    upto = chunk.orderBy("v").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return merged.select(
+        "chunk_min_doc_id",
+        "v",
+        "a",
+        "b",
+        F.sum("a").over(upto).alias("ca"),
+        F.sum("b").over(upto).alias("cb"),
+        F.sum("a").over(chunk).alias("na"),
+        F.sum("b").over(chunk).alias("nb"),
+    )
 
 
 @register(
@@ -271,22 +373,17 @@ def _stage_doc_chunks(sf_dir: str, where: str, label: str,
     import os
 
     import duckdb
-    import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "documents.parquet")
     st = os.stat(src)
     key = sf_dir.strip("/").replace("/", "_")
     wkey = hashlib.md5(where.encode()).hexdigest()[:8]
-    # "o" key suffix: chunk files now carry strictly increasing mtimes
-    # (see below) — bumping the key rebuilds any pre-fix cached dirs.
     d = os.path.join(
         "/tmp", "kssp_stream_src", key,
         f"{label}{n_chunks}o_{wkey}_{int(st.st_mtime_ns)}_{st.st_size}",
     )
 
     def build(tmp: str) -> None:
-        import time
-
         t = duckdb.sql(
             f"SELECT * FROM '{src}' WHERE {where} ORDER BY doc_id"
         ).arrow()
@@ -299,18 +396,7 @@ def _stage_doc_chunks(sf_dir: str, where: str, label: str,
                 "refusing to stage an empty stream source"
             )
         step = max(1, (n + n_chunks - 1) // n_chunks)
-        # FileStreamSource picks files oldest-mtime-first (millisecond
-        # granularity): fast consecutive writes can TIE and arrive in
-        # arbitrary order — harmless for the per-batch-keyed monitors,
-        # fatal for cumulative ones (Good-Turing novelty).  Pin strictly
-        # increasing whole-second mtimes so micro-batch order IS
-        # doc_id-chunk order.
-        base = int(time.time()) - 2 * (n // step + 2)
-        for i in range(0, n, step):
-            p = os.path.join(tmp, f"chunk-{i // step}.parquet")
-            pq.write_table(t.slice(i, step), p)
-            ts = base + 2 * (i // step)
-            os.utime(p, (ts, ts))
+        _write_chunks(tmp, [t.slice(i, step) for i in range(0, n, step)])
 
     return publish_staged_dir(d, build)
 
@@ -401,6 +487,19 @@ def _stream_train_docs_source_dir(sf_dir: str) -> str:
     """The training pool: every non-benchmark document (matches the
     contamination oracles' train partition)."""
     return _stage_doc_chunks(sf_dir, "source <> 'src0'", "traindocs")
+
+
+def _train_length_histograms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``chunk_min_doc_id, v, c``: the document-length value histogram of
+    each micro-batch of the training-pool stream."""
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir))
+    return _per_batch_cells(
+        stream.select("doc_id", "n_chars"),
+        "doc_id",
+        lambda b: b.groupBy(F.col("n_chars").alias("v")).agg(
+            F.count(F.lit(1)).alias("c")
+        ),
+    )
 
 
 @register(
@@ -747,83 +846,40 @@ def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages before it pollutes the corpus.  Batches are identified by
     their min doc_id (a data-derived key), so the result is
     batch-ORDER-independent and the oracle reconstructs the same three
-    ingest slices relationally.  Per-batch KS runs on the collected
-    VALUE-DISTINCT histograms in the driver (the bounded-state argument
-    of the MG sketch and the global-top-k fold: distinct lengths are
-    histogram-sized, never corpus-sized; Python doubles are the same
-    IEEE divisions both engines execute).
+    ingest slices relationally.  The stream keeps only each batch's
+    VALUE-DISTINCT length histogram (the bounded-state argument of the
+    MG sketch and the global-top-k fold: distinct lengths are
+    histogram-sized, never corpus-sized); the per-chunk KS walk over
+    the reference ∪ batch values runs after the stream as integer
+    running counts and one IEEE division per side, the same operations
+    the oracle executes.
 
     Scale: the stream side aggregates each batch to its length
     histogram (map-side combine; one tiny collect per trigger); the
-    reference histogram is O(distinct values) broadcast state.  Nothing
-    in the streaming state store — a restart re-reads the reference,
-    verdicts are per-batch final."""
-    import bisect
-
-    from kafka_stream_processing_spark.sources.tables import table
-
+    reference histogram is O(distinct values).  Nothing in the
+    streaming state store — a restart re-reads the reference, verdicts
+    are per-batch final."""
     KS_C = 1.358
-    ref_rows = sorted(
-        (r["n_chars"], r["c"])
-        for r in table(spark, sf_dir, "documents")
-        .filter(F.col("source") == "src0")
-        .groupBy("n_chars")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
+    hist = _train_length_histograms(spark, sf_dir)
+    walk = _walk_against_src0(spark, sf_dir, hist)
+    gap = F.abs(
+        F.col("ca").cast("double") / F.col("na")
+        - F.col("cb").cast("double") / F.col("nb")
     )
-    ref_vals = [v for v, _ in ref_rows]
-    ref_cum = []
-    tot = 0
-    for _, c in ref_rows:
-        tot += c
-        ref_cum.append(tot)
-    na = tot
-
-    def ref_le(v: int) -> int:
-        i = bisect.bisect_right(ref_vals, v)
-        return ref_cum[i - 1] if i else 0
-
-    results: list[tuple[int, int, float, float, bool]] = []
-
-    def test_batch(batch_df, batch_id: int) -> None:
-        import math
-
-        hist = sorted(
-            (r["n_chars"], r["c"])
-            for r in batch_df.groupBy("n_chars")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
+    crit = F.lit(KS_C) * F.sqrt(
+        (F.col("na") + F.col("nb")).cast("double")
+        / (F.col("na") * F.col("nb")).cast("double")
+    )
+    return (
+        walk.groupBy("chunk_min_doc_id", "na", "nb")
+        .agg(F.max(gap).alias("ks_d"))
+        .select(
+            "chunk_min_doc_id",
+            F.col("nb").alias("n_batch"),
+            "ks_d",
+            crit.alias("critical_005"),
+            (F.col("ks_d") > crit).alias("drift"),
         )
-        if not hist:
-            return
-        min_doc = batch_df.agg(F.min("doc_id").alias("m")).collect()[0]["m"]
-        nb = sum(c for _, c in hist)
-        vals = sorted(set(ref_vals) | {v for v, _ in hist})
-        bvals = [v for v, _ in hist]
-        bcum = []
-        t = 0
-        for _, c in hist:
-            t += c
-            bcum.append(t)
-
-        def b_le(v: int) -> int:
-            i = bisect.bisect_right(bvals, v)
-            return bcum[i - 1] if i else 0
-
-        d = max(abs(ref_le(v) / na - b_le(v) / nb) for v in vals)
-        crit = KS_C * math.sqrt((na + nb) / (na * nb))
-        results.append((min_doc, nb, d, crit, d > crit))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
-    )
-    run_foreach_batch(stream, test_batch)
-    return spark.createDataFrame(
-        results,
-        "chunk_min_doc_id bigint, n_batch bigint, ks_d double, "
-        "critical_005 double, drift boolean",
     )
 
 
@@ -901,7 +957,7 @@ def _stream_embeddings_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
     key = sf_dir.strip("/").replace("/", "_")
     d = os.path.join(
         "/tmp", "kssp_stream_src", key,
-        f"embeddings_chunks{n_chunks}_{int(st.st_mtime_ns)}_{st.st_size}",
+        f"embeddings_chunks{n_chunks}v2_{int(st.st_mtime_ns)}_{st.st_size}",
     )
 
     def build(tmp: str) -> None:
@@ -910,14 +966,9 @@ def _stream_embeddings_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
 
         t = pq.read_table(src)
         t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
-        n = t.num_rows
-        step = (n + n_chunks - 1) // n_chunks
-        for i in range(n_chunks):
-            chunk = t.slice(i * step, step)
-            if chunk.num_rows:
-                pq.write_table(
-                    chunk, os.path.join(tmp, f"chunk-{i}.parquet")
-                )
+        step = (t.num_rows + n_chunks - 1) // n_chunks
+        chunks = [t.slice(i * step, step) for i in range(n_chunks)]
+        _write_chunks(tmp, [c for c in chunks if c.num_rows])
 
     return publish_staged_dir(d, build)
 
@@ -1091,9 +1142,9 @@ def stream_benford_digit_monitor(
     arithmetically (the stream_update_mode_running_counts
     reconstruction).
 
-    The stream side collects only the ≤9-row histogram per trigger
+    The stream side collects only the nine digit counts per trigger
     (sketch-sized driver state, the KS-monitor convention); χ² then
-    runs as ONE batch DataFrame expression over the 27 collected rows
+    runs as ONE batch DataFrame expression over the 27 collected cells
     using the exact decimal-term arithmetic the batch gate pins —
     cross-engine parity comes from the shared round-trip-stable
     DECIMAL(18,12) term convention, not from Python float re-derivation.
@@ -1101,38 +1152,39 @@ def stream_benford_digit_monitor(
     Scale: per-trigger state is the 9-cell histogram regardless of
     batch size (map-side combined); nothing enters the streaming state
     store; verdicts are per-batch final, so a restart loses no state."""
+    from pyspark.sql import Window
+
     from kafka_stream_processing_spark.operators.quality_edf import BENFORD_P
     from kafka_stream_processing_spark.operators.quality_kernel import (
         CHI2_CRIT_005,
     )
 
-    path = _stream_chunked_source_dir(sf_dir)
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("event_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        digit = F.substring(
+    digit = F.when(
+        F.col("value") >= 1,
+        F.substring(
             F.floor("value").cast("bigint").cast("string"), 1, 1
-        ).cast("int")
-        hist = (
-            batch_df.filter(F.col("value") >= 1)
-            .select(digit.alias("digit"))
-            .groupBy("digit")
-            .agg(F.count(F.lit(1)).alias("n_obs"))
-            .collect()  # <= 9 rows per trigger, by construction
-        )
-        got = {r["digit"]: r["n_obs"] for r in hist}
-        for d in range(1, 10):
-            rows.append((int(key), d, int(got.get(d, 0))))
-
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-    hist_df = spark.createDataFrame(
-        rows, "chunk_min_event_id bigint, digit int, n_obs bigint"
+        ).cast("int"),
     )
-    from pyspark.sql import Window
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
+    )
+    # One row of nine digit counts per batch (absent digits count 0),
+    # unpivoted to (digit, n_obs) after the stream.
+    per_batch = _per_batch_cells(
+        stream,
+        "event_id",
+        lambda b: b.agg(*(
+            F.count(F.when(digit == d, 1)).alias(f"d{d}")
+            for d in range(1, 10)
+        )),
+    )
+    hist_df = per_batch.select(
+        "chunk_min_event_id",
+        F.inline(F.array(*(
+            F.struct(F.lit(d).alias("digit"), F.col(f"d{d}").alias("n_obs"))
+            for d in range(1, 10)
+        ))),
+    )
 
     p_benford = F.lit(None).cast("double")
     for d, p in enumerate(BENFORD_P):
@@ -1381,10 +1433,10 @@ def stream_mannwhitney_monitor(
     src0 length distribution with exact midrank tie handling.  The
     stream side collects only the VALUE-DISTINCT batch histogram per
     trigger (the KS monitor's bounded-state argument); U₂, the tie
-    term, and the z chain run in the driver as the SAME exact-integer /
-    fixed-IEEE arithmetic the batch gate pins, and the oracle
-    reconstructs the three ingest slices relationally (chunk = doc_id
-    rank thirds, the KS monitor's convention).
+    term, and the z chain run per chunk after the stream as the SAME
+    exact-integer / fixed-IEEE arithmetic the batch gate pins, and the
+    oracle reconstructs the three ingest slices relationally (chunk =
+    doc_id rank thirds, the KS monitor's convention).
 
     Scale: per-trigger state is one value-histogram + the broadcast
     reference histogram (both distinct-values-sized); verdicts are
@@ -1393,64 +1445,35 @@ def stream_mannwhitney_monitor(
     from kafka_stream_processing_spark.operators.quality_rank import (
         MWU_Z_CRIT_005,
     )
-    from kafka_stream_processing_spark.sources.tables import table
 
-    ref = {
-        r["v"]: r["a"]
-        for r in table(spark, sf_dir, "documents")
-        .filter(F.col("source") == "src0")
-        .groupBy(F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).alias("a"))
-        .collect()
-    }
-    na = sum(ref.values())
-    results: list[tuple[int, int, int, float, bool]] = []
-
-    def test_batch(batch_df, batch_id: int) -> None:
-        import math
-
-        hist = {
-            r["v"]: r["b"]
-            for r in batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("b"))
-            .collect()
-        }
-        if not hist:
-            return
-        min_doc = batch_df.agg(F.min("doc_id").alias("m")).collect()[0]["m"]
-        nb = sum(hist.values())
-        r2 = 0
-        tie = 0
-        sb = 0
-        for v in sorted(set(ref) | set(hist)):
-            a = ref.get(v, 0)
-            b = hist.get(v, 0)
-            m = a + b
-            r2 += b * (2 * sb + m + 1)
-            tie += m * m * m - m
-            sb += m
-        u2 = r2 - nb * (nb + 1)
-        mu2 = na * nb
-        n = na + nb
-        z = (float(u2) - float(mu2)) / (
-            2.0
-            * math.sqrt(
-                (float(na) * nb / 12.0)
-                * ((n + 1.0) - float(tie) / (float(n) * (n - 1.0)))
+    hist = _train_length_histograms(spark, sf_dir)
+    walk = _walk_against_src0(spark, sf_dir, hist)
+    m = F.col("a") + F.col("b")
+    below = F.col("ca") + F.col("cb") - m  # ref+batch rows below v
+    stats = walk.groupBy("chunk_min_doc_id", "na", "nb").agg(
+        F.sum(F.col("b") * (2 * below + m + 1)).alias("r2"),
+        F.sum(m * m * m - m).alias("tie"),
+    )
+    na, nb = F.col("na"), F.col("nb")
+    n = na + nb
+    u2 = F.col("r2") - nb * (nb + 1)
+    z = (u2.cast("double") - (na * nb).cast("double")) / (
+        F.lit(2.0)
+        * F.sqrt(
+            (na.cast("double") * nb / 12.0)
+            * (
+                (n + 1.0)
+                - F.col("tie").cast("double")
+                / (n.cast("double") * (n - 1.0))
             )
         )
-        results.append((min_doc, nb, u2, z, abs(z) > MWU_Z_CRIT_005))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
     )
-    run_foreach_batch(stream, test_batch)
-    return spark.createDataFrame(
-        results,
-        "chunk_min_doc_id bigint, n_batch bigint, u2 bigint, "
-        "z double, drift boolean",
+    return stats.select(
+        "chunk_min_doc_id",
+        nb.alias("n_batch"),
+        u2.alias("u2"),
+        z.alias("z"),
+        (F.abs(z) > F.lit(MWU_Z_CRIT_005)).alias("drift"),
     )
 
 
@@ -1810,33 +1833,15 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_stream_processing_spark.sources.tables import table
 
-    rows: list[tuple[int, int, int]] = []
+    def bucket_hist(b: DataFrame) -> DataFrame:
+        return b.groupBy(
+            F.expr(f"n_chars div {PSI_BUCKET_CHARS}").alias("bucket")
+        ).agg(F.count(F.lit(1)).alias("cb"))
 
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        hist = (
-            batch_df.select(
-                F.expr(f"n_chars div {PSI_BUCKET_CHARS}").alias("bucket")
-            )
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("cb"))
-            .collect()  # histogram-sized per trigger, by construction
-        )
-        for r in hist:
-            rows.append((int(key), int(r["bucket"]), int(r["cb"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
+        "doc_id", "n_chars"
     )
-    run_foreach_batch(stream, fold_batch)
-
-    hist_b = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, bucket bigint, cb bigint"
-    )
+    hist_b = _per_batch_cells(stream, "doc_id", bucket_hist)
     ref = (
         table(spark, sf_dir, "documents")
         .filter(F.col("source") == "src0")
@@ -1999,57 +2004,26 @@ def stream_ab_ztest_monitor(
         Z_CRIT_005,
     )
 
-    path = _stream_chunked_source_dir(sf_dir)
-    rows: list[tuple[int, int, int, int, int]] = []
+    def arm_counts(b: DataFrame) -> DataFrame:
+        aggs = []
+        for arm, parity in (("a", 0), ("b", 1)):
+            in_arm = F.col("user_id") % 2 == parity
+            aggs += [
+                F.sum(F.when(in_arm, F.lit(1)).otherwise(F.lit(0)))
+                .alias(f"n_{arm}"),
+                F.sum(
+                    F.when(
+                        in_arm & (F.col("event_type") == "purchase"),
+                        F.lit(1),
+                    ).otherwise(F.lit(0))
+                ).alias(f"conv_{arm}"),
+            ]
+        return b.agg(*aggs)
 
-    def fold_batch(batch_df, batch_id: int) -> None:
-        cell = batch_df.agg(
-            F.min("event_id").alias("key"),
-            F.sum(
-                F.when(F.col("user_id") % 2 == 0, F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).alias("n_a"),
-            F.sum(
-                F.when(
-                    (F.col("user_id") % 2 == 0)
-                    & (F.col("event_type") == "purchase"),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias("conv_a"),
-            F.sum(
-                F.when(F.col("user_id") % 2 == 1, F.lit(1)).otherwise(
-                    F.lit(0)
-                )
-            ).alias("n_b"),
-            F.sum(
-                F.when(
-                    (F.col("user_id") % 2 == 1)
-                    & (F.col("event_type") == "purchase"),
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias("conv_b"),
-        ).collect()[0]
-        if cell["key"] is None:
-            return
-        rows.append(
-            (
-                int(cell["key"]),
-                int(cell["n_a"]),
-                int(cell["conv_a"]),
-                int(cell["n_b"]),
-                int(cell["conv_b"]),
-            )
-        )
-
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    cells = spark.createDataFrame(
-        rows,
-        "chunk_min_event_id bigint, n_a bigint, conv_a bigint, "
-        "n_b bigint, conv_b bigint",
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    cells = _per_batch_cells(stream, "event_id", arm_counts)
     p_a = F.col("conv_a").cast("double") / F.col("n_a")
     p_b = F.col("conv_b").cast("double") / F.col("n_b")
     p_pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
@@ -2185,43 +2159,23 @@ def stream_isotonic_recalibration(
         isotonic_minimax_fit,
     )
 
-    path = _stream_train_docs_source_dir(sf_dir)
-    rows: list[tuple[int, int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        hist = (
-            batch_df.groupBy(
-                F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("nb"),
-                F.sum(
-                    (
-                        F.size(F.split(F.col("text"), " "))
-                        > ISO_TOKEN_THRESHOLD
-                    ).cast("bigint")
-                ).alias("yb"),
-            )
-            .collect()  # bin-histogram-sized per trigger
+    def bin_hist(b: DataFrame) -> DataFrame:
+        return b.groupBy(
+            F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
+        ).agg(
+            F.count(F.lit(1)).alias("nb"),
+            F.sum(
+                (
+                    F.size(F.split(F.col("text"), " "))
+                    > ISO_TOKEN_THRESHOLD
+                ).cast("bigint")
+            ).alias("yb"),
         )
-        for r in hist:
-            rows.append(
-                (int(key), int(r["b"]), int(r["nb"]), int(r["yb"]))
-            )
 
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars", "text")
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
+        "doc_id", "n_chars", "text"
     )
-    run_foreach_batch(stream, fold_batch)
-
-    bins = spark.createDataFrame(
-        rows,
-        "chunk_min_doc_id bigint, b bigint, nb bigint, yb bigint",
-    )
+    bins = _per_batch_cells(stream, "doc_id", bin_hist)
     fitted = isotonic_minimax_fit(bins, part=["chunk_min_doc_id"])
     return fitted.select(
         "chunk_min_doc_id",
@@ -2332,40 +2286,18 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-trigger driver traffic is one daily histogram
     (≤ calendar days); nothing in the streaming state store — verdicts
     are per-batch final and a restart loses no state."""
-    from kafka_stream_processing_spark.functions.exact import dec
+    from pyspark.sql import Window
+
     from kafka_stream_processing_spark.operators.windowed import (
         PETTITT_LN40,
     )
 
-    path = _stream_chunked_source_dir(sf_dir)
-    cells: list[tuple[int, str, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        rows = (
-            batch_df.groupBy(
-                F.date_trunc("day", "ts").cast("date").alias("day")
-            )
-            .agg(
-                F.sum(dec("value")).alias("x"),
-                F.min("event_id").alias("mi"),
-            )
-            .collect()
-        )
-        if not rows:
-            return
-        ck = min(int(r["mi"]) for r in rows)
-        for r in rows:
-            xm = int(r["x"].scaleb(6))  # exact: DECIMAL(_,6) → micro int
-            cells.append((ck, r["day"].isoformat(), xm))
-
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    from pyspark.sql import Window
-
-    daily = spark.createDataFrame(
-        cells, "ck bigint, day string, xm bigint"
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    daily = _per_batch_cells(
+        stream, "event_id", _daily_revenue_cells
+    ).withColumnRenamed("chunk_min_event_id", "ck")
     ranked = daily.select(
         "ck",
         "day",
@@ -2494,41 +2426,23 @@ def stream_markov_transition_monitor(
     verdicts per-batch final, restart loses nothing."""
     from pyspark.sql import Window
 
-    path = _stream_chunked_source_dir(sf_dir)
-    cells: list[tuple[int, str, str, int]] = []
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
 
-    def fold_batch(batch_df, batch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        rows = (
-            batch_df.select(
-                "event_id",
-                F.col("event_type").alias("to_type"),
+    def transitions(b: DataFrame) -> DataFrame:
+        return (
+            b.select(
                 F.lag("event_type").over(w).alias("from_type"),
+                F.col("event_type").alias("to_type"),
             )
+            .filter(F.col("from_type").isNotNull())
             .groupBy("from_type", "to_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("event_id").alias("mi"),
-            )
-            .collect()
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        if not rows:
-            return
-        ck = min(int(r["mi"]) for r in rows)
-        for r in rows:
-            if r["from_type"] is not None:
-                cells.append(
-                    (ck, r["from_type"], r["to_type"], int(r["n"]))
-                )
 
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    c = spark.createDataFrame(
-        cells,
-        "chunk_min_event_id bigint, from_type string, "
-        "to_type string, n bigint",
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    c = _per_batch_cells(stream, "event_id", transitions)
     tot = Window.partitionBy("chunk_min_event_id", "from_type")
     return c.select(
         "chunk_min_event_id",
@@ -2703,48 +2617,31 @@ def stream_funnel_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic via the (ts, event_id) staging sort mirrored by the
     oracle's row_number.
 
-    Scale: per-trigger executor work is two user-keyed aggregates
-    (map-side combined); driver state is two integers per trigger —
-    the A/B monitor's shape.  Nothing in the streaming state store."""
+    Scale: per-trigger executor work is one user-keyed aggregate
+    (map-side combined): a user converted iff their last purchase is
+    later than their first click.  Driver state is two integers per
+    trigger — the A/B monitor's shape.  Nothing in the streaming state
+    store."""
 
-    path = _stream_chunked_source_dir(sf_dir)
-    cells: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        mi = batch_df.agg(F.min("event_id").alias("m")).collect()[0]["m"]
-        if mi is None:
-            return
-        fc = (
-            batch_df.filter(F.col("event_type") == "click")
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("first_click"))
+    def funnel_counts(b: DataFrame) -> DataFrame:
+        event = F.col("event_type")
+        users = b.groupBy("user_id").agg(
+            F.max((event == "click").cast("int")).alias("clicked"),
+            F.min(F.when(event == "click", F.col("ts"))).alias("first"),
+            F.max(F.when(event == "purchase", F.col("ts"))).alias("last"),
         )
-        conv = (
-            fc.join(
-                batch_df.filter(
-                    F.col("event_type") == "purchase"
-                ).select(
-                    F.col("user_id").alias("pu"),
-                    F.col("ts").alias("pt"),
-                ),
-                (F.col("user_id") == F.col("pu"))
-                & (F.col("pt") > F.col("first_click")),
-            )
-            .select("user_id")
-            .distinct()
+        converted = F.col("user_id").isNotNull() & (
+            F.col("last") > F.col("first")
         )
-        n_clicked = fc.count()
-        n_conv = conv.count()
-        cells.append((int(mi), n_clicked, n_conv))
+        return users.agg(
+            F.count(F.when(F.col("clicked") == 1, 1)).alias("n_clicked"),
+            F.count(F.when(converted, 1)).alias("n_converted"),
+        )
 
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    c = spark.createDataFrame(
-        cells,
-        "chunk_min_event_id bigint, n_clicked bigint, "
-        "n_converted bigint",
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    c = _per_batch_cells(stream, "event_id", funnel_counts)
     return c.select(
         "chunk_min_event_id",
         "n_clicked",
@@ -2851,13 +2748,7 @@ def stream_attribution_monitor(
     from kafka_stream_processing_spark.functions.exact import dec
     from pyspark.sql import Window
 
-    path = _stream_chunked_source_dir(sf_dir)
-    cells: list[tuple] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        mi = batch_df.agg(F.min("event_id").alias("m")).collect()[0]["m"]
-        if mi is None:
-            return
+    def channel_credit(batch_df: DataFrame) -> DataFrame:
         k = F.get_json_object("props", "$.k").cast("bigint")
         clicks = batch_df.filter(
             F.col("event_type") == "click"
@@ -2903,7 +2794,7 @@ def stream_attribution_monitor(
             .alias("cnt"),
         )
         zero = F.lit(0).cast("decimal(18,6)")
-        out = ranked.groupBy("channel").agg(
+        return ranked.groupBy("channel").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_touches"),
             F.sum(
                 F.when(F.col("rl") == 1, F.lit(1)).otherwise(F.lit(0))
@@ -2923,27 +2814,11 @@ def stream_attribution_monitor(
             .cast("double")
             .alias("linear_credit"),
         )
-        for r in out.collect():
-            cells.append(
-                (
-                    int(mi),
-                    r["channel"],
-                    int(r["n_touches"]),
-                    int(r["n_last"]),
-                    float(r["last_touch_credit"]),
-                    float(r["linear_credit"]),
-                )
-            )
 
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    return spark.createDataFrame(
-        cells,
-        "chunk_min_event_id bigint, channel string, "
-        "n_touches bigint, n_last bigint, "
-        "last_touch_credit double, linear_credit double",
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    return _per_batch_cells(stream, "event_id", channel_credit)
 
 
 # ---------------------------------------------------------------------------
@@ -3037,59 +2912,28 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from kafka_stream_processing_spark.sources.tables import table
 
-    rows: list[tuple[int, int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        cells = (
-            batch_df.select(
-                F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b"),
+    def bin_counts(docs: DataFrame, n: str, y: str) -> DataFrame:
+        return docs.groupBy(
+            F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
+        ).agg(
+            F.count(F.lit(1)).alias(n),
+            F.sum(
                 F.when(
                     F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
                     F.lit(1),
-                )
-                .otherwise(F.lit(0))
-                .alias("y"),
-            )
-            .groupBy("b")
-            .agg(
-                F.count(F.lit(1)).alias("n_test"),
-                F.sum("y").alias("y_test"),
-            )
-            .collect()  # bin-histogram-sized per trigger
+                ).otherwise(F.lit(0))
+            ).alias(y),
         )
-        for r in cells:
-            rows.append(
-                (int(key), int(r["b"]), int(r["n_test"]), int(r["y_test"]))
-            )
 
     path = _stage_doc_chunks(sf_dir, "source = 'src0'", "testdocs")
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars", "text")
+    stream = file_stream(spark, path).select("doc_id", "n_chars", "text")
+    cells = _per_batch_cells(
+        stream, "doc_id", lambda b: bin_counts(b, "n_test", "y_test")
     )
-    run_foreach_batch(stream, fold_batch)
-
-    cells = spark.createDataFrame(
-        rows,
-        "chunk_min_doc_id bigint, b bigint, n_test bigint, y_test bigint",
-    )
-    train = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("source") != "src0")
-        .select(
-            F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b"),
-            F.when(
-                F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-                F.lit(1),
-            )
-            .otherwise(F.lit(0))
-            .alias("y"),
-        )
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("nt"), F.sum("y").alias("yt"))
+    train = bin_counts(
+        table(spark, sf_dir, "documents").filter(F.col("source") != "src0"),
+        "nt",
+        "yt",
     )
     bins = cells.join(train, "b").select(
         "chunk_min_doc_id",
@@ -3205,30 +3049,7 @@ def stream_quantile_monitor(
     table shape."""
     from pyspark.sql import Window
 
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        hist = (
-            batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()  # value-domain-sized per trigger
-        )
-        for r in hist:
-            rows.append((int(key), int(r["v"]), int(r["c"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
-    )
-    run_foreach_batch(stream, fold_batch)
-
-    hist = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, v bigint, c bigint"
-    )
+    hist = _train_length_histograms(spark, sf_dir)
     keys = hist.groupBy("chunk_min_doc_id").agg(
         F.sum("c").alias("nb")
     )
@@ -3342,39 +3163,25 @@ def stream_filter_yield_monitor(
         gopher_feature_columns,
     )
 
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        feats = batch_df.select(
-            "doc_id", *gopher_feature_columns()
-        )
-        keep = (
-            (F.col("n_words") >= 30)
-            & (F.col("total_chars") >= 3 * F.col("n_words"))
-            & (F.col("total_chars") <= 8 * F.col("n_words"))
-            & (F.col("n_top") * 8 <= F.col("n_words"))
-            & (F.col("n_stop") >= 1)
-        ).cast("bigint")
-        agg = feats.select(
-            "doc_id", keep.alias("keep")
-        ).agg(
-            F.min("doc_id").alias("k"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("keep").alias("kept"),
-        ).collect()[0]
-        if agg["k"] is None:
-            return
-        rows.append((int(agg["k"]), int(agg["n"]), int(agg["kept"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "text")
+    keep = (
+        (F.col("n_words") >= 30)
+        & (F.col("total_chars") >= 3 * F.col("n_words"))
+        & (F.col("total_chars") <= 8 * F.col("n_words"))
+        & (F.col("n_top") * 8 <= F.col("n_words"))
+        & (F.col("n_stop") >= 1)
+    ).cast("bigint")
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
+        "doc_id", "text"
     )
-    run_foreach_batch(stream, fold_batch)
-
-    out = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, n_batch bigint, n_keep bigint"
+    out = _per_batch_cells(
+        stream,
+        "doc_id",
+        lambda b: b.select(*gopher_feature_columns())
+        .select(keep.alias("keep"))
+        .agg(
+            F.count(F.lit(1)).alias("n_batch"),
+            F.sum("keep").alias("n_keep"),
+        ),
     )
     return out.select(
         "chunk_min_doc_id",
@@ -3906,16 +3713,9 @@ def stream_l_diversity_monitor(
         KANON_BUCKET_CHARS,
     )
 
-    rows: list[tuple[int, int, int, int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key_row = batch_df.agg(
-            F.min("doc_id").alias("k"), F.count(F.lit(1)).alias("nb")
-        ).collect()[0]
-        if key_row["k"] is None:
-            return
-        groups = (
-            batch_df.groupBy(
+    def qi_groups(b: DataFrame) -> DataFrame:
+        return (
+            b.groupBy(
                 "lang",
                 F.expr(f"n_chars div {KANON_BUCKET_CHARS}").alias(
                     "len_bucket"
@@ -3926,6 +3726,7 @@ def stream_l_diversity_monitor(
                 F.count_distinct("source").alias("l_distinct"),
             )
             .agg(
+                F.sum("k").alias("n_batch"),
                 F.count(F.lit(1)).alias("n_groups"),
                 F.min("l_distinct").alias("min_l"),
                 F.sum(
@@ -3937,31 +3738,12 @@ def stream_l_diversity_monitor(
                     )
                 ).alias("n_leak_rows"),
             )
-            .collect()[0]  # QI-domain-sized per trigger
-        )
-        rows.append(
-            (
-                int(key_row["k"]),
-                int(key_row["nb"]),
-                int(groups["n_groups"]),
-                int(groups["min_l"]),
-                int(groups["n_leak_groups"]),
-                int(groups["n_leak_rows"]),
-            )
         )
 
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "lang", "source", "n_chars")
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
+        "doc_id", "lang", "source", "n_chars"
     )
-    run_foreach_batch(stream, fold_batch)
-
-    out = spark.createDataFrame(
-        rows,
-        "chunk_min_doc_id bigint, n_batch bigint, n_groups bigint, "
-        "min_l bigint, n_leak_groups bigint, n_leak_rows bigint",
-    )
+    out = _per_batch_cells(stream, "doc_id", qi_groups)
     return out.select(
         "*",
         (
@@ -4063,66 +3845,11 @@ def stream_wasserstein_monitor(
     relational chunk reconstruction in the oracle."""
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.sources.tables import table
-
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        hist = (
-            batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()  # value-domain-sized per trigger
-        )
-        for r in hist:
-            rows.append((int(key), int(r["v"]), int(r["c"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
+    hist = _train_length_histograms(spark, sf_dir)
+    walked = _walk_against_src0(spark, sf_dir, hist).withColumn(
+        "v_next",
+        F.lead("v").over(Window.partitionBy("chunk_min_doc_id").orderBy("v")),
     )
-    run_foreach_batch(stream, fold_batch)
-
-    cur = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, v bigint, b bigint"
-    )
-    ref = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("source") == "src0")
-        .groupBy(F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).alias("a"))
-    )
-    ref_n = ref.agg(F.sum("a").alias("na"))
-    keys = cur.groupBy("chunk_min_doc_id").agg(
-        F.sum("b").alias("nb")
-    )
-    merged = (
-        cur.select("chunk_min_doc_id", "v", F.lit(0).cast("bigint").alias("a"), "b")
-        .unionByName(
-            keys.select("chunk_min_doc_id").crossJoin(ref).select(
-                "chunk_min_doc_id", "v", "a",
-                F.lit(0).cast("bigint").alias("b"),
-            )
-        )
-        .groupBy("chunk_min_doc_id", "v")
-        .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
-    )
-    w_cum = (
-        Window.partitionBy("chunk_min_doc_id")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_lead = Window.partitionBy("chunk_min_doc_id").orderBy("v")
-    walked = merged.select(
-        "chunk_min_doc_id",
-        "v",
-        F.sum("a").over(w_cum).alias("ca"),
-        F.sum("b").over(w_cum).alias("cb"),
-        F.lead("v").over(w_lead).alias("v_next"),
-    ).join(keys, "chunk_min_doc_id").crossJoin(F.broadcast(ref_n))
     term = F.round(
         F.abs(
             F.col("ca").cast("double") / F.col("na")
@@ -4263,51 +3990,30 @@ def stream_circadian_monitor(
     Scale: per-trigger state is a ≤24-cell integer histogram whatever
     the batch size; nothing in the streaming state store — restarts
     lose no state, verdicts are per-batch final."""
+    from pyspark.sql import Window
+
     from kafka_stream_processing_spark.operators.quality_edf import (
         WATSON_U2_CRIT_005,
     )
 
-    path = _stream_chunked_source_dir(sf_dir)
-    rows: list[tuple[int, int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("event_id").alias("k")).collect()[0][
-            "k"
-        ]
-        if key is None:
-            return
-        hist = (
-            batch_df.filter(
-                F.col("event_type").isin("click", "purchase")
-            )
+    def hour_hist(b: DataFrame) -> DataFrame:
+        return (
+            b.filter(F.col("event_type").isin("click", "purchase"))
             .groupBy(F.hour("ts").cast("bigint").alias("v"))
-            .agg(
+            .agg(*(
                 F.sum(
-                    F.when(
-                        F.col("event_type") == "click", F.lit(1)
-                    ).otherwise(F.lit(0))
-                ).alias("ca_i"),
-                F.sum(
-                    F.when(
-                        F.col("event_type") == "purchase", F.lit(1)
-                    ).otherwise(F.lit(0))
-                ).alias("cb_i"),
-            )
-            .collect()  # <= 24 rows per trigger, by construction
+                    F.when(F.col("event_type") == t, F.lit(1)).otherwise(
+                        F.lit(0)
+                    )
+                ).alias(name)
+                for t, name in (("click", "ca_i"), ("purchase", "cb_i"))
+            ))
         )
-        for r in hist:
-            rows.append(
-                (int(key), int(r["v"]), int(r["ca_i"]), int(r["cb_i"]))
-            )
 
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    from pyspark.sql import Window
-
-    hist = spark.createDataFrame(
-        rows, "chunk_min_event_id bigint, v bigint, ca_i bigint, cb_i bigint"
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    hist = _per_batch_cells(stream, "event_id", hour_hist)
     w = (
         Window.partitionBy("chunk_min_event_id")
         .orderBy("v")
@@ -4445,30 +4151,18 @@ def stream_repetition_monitor(
         repetition_metrics,
     )
 
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        flags = repetition_metrics(
-            batch_df.select("doc_id", "text")
-        ).select("doc_id", repetition_flag().cast("bigint").alias("rep"))
-        agg = flags.agg(
-            F.min("doc_id").alias("k"),
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rep").alias("nrep"),
-        ).collect()[0]
-        if agg["k"] is None:
-            return
-        rows.append((int(agg["k"]), int(agg["n"]), int(agg["nrep"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "text")
+    stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
+        "doc_id", "text"
     )
-    run_foreach_batch(stream, fold_batch)
-
-    out = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, n_batch bigint, n_repetitive bigint"
+    out = _per_batch_cells(
+        stream,
+        "doc_id",
+        lambda b: repetition_metrics(b)
+        .select(repetition_flag().cast("bigint").alias("rep"))
+        .agg(
+            F.count(F.lit(1)).alias("n_batch"),
+            F.sum("rep").alias("n_repetitive"),
+        ),
     )
     return out.select(
         "chunk_min_doc_id",
@@ -4567,38 +4261,16 @@ def stream_permutation_entropy_monitor(
     and a restart loses no state."""
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.functions.exact import dec
     from kafka_stream_processing_spark.operators.windowed import (
         _PERM_ENTROPY_EXPR,
     )
 
-    path = _stream_chunked_source_dir(sf_dir)
-    cells: list[tuple[int, str, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        rows = (
-            batch_df.groupBy(
-                F.date_trunc("day", "ts").cast("date").alias("day")
-            )
-            .agg(
-                F.sum(dec("value")).alias("x"),
-                F.min("event_id").alias("mi"),
-            )
-            .collect()
-        )
-        if not rows:
-            return
-        ck = min(int(r["mi"]) for r in rows)
-        for r in rows:
-            xm = int(r["x"].scaleb(6))  # exact: DECIMAL(_,6) → micro int
-            cells.append((ck, r["day"].isoformat(), xm))
-
-    stream = normalize_events(file_stream(spark, path))
-    run_foreach_batch(stream, fold_batch)
-
-    daily = spark.createDataFrame(
-        cells, "ck bigint, day string, xm bigint"
+    stream = normalize_events(
+        file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
+    daily = _per_batch_cells(
+        stream, "event_id", _daily_revenue_cells
+    ).withColumnRenamed("chunk_min_event_id", "ck")
     w = Window.partitionBy("ck").orderBy("day")
     lagged = daily.select(
         "ck",
@@ -4803,30 +4475,7 @@ def stream_tail_es_monitor(
     approx_percentile sketch, same table shape."""
     from pyspark.sql import Window
 
-    rows: list[tuple[int, int, int]] = []
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        key = batch_df.agg(F.min("doc_id").alias("k")).collect()[0]["k"]
-        if key is None:
-            return
-        hist = (
-            batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()  # value-domain-sized per trigger
-        )
-        for r in hist:
-            rows.append((int(key), int(r["v"]), int(r["c"])))
-
-    path = _stream_train_docs_source_dir(sf_dir)
-    stream = (
-        file_stream(spark, path)
-        .select("doc_id", "n_chars")
-    )
-    run_foreach_batch(stream, fold_batch)
-
-    hist = spark.createDataFrame(
-        rows, "chunk_min_doc_id bigint, v bigint, c bigint"
-    )
+    hist = _train_length_histograms(spark, sf_dir)
     keys = hist.groupBy("chunk_min_doc_id").agg(
         F.sum("c").cast("bigint").alias("nb")
     )

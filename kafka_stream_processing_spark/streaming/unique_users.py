@@ -199,6 +199,27 @@ def publish_staged_dir(d: str, build) -> str:
     return d
 
 
+def _write_chunks(tmp: str, chunks: list) -> None:
+    """Write each chunk (a pyarrow Table, or the path of a parquet file
+    to copy) as ``tmp/chunk-<i>.parquet`` with strictly increasing
+    whole-second mtimes in chunk order, so micro-batch order IS chunk
+    order.  FileStreamSource takes files oldest-mtime-first at
+    millisecond granularity: back-to-back writes can tie and arrive in
+    any order — harmless for per-batch-keyed monitors, fatal for
+    order-sensitive consumers (late-data watermarks, SCD2 head merges,
+    cumulative novelty).  Every chunked stager writes through here."""
+    import pyarrow.parquet as pq
+
+    base = int(time.time()) - 2 * (len(chunks) + 2)
+    for i, chunk in enumerate(chunks):
+        p = os.path.join(tmp, f"chunk-{i}.parquet")
+        if isinstance(chunk, str):
+            shutil.copyfile(chunk, p)
+        else:
+            pq.write_table(chunk, p)
+        os.utime(p, (base + 2 * i, base + 2 * i))
+
+
 def fresh_run_dir(sf_dir: str, label: str) -> str:
     """A new private run directory under ``/tmp/<label>/<sf key>/`` for a
     query that materializes per-batch generations on disk.  First sweeps
@@ -239,16 +260,10 @@ def _stream_chunked_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
     order to file order while DuckDB's row_number() tie order is
     unspecified (ADVICE r06).
 
-    "v3" key suffix: chunk files now carry strictly increasing
-    whole-second mtimes.  FileStreamSource picks files
-    oldest-mtime-first at millisecond granularity, so the fast
-    consecutive writes of the v2 staging could TIE and deliver
-    micro-batches in arbitrary order — harmless for the
-    order-independent consumers (CDC last-writer-wins, per-batch-keyed
-    monitors), fatal for order-SENSITIVE incremental maintenance
-    (stream_scd2_incremental's head-merge assumes each batch strictly
-    follows the last).  Same fix as _stage_doc_chunks in
-    streaming/joins.py."""
+    Micro-batches arrive in time order (_write_chunks pins the file
+    mtimes): order-SENSITIVE incremental maintenance
+    (stream_scd2_incremental's head-merge) assumes each batch strictly
+    follows the last."""
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     key = sf_dir.strip("/").replace("/", "_")
@@ -266,15 +281,9 @@ def _stream_chunked_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
             t,
             sort_keys=[("ts", "ascending"), ("event_id", "ascending")],
         ))
-        n = t.num_rows
-        step = (n + n_chunks - 1) // n_chunks
-        base = int(time.time()) - 2 * (n_chunks + 2)
-        for i in range(n_chunks):
-            chunk = t.slice(i * step, step)
-            if chunk.num_rows:
-                p = os.path.join(tmp, f"chunk-{i}.parquet")
-                pq.write_table(chunk, p)
-                os.utime(p, (base + 2 * i, base + 2 * i))
+        step = (t.num_rows + n_chunks - 1) // n_chunks
+        chunks = [t.slice(i * step, step) for i in range(n_chunks)]
+        _write_chunks(tmp, [c for c in chunks if c.num_rows])
 
     return publish_staged_dir(d, build)
 
@@ -503,15 +512,14 @@ def _stream_redelivery_source_dir(sf_dir: str) -> str:
     retry / consumer-group rebalance.  Cache keyed like the plain chunked
     variant (source mtime/size)."""
     base = _stream_chunked_source_dir(sf_dir)
-    d = base + "_redelivered"
+    d = base + "_redelivered_v2"
 
     def build(tmp: str) -> None:
-        for name in sorted(os.listdir(base)):
-            if name.startswith("chunk-"):
-                shutil.copy(os.path.join(base, name), os.path.join(tmp, name))
-        # chunk-3 sorts AFTER chunk-2: the duplicate batch arrives last.
-        shutil.copy(os.path.join(base, "chunk-0.parquet"),
-                    os.path.join(tmp, "chunk-3.parquet"))
+        n = sum(name.startswith("chunk-") for name in os.listdir(base))
+        # The duplicate of chunk-0 is written last, so it arrives last.
+        _write_chunks(tmp, [
+            os.path.join(base, f"chunk-{i}.parquet") for i in [*range(n), 0]
+        ])
 
     return publish_staged_dir(d, build)
 
@@ -566,13 +574,16 @@ def _stream_late_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
     The selection predicate is pure column arithmetic (epoch-us bounds +
     event_id modulus) so the DuckDB oracle reproduces the exact same
     late set from the raw table — no row identity, no RNG.  Cache keyed
-    like the plain chunked variant (source mtime/size)."""
+    like the plain chunked variant (source mtime/size).  The late rows
+    stay late only if the last chunk arrives last, which _write_chunks
+    pins; delivered first, it would move the watermark past the on-time
+    chunks."""
     src = os.path.join(sf_dir, "events.parquet")
     st = os.stat(src)
     key = sf_dir.strip("/").replace("/", "_")
     d = os.path.join(
         "/tmp", "kssp_stream_src", key,
-        f"events_late{n_chunks}_{int(st.st_mtime_ns)}_{st.st_size}",
+        f"events_late{n_chunks}v2_{int(st.st_mtime_ns)}_{st.st_size}",
     )
 
     def build(tmp: str) -> None:
@@ -621,14 +632,10 @@ def _stream_late_source_dir(sf_dir: str, n_chunks: int = 3) -> str:
                 "late-data staging: time range too narrow for the late "
                 "slice to be unambiguously beyond the watermark"
             )
-        for i in range(n_chunks - 1):
-            pq.write_table(
-                on.slice(i * step, step),
-                os.path.join(tmp, f"chunk-{i}.parquet"),
-            )
-        pq.write_table(
-            pa.concat_tables([on.slice((n_chunks - 1) * step), late]),
-            os.path.join(tmp, f"chunk-{n_chunks - 1}.parquet"),
+        _write_chunks(
+            tmp,
+            [on.slice(i * step, step) for i in range(n_chunks - 1)]
+            + [pa.concat_tables([on.slice((n_chunks - 1) * step), late])],
         )
 
     return publish_staged_dir(d, build)

@@ -23,7 +23,9 @@ from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.sources.tables import table
+from kafka_stream_processing_spark.streaming import joins, unique_users
 from kafka_stream_processing_spark.streaming.unique_users import (
+    _write_chunks,
     file_stream,
     run_foreach_batch,
     run_to_memory,
@@ -335,3 +337,101 @@ def test_package_has_one_available_now_trigger():
         if "trigger(availableNow=True)" in line
     ]
     assert len(hits) == 1 and hits[0][0].endswith("unique_users.py"), hits
+
+
+_CHUNK_STAGERS = {
+    "events": unique_users._stream_chunked_source_dir,
+    "redelivery": unique_users._stream_redelivery_source_dir,
+    "late": unique_users._stream_late_source_dir,
+    "embeddings": joins._stream_embeddings_source_dir,
+    "doc_slice": joins._stream_train_docs_source_dir,
+}
+
+
+@pytest.mark.parametrize("stager", list(_CHUNK_STAGERS))
+def test_stagers_pin_chunk_order(sf_small, stager):
+    """FileStreamSource takes files oldest-mtime-first at millisecond
+    granularity, so chunk files written back to back can tie and arrive
+    out of order.  Every chunked stager pins strictly increasing
+    whole-second mtimes in chunk order."""
+    d = _CHUNK_STAGERS[stager](sf_small)
+    names = sorted(
+        (n for n in os.listdir(d) if n.startswith("chunk-")),
+        key=lambda n: int(n[len("chunk-"):-len(".parquet")]),
+    )
+    secs = [int(os.stat(os.path.join(d, n)).st_mtime) for n in names]
+    assert len(secs) >= 3, names
+    assert all(a < b for a, b in zip(secs, secs[1:])), secs
+
+
+def _three_batch_dir(path: pathlib.Path) -> str:
+    """Three parquet chunks, one micro-batch each; the middle one has no
+    row with x > 0."""
+    import pyarrow as pa
+
+    path.mkdir()
+    _write_chunks(str(path), [
+        pa.table({"k": [5, 3, 9], "x": [1, 2, 2]}),
+        pa.table({"k": [12, 10], "x": [-1, -2]}),
+        pa.table({"k": [21, 20, 22], "x": [7, 7, 8]}),
+    ])
+    return str(path)
+
+
+def _positive_x_cells(b):
+    return (
+        b.filter(F.col("x") > 0)
+        .groupBy("x")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("k").cast("int").alias("top"),
+        )
+    )
+
+
+def test_per_batch_cells_tags_rows_with_their_batch_min_key(spark, tmp_path):
+    """Each cell row carries its own batch's min key; the column types
+    are the cells frame's; a batch that yields no cells adds no rows."""
+    out = joins._per_batch_cells(
+        file_stream(spark, _three_batch_dir(tmp_path / "src")),
+        "k",
+        _positive_x_cells,
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("chunk_min_k", "bigint"),
+        ("x", "bigint"),
+        ("n", "bigint"),
+        ("top", "int"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (3, 1, 1, 5),
+        (3, 2, 2, 9),
+        (20, 7, 2, 21),
+        (20, 8, 1, 22),
+    ]
+
+
+def test_per_batch_cells_failure_surfaces_and_cleans_up(
+    spark, tmp_path, monkeypatch
+):
+    """An exception inside ``cells`` fails the query as
+    StreamingQueryException and leaves no checkpoint directory."""
+    src = _three_batch_dir(tmp_path / "src")
+    made: list[str] = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def spy(*args, **kwargs):
+        d = real_mkdtemp(*args, **kwargs)
+        made.append(d)
+        return d
+
+    monkeypatch.setattr(tempfile, "mkdtemp", spy)
+
+    def bad_cells(b):
+        raise ValueError("boom in cells")
+
+    with pytest.raises(StreamingQueryException, match="boom in cells"):
+        joins._per_batch_cells(file_stream(spark, src), "k", bad_cells)
+    ckpts = [d for d in made if os.path.basename(d).startswith("kssp_ckpt_")]
+    assert ckpts, "the runner made no checkpoint directory"
+    assert not [d for d in ckpts if os.path.exists(d)]
