@@ -20,11 +20,27 @@ CTEs forbid aggregation in the recursive term — the standard SQL
 restriction), which also documents that a FIXED-iteration power method
 is expressible in one declarative query while Spark runs it as the
 idiomatic driver loop with localCheckpoint-style small tables.
+
+Kernels: the operators take their inputs and loops from one private
+helper each, so every building block the oracles share has one Spark
+copy.  ``_trade_edges_df`` is the weighted (src, dst, w) trade edge
+list, the twin of ``_edges_sql``; ``_trade_pairs`` is its join before
+the GROUP BY, which the triangle count reads directly.  ``_significant``
+is the w·ne ≥ 2·tw significance cut and ``_sig_adj_df`` the
+checkpointed a<b adjacency it leaves (the twin of ``_sig_adj_sql``).
+``_symmetric`` turns an a<b frame into the oracles' (u, v) ``sym``
+relation (each caller decides whether to checkpoint it) and ``_wedges``
+self-joins it into the wedges of link prediction and local clustering.
+``_edge_fractions`` gives out-degree-normalized edge fractions and
+``_damped_power_iterate`` runs the quantized damped power iteration of
+PageRank, TextRank and PPR.  ``_bfs_hops`` is the one BFS frontier
+loop: single-source BFS is its one-seed case and ``_all_pairs_hops``
+its all-seeds case.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.registry import register
@@ -90,32 +106,93 @@ def _oracle() -> str:
     """
 
 
-def _trade_frac_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-degree-normalized trade edge fractions (src, dst, frac),
-    checkpointed — the power-iteration kernel shared by PageRank and
-    personalized PageRank (reuse guard-tested)."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n1 = table(spark, sf_dir, "nation").select(
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One (src, dst) row per cross-border shipment, supplier nation to
+    customer nation: the join of ``_edges_sql`` before its GROUP BY."""
+    nation = table(spark, sf_dir, "nation")
+    n1 = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("src")
     )
-    n2 = table(spark, sf_dir, "nation").select(
+    n2 = nation.select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("dst")
     )
-    edges = (
+    li = table(spark, sf_dir, "lineitem")
+    o = table(spark, sf_dir, "orders")
+    return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(
+            table(spark, sf_dir, "customer"),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(table(spark, sf_dir, "supplier")),
+            F.col("l_suppkey") == F.col("s_suppkey"),
+        )
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
         .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+    )
+
+
+def _trade_edges_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted trade edge list (src, dst, w = shipment count), the
+    Spark twin of ``_edges_sql``."""
+    return (
+        _trade_pairs(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The distinct unordered pairs (a < b) of a (src, dst) frame."""
+    return edges.select(
+        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    ).distinct()
+
+
+def _symmetric(adj: DataFrame, *carry: str) -> DataFrame:
+    """Both orientations (u, v) of an a<b edge frame, plus the ``carry``
+    columns: the oracles' ``sym`` relation."""
+    return adj.select(
+        F.col("a").alias("u"), F.col("b").alias("v"), *carry
+    ).unionByName(
+        adj.select(F.col("b").alias("u"), F.col("a").alias("v"), *carry)
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, d): the degree of every endpoint of an a<b edge frame."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionAll(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _wedges(sym: DataFrame) -> DataFrame:
+    """(z, na, nb): every two-path na–z–nb with na < nb over the
+    symmetric adjacency — the oracles' ``wedge`` self-join."""
+    s1, s2 = sym.alias("s1"), sym.alias("s2")
+    return s1.join(
+        s2,
+        (F.col("s1.u") == F.col("s2.u")) & (F.col("s1.v") < F.col("s2.v")),
+    ).select(
+        F.col("s1.u").alias("z"),
+        F.col("s1.v").alias("na"),
+        F.col("s2.v").alias("nb"),
+    )
+
+
+def _edge_fractions(edges: DataFrame) -> DataFrame:
+    """Out-degree-normalized edge fractions (src, dst, frac = w / Σ w of
+    src) of a weighted (src, dst, w) frame.  Checkpointed: one
+    materialization that every power iteration reuses (the
+    localCheckpoint idiom from clustering.connected_components)."""
     outw = edges.groupBy("src").agg(F.sum("w").alias("total"))
-    frac = (
+    return (
         edges.join(outw, "src")
         .select(
             "src",
@@ -124,12 +201,51 @@ def _trade_frac_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "frac"
             ),
         )
-        # One materialization; every iteration reuses it without
-        # re-running the 5-table join (the localCheckpoint idiom from
-        # clustering.connected_components).
         .localCheckpoint(eager=True)
     )
-    return frac
+
+
+def _trade_frac_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edge fractions of the trade graph, the input of PageRank and
+    personalized PageRank."""
+    return _edge_fractions(_trade_edges_df(spark, sf_dir))
+
+
+def _damped_power_iterate(
+    nodes: DataFrame,
+    frac: DataFrame,
+    r0: Column,
+    teleport: Column,
+    damping: float,
+    iterations: int,
+) -> DataFrame:
+    """``iterations`` checkpointed rounds of r'(v) = teleport + damping ·
+    Σ_{u→v} dec12(r(u) · frac(u, v)), starting from r = ``r0``.
+    ``nodes`` holds a ``node`` column plus whatever ``r0`` and
+    ``teleport`` read (PPR's ``hub``); each round returns those columns
+    and ``r``.  Per-edge terms are quantized to DECIMAL(18,12) before
+    the per-node sum (see the module docstring)."""
+    ranks = nodes.select("*", r0.alias("r"))
+    for _ in range(iterations):
+        contrib = (
+            frac.join(ranks, F.col("src") == F.col("node"))
+            .select("dst", (F.col("r") * F.col("frac")).cast(_DEC).alias("term"))
+            .groupBy("dst")
+            .agg(F.sum("term").alias("sum_dec"))
+        )
+        ranks = (
+            nodes.join(contrib, F.col("node") == F.col("dst"), "left")
+            .select(
+                *nodes.columns,
+                (
+                    teleport
+                    + F.lit(damping)
+                    * F.coalesce(F.col("sum_dec").cast("double"), F.lit(0.0))
+                ).alias("r"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return ranks
 
 
 @register(
@@ -151,26 +267,14 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match exactly."""
     frac = _trade_frac_df(spark, sf_dir)
     nodes = table(spark, sf_dir, "nation").select(F.col("n_name").alias("node"))
-    ranks = nodes.withColumn("r", F.lit(0.04).cast("double"))
-    for _ in range(_ITERATIONS):
-        contrib = (
-            frac.join(ranks, frac.src == ranks.node)
-            .select("dst", (F.col("r") * F.col("frac")).cast(_DEC).alias("term"))
-            .groupBy("dst")
-            .agg(F.sum("term").alias("sum_dec"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(_TELEPORT)
-                    + F.lit(_DAMPING)
-                    * F.coalesce(F.col("sum_dec").cast("double"), F.lit(0.0))
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = _damped_power_iterate(
+        nodes,
+        frac,
+        F.lit(0.04).cast("double"),
+        F.lit(_TELEPORT),
+        _DAMPING,
+        _ITERATIONS,
+    )
     return ranks.select(
         F.col("node").alias("nation"), F.round("r", 9).alias("pagerank")
     )
@@ -238,35 +342,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     u) and the closing check is an equi-join of wedges against edges on
     the unordered pair key — all hash joins, no cartesian.  Per-node
     output; global triangle total = sum(triangles)/3."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n1 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("src")
-    )
-    n2 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("dst")
-    )
-    und = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    # From the per-shipment pairs: the (src, dst) weights are not
+    # needed, and grouping by them first would add an aggregate.
+    und = _undirected(_trade_pairs(spark, sf_dir))
+    deg = _degrees(und)
     da = deg.select(F.col("node").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("node").alias("b"), F.col("d").alias("db"))
     lower_first = (F.col("da") < F.col("db")) | (
@@ -408,8 +487,8 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row ``zip_with`` of the token array against its own 1- and
     2-shifted slices — no positional self-join, no explode-then-join;
     only the (src, dst) pair stream shuffles once into the weighted
-    edge aggregate.  Iterations follow graph_pagerank_trade's exactness
-    discipline: per-edge contributions multiply in DOUBLE, quantize to
+    edge aggregate.  Iterations run PageRank's ``_damped_power_iterate``:
+    per-edge contributions multiply in DOUBLE, quantize to
     DECIMAL(18,12) before the per-node sum, damp back in DOUBLE — so 8
     compounding iterations stay bit-identical to the oracle's unrolled
     CTE chain.
@@ -445,47 +524,19 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    outw = edges.groupBy("src").agg(F.sum("w").alias("total"))
-    frac = (
-        edges.join(outw, "src")
-        .select(
-            "src",
-            "dst",
-            (
-                F.col("w").cast("double") / F.col("total").cast("double")
-            ).alias("frac"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    frac = _edge_fractions(edges)
     nodes = (
         d.select(F.explode(toks).alias("node")).distinct()
         .localCheckpoint(eager=True)
     )
-    ranks = nodes.withColumn("r", F.lit(1.0).cast("double"))
-    for _ in range(_TR_ITERATIONS):
-        contrib = (
-            frac.join(ranks, frac.src == ranks.node)
-            .select(
-                "dst",
-                (F.col("r") * F.col("frac")).cast(_DEC).alias("term"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("term").alias("sum_dec"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(_TR_TELEPORT)
-                    + F.lit(_TR_DAMPING)
-                    * F.coalesce(
-                        F.col("sum_dec").cast("double"), F.lit(0.0)
-                    )
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = _damped_power_iterate(
+        nodes,
+        frac,
+        F.lit(1.0).cast("double"),
+        F.lit(_TR_TELEPORT),
+        _TR_DAMPING,
+        _TR_ITERATIONS,
+    )
     from pyspark.sql import Window as _W
 
     # Top-k via orderBy().limit(k) → TakeOrderedAndProject (a per-
@@ -525,56 +576,22 @@ def _sig_adj_sql() -> str:
     """
 
 
+def _significant(edges: DataFrame) -> DataFrame:
+    """The significant (src, dst, w) edges: w at least
+    LINKPRED_MIN_W_NUM times the mean weight, as the exact integer
+    compare w·ne ≥ 2·tw (the WHERE of ``_sig_adj_sql``)."""
+    tot = edges.agg(F.count(F.lit(1)).alias("ne"), F.sum("w").alias("tw"))
+    return edges.crossJoin(F.broadcast(tot)).filter(
+        F.col("w") * F.col("ne") >= LINKPRED_MIN_W_NUM * F.col("tw")
+    )
+
+
 def _sig_adj_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Significance-sparsified undirected trade adjacency (w ≥ 2× mean
-    weight as an exact integer cross-product compare), checkpointed —
-    the Spark twin of ``_sig_adj_sql`` shared by link prediction and
-    BFS (tests/test_round7f_ops.py guards the reuse)."""
-    edges = (
-        table(spark, sf_dir, "lineitem")
-        .join(
-            table(spark, sf_dir, "orders"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .join(
-            table(spark, sf_dir, "customer"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(
-            table(spark, sf_dir, "supplier"),
-            F.col("s_suppkey") == F.col("l_suppkey"),
-        )
-        .join(
-            table(spark, sf_dir, "nation").alias("n1"),
-            F.col("n1.n_nationkey") == F.col("s_nationkey"),
-        )
-        .join(
-            table(spark, sf_dir, "nation").alias("n2"),
-            F.col("n2.n_nationkey") == F.col("c_nationkey"),
-        )
-        .filter(F.col("n1.n_name") != F.col("n2.n_name"))
-        .groupBy(
-            F.col("n1.n_name").alias("src"),
-            F.col("n2.n_name").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = edges.agg(
-        F.count(F.lit(1)).alias("ne"), F.sum("w").alias("tw")
-    )
-    return (
-        edges.crossJoin(F.broadcast(tot))
-        .filter(
-            F.col("w") * F.col("ne")
-            >= LINKPRED_MIN_W_NUM * F.col("tw")
-        )
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    """The significance-sparsified undirected trade adjacency (a < b),
+    checkpointed: the Spark twin of ``_sig_adj_sql``."""
+    return _undirected(
+        _significant(_trade_edges_df(spark, sf_dir))
+    ).localCheckpoint(eager=True)
 
 
 @register(
@@ -636,20 +653,9 @@ def graph_link_prediction_common_neighbors(
     all-pairs; the non-adjacency check is one left anti-style join
     against the (node-pair-sized) adjacency list."""
     adj = _sig_adj_df(spark, sf_dir)
-    sym = adj.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(adj.select(F.col("b").alias("u"), F.col("a").alias("v")))
+    sym = _symmetric(adj)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    s1, s2 = sym.alias("s1"), sym.alias("s2")
-    wedge = s1.join(
-        s2,
-        (F.col("s1.u") == F.col("s2.u"))
-        & (F.col("s1.v") < F.col("s2.v")),
-    ).select(
-        F.col("s1.v").alias("na"),
-        F.col("s2.v").alias("nb"),
-        F.col("s1.u").alias("z"),
-    )
+    wedge = _wedges(sym)
     cand = wedge.join(
         adj,
         (F.col("na") == F.col("a")) & (F.col("nb") == F.col("b")),
@@ -778,31 +784,11 @@ def graph_kcore_decomposition(
 
     Reference parity: the reference engine has no graph surface at all
     (`UniqueUsersCounter.java` is a linear topology) — this extends the
-    engine's iterative family (PageRank `graph.py:98`, components
+    engine's iterative family (PageRank `graph_pagerank_trade`, components
     `clustering.py`) with the integer-exact member."""
     from pyspark.sql import Window
 
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n1 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("src")
-    )
-    n2 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("dst")
-    )
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    edges = _trade_edges_df(spark, sf_dir).localCheckpoint(eager=True)
     hist = edges.groupBy("w").agg(F.count(F.lit(1)).alias("m"))
     need = edges.agg(
         F.expr("(count(1) + 1) div 2").alias("need")
@@ -822,19 +808,10 @@ def graph_kcore_decomposition(
         cum.crossJoin(F.broadcast(need))
         .agg(F.max(F.when(F.col("cm") >= F.col("need"), F.col("w"))).alias("thresh"))
     )
-    adj = (
-        edges.crossJoin(F.broadcast(thr))
-        .filter(F.col("w") >= F.col("thresh"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sym = adj.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(adj.select(F.col("b").alias("u"), F.col("a").alias("v")))
+    adj = _undirected(
+        edges.crossJoin(F.broadcast(thr)).filter(F.col("w") >= F.col("thresh"))
+    ).localCheckpoint(eager=True)
+    sym = _symmetric(adj)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("val"))
     cur = deg.localCheckpoint(eager=True)
     w_rank = Window.partitionBy("uu").orderBy(F.col("val").desc())
@@ -863,6 +840,32 @@ def graph_kcore_decomposition(
 #: Recursion depth cap for BFS — far above the sparsified trade graph's
 #: diameter; the driver loop stops early when the frontier empties.
 BFS_MAX_HOPS = 16
+
+
+def _bfs_hops(sym: DataFrame, sources: DataFrame) -> DataFrame:
+    """BFS hop distances (src, node, hops) from every ``src`` of the
+    one-column ``sources`` frame over the symmetric adjacency ``sym``.
+    Each level is one frontier⋈adjacency join, anti-joined against the
+    visited set and checkpointed; the loop stops when the frontier
+    empties, or after BFS_MAX_HOPS levels."""
+    visited = sources.select(
+        "src", F.col("src").alias("node"), F.lit(0).alias("hops")
+    ).localCheckpoint(eager=True)
+    frontier = visited
+    for h in range(1, BFS_MAX_HOPS + 1):
+        nxt = (
+            frontier.join(sym, frontier["node"] == sym["u"])
+            .select("src", F.col("v").alias("node"))
+            .distinct()
+            .join(visited, ["src", "node"], "left_anti")
+            .select("src", "node", F.lit(h).alias("hops"))
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        frontier = nxt
+    return visited
 
 
 @register(
@@ -911,33 +914,8 @@ def graph_bfs_hops_from_source(
     levels bounded by the diameter.  At a billion edges the same loop
     runs with the adjacency bucketed by u so every level's join is
     co-located — no per-level shuffle of the big side."""
-    adj = _sig_adj_df(spark, sf_dir)
-    sym = (
-        adj.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(
-            adj.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    visited = (
-        sym.agg(F.min("u").alias("node"))
-        .select("node", F.lit(0).alias("hops"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for h in range(1, BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["u"])
-            .select(F.col("v").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .select("node", F.lit(h).alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    sym = _symmetric(_sig_adj_df(spark, sf_dir)).localCheckpoint(eager=True)
+    visited = _bfs_hops(sym, sym.agg(F.min("u").alias("src")))
     return visited.select("node", F.col("hops").cast("int").alias("hops"))
 
 
@@ -990,8 +968,8 @@ def graph_degree_assortativity(
     the DIRECTED expansion of the undirected edge set (each edge
     contributes both orientations, which is exactly what makes the
     two margins symmetric and the statistic well-defined); r > 0 means
-    hubs trade with hubs, r < 0 means hub-and-spoke.  Third consumer
-    of the shared _sig_adj_df kernel (link prediction, BFS, this).
+    hubs trade with hubs, r < 0 means hub-and-spoke, over the
+    ``_sig_adj_df`` adjacency.
     All five moment sums are exact integers from one aggregate over
     the degree-joined edge list; the final formula is IEEE arithmetic
     on those integers — bit-identical cross-engine.
@@ -1000,11 +978,7 @@ def graph_degree_assortativity(
     degree table, then a 6-cell map-side-combined aggregate —
     edge-scan-bound, no window, no sort."""
     adj = _sig_adj_df(spark, sf_dir)
-    sym = adj.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(
-        adj.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    sym = _symmetric(adj)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u").alias("su"), F.col("d").alias("x"))
     dv = deg.select(F.col("u").alias("sv"), F.col("d").alias("y"))
@@ -1086,20 +1060,15 @@ def graph_degree_powerlaw_mle(
     cross-engine; d_min is the observed minimum degree (the standard
     choice when no cutoff search is run).
 
-    Scale: reuses the SIGNIFICANCE-SPARSIFIED adjacency shared by link
-    prediction, BFS, and assortativity (_sig_adj_df — the raw trade
+    Scale: reads the SIGNIFICANCE-SPARSIFIED adjacency
+    (_sig_adj_df — the raw trade
     graph is near-complete at every SF, which makes the MLE degenerate
     by construction; sparsification is what exposes the hub
     structure); the degree table is node-sized, the rest is one
     aggregate.  The CSN d_min goodness-of-fit scan would loop this
     same aggregate over candidate cutoffs — same shape, K passes."""
     und = _sig_adj_df(spark, sf_dir)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und)
     mn = deg.agg(F.min("d").alias("dmin"))
     lns = deg.crossJoin(F.broadcast(mn)).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1168,30 +1137,9 @@ def graph_trade_reciprocity(
 
     Scale: one self-join of the nation-domain-bounded edge list on
     the reversed key — |edges| ≤ |nations|², so cost is dominated by
-    the shared edge-building join (the q7 shape), not the
+    the ``_trade_edges_df`` join (the q7 shape), not the
     reciprocity step."""
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    s = table(spark, sf_dir, "supplier")
-    n1 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"),
-        F.col("n_name").alias("src"),
-    )
-    n2 = table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"),
-        F.col("n_name").alias("dst"),
-    )
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    edges = _trade_edges_df(spark, sf_dir)
     rev = edges.select(
         F.col("dst").alias("src"),
         F.col("src").alias("dst"),
@@ -1290,12 +1238,7 @@ def graph_rich_club_coefficient(
     (φ/φ_random) divides by a degree-preserving null model — a
     documented composition with the ES sampler, not run here."""
     und = _sig_adj_df(spark, sf_dir)
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _degrees(und)
     ks = deg.select(F.col("d").alias("k")).distinct()
     nk = (
         F.broadcast(ks)
@@ -1378,30 +1321,17 @@ def graph_local_clustering_coefficient(
     oracle).
 
     Exactness: wedge and triangle counts are exact integers off the
-    shared sparsified adjacency (`_sig_adj_df` — same kernel as link
-    prediction/BFS/assortativity); cc is one mirrored double chain.
+    sparsified adjacency (`_sig_adj_df`); cc is one double chain, the
+    oracle's.
 
     Scale: the wedge join is the degree-oriented triangle kernel's
     shape — cost sum deg(z)^2 over the SPARSIFIED graph, bounded by
     the significance cut, never all-pairs; closure testing is one
     equi-join against the node-pair-sized adjacency list."""
     adj = _sig_adj_df(spark, sf_dir)
-    sym = adj.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionByName(
-        adj.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    sym = _symmetric(adj)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    s1, s2 = sym.alias("s1"), sym.alias("s2")
-    wedge = s1.join(
-        s2,
-        (F.col("s1.u") == F.col("s2.u"))
-        & (F.col("s1.v") < F.col("s2.v")),
-    ).select(
-        F.col("s1.u").alias("z"),
-        F.col("s1.v").alias("na"),
-        F.col("s2.v").alias("nb"),
-    )
+    wedge = _wedges(sym)
     tri = (
         wedge.join(
             adj,
@@ -1519,56 +1449,11 @@ def graph_widest_path_from_hub(
     is node-sized, edges partition by u — bucketed at a billion
     edges, like BFS); rounds bounded by the diameter, and the
     max-merge is monotone so early rounds' work never reverses."""
-    edges = (
-        table(spark, sf_dir, "lineitem")
-        .join(
-            table(spark, sf_dir, "orders"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .join(
-            table(spark, sf_dir, "customer"),
-            F.col("c_custkey") == F.col("o_custkey"),
-        )
-        .join(
-            table(spark, sf_dir, "supplier"),
-            F.col("s_suppkey") == F.col("l_suppkey"),
-        )
-        .join(
-            table(spark, sf_dir, "nation").alias("n1"),
-            F.col("n1.n_nationkey") == F.col("s_nationkey"),
-        )
-        .join(
-            table(spark, sf_dir, "nation").alias("n2"),
-            F.col("n2.n_nationkey") == F.col("c_nationkey"),
-        )
-        .filter(F.col("n1.n_name") != F.col("n2.n_name"))
-        .groupBy(
-            F.col("n1.n_name").alias("src"),
-            F.col("n2.n_name").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = edges.agg(
-        F.count(F.lit(1)).alias("ne"), F.sum("w").alias("tw")
-    )
-    sig = edges.crossJoin(F.broadcast(tot)).filter(
-        F.col("w") * F.col("ne") >= LINKPRED_MIN_W_NUM * F.col("tw")
-    )
-    und = sig.groupBy(
+    und = _significant(_trade_edges_df(spark, sf_dir)).groupBy(
         F.least("src", "dst").alias("a"),
         F.greatest("src", "dst").alias("b"),
     ).agg(F.sum("w").alias("w"))
-    wedges = (
-        und.select(
-            F.col("a").alias("u"), F.col("b").alias("v"), "w"
-        )
-        .unionByName(
-            und.select(
-                F.col("b").alias("u"), F.col("a").alias("v"), "w"
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
+    wedges = _symmetric(und, "w").localCheckpoint(eager=True)
     cap_row = und.agg((F.sum("w") + 1).alias("c")).collect()[0]
     src_row = wedges.agg(F.min("u").alias("s")).collect()[0]
     if cap_row["c"] is None or src_row["s"] is None:
@@ -1603,39 +1488,11 @@ def graph_widest_path_from_hub(
 
 
 def _all_pairs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-sources BFS hop distances over the sparsified adjacency —
-    the multi-source Pregel flood with (src, node)-keyed state, shared
-    by closeness centrality and eccentricity/diameter (reuse
-    guard-tested)."""
-    adj = _sig_adj_df(spark, sf_dir)
-    sym = (
-        adj.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(
-            adj.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        .localCheckpoint(eager=True)
-    )
-    visited = (
-        sym.select(F.col("u").alias("src"))
-        .distinct()
-        .select("src", F.col("src").alias("node"), F.lit(0).alias("hops"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    for h in range(1, BFS_MAX_HOPS + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["u"])
-            .select("src", F.col("v").alias("node"))
-            .distinct()
-            .join(visited, ["src", "node"], "left_anti")
-            .select("src", "node", F.lit(h).alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    """All-sources BFS hop distances (src, node, hops) over the
+    sparsified adjacency: ``_bfs_hops`` seeded from every node, the
+    input of closeness, eccentricity and harmonic centrality."""
+    sym = _symmetric(_sig_adj_df(spark, sf_dir)).localCheckpoint(eager=True)
+    return _bfs_hops(sym, sym.select(F.col("u").alias("src")).distinct())
 
 
 @register(
@@ -1874,14 +1731,7 @@ def graph_katz_centrality_bounded(
     state; no all-pairs stage, no driver loop beyond the fixed literal
     K (the k-core fixed-schedule precedent: both engines run exactly
     K rounds, so the result is deterministic by construction)."""
-    adj = _sig_adj_df(spark, sf_dir)
-    sym = (
-        adj.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(
-            adj.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetric(_sig_adj_df(spark, sf_dir)).localCheckpoint(eager=True)
     walks = [
         sym.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("val"))
     ]
@@ -2052,7 +1902,7 @@ def _truss_oracle() -> str:
 
 
 def _truss_support_df(edges: DataFrame) -> DataFrame:
-    """Spark twin of `_truss_support_sql`: list x<y<z triangles once,
+    """Spark twin of `_truss_round_sql`: list x<y<z triangles once,
     then fan each out to its three edges."""
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y2"), F.col("b").alias("z"))
@@ -2102,8 +1952,7 @@ def graph_ktruss_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, no driver-side state beyond the literal round count;
     the edge frame shrinks monotonically so later rounds only get
     cheaper."""
-    adj = _sig_adj_df(spark, sf_dir).localCheckpoint(eager=True)
-    return _ktruss_decompose(adj)
+    return _ktruss_decompose(_sig_adj_df(spark, sf_dir))
 
 
 def _ktruss_decompose(adj: DataFrame) -> DataFrame:
@@ -2209,7 +2058,7 @@ def graph_ppr_single_source(
     returns to the SOURCE each step instead of spreading uniformly, so
     the stationary mass decays with walk distance from the hub.
 
-    Exactness: identical discipline to graph_pagerank_trade — per-edge
+    Exactness: the power iteration of graph_pagerank_trade — per-edge
     contributions in DOUBLE, quantized DECIMAL(18,12) BEFORE the
     per-node sum (order-independent reduction), damped update back in
     DOUBLE; both engines unroll the identical fixed 6 iterations, and
@@ -2217,8 +2066,9 @@ def graph_ppr_single_source(
     dangling nodes is NOT redistributed (matches the global op's
     documented convention).
 
-    Scale: the kernel is `_trade_frac_df` (shared with PageRank, reuse
-    guard-tested) — each iteration is one hash join of the edge
+    Scale: the kernels are `_trade_frac_df` and
+    `_damped_power_iterate`, as in PageRank — each iteration is one
+    hash join of the edge
     fractions against a one-row-per-node rank table plus a map-side
     combined sum; the personalization vector adds nothing to the
     state.  On a billion-node graph the documented swap is
@@ -2238,48 +2088,22 @@ def graph_ppr_single_source(
 
 
 def _ppr_power_iterate(nodes: DataFrame, frac: DataFrame) -> DataFrame:
-    """The PPR power-iteration kernel over arbitrary (nodes, frac)
-    frames — factored out so tools/probe_graph.py can drive the
-    IDENTICAL fixed 6-iteration schedule on a synthetic 10⁴-node graph
-    (VERDICT r13 item 4).  Returns (node, hub, r) after
-    PPR_ITERATIONS damped updates from the lexicographic-min source."""
+    """``_damped_power_iterate`` with PPR's start vector and teleport
+    over arbitrary (nodes, frac) frames, so tools/probe_graph.py drives
+    the identical fixed 6-iteration schedule on a synthetic 10⁴-node
+    graph.  Returns (node, hub, r) after PPR_ITERATIONS damped updates
+    from the lexicographic-min source."""
     hub_row = frac.agg(F.min("src").alias("hub"))
-    ranks = nodes.crossJoin(F.broadcast(hub_row)).select(
-        "node",
-        "hub",
-        F.when(F.col("node") == F.col("hub"), F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("r"),
+    hubbed = nodes.crossJoin(F.broadcast(hub_row))
+    is_hub = F.col("node") == F.col("hub")
+    return _damped_power_iterate(
+        hubbed,
+        frac,
+        F.when(is_hub, F.lit(1.0)).otherwise(F.lit(0.0)),
+        F.when(is_hub, F.lit(PPR_ALPHA)).otherwise(F.lit(0.0)),
+        PPR_DAMPING,
+        PPR_ITERATIONS,
     )
-    for _ in range(PPR_ITERATIONS):
-        contrib = (
-            frac.join(ranks, frac.src == ranks.node)
-            .select(
-                "dst",
-                (F.col("r") * F.col("frac")).cast(_DEC).alias("term"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("term").alias("sum_dec"))
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(hub_row))
-            .join(contrib, F.col("node") == F.col("dst"), "left")
-            .select(
-                "node",
-                "hub",
-                (
-                    F.when(
-                        F.col("node") == F.col("hub"), F.lit(PPR_ALPHA)
-                    ).otherwise(F.lit(0.0))
-                    + F.lit(PPR_DAMPING)
-                    * F.coalesce(
-                        F.col("sum_dec").cast("double"), F.lit(0.0)
-                    )
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
 
 
 # ---------------------------------------------------------------------------
@@ -2366,54 +2190,44 @@ def graph_hits_hubs_authorities(
     against a one-row-per-node score table + a map-side combined sum +
     one scalar max — the PageRank cost shape exactly; 12 such
     half-steps, edge fractions not even needed (HITS is unweighted)."""
-    frac_src = _trade_frac_df(spark, sf_dir)
-    dedges = frac_src.select("src", "dst").distinct().localCheckpoint(
-        eager=True
+    # (src, dst) is the grouping key of the edge list: already distinct.
+    dedges = (
+        _trade_edges_df(spark, sf_dir)
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
     )
     nodes = table(spark, sf_dir, "nation").select(
         F.col("n_name").alias("node")
     )
+
+    def half_step(score: DataFrame, tail: str, head: str) -> DataFrame:
+        """Σ of ``score`` over the edges from ``tail`` to each ``head``
+        node, quantized per edge, then divided by its max."""
+        raw = (
+            dedges.join(score, F.col(tail) == F.col("node"))
+            .select(
+                F.col(head).alias("node"),
+                F.col("val").cast("decimal(18,12)").alias("term"),
+            )
+            .groupBy("node")
+            .agg(F.sum("term").alias("s"))
+        )
+        raw = nodes.join(raw, "node", "left").select(
+            "node",
+            F.coalesce(F.col("s").cast("double"), F.lit(0.0)).alias("raw"),
+        )
+        mx = raw.agg(F.max("raw").alias("m"))
+        return (
+            raw.crossJoin(F.broadcast(mx))
+            .select("node", (F.col("raw") / F.col("m")).alias("val"))
+            .localCheckpoint(eager=True)
+        )
+
     h = nodes.withColumn("val", F.lit(1.0))
     a = None
     for _ in range(HITS_ITERATIONS):
-        araw = (
-            dedges.join(h, dedges.src == h.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.col("val").cast("decimal(18,12)").alias("term"),
-            )
-            .groupBy("node")
-            .agg(F.sum("term").alias("s"))
-        )
-        araw = nodes.join(araw, "node", "left").select(
-            "node",
-            F.coalesce(F.col("s").cast("double"), F.lit(0.0)).alias("raw"),
-        )
-        amax = araw.agg(F.max("raw").alias("m"))
-        a = (
-            araw.crossJoin(F.broadcast(amax))
-            .select("node", (F.col("raw") / F.col("m")).alias("val"))
-            .localCheckpoint(eager=True)
-        )
-        hraw = (
-            dedges.join(a, dedges.dst == a.node)
-            .select(
-                F.col("src").alias("node"),
-                F.col("val").cast("decimal(18,12)").alias("term"),
-            )
-            .groupBy("node")
-            .agg(F.sum("term").alias("s"))
-        )
-        hraw = nodes.join(hraw, "node", "left").select(
-            "node",
-            F.coalesce(F.col("s").cast("double"), F.lit(0.0)).alias("raw"),
-        )
-        hmax = hraw.agg(F.max("raw").alias("m"))
-        h = (
-            hraw.crossJoin(F.broadcast(hmax))
-            .select("node", (F.col("raw") / F.col("m")).alias("val"))
-            .localCheckpoint(eager=True)
-        )
+        a = half_step(h, "src", "dst")
+        h = half_step(a, "dst", "src")
     return (
         h.select(F.col("node").alias("nation"), F.round("val", 9).alias("hub"))
         .join(

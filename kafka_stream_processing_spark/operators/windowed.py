@@ -6933,21 +6933,29 @@ def window_sample_entropy_daily(
 HURST_BLOCK_SIZES = (8, 16, 32, 64, 128)
 
 
+def _ols_slope_text(us: list[str], vs: list[str]) -> str:
+    """Closed-form OLS slope of v on u as one fixed-order SQL text,
+    (n·Σuv − Σu·Σv) / (n·Σu² − (Σu)²), over the SQL terms ``us`` and
+    ``vs`` (the u-terms are compile-time literals)."""
+    n = len(us)
+    su = " + ".join(us)
+    suu = " + ".join(f"{u} * {u}" for u in us)
+    sv = " + ".join(vs)
+    suv = " + ".join(f"{u} * {v}" for u, v in zip(us, vs))
+    return (
+        f"(({n} * ({suv}) - ({su}) * ({sv}))"
+        f" / ({n} * ({suu}) - ({su}) * ({su})))"
+    )
+
+
 def _hurst_slope_expr() -> str:
-    """Closed-form OLS slope of ln(mean R/S) on ln(s) over the fixed
-    block sizes, as one shared SQL text (u-values are compile-time
-    float literals; v-columns are mrs_<s>)."""
+    """OLS slope of ln(mean R/S) on ln(s) over the fixed block sizes,
+    one SQL text shared with the oracle (v-columns mrs_<s>)."""
     import math
 
-    us = {s: repr(math.log(s)) for s in HURST_BLOCK_SIZES}
-    k = len(HURST_BLOCK_SIZES)
-    su = " + ".join(us[s] for s in HURST_BLOCK_SIZES)
-    suu = " + ".join(f"{us[s]} * {us[s]}" for s in HURST_BLOCK_SIZES)
-    sv = " + ".join(f"ln(mrs_{s})" for s in HURST_BLOCK_SIZES)
-    suv = " + ".join(f"{us[s]} * ln(mrs_{s})" for s in HURST_BLOCK_SIZES)
-    return (
-        f"(({k} * ({suv}) - ({su}) * ({sv}))"
-        f" / ({k} * ({suu}) - ({su}) * ({su})))"
+    return _ols_slope_text(
+        [repr(math.log(s)) for s in HURST_BLOCK_SIZES],
+        [f"ln(mrs_{s})" for s in HURST_BLOCK_SIZES],
     )
 
 
@@ -7816,19 +7824,12 @@ def _dfa_c(s: int) -> int:
 
 
 def _dfa_slope_expr() -> str:
-    """Closed-form OLS slope of ln(mean F) on ln(s) — the Hurst op's
-    pivot/slope structure with F-columns mf_<s>."""
+    """OLS slope of ln(mean F) on ln(s), F-columns mf_<s>."""
     import math
 
-    us = {s: repr(math.log(s)) for s in DFA_BLOCK_SIZES}
-    k = len(DFA_BLOCK_SIZES)
-    su = " + ".join(us[s] for s in DFA_BLOCK_SIZES)
-    suu = " + ".join(f"{us[s]} * {us[s]}" for s in DFA_BLOCK_SIZES)
-    sv = " + ".join(f"ln(mf_{s})" for s in DFA_BLOCK_SIZES)
-    suv = " + ".join(f"{us[s]} * ln(mf_{s})" for s in DFA_BLOCK_SIZES)
-    return (
-        f"(({k} * ({suv}) - ({su}) * ({sv}))"
-        f" / ({k} * ({suu}) - ({su}) * ({su})))"
+    return _ols_slope_text(
+        [repr(math.log(s)) for s in DFA_BLOCK_SIZES],
+        [f"ln(mf_{s})" for s in DFA_BLOCK_SIZES],
     )
 
 
@@ -8353,19 +8354,12 @@ HIGUCHI_K_SET = (1, 2, 3, 4, 5)
 
 
 def _higuchi_slope_expr() -> str:
-    """Closed-form OLS slope of ln(L(k)) on ln(k) — the DFA/Hurst
-    pivot/slope structure with L-columns lk_<k>."""
+    """OLS slope of ln(L(k)) on ln(k), L-columns lk_<k>."""
     import math
 
-    us = {k: repr(math.log(k)) for k in HIGUCHI_K_SET}
-    n = len(HIGUCHI_K_SET)
-    su = " + ".join(us[k] for k in HIGUCHI_K_SET)
-    suu = " + ".join(f"{us[k]} * {us[k]}" for k in HIGUCHI_K_SET)
-    sv = " + ".join(f"ln(lk_{k})" for k in HIGUCHI_K_SET)
-    suv = " + ".join(f"{us[k]} * ln(lk_{k})" for k in HIGUCHI_K_SET)
-    return (
-        f"(({n} * ({suv}) - ({su}) * ({sv}))"
-        f" / ({n} * ({suu}) - ({su}) * ({su})))"
+    return _ols_slope_text(
+        [repr(math.log(k)) for k in HIGUCHI_K_SET],
+        [f"ln(lk_{k})" for k in HIGUCHI_K_SET],
     )
 
 
@@ -8943,17 +8937,10 @@ LYAP_HORIZONS = (0, 1, 2, 3, 4, 5)
 
 
 def _lyap_slope_expr() -> str:
-    """Closed-form OLS slope of y(k) on k over the literal horizon set
-    — the Higuchi/DFA fixed-order text with y-columns y_<k>."""
-    ks = LYAP_HORIZONS
-    n = len(ks)
-    su = " + ".join(str(k) for k in ks)
-    suu = " + ".join(f"{k} * {k}" for k in ks)
-    sv = " + ".join(f"y_{k}" for k in ks)
-    suv = " + ".join(f"{k} * y_{k}" for k in ks)
-    return (
-        f"(({n} * ({suv}) - ({su}) * ({sv}))"
-        f" / ({n} * ({suu}) - ({su}) * ({su})))"
+    """OLS slope of y(k) on k over the literal horizon set, y-columns
+    y_<k>."""
+    return _ols_slope_text(
+        [str(k) for k in LYAP_HORIZONS], [f"y_{k}" for k in LYAP_HORIZONS]
     )
 
 

@@ -141,13 +141,27 @@ def run_foreach_batch(
 def file_stream(
     spark: SparkSession, path: str, files_per_trigger: int | None = 1
 ) -> DataFrame:
-    """Streaming parquet source over a staged directory, with the schema
-    read once from the files already there (a file stream cannot infer
-    it).  The schema is the raw one (events' ts as nanos-long); callers
-    normalize after.  ``files_per_trigger=1`` turns each staged chunk
-    file into its own micro-batch; ``None`` reads everything in one
-    trigger."""
-    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    """Streaming parquet source over a staged directory.  A file stream
+    cannot infer its schema, so it comes from the footer of one staged
+    file (all files of a staged directory share it), read with pyarrow:
+    ``spark.read.parquet(path).schema`` would run a Spark job per call.
+    The schema is the raw one (TIMESTAMP(NANOS) as the bigint the
+    session's nanosAsLong conf reads); callers normalize after.
+    ``files_per_trigger=1`` turns each staged chunk file into its own
+    micro-batch; ``None`` reads everything in one trigger."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = pq.read_schema(min(glob.glob(os.path.join(path, "*.parquet"))))
+    footer = pa.schema([
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+        for f in footer
+    ])
+    reader = spark.readStream.schema(from_arrow_schema(footer))
     if files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
     return reader.parquet(path)

@@ -65,9 +65,11 @@ def _timed(label: str, build, checks) -> float:
 def main(graph_dir: str, sf_dir: str) -> None:
     from kafka_stream_processing_spark.operators.graph import (
         PPR_ALPHA,
+        _edge_fractions,
         _ktruss_decompose,
         _ppr_power_iterate,
         _sig_adj_df,
+        _symmetric,
         _trade_frac_df,
     )
     from kafka_stream_processing_spark.session import get_spark
@@ -99,7 +101,7 @@ def main(graph_dir: str, sf_dir: str) -> None:
         lambda: _ktruss_decompose(adj_syn),
         truss_checks,
     )
-    adj_nat = _sig_adj_df(spark, sf_dir).localCheckpoint(eager=True)
+    adj_nat = _sig_adj_df(spark, sf_dir)
     t_truss_nat = _timed(
         "ktruss nation(25 nodes)",
         lambda: _ktruss_decompose(adj_nat),
@@ -116,27 +118,9 @@ def main(graph_dir: str, sf_dir: str) -> None:
         assert 0.0 < agg.mass <= 1.0 + PPR_ALPHA, agg.mass
         print(f"  ppr mass {agg.mass:.6f} over {agg.n} nodes", flush=True)
 
-    # directed frac view: each undirected edge both ways, w-weighted
-    # (mirrors _trade_frac_df's out-degree normalization exactly).
-    both = edges.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-    ).unionByName(
-        edges.select(
-            F.col("b").alias("src"), F.col("a").alias("dst"), "w"
-        )
-    )
-    outw = both.groupBy("src").agg(F.sum("w").alias("total"))
-    frac_syn = (
-        both.join(outw, "src")
-        .select(
-            "src",
-            "dst",
-            (
-                F.col("w").cast("double") / F.col("total").cast("double")
-            ).alias("frac"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    # Directed view: each undirected edge both ways, w-weighted, through
+    # the same edge-fraction kernel as the registered ops.
+    frac_syn = _edge_fractions(_symmetric(edges, "w").toDF("src", "dst", "w"))
     t_ppr_syn = _timed(
         "ppr synthetic(10k nodes)",
         lambda: _ppr_power_iterate(nodes, frac_syn),

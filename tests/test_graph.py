@@ -106,3 +106,27 @@ def test_connected_components_job_count_guard(spark):
             sc.setLocalProperty(f"spark.{key}", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < n_jobs < 93, n_jobs
+
+
+def test_graph_operators_share_one_trade_edge_join():
+    """The trade-edge join lives in one kernel (``_trade_pairs``); a
+    second lineitem scan in operators/graph.py is a hand copy of it."""
+    import inspect
+
+    from kafka_stream_processing_spark.operators import graph
+
+    source = inspect.getsource(graph)
+    assert source.count('table(spark, sf_dir, "lineitem")') == 1
+
+
+def test_bfs_from_source_is_the_all_pairs_case_of_its_source(spark, sf_small):
+    """Single-source BFS is the one-seed case of the all-sources loop:
+    its rows are the ``_all_pairs_hops`` rows of that source."""
+    from kafka_stream_processing_spark.operators import graph
+
+    single = SPECS["graph_bfs_hops_from_source"].fn(spark, sf_small).collect()
+    pairs = graph._all_pairs_hops(spark, sf_small).collect()
+    source = min(r.src for r in pairs)
+    want = sorted((r.node, r.hops) for r in pairs if r.src == source)
+    assert sorted((r.node, r.hops) for r in single) == want
+    assert len(want) > 1

@@ -364,6 +364,46 @@ def test_stagers_pin_chunk_order(sf_small, stager):
     assert all(a < b for a, b in zip(secs, secs[1:])), secs
 
 
+_SOURCE_STAGERS = {
+    **_CHUNK_STAGERS,
+    "events_file": unique_users._stream_source_dir,
+    "doc_batch": joins._stream_doc_batch_source_dir,
+    "docs_all": joins._all_docs_chunked_source_dir,
+}
+
+
+@pytest.mark.parametrize("stager", list(_SOURCE_STAGERS))
+def test_file_stream_reads_schema_without_a_job(spark, sf_small, stager):
+    """file_stream takes its schema from one parquet footer: building the
+    stream frame launches no Spark job, and the schema is the one Spark
+    infers from the staged directory."""
+    path = _SOURCE_STAGERS[stager](sf_small)
+    sc, group = spark.sparkContext, f"file_stream_{stager}"
+    sc.setJobGroup(group, group)
+    try:
+        stream = file_stream(spark, path)
+    finally:
+        for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{key}", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert stream.schema == spark.read.parquet(path).schema
+
+
+def test_file_stream_reads_nanos_as_bigint(spark, tmp_path):
+    """TIMESTAMP(NANOS) columns come back as the bigint Spark's
+    nanosAsLong conf reads, like the batch reader's schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(
+        pa.table({"ts": ts, "k": [1]}), str(tmp_path / "chunk-0.parquet")
+    )
+    stream = file_stream(spark, str(tmp_path))
+    assert stream.schema == spark.read.parquet(str(tmp_path)).schema
+    assert stream.schema["ts"].dataType.simpleString() == "bigint"
+
+
 def _three_batch_dir(path: pathlib.Path) -> str:
     """Three parquet chunks, one micro-batch each; the middle one has no
     row with x > 0."""
