@@ -14,16 +14,119 @@ once (Spark rewrites it as a two-phase expand+agg); per-window parallelism
 comes from the window key, not a constant key.  For unbounded cardinality
 the ``approx_`` variant keeps per-window state at O(KB) (HyperLogLog++),
 which is the default we recommend at scale.
+
+Kernels: the time-series operators build their inputs from a few
+private helpers, each owning one decision.  ``_event_day`` is the events
+day bucket and ``_events_daily`` the events daily series built on it
+(optionally per ``event_type``, with the epoch-day key ``d`` or the
+per-series day index ``i``); ``_orders_daily`` is the orders daily
+series (the DECIMAL(18,6) revenue ``rev``, its micro-unit bigint
+``xm``, or the order count); ``_user_lifetimes`` gives the survival
+ops' per-user lifetimes with the horizon censoring rule; ``_r6`` is the
+half-away-from-zero rounding every pandas fold applies per step; and
+``_permutation_entropy`` is the one Bandt-Pompe pattern fold over
+``PERM_PATTERNS`` (the streaming monitor in streaming/joins.py uses it
+too).  The Holt, Holt-Winters, damped and theta recurrences stay per
+op.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_stream_processing_spark.functions.exact import dec
+from kafka_stream_processing_spark.functions.exact import dec, dec_sum
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
+
+
+def _r6(v: float) -> float:
+    """Round half away from zero at 6 decimals: DuckDB's round(v, 6),
+    not Python's round() (banker's).  The pandas folds round every
+    recurrence step with it, as the oracles' recursive CTEs do."""
+    return math.copysign(math.floor(abs(v) * 1e6 + 0.5) / 1e6, v)
+
+
+def _event_day() -> F.Column:
+    """The events day bucket: ``ts`` truncated to its day, as a DATE."""
+    return F.date_trunc("day", "ts").cast("date")
+
+
+def _events_daily(
+    spark: SparkSession,
+    sf_dir: str,
+    *aggs: F.Column,
+    by_type: bool = False,
+    epoch: bool = False,
+    index: bool = False,
+) -> DataFrame:
+    """The events daily series: one row per day bucket (per
+    ``event_type`` and day with ``by_type``) carrying ``aggs``, by
+    default ``x``, the day's DECIMAL(18,6) value sum.  ``epoch``
+    replaces ``day`` by ``d``, its day number since 1970-01-01 (the
+    integer key the lag and pair joins match on).  ``index`` adds
+    ``i``, the day's 1-based position in its series."""
+    from pyspark.sql import Window
+
+    keys = ["event_type"] if by_type else []
+    daily = (
+        table(spark, sf_dir, "events")
+        .groupBy(*keys, _event_day().alias("day"))
+        .agg(*(aggs or [F.sum(dec("value")).alias("x")]))
+    )
+    if index:
+        daily = daily.withColumn(
+            "i",
+            F.row_number().over(Window.partitionBy(*keys).orderBy("day")),
+        )
+    if epoch:
+        daily = daily.select(
+            *keys,
+            F.datediff("day", F.lit("1970-01-01").cast("date")).alias("d"),
+            *daily.columns[len(keys) + 1:],
+        )
+    return daily
+
+
+def _user_lifetimes(
+    spark: SparkSession, sf_dir: str, *carry: F.Column
+) -> DataFrame:
+    """Per-user lifetimes for the survival ops: ``carry`` (columns over
+    user_id and the first/last active days d0/d1), then ``t``, the days
+    from d0 to d1, and ``censored``, 1 when d1 is the horizon (the
+    latest active day of any user), where the user may still be
+    active."""
+    by_user = table(spark, sf_dir, "events").groupBy("user_id").agg(
+        F.min(_event_day()).alias("d0"),
+        F.max(_event_day()).alias("d1"),
+    )
+    horizon = by_user.agg(F.max("d1").alias("h"))
+    return by_user.crossJoin(F.broadcast(horizon)).select(
+        *carry,
+        F.datediff("d1", "d0").alias("t"),
+        F.when(F.col("d1") == F.col("h"), F.lit(1))
+        .otherwise(F.lit(0))
+        .alias("censored"),
+    )
+
+
+def _orders_daily(
+    spark: SparkSession, sf_dir: str, series: str = "rev"
+) -> DataFrame:
+    """The orders daily series, one row per ``day`` (o_orderdate).
+    ``"rev"`` carries ``rev``, the day's DECIMAL(18,6) o_totalprice sum;
+    ``"micro"`` carries that sum as ``xm``, an exact bigint of
+    micro-units, and ``"count"`` the day's order count as ``xm``."""
+    if series == "count":
+        x = F.count(F.lit(1)).cast("bigint").alias("xm")
+    elif series == "micro":
+        x = (F.sum(dec("o_totalprice")) * 1000000).cast("bigint").alias("xm")
+    else:
+        x = F.sum(dec("o_totalprice")).alias("rev")
+    orders = table(spark, sf_dir, "orders")
+    return orders.groupBy(F.col("o_orderdate").alias("day")).agg(x)
 
 
 @register(
@@ -1108,10 +1211,7 @@ def window_cusum_changepoint(
     window partitioned by source."""
     from pyspark.sql import Window
 
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _events_daily(spark, sf_dir, F.count(F.lit(1)).alias("x"))
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("t")
     )
@@ -1222,10 +1322,7 @@ def window_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational equivalent both engines express)."""
     from pyspark.sql import Window
 
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _events_daily(spark, sf_dir, F.count(F.lit(1)).alias("x"))
     idx = daily.select(
         "day",
         "x",
@@ -1328,14 +1425,7 @@ def window_seasonal_naive_backtest(
     is series-sized.  Volume-independent beyond the first scan."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True)
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.withColumn(
         "f", F.lag("x", SEASONAL_LAG_DAYS).over(w)
@@ -1447,21 +1537,7 @@ def window_theil_sen_trend(
     same windows, O(n) memory per rank partition)."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            "event_type",
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True, epoch=True)
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, "event_type").filter(
         F.col("a.d") < F.col("b.d")
@@ -1577,19 +1653,7 @@ def window_acf_daily_revenue(
     map-side-combined pass; the lag join is days × 7 rows.  At 100 TB
     with per-key series, partition the deviation table by series key
     and the same join computes every series' ACF in one shuffle."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, epoch=True)
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
@@ -1703,13 +1767,7 @@ def window_rolling_zscore_anomalies(
     partitioned by key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     w = (
         Window.orderBy("day").rowsBetween(-ROLLZ_WIN, -1)
     )
@@ -1812,18 +1870,7 @@ def window_kaplan_meier_retention(
     calendar, never by event volume.  At 100 TB per-cohort curves
     partition every window by cohort key (window_km_retention_by_cohort
     is exactly that — same km_curve kernel, cohort-partitioned)."""
-    ev = table(spark, sf_dir, "events")
-    by_user = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts").cast("date")).alias("d0"),
-        F.max(F.date_trunc("day", "ts").cast("date")).alias("d1"),
-    )
-    horizon = by_user.agg(F.max("d1").alias("h"))
-    life = by_user.crossJoin(F.broadcast(horizon)).select(
-        F.datediff("d1", "d0").alias("t"),
-        F.when(F.col("d1") == F.col("h"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("censored"),
-    )
+    life = _user_lifetimes(spark, sf_dir)
     return km_curve(life).select(
         F.col("t").cast("int").alias("t_days"),
         F.col("n_at_risk").cast("bigint").alias("n_at_risk"),
@@ -2209,21 +2256,7 @@ def window_mann_kendall_trend(
         Z_CRIT_005,
     )
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            "event_type",
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True, epoch=True)
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, "event_type").filter(
         F.col("a.d") < F.col("b.d")
@@ -2357,20 +2390,12 @@ def window_km_retention_by_cohort(
     (cohorts × horizon)-sized step table; every window carries the
     cohort partition key, so cohorts parallelize — exactly the
     docstring promise of the global op made code."""
-    ev = table(spark, sf_dir, "events")
-    by_user = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts").cast("date")).alias("d0"),
-        F.max(F.date_trunc("day", "ts").cast("date")).alias("d1"),
-    )
-    horizon = by_user.agg(F.max("d1").alias("h"))
-    life = by_user.crossJoin(F.broadcast(horizon)).select(
+    life = _user_lifetimes(
+        spark,
+        sf_dir,
         F.date_trunc("week", "d0").cast("date").cast("string").alias(
             "cohort"
         ),
-        F.datediff("d1", "d0").alias("t"),
-        F.when(F.col("d1") == F.col("h"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("censored"),
     )
     return km_curve(life, part=["cohort"]).select(
         "cohort",
@@ -2396,14 +2421,7 @@ def _holt_fold(pdf):
     NOT python's round() (banker's) and not Spark's BigDecimal HALF_UP
     (never evaluated here: all engine-side arithmetic for this op
     happens in THIS fold)."""
-    import math
-
     import pandas as pd
-
-    def r6(v: float) -> float:
-        return math.copysign(
-            math.floor(abs(v) * 1e6 + 0.5) / 1e6, v
-        )
 
     pdf = pdf.sort_values("i").reset_index(drop=True)
     if len(pdf) < 2:
@@ -2427,8 +2445,8 @@ def _holt_fold(pdf):
     for t in range(2, len(xs) + 1):
         x = xs[t - 1]
         f = l_prev + b_prev
-        l_new = r6(0.5 * x + 0.5 * (l_prev + b_prev))
-        b_new = r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
+        l_new = _r6(0.5 * x + 0.5 * (l_prev + b_prev))
+        b_new = _r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
         out.append((t, x, l_new, b_new, f, x - f))
         l_prev, b_prev = l_new, b_new
     res = pd.DataFrame(
@@ -2518,24 +2536,9 @@ def window_holt_linear_smoothing(
     table; the fold is O(days) per series with O(1) state, grouped by
     series key — a million series parallelize perfectly; a series
     never outgrows its calendar."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    from pyspark.sql import Window
-
-    idx = daily.select(
-        "event_type",
-        F.col("day").cast("string").alias("day"),
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
-    )
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
+    ).withColumn("day", F.col("day").cast("string"))
     return idx.groupBy("event_type").applyInPandas(
         _holt_fold,
         schema=(
@@ -2634,13 +2637,7 @@ def window_classical_decomposition(
     window by key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     half = DECOMP_PERIOD // 2
     w = Window.orderBy("day").rowsBetween(-half, half)
     ma = daily.select(
@@ -2732,14 +2729,9 @@ def _holt_winters_fold(pdf):
     the same value DuckDB gets casting an exact DECIMAL(18,6) sum to
     DOUBLE before its single division.  Series shorter than 2m emit
     nothing (the oracle's HAVING mirrors it)."""
-    import math
-
     import pandas as pd
 
     m = HW_PERIOD
-
-    def r6(v: float) -> float:
-        return math.copysign(math.floor(abs(v) * 1e6 + 0.5) / 1e6, v)
 
     cols = [
         "event_type",
@@ -2759,17 +2751,17 @@ def _holt_winters_fold(pdf):
     micro = [int(math.floor(abs(x) * 1e6 + 0.5)) * (1 if x >= 0 else -1) for x in xs]
     m1 = (sum(micro[:m]) / 1e6) / m
     m2 = (sum(micro[m : 2 * m]) / 1e6) / m
-    l_prev = r6(m1)
-    b_prev = r6((m2 - m1) / m)
-    s = [r6(xs[i] - m1) for i in range(m)]
+    l_prev = _r6(m1)
+    b_prev = _r6((m2 - m1) / m)
+    s = [_r6(xs[i] - m1) for i in range(m)]
     out = [(m, xs[m - 1], l_prev, b_prev, s[m - 1], None, None)]
     for t in range(m + 1, len(xs) + 1):
         x = xs[t - 1]
         s_use = s[0]
         f = l_prev + b_prev + s_use
-        l_new = r6(0.5 * (x - s_use) + 0.5 * (l_prev + b_prev))
-        b_new = r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
-        s_new = r6(0.5 * (x - l_new) + 0.5 * s_use)
+        l_new = _r6(0.5 * (x - s_use) + 0.5 * (l_prev + b_prev))
+        b_new = _r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
+        s_new = _r6(0.5 * (x - l_new) + 0.5 * s_use)
         out.append((t, x, l_new, b_new, s_new, f, x - f))
         l_prev, b_prev = l_new, b_new
         s = s[1:] + [s_new]
@@ -2896,24 +2888,9 @@ def window_holt_winters_additive(
     The reference's only stateful op is an unbounded per-window
     HashSet (UniqueUsersCounter.java:80-84); this is the bounded-state
     counterexample."""
-    from pyspark.sql import Window
-
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    idx = daily.select(
-        "event_type",
-        F.col("day").cast("string").alias("day"),
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
-    )
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
+    ).withColumn("day", F.col("day").cast("string"))
     return idx.groupBy("event_type").applyInPandas(
         _holt_winters_fold,
         schema=(
@@ -3146,13 +3123,7 @@ def window_pettitt_changepoint(
     variants partition both windows by key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     ranked = daily.select(
         "day",
         F.rank().over(Window.orderBy("x")).alias("rk"),
@@ -3355,28 +3326,18 @@ def window_ccf_click_purchase(
     Scale: the daily collapse is one conditional-sum groupBy
     (map-side combined); everything after runs over CALENDAR-sized
     tables × 7 lags.  Per-key CCFs partition the join by key."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == "click", F.lit(1))
-                .otherwise(F.lit(0))
-            ).alias("x"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", F.lit(1))
-                .otherwise(F.lit(0))
-            ).alias("y"),
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-            "y",
-        )
+    daily = _events_daily(
+        spark,
+        sf_dir,
+        F.sum(
+            F.when(F.col("event_type") == "click", F.lit(1))
+            .otherwise(F.lit(0))
+        ).alias("x"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", F.lit(1))
+            .otherwise(F.lit(0))
+        ).alias("y"),
+        epoch=True,
     )
     tot = daily.agg(
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mx"),
@@ -3490,28 +3451,18 @@ def window_lagged_ols_clicks_purchases(
     combination terms need DECIMAL(38,0) — the documented swap, same
     table shape.  Per-key regressions group the moment aggregate by
     key."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("event_type") == "click", F.lit(1))
-                .otherwise(F.lit(0))
-            ).alias("c"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", F.lit(1))
-                .otherwise(F.lit(0))
-            ).alias("p"),
-        )
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "c",
-            "p",
-        )
+    daily = _events_daily(
+        spark,
+        sf_dir,
+        F.sum(
+            F.when(F.col("event_type") == "click", F.lit(1))
+            .otherwise(F.lit(0))
+        ).alias("c"),
+        F.sum(
+            F.when(F.col("event_type") == "purchase", F.lit(1))
+            .otherwise(F.lit(0))
+        ).alias("p"),
+        epoch=True,
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, F.col("b.d") == F.col("a.d") + 1).select(
@@ -3634,13 +3585,7 @@ def window_page_hinkley_drift(
     four windows by key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     cum = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3846,18 +3791,8 @@ def window_forecast_skill_scores(
     Scale: daily collapse map-side combined; both lag joins and the
     single aggregate run over the CALENDAR-sized table.  Per-key skill
     scores group the final aggregate by key."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
+    daily = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), epoch=True
     )
     c, l1, l7 = daily.alias("c"), daily.alias("l1"), daily.alias("l7")
     joined = (
@@ -3995,14 +3930,7 @@ def window_decomposition_strength_by_type(
     key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True)
     half = DECOMP_PERIOD // 2
     w = (
         Window.partitionBy("event_type")
@@ -4445,13 +4373,7 @@ def window_record_days_trend(
     partition the prefix-max by key."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     prev = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -4570,25 +4492,11 @@ def window_hw_skill_vs_naive(
 
     Scale: the fold parallelizes per series; everything downstream is
     (series × calendar)-sized joins and one grouped aggregate."""
-    from pyspark.sql import Window
-
     hw = window_holt_winters_additive(spark, sf_dir).filter(
         F.col("forecast").isNotNull()
     )
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    idx = daily.select(
-        "event_type",
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
     )
     c, l7 = idx.alias("c"), idx.alias("l7")
     nv = c.join(
@@ -4774,11 +4682,7 @@ def window_user_growth_curve(
     first_seen = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(
-            F.min(F.date_trunc("day", "ts").cast("date")).alias(
-                "cohort_day"
-            )
-        )
+        .agg(F.min(_event_day()).alias("cohort_day"))
     )
     daily = first_seen.groupBy(
         F.col("cohort_day").alias("day")
@@ -4864,7 +4768,7 @@ def window_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events")
         .select(
             "user_id",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
+            _event_day().alias("day"),
         )
         .distinct()
     )
@@ -4984,18 +4888,8 @@ def window_ljung_box_residuals(
     ACF cost class; per-key variants partition the lag join by key."""
     from pyspark.sql import Window as _W
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
+    daily = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), epoch=True
     )
     c, l7 = daily.alias("c"), daily.alias("l7")
     res = c.join(l7, F.col("l7.d") == F.col("c.d") - 7).select(
@@ -5152,9 +5046,7 @@ def window_cohort_ltv_curve(
 
     ev = table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts").cast("date")).alias(
-            "cohort_day"
-        )
+        F.min(_event_day()).alias("cohort_day")
     )
     cohorts = first_seen.select(
         "user_id",
@@ -5208,9 +5100,8 @@ def window_cohort_ltv_curve(
 # ---------------------------------------------------------------------------
 
 #: Shared lifetimes CTEs (user first->last active day, right-censored
-#: at the horizon) — the SQL twin of the lifetime build inside
-#: window_kaplan_meier_retention, reused by the Nelson-Aalen and
-#: log-rank oracles.
+#: at the horizon) — the SQL twin of ``_user_lifetimes``, reused by the
+#: Nelson-Aalen and log-rank oracles.
 _LIFE_CTES = """by_user AS (
         SELECT user_id,
                min(CAST(date_trunc('day', ts) AS DATE)) AS d0,
@@ -5281,18 +5172,7 @@ def window_nelson_aalen_hazard(
     lifetimes, then everything runs on the risk_table step table
     (calendar-sized), via the SAME shared kernel (reuse
     guard-tested)."""
-    ev = table(spark, sf_dir, "events")
-    by_user = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts").cast("date")).alias("d0"),
-        F.max(F.date_trunc("day", "ts").cast("date")).alias("d1"),
-    )
-    horizon = by_user.agg(F.max("d1").alias("h"))
-    life = by_user.crossJoin(F.broadcast(horizon)).select(
-        F.datediff("d1", "d0").alias("t"),
-        F.when(F.col("d1") == F.col("h"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("censored"),
-    )
+    life = _user_lifetimes(spark, sf_dir)
     from pyspark.sql import Window
 
     risk = risk_table(life).filter(F.col("d") > 0)
@@ -5417,18 +5297,8 @@ def window_logrank_test_cohorts(
     every pooled event time without a per-user scan."""
     from pyspark.sql import Window
 
-    ev = table(spark, sf_dir, "events")
-    by_user = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts").cast("date")).alias("d0"),
-        F.max(F.date_trunc("day", "ts").cast("date")).alias("d1"),
-    )
-    horizon = by_user.agg(F.max("d1").alias("h"))
-    life = by_user.crossJoin(F.broadcast(horizon)).select(
-        (F.col("user_id") % 2).alias("g"),
-        F.datediff("d1", "d0").alias("t"),
-        F.when(F.col("d1") == F.col("h"), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("censored"),
+    life = _user_lifetimes(
+        spark, sf_dir, (F.col("user_id") % 2).alias("g")
     )
     steps = life.groupBy("g", "t").agg(
         F.sum(F.lit(1) - F.col("censored")).alias("d"),
@@ -5519,14 +5389,9 @@ def _holt_winters_mult_fold(pdf):
     smoothing is only defined on strictly positive data: series with
     any x <= 0 in view, or shorter than 2m, emit nothing (the
     oracle's HAVING mirrors both gates)."""
-    import math
-
     import pandas as pd
 
     m = HW_PERIOD
-
-    def r6(v: float) -> float:
-        return math.copysign(math.floor(abs(v) * 1e6 + 0.5) / 1e6, v)
 
     cols = [
         "event_type",
@@ -5549,17 +5414,17 @@ def _holt_winters_mult_fold(pdf):
     ]
     m1 = (sum(micro[:m]) / 1e6) / m
     m2 = (sum(micro[m : 2 * m]) / 1e6) / m
-    l_prev = r6(m1)
-    b_prev = r6((m2 - m1) / m)
-    s = [r6(xs[i] / m1) for i in range(m)]
+    l_prev = _r6(m1)
+    b_prev = _r6((m2 - m1) / m)
+    s = [_r6(xs[i] / m1) for i in range(m)]
     out = [(m, xs[m - 1], l_prev, b_prev, s[m - 1], None, None)]
     for t in range(m + 1, len(xs) + 1):
         x = xs[t - 1]
         s_use = s[0]
         f = (l_prev + b_prev) * s_use
-        l_new = r6(0.5 * (x / s_use) + 0.5 * (l_prev + b_prev))
-        b_new = r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
-        s_new = r6(0.5 * (x / l_new) + 0.5 * s_use)
+        l_new = _r6(0.5 * (x / s_use) + 0.5 * (l_prev + b_prev))
+        b_new = _r6(0.5 * (l_new - l_prev) + 0.5 * b_prev)
+        s_new = _r6(0.5 * (x / l_new) + 0.5 * s_use)
         out.append((t, x, l_new, b_new, s_new, f, x - f))
         l_prev, b_prev = l_new, b_new
         s = s[1:] + [s_new]
@@ -5680,24 +5545,9 @@ def window_holt_winters_multiplicative(
     Scale: identical to the additive op — per-series linear fold,
     O(m) state, series parallelize across tasks; at 100 TB a million
     series is a million independent folds."""
-    from pyspark.sql import Window
-
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    idx = daily.select(
-        "event_type",
-        F.col("day").cast("string").alias("day"),
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
-    )
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
+    ).withColumn("day", F.col("day").cast("string"))
     return idx.groupBy("event_type").applyInPandas(
         _holt_winters_mult_fold,
         schema=(
@@ -5955,21 +5805,7 @@ def window_seasonal_mann_kendall(
     from kafka_stream_processing_spark.operators.quality_kernel import (
         Z_CRIT_005,
     )
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            "event_type",
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias(
-                "d"
-            ),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True, epoch=True)
     seas = daily.select(
         "event_type", "d", (F.col("d") % 7).alias("w"), "x"
     )
@@ -6183,14 +6019,9 @@ def _holt_damped_fold(pdf):
     update and its own persistence; same C-style half-away round-6
     per step as every fold so the trajectory is bit-identical to the
     oracle's recursive CTE."""
-    import math
-
     import pandas as pd
 
     phi = HOLT_DAMPING_PHI
-
-    def r6(v: float) -> float:
-        return math.copysign(math.floor(abs(v) * 1e6 + 0.5) / 1e6, v)
 
     cols = [
         "event_type",
@@ -6216,8 +6047,8 @@ def _holt_damped_fold(pdf):
     for t in range(2, len(xs) + 1):
         x = xs[t - 1]
         f = l_prev + phi * b_prev
-        l_new = r6(0.5 * x + 0.5 * (l_prev + phi * b_prev))
-        b_new = r6(0.5 * (l_new - l_prev) + 0.5 * phi * b_prev)
+        l_new = _r6(0.5 * x + 0.5 * (l_prev + phi * b_prev))
+        b_new = _r6(0.5 * (l_new - l_prev) + 0.5 * phi * b_prev)
         out.append(
             (t, x, l_new, b_new, f, l_new + b_new * _PHI_SUM_10, x - f)
         )
@@ -6308,24 +6139,9 @@ def window_holt_damped_trend(
 
     Scale: per-series linear fold, O(1) state; series parallelize
     across tasks — the smoothing family's shared shape."""
-    from pyspark.sql import Window
-
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    idx = daily.select(
-        "event_type",
-        F.col("day").cast("string").alias("day"),
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
-    )
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
+    ).withColumn("day", F.col("day").cast("string"))
     return idx.groupBy("event_type").applyInPandas(
         _holt_damped_fold,
         schema=(
@@ -6407,13 +6223,8 @@ def window_shewhart_imr_chart(
     broadcast back — calendar-sized everything."""
     from pyspark.sql import Window
 
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
+    daily = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True
     )
     w = Window.partitionBy("event_type").orderBy("day")
     mr = daily.select(
@@ -6477,6 +6288,46 @@ _PERM_ENTROPY_EXPR = " + ".join(
     f" ELSE 0.0 END)"
     for c in sorted(PERM_PATTERNS.values())
 )
+
+
+def _permutation_entropy(triples: DataFrame, *keys: str) -> DataFrame:
+    """The Bandt-Pompe fold of ``triples`` (non-null ``x0``, ``x1``,
+    ``x2`` per row) per ``keys``: the window count ``n_windows``, one
+    count per ordinal pattern of PERM_PATTERNS (in column-name order),
+    then ``perm_entropy`` and its ln(6)-normalized form from
+    _PERM_ENTROPY_EXPR."""
+    pat = triples.select(
+        *keys,
+        (F.col("x1") < F.col("x0")).cast("int").alias("a"),
+        (F.col("x2") < F.col("x0")).cast("int").alias("b"),
+        (F.col("x2") < F.col("x1")).cast("int").alias("c"),
+    )
+    patterns = sorted(PERM_PATTERNS.items(), key=lambda kv: kv[1])
+    counts = pat.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_windows"),
+        *[
+            F.sum(
+                F.when(
+                    (F.col("a") == av)
+                    & (F.col("b") == bv)
+                    & (F.col("c") == cv),
+                    1,
+                ).otherwise(0)
+            )
+            .cast("bigint")
+            .alias(name)
+            for (av, bv, cv), name in patterns
+        ],
+    )
+    return counts.select(
+        *keys,
+        "n_windows",
+        *[name for _, name in patterns],
+        F.expr(_PERM_ENTROPY_EXPR).alias("perm_entropy"),
+        F.expr(f"({_PERM_ENTROPY_EXPR}) / ln(6.0)").alias(
+            "perm_entropy_norm"
+        ),
+    )
 
 
 @register(
@@ -6543,57 +6394,14 @@ def window_permutation_entropy_daily(
     and the pattern fold is a 6-column conditional aggregate."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(dec("o_totalprice")).alias("rev")
-    )
+    daily = _orders_daily(spark, sf_dir)
     w = Window.orderBy("day")
     lagged = daily.select(
         F.col("rev").alias("x0"),
         F.lead("rev", 1).over(w).alias("x1"),
         F.lead("rev", 2).over(w).alias("x2"),
     ).filter(F.col("x2").isNotNull())
-    pat = lagged.select(
-        (F.col("x1") < F.col("x0")).cast("int").alias("a"),
-        (F.col("x2") < F.col("x0")).cast("int").alias("b"),
-        (F.col("x2") < F.col("x1")).cast("int").alias("c"),
-    )
-    flags = {
-        "p012": (0, 0, 0),
-        "p021": (0, 0, 1),
-        "p102": (1, 0, 0),
-        "p120": (1, 1, 0),
-        "p201": (0, 1, 1),
-        "p210": (1, 1, 1),
-    }
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_windows")]
-    for name, (av, bv, cv) in flags.items():
-        aggs.append(
-            F.sum(
-                F.when(
-                    (F.col("a") == av)
-                    & (F.col("b") == bv)
-                    & (F.col("c") == cv),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias(name)
-        )
-    counts = pat.agg(*aggs)
-    return counts.select(
-        "n_windows",
-        "p012",
-        "p021",
-        "p102",
-        "p120",
-        "p201",
-        "p210",
-        F.expr(_PERM_ENTROPY_EXPR).alias("perm_entropy"),
-        F.expr(f"({_PERM_ENTROPY_EXPR}) / ln(6.0)").alias(
-            "perm_entropy_norm"
-        ),
-    )
+    return _permutation_entropy(lagged)
 
 
 #: Time-delay (stride) scales for the multiscale deployment below.
@@ -6680,10 +6488,7 @@ def window_multiscale_permutation_entropy(
     from pyspark.sql import Window
 
     offsets = sorted({k * s for s in MPE_SCALES for k in (1, 2)})
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(dec("o_totalprice")).alias("rev")
-    )
+    daily = _orders_daily(spark, sf_dir)
     w = Window.orderBy("day")
     lagged = daily.select(
         F.col("rev").alias("x0"),
@@ -6708,49 +6513,7 @@ def window_multiscale_permutation_entropy(
         .select("e.*")
         .filter(F.col("x2").isNotNull())
     )
-    pat = stacked.select(
-        "scale",
-        (F.col("x1") < F.col("x0")).cast("int").alias("a"),
-        (F.col("x2") < F.col("x0")).cast("int").alias("b"),
-        (F.col("x2") < F.col("x1")).cast("int").alias("c"),
-    )
-    flags = {
-        "p012": (0, 0, 0),
-        "p021": (0, 0, 1),
-        "p102": (1, 0, 0),
-        "p120": (1, 1, 0),
-        "p201": (0, 1, 1),
-        "p210": (1, 1, 1),
-    }
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_windows")]
-    for name, (av, bv, cv) in flags.items():
-        aggs.append(
-            F.sum(
-                F.when(
-                    (F.col("a") == av)
-                    & (F.col("b") == bv)
-                    & (F.col("c") == cv),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias(name)
-        )
-    counts = pat.groupBy("scale").agg(*aggs)
-    return counts.select(
-        "scale",
-        "n_windows",
-        "p012",
-        "p021",
-        "p102",
-        "p120",
-        "p201",
-        "p210",
-        F.expr(_PERM_ENTROPY_EXPR).alias("perm_entropy"),
-        F.expr(f"({_PERM_ENTROPY_EXPR}) / ln(6.0)").alias(
-            "perm_entropy_norm"
-        ),
-    )
+    return _permutation_entropy(stacked, "scale")
 
 
 #: Tolerance rank for sample entropy: the q-th percentile (by rank
@@ -6844,12 +6607,7 @@ def window_sample_entropy_daily(
     itself is touched once, by the map-side-combined daily groupBy."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -6951,8 +6709,6 @@ def _ols_slope_text(us: list[str], vs: list[str]) -> str:
 def _hurst_slope_expr() -> str:
     """OLS slope of ln(mean R/S) on ln(s) over the fixed block sizes,
     one SQL text shared with the oracle (v-columns mrs_<s>)."""
-    import math
-
     return _ols_slope_text(
         [repr(math.log(s)) for s in HURST_BLOCK_SIZES],
         [f"ln(mrs_{s})" for s in HURST_BLOCK_SIZES],
@@ -7068,12 +6824,7 @@ def window_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort; everything after the grid is span-sized."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
         (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
@@ -7303,12 +7054,7 @@ def window_variance_ratio_daily(
     aggregate.  The corpus is touched exactly once."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     lagd = daily.select(
         "xm",
@@ -7497,12 +7243,7 @@ def window_multiscale_sample_entropy(
     from pyspark.sql import Window
 
     offsets = sorted({k * s for s in SAMPEN_SCALES for k in (1, 2)})
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -7703,12 +7444,7 @@ def window_approximate_entropy_daily(
     the daily groupBy); re-grid to weeks for multi-decade spans."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -7825,8 +7561,6 @@ def _dfa_c(s: int) -> int:
 
 def _dfa_slope_expr() -> str:
     """OLS slope of ln(mean F) on ln(s), F-columns mf_<s>."""
-    import math
-
     return _ols_slope_text(
         [repr(math.log(s)) for s in DFA_BLOCK_SIZES],
         [f"ln(mf_{s})" for s in DFA_BLOCK_SIZES],
@@ -7965,10 +7699,7 @@ def window_dfa_alpha_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivoted row.  The corpus is touched once."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "count")
     idx = daily.select(
         "xm",
         (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
@@ -8254,12 +7985,7 @@ def window_bds_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is touched once."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (F.sum(dec("o_totalprice")) * 1000000)
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
         "day", "xm", F.lead("xm", 1).over(w).alias("x1")
@@ -8355,8 +8081,6 @@ HIGUCHI_K_SET = (1, 2, 3, 4, 5)
 
 def _higuchi_slope_expr() -> str:
     """OLS slope of ln(L(k)) on ln(k), L-columns lk_<k>."""
-    import math
-
     return _ols_slope_text(
         [repr(math.log(k)) for k in HIGUCHI_K_SET],
         [f"ln(lk_{k})" for k in HIGUCHI_K_SET],
@@ -8444,10 +8168,7 @@ def window_higuchi_fd_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     |K|·k_max rows on one pivoted row.  The corpus is touched once."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "count")
     idx = daily.select(
         "xm",
         (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
@@ -8607,15 +8328,7 @@ def window_rqa_determinism_daily(
     recurrent pairs only).  One corpus scan builds the day grid."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
-            * F.lit(1000000)
-        )
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
         "day",
@@ -8725,12 +8438,7 @@ def _theta_ses_fold(pdf):
     construction — one series per applyInPandas task.  Rounding is the
     C-style half-away-from-zero at 6 decimals matching DuckDB round()
     (the _holt_fold convention); s₁ = y₁ exact."""
-    import math
-
     import pandas as pd
-
-    def r6(v: float) -> float:
-        return math.copysign(math.floor(abs(v) * 1e6 + 0.5) / 1e6, v)
 
     pdf = pdf.sort_values("i").reset_index(drop=True)
     if len(pdf) < 2:
@@ -8740,7 +8448,7 @@ def _theta_ses_fold(pdf):
     ys = list(pdf["y"])
     s = ys[0]
     for t in range(2, len(ys) + 1):
-        s = r6(0.5 * ys[t - 1] + 0.5 * s)
+        s = _r6(0.5 * ys[t - 1] + 0.5 * s)
     return pd.DataFrame(
         [
             (
@@ -8850,22 +8558,8 @@ def window_theta_forecast_daily(
     fold is O(days) per series with O(1) state — a million series
     parallelize perfectly (the Holt argument verbatim); output is
     series × 7 rows."""
-    from pyspark.sql import Window
-
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-        )
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-    )
-    idx = daily.select(
-        "event_type",
-        "x",
-        F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("day"))
-        .alias("i"),
+    idx = _events_daily(
+        spark, sf_dir, dec_sum("value", "x"), by_type=True, index=True
     )
     sums = (
         idx.groupBy("event_type")
@@ -9033,15 +8727,7 @@ def window_lyapunov_rosenstein_daily(
     builds the grid."""
     from pyspark.sql import Window
 
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(18,6)"))
-            * F.lit(1000000)
-        )
-        .cast("bigint")
-        .alias("xm")
-    )
+    daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
         (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
@@ -9222,15 +8908,7 @@ def window_periodogram_daily(
     broadcast fan-out (both literal-bounded); the ranked window runs
     on |periods| rows.  Per-key spectra at 100 TB: partition dev by
     series key, same plan."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff("day", F.lit("1970-01-01").cast("date")).alias("d"),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, epoch=True)
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),

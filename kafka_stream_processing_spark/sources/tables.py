@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: All tables the driver generates (TESTDATA.md).
 TABLES = (
@@ -32,13 +33,39 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one star-schema table as a DataFrame (pushdown-friendly scan)."""
+    """Read one star-schema table as a DataFrame (pushdown-friendly scan).
+    The schema comes from the parquet footer, so building the frame runs
+    no Spark job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_footer_schema(path)).parquet(path)
     if name == "events":
         df = normalize_events(df)
     return df
+
+
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of a parquet file, or of a directory's first
+    ``*.parquet`` file (the files of one table or staged stream share
+    it), read from the footer with pyarrow: schema inference through
+    ``spark.read.parquet`` runs a Spark job per call.  TIMESTAMP(NANOS)
+    columns come back as the bigint the session's nanosAsLong conf reads
+    them as; ``normalize_events`` converts them."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = min(glob.glob(os.path.join(path, "*.parquet")))
+    footer = pq.read_schema(path)
+    return from_arrow_schema(pa.schema([
+        f.with_type(pa.int64())
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
+        for f in footer
+    ]))
 
 
 def normalize_events(df: DataFrame) -> DataFrame:

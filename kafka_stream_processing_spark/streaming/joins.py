@@ -4262,65 +4262,21 @@ def stream_permutation_entropy_monitor(
     from pyspark.sql import Window
 
     from kafka_stream_processing_spark.operators.windowed import (
-        _PERM_ENTROPY_EXPR,
+        _permutation_entropy,
     )
 
     stream = normalize_events(
         file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
-    daily = _per_batch_cells(
-        stream, "event_id", _daily_revenue_cells
-    ).withColumnRenamed("chunk_min_event_id", "ck")
-    w = Window.partitionBy("ck").orderBy("day")
+    daily = _per_batch_cells(stream, "event_id", _daily_revenue_cells)
+    w = Window.partitionBy("chunk_min_event_id").orderBy("day")
     lagged = daily.select(
-        "ck",
+        "chunk_min_event_id",
         F.col("xm").alias("x0"),
         F.lead("xm", 1).over(w).alias("x1"),
         F.lead("xm", 2).over(w).alias("x2"),
     ).filter(F.col("x2").isNotNull())
-    pat = lagged.select(
-        "ck",
-        (F.col("x1") < F.col("x0")).cast("int").alias("a"),
-        (F.col("x2") < F.col("x0")).cast("int").alias("b"),
-        (F.col("x2") < F.col("x1")).cast("int").alias("c"),
-    )
-    flags = {
-        "p012": (0, 0, 0),
-        "p021": (0, 0, 1),
-        "p102": (1, 0, 0),
-        "p120": (1, 1, 0),
-        "p201": (0, 1, 1),
-        "p210": (1, 1, 1),
-    }
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n_windows")]
-    for name, (av, bv, cv) in flags.items():
-        aggs.append(
-            F.sum(
-                F.when(
-                    (F.col("a") == av)
-                    & (F.col("b") == bv)
-                    & (F.col("c") == cv),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias(name)
-        )
-    counts = pat.groupBy("ck").agg(*aggs)
-    return counts.select(
-        F.col("ck").alias("chunk_min_event_id"),
-        "n_windows",
-        "p012",
-        "p021",
-        "p102",
-        "p120",
-        "p201",
-        "p210",
-        F.expr(_PERM_ENTROPY_EXPR).alias("perm_entropy"),
-        F.expr(f"({_PERM_ENTROPY_EXPR}) / ln(6.0)").alias(
-            "perm_entropy_norm"
-        ),
-    )
+    return _permutation_entropy(lagged, "chunk_min_event_id")
 
 
 @register(

@@ -38,7 +38,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    _footer_schema,
+    normalize_events,
+)
 
 #: scoped_state_partitions flips a SESSION-GLOBAL conf; this lock
 #: serializes the engine's own streaming runs so a concurrently planned
@@ -143,25 +146,11 @@ def file_stream(
 ) -> DataFrame:
     """Streaming parquet source over a staged directory.  A file stream
     cannot infer its schema, so it comes from the footer of one staged
-    file (all files of a staged directory share it), read with pyarrow:
-    ``spark.read.parquet(path).schema`` would run a Spark job per call.
-    The schema is the raw one (TIMESTAMP(NANOS) as the bigint the
-    session's nanosAsLong conf reads); callers normalize after.
+    file (``_footer_schema``, no Spark job).  The schema is the raw one
+    (TIMESTAMP(NANOS) as bigint); callers normalize after.
     ``files_per_trigger=1`` turns each staged chunk file into its own
     micro-batch; ``None`` reads everything in one trigger."""
-    import glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    footer = pq.read_schema(min(glob.glob(os.path.join(path, "*.parquet"))))
-    footer = pa.schema([
-        f.with_type(pa.int64())
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns" else f
-        for f in footer
-    ])
-    reader = spark.readStream.schema(from_arrow_schema(footer))
+    reader = spark.readStream.schema(_footer_schema(path))
     if files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", files_per_trigger)
     return reader.parquet(path)
