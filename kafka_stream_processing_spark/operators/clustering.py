@@ -309,13 +309,10 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain lazily (production would localCheckpoint per round like
     connected_components above)."""
     from kafka_stream_processing_spark.operators.similarity import (
-        _as_double_array,
+        _embeddings,
     )
-    from kafka_stream_processing_spark.sources.tables import fanout, table
 
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
+    emb = _embeddings(spark, sf_dir).select("vec_id", "emb")
     cents0 = emb.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cluster_id"), F.col("emb").alias("cvec")
     )
@@ -371,17 +368,12 @@ def _semdedup_cell_audit(
         COSINE_DUP_THRESHOLD,
     )
     from kafka_stream_processing_spark.operators.similarity import (
-        _as_double_array,
+        _embeddings,
         cosine_ge_two_tier,
-        l2_norm_exact,
     )
-    from kafka_stream_processing_spark.sources.tables import fanout, table
 
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    n = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
-    cents = emb.filter(F.col("vec_id") < k).select(
+    n = _embeddings(spark, sf_dir)
+    cents = n.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"), F.col("emb").alias("cvec")
     )
     members = assign_nearest(n, cents).select(

@@ -13,10 +13,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.similarity import (
-    _as_double_array,
     _bucket_sql,
+    _embeddings,
     cosine_exact,
-    l2_norm_exact,
     lsh_bucket,
 )
 from kafka_stream_processing_spark.registry import register
@@ -856,14 +855,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs formulation survives as
     dedup_embedding_cosine_allpairs."""
     _embedding_cosine_guard(spark, sf_dir)
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    n = emb.select(
-        "vec_id",
-        "emb",
-        l2_norm_exact(F.col("emb")).alias("nrm"),
-        lsh_bucket(F.col("emb")).alias("bucket"),
+    n = _embeddings(spark, sf_dir).withColumn(
+        "bucket", lsh_bucket(F.col("emb"))
     )
     # Salted bucket join + two-tier reject (r10 session 2): the bucket
     # domain is fixed at 2^4 values, so the unsalted equi-join funnels
@@ -932,14 +925,11 @@ def dedup_embedding_cosine_allpairs(spark: SparkSession, sf_dir: str) -> DataFra
     """Exact all-pairs embedding near-dup — the small-n exactness oracle
     for the bucketed default above (recall baseline; O(n²), never the
     plan to run at 100 TB)."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
     from kafka_stream_processing_spark.operators.similarity import (
         cosine_ge_two_tier,
     )
 
-    n = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
+    n = _embeddings(spark, sf_dir)
     a, b = n.alias("a"), n.alias("b")
     cos = cosine_exact(
         F.col("a.emb"), F.col("b.emb"), F.col("a.nrm"), F.col("b.nrm")
@@ -1779,10 +1769,7 @@ def dedup_threshold_sweep_cosine(
         cosine_ge_two_tier,
     )
 
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    n = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
+    n = _embeddings(spark, sf_dir)
     n_vecs = n.count()  # one scalar, sizes the rate denominator
     a, b = n.alias("a"), n.alias("b")
     pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
+from kafka_stream_processing_spark.operators.windowed import _event_day
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -537,7 +538,7 @@ def quality_runs_test_daily(
     daily = (
         table(spark, sf_dir, "events")
         .groupBy(
-            F.date_trunc("day", "ts").cast("date").alias("day")
+            _event_day().alias("day")
         )
         .agg(F.sum(dec("value")).alias("x"))
     )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec, dec_avg, dec_sum
+from kafka_stream_processing_spark.operators.windowed import _event_day
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -1678,7 +1679,7 @@ def agg_cooccurrence_lift(
         table(spark, sf_dir, "events")
         .select(
             "user_id",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
+            _event_day().alias("day"),
             "event_type",
         )
         .distinct()

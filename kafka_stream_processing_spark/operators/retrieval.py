@@ -39,9 +39,10 @@ from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
 from kafka_stream_processing_spark.operators.similarity import (
-    _as_double_array,
+    _cosine_pairs,
+    _embeddings,
+    _top_k,
     cosine_exact,
-    l2_norm_exact,
 )
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
@@ -345,32 +346,12 @@ def similarity_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sparse list is the BM25 postings pipeline above; the fusion
     itself joins two K-rows-per-query frames — constant work per query,
     independent of corpus size."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    with_norm = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
-    dense_q = with_norm.filter(F.col("vec_id") < HYBRID_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    dense_pairs = (
-        with_norm.crossJoin(F.broadcast(dense_q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    wd = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "doc_id")
-    dense_k = (
-        dense_pairs.withColumn("rnk", F.row_number().over(wd))
-        .filter(F.col("rnk") <= RRF_LIST_K)
-        .select("query_id", "doc_id", "rnk")
-    )
+    dense_pairs = _cosine_pairs(
+        _embeddings(spark, sf_dir), HYBRID_N_QUERIES
+    ).withColumnRenamed("neighbor_id", "doc_id")
+    dense_k = _top_k(
+        dense_pairs, RRF_LIST_K, F.col("cosine").desc(), "doc_id"
+    ).select("query_id", "doc_id", F.col("rn").alias("rnk"))
 
     toks, stats = _doc_tokens(spark, sf_dir)
     qterms = (
@@ -379,12 +360,9 @@ def similarity_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sparse_scored = _sparse_scored(toks, qterms, stats, exclude_self=True)
-    ws = Window.partitionBy("query_id").orderBy(F.col("bm25").desc(), "doc_id")
-    sparse_k = (
-        sparse_scored.withColumn("rnk", F.row_number().over(ws))
-        .filter(F.col("rnk") <= RRF_LIST_K)
-        .select("query_id", "doc_id", "rnk")
-    )
+    sparse_k = _top_k(
+        sparse_scored, RRF_LIST_K, F.col("bm25").desc(), "doc_id"
+    ).select("query_id", "doc_id", F.col("rn").alias("rnk"))
 
     fused = (
         dense_k.alias("d")
@@ -402,11 +380,8 @@ def similarity_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rrf"),
         )
     )
-    wf = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), "doc_id")
-    return (
-        fused.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= RRF_TOPK)
-        .select("query_id", "doc_id", "rrf")
+    return _top_k(fused, RRF_TOPK, F.col("rrf").desc(), "doc_id").select(
+        "query_id", "doc_id", "rrf"
     )
 
 
@@ -1102,32 +1077,14 @@ def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries × shortlist²) rows — MMR is only ever run on a shortlist
     by construction, so the greedy loop costs K tiny joins regardless
     of corpus size."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
+    n = _embeddings(spark, sf_dir)
+    cos = _cosine_pairs(n, MMR_N_QUERIES).select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("cosine").alias("rel"),
     )
-    n = emb.select(
-        "vec_id", "emb", l2_norm_exact(F.col("emb")).alias("nrm")
-    )
-    queries = n.filter(F.col("vec_id") < MMR_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = (
-        n.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("rel"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("rel").desc(), "doc_id")
     shortlist = (
-        cos.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= MMR_SHORTLIST)
+        _top_k(cos, MMR_SHORTLIST, F.col("rel").desc(), "doc_id")
         .select("query_id", "doc_id", "rel")
         .localCheckpoint(eager=True)
     )

@@ -8,9 +8,25 @@ JVM-side, no Python in the row path.
 Cross-engine exactness: per-element products are computed in DOUBLE then
 quantized to DECIMAL(18,12) before summation, making the reduction exact
 and order-independent — Spark and DuckDB produce bit-identical cosines.
+
+Kernels: a search is candidate generation, exact re-ranking, then a
+per-query top-k, and each step has one private helper.  ``_embeddings``
+is the embeddings read (fanned out, double vectors, exact norm ``nrm``;
+dedup, clustering and retrieval use it too); ``_queries`` picks the
+evaluation queries (``vec_id < N_QUERIES``, carried columns prefixed
+``q_``); ``_cosine_pairs`` is the broadcast exact-cosine pair frame of
+the brute-force ops; ``_top_k`` keeps the first k rows per group with
+the id tie-break the oracles use.  The IVF ops take their index from
+``_ivf_assigned``, their probes from ``_probes`` and their candidates
+from ``_probe_candidates``; the two nprobe sweeps share ``_probe_sweep``
+and differ only in their score.  The PQ ops rank through ``_adc_topk``,
+and the cluster-quality ops build on ``_flat``, ``_centroids``,
+``_centroid_sq`` and ``_label_moments``.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as _np
 
@@ -122,14 +138,70 @@ def cosine_ge_two_tier(
     )
 
 
-#: Brute-force top-10 oracle — module constant so composing evals
-#: (similarity_rank_distance_ann_eval) can embed it as a subquery.
-BF_TOPK_ORACLE = f"""
-    WITH v AS (
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, emb, nrm): the embeddings table spread over the cluster
+    (one scan task otherwise), each vector as array<double> with its
+    exact L2 norm.  Callers that never read ``nrm`` get it pruned."""
+    emb = fanout(table(spark, sf_dir, "embeddings")).select(
+        "vec_id", _as_double_array("embedding").alias("emb")
+    )
+    return emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
+
+
+def _queries(df: DataFrame, *cols: str, n: int = N_QUERIES) -> DataFrame:
+    """The query rows of ``df`` (vec_id < n) as ``query_id`` plus each
+    carried column prefixed ``q_``."""
+    return df.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(c).alias(f"q_{c}") for c in cols],
+    )
+
+
+def _cosine_pairs(n: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
+    """(query_id, neighbor_id, cosine): every query against every other
+    vector of ``n`` (vec_id, emb, nrm) by exact cosine.  The query set is
+    broadcast, so the corpus never shuffles (BroadcastNestedLoopJoin)."""
+    q = _queries(n, "emb", "nrm", n=n_queries)
+    return (
+        n.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            cosine_exact(
+                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
+            ).alias("cosine"),
+        )
+    )
+
+
+def _top_k(
+    df: DataFrame,
+    k: int,
+    order: Column | str,
+    tie: str = "neighbor_id",
+    by: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group by ``order``, ties to the
+    lowest ``tie`` id — the ``row_number() OVER (PARTITION BY .. ORDER BY
+    .., id)`` cut every oracle writes.  The rank is kept as ``rn``."""
+    w = Window.partitionBy(*by).orderBy(order, tie)
+    rn = F.row_number().over(w)
+    return df.withColumn("rn", rn).filter(F.col("rn") <= k)
+
+
+#: The oracles' embeddings read (CTE v: vec_id, emb as DOUBLE[]) — the
+#: SQL twin of _embeddings.
+_V_CTE = """v AS (
         SELECT vec_id,
                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
         FROM embeddings
-    ),
+    )"""
+
+#: Brute-force top-10 oracle — module constant so composing evals
+#: (similarity_rank_distance_ann_eval) can embed it as a subquery.
+BF_TOPK_ORACLE = f"""
+    WITH {_V_CTE},
     n AS (
         SELECT vec_id, emb,
                sqrt(CAST(list_aggregate(
@@ -171,31 +243,9 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broadcast (queries × corpus is a map-side nested loop, no shuffle of
     the corpus); top-k per query collapses via row_number — with millions
     of queries, switch to the LSH-bucketed variant below."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    with_norm = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
-    queries = with_norm.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    pairs = (
-        with_norm.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id", "cosine")
+    pairs = _cosine_pairs(_embeddings(spark, sf_dir))
+    return _top_k(pairs, 10, F.col("cosine").desc()).select(
+        "query_id", "neighbor_id", "cosine"
     )
 
 
@@ -226,10 +276,7 @@ def embedding_dimension_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (posexplode → exact decimal moments) — the profiling step before
     choosing LSH planes / normalization in a vector pipeline.  Scale: one
     64x row expansion (pipelined, no shuffle) then a 64-group aggregate."""
-    emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x")
-    )
+    flat = _flat(fanout(table(spark, sf_dir, "embeddings")))
     dx = F.col("x").cast(_DEC)
     s = flat.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
@@ -264,6 +311,8 @@ def _sql_plane_literal(plane: list[float]) -> str:
 
 
 def _plane_dot_sql(plane: list[float]) -> str:
+    """Exact dot of ``emb`` with a literal vector (an LSH plane or an
+    IVF centroid), in DuckDB."""
     lit = _sql_plane_literal(plane)
     return (
         f"CAST(list_aggregate(list_transform(range(1, 65), "
@@ -293,11 +342,7 @@ def lsh_bucket(emb: Column) -> Column:
 @register(
     "similarity_lsh_bucketed_topk",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     n AS (
         SELECT vec_id, emb,
                sqrt(CAST(list_aggregate(
@@ -337,21 +382,10 @@ def similarity_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus shuffles once on bucket id and each query only scores ~1/2^P
     of it.  More planes → smaller buckets → cheaper-but-lossier; the
     production knob is (planes, multi-probe count)."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
+    n = _embeddings(spark, sf_dir).withColumn(
+        "bucket", lsh_bucket(F.col("emb"))
     )
-    n = emb.select(
-        "vec_id",
-        "emb",
-        l2_norm_exact(F.col("emb")).alias("nrm"),
-        lsh_bucket(F.col("emb")).alias("bucket"),
-    )
-    queries = n.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
+    queries = _queries(n, "emb", "nrm", "bucket")
     pairs = (
         n.join(
             F.broadcast(queries),
@@ -367,11 +401,8 @@ def similarity_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id", "bucket", "cosine")
+    return _top_k(pairs, 10, F.col("cosine").desc()).select(
+        "query_id", "neighbor_id", "bucket", "cosine"
     )
 
 
@@ -380,19 +411,11 @@ def similarity_lsh_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _centroid_dot_sql(centroid: list[float]) -> str:
-    lit = _sql_plane_literal(centroid)
-    return (
-        f"CAST(list_aggregate(list_transform(range(1, 65), "
-        f"i -> CAST(emb[i] * ({lit})[i] AS DECIMAL(18,12))), 'sum') AS DOUBLE)"
-    )
-
-
 def _cell_score_sql(centroid: list[float]) -> str:
     """-2*x·c + ||c||^2 — monotone in squared L2 distance to the centroid
     (||x||^2 is constant per row, so it cancels in the argmin)."""
     sq = sum(v * v for v in centroid)
-    return f"(-2.0 * {_centroid_dot_sql(centroid)} + {sq!r})"
+    return f"(-2.0 * {_plane_dot_sql(centroid)} + {sq!r})"
 
 
 def _argmin_cell_sql() -> str:
@@ -460,13 +483,36 @@ def _probe_cells_sql(nprobe: int = IVF_NPROBE) -> str:
     )
 
 
+def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, emb, nrm, cell): the IVF index — every vector with its
+    nearest-centroid cell."""
+    return _embeddings(spark, sf_dir).withColumn(
+        "cell", ivf_cell(F.col("emb"))
+    )
+
+
+def _probes(assigned: DataFrame, nprobe: int = IVF_NPROBE) -> DataFrame:
+    """(query_id, q_emb, q_nrm, probe_cell): one row per query and
+    probed cell — the query's ``nprobe`` nearest cells."""
+    return _queries(assigned, "emb", "nrm").withColumn(
+        "probe_cell", F.explode(probe_cells(F.col("q_emb"), nprobe))
+    )
+
+
+def _probe_candidates(assigned: DataFrame, probes: DataFrame) -> DataFrame:
+    """The IVF candidate rule: every vector in a probed cell of the query,
+    the query itself excluded.  The probe list is broadcast and joins the
+    corpus on cell id, so the corpus never shuffles."""
+    return assigned.join(
+        F.broadcast(probes),
+        (F.col("cell") == F.col("probe_cell"))
+        & (F.col("vec_id") != F.col("query_id")),
+    )
+
+
 #: IVF-probed top-10 oracle — module constant for the same reason.
 IVF_TOPK_ORACLE = f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     assigned AS (
         SELECT vec_id, emb,
                sqrt(CAST(list_aggregate(
@@ -516,59 +562,26 @@ def similarity_ivf_probed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~nprobe/8 of the corpus per query via an equi-join on cell id —
     the same plan shape as a real IVF index where cells are also the
     physical partitioning (cluster-prunable scan)."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    assigned = emb.select(
-        "vec_id",
-        "emb",
-        l2_norm_exact(F.col("emb")).alias("nrm"),
-        ivf_cell(F.col("emb")).alias("cell"),
-    )
+    assigned = _ivf_assigned(spark, sf_dir)
     # nprobe=2: argmin cell + runner-up, same sorted-struct expression
-    # family as the assignment above.
-    queries = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-        )
-        .withColumn("probe_cells", probe_cells(F.col("q_emb"), IVF_NPROBE))
-        .select("query_id", "q_emb", "q_nrm",
-                F.explode("probe_cells").alias("probe_cell"))
+    # family as the assignment.
+    pairs = _probe_candidates(assigned, _probes(assigned)).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        "cell",
+        cosine_exact(
+            F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
+        ).alias("cosine"),
     )
-    pairs = (
-        assigned.join(
-            F.broadcast(queries),
-            (F.col("cell") == F.col("probe_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "cell",
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id", "cell", "cosine")
+    return _top_k(pairs, 10, F.col("cosine").desc()).select(
+        "query_id", "neighbor_id", "cell", "cosine"
     )
 
 
 @register(
     "embedding_int8_quantize_audit",
-    oracle="""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    oracle=f"""
+    WITH {_V_CTE},
     scaled AS (
         SELECT vec_id, emb,
                list_aggregate(list_transform(emb, x -> abs(x)), 'max')
@@ -612,9 +625,7 @@ def embedding_int8_quantize_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: narrow per-vector expression chain over the scan (zero
     shuffle, codegen) — quantization runs at scan speed and downstream
     ANN operators move 64 bytes/vector instead of 256."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
+    emb = _embeddings(spark, sf_dir)
     amax = F.array_max(F.transform(F.col("emb"), F.abs))
     scaled = emb.withColumn("amax", amax)
     scale = F.col("amax") / F.lit(127.0)
@@ -721,10 +732,10 @@ _PQ_CTES = f"""{_PQ_SUB_CTE},
     {_pq_core_ctes(PQ_CODEBOOKS)}"""
 
 
-def _pq_sub(emb_df: DataFrame) -> DataFrame:
-    """(vec_id, m, s): each vector split into its PQ_M sub-vectors."""
+def _pq_sub(emb_df: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., m, s): each ``emb`` split into its PQ_M sub-vectors."""
     return emb_df.select(
-        "vec_id",
+        *keys,
         F.posexplode(
             F.array(
                 *[
@@ -756,13 +767,11 @@ def _pq_codebook(
 def _pq_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """(vec_id, m, code): nearest-codebook-entry assignment per sub-space
     (broadcast codebook, exact decimal distance, ties to lowest j)."""
-    w = Window.partitionBy("vec_id", "m").orderBy("dist2", "j")
-    return (
-        sub.join(F.broadcast(cb), F.col("m") == F.col("cm"))
-        .select("vec_id", "m", "j", dist2_exact(F.col("s"), F.col("c")).alias("dist2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
+    d = sub.join(F.broadcast(cb), F.col("m") == F.col("cm")).select(
+        "vec_id", "m", "j", dist2_exact(F.col("s"), F.col("c")).alias("dist2")
+    )
+    return _top_k(d, 1, "dist2", tie="j", by=("vec_id", "m")).select(
+        "vec_id", "m", F.col("j").alias("code")
     )
 
 
@@ -770,13 +779,13 @@ def _pq_lut(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """(lq, lm, j, ddec): each query's ADC lookup table — its exact
     decimal sub-distance to every codebook entry."""
     return (
-        sub.filter(F.col("vec_id") < N_QUERIES)
-        .join(F.broadcast(cb), F.col("m") == F.col("cm"))
+        _queries(sub, "m", "s")
+        .join(F.broadcast(cb), F.col("q_m") == F.col("cm"))
         .select(
-            F.col("vec_id").alias("lq"),
-            F.col("m").alias("lm"),
+            F.col("query_id").alias("lq"),
+            F.col("q_m").alias("lm"),
             "j",
-            dist2_exact(F.col("s"), F.col("c")).alias("ddec"),
+            dist2_exact(F.col("q_s"), F.col("c")).alias("ddec"),
         )
     )
 
@@ -784,11 +793,7 @@ def _pq_lut(sub: DataFrame, cb: DataFrame) -> DataFrame:
 @register(
     "similarity_pq_adc_topk",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     {_PQ_CTES},
     cand AS (
         SELECT l.query_id, a.vec_id AS neighbor_id,
@@ -827,32 +832,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an equi-join on (sub-space, code), i.e. at 100 TB the ranking
     never reads the embedding column at all.  This is the memory-bound →
     compute-bound trade every billion-vector ANN service makes."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    sub = _pq_sub(emb)
-    cb = _pq_codebook(spark)
-    asn = _pq_codes(sub, cb)
-    lut = _pq_lut(sub, cb)
-    cand = (
-        asn.join(
-            F.broadcast(lut),
-            (F.col("lm") == F.col("m")) & (F.col("j") == F.col("code")),
-        )
-        .filter(F.col("vec_id") != F.col("lq"))
-        .groupBy(
-            F.col("lq").alias("query_id"), F.col("vec_id").alias("neighbor_id")
-        )
-        .agg(F.sum("ddec").alias("adist"))
-    )
-    w_top = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id", "neighbor_id", F.col("adist").cast("double").alias("approx_dist2")
-        )
-    )
+    return _adc_topk(spark, _embeddings(spark, sf_dir), PQ_CODEBOOKS)
 
 
 def _ivfpq_adc(spark: SparkSession, sf_dir: str):
@@ -860,23 +840,14 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str):
     the two-stage reranker (mirror of the shared _IVFPQ_ADC_CTES oracle
     prefix): returns (emb, adc) where adc holds every cell-probed
     candidate with its ADC approximate squared distance."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    assigned = emb.select("vec_id", ivf_cell(F.col("emb")).alias("cell"))
-    sub = _pq_sub(emb)
+    emb = _ivf_assigned(spark, sf_dir)
+    sub = _pq_sub(emb, "vec_id")
     cb = _pq_codebook(spark)
     asn = _pq_codes(sub, cb)
     lut = _pq_lut(sub, cb)
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(probe_cells(F.col("emb"), IVF_NPROBE)).alias("probe_cell"),
+    cand = _probe_candidates(emb, _probes(emb)).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "cell"
     )
-    cand = assigned.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("probe_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "cell")
     adc = (
         cand.join(asn, F.col("neighbor_id") == asn.vec_id)
         .join(
@@ -897,11 +868,7 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str):
 #: The IVF+PQ candidate-and-ADC oracle prefix (CTEs v .. adc) — shared
 #: verbatim by similarity_ivfpq_topk and the two-stage reranker so the
 #: stage-1 semantics cannot drift between them.
-_IVFPQ_ADC_CTES = f"""v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+_IVFPQ_ADC_CTES = f"""{_V_CTE},
     assigned AS (
         SELECT vec_id, {_argmin_cell_sql()} AS cell FROM v
     ),
@@ -957,26 +924,29 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate BYTES.  Both joins are broadcast/equi-joins (cell id;
     (sub-space, code)); the corpus embedding column is read exactly once
     at index-build time."""
-    emb, adc = _ivfpq_adc(spark, sf_dir)
-    w_top = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            F.col("adist").cast("double").alias("approx_dist2"),
-        )
+    _, adc = _ivfpq_adc(spark, sf_dir)
+    return _top_k(adc, PQ_TOPK, "adist").select(
+        "query_id",
+        "neighbor_id",
+        "cell",
+        F.col("adist").cast("double").alias("approx_dist2"),
     )
 
 
-def _adc_topk(asn: DataFrame, lut: DataFrame) -> DataFrame:
-    """Shared ADC ranking tail: sum each candidate's per-sub-space LUT
-    entries along its code word, keep the PQ_TOPK nearest per query
-    (ties to lowest neighbor_id).  Used by the plain-PQ and OPQ
-    operators; the IVF-pruned variants fold the same join into their
+def _adc_topk(
+    spark: SparkSession, v: DataFrame, codebooks: list[list[list[float]]]
+) -> DataFrame:
+    """Plain (unpruned) PQ search over ``v`` (vec_id, emb): encode every
+    vector against ``codebooks``, build the queries' lookup tables, sum
+    each candidate's per-sub-space LUT entries along its code word, and
+    keep the PQ_TOPK nearest per query (ties to lowest neighbor_id).
+    The whole of similarity_pq_adc_topk and the OPQ operator after its
+    permutation; the IVF-pruned variants fold the same join into their
     cell-candidate frames."""
+    sub = _pq_sub(v, "vec_id")
+    cb = _pq_codebook(spark, codebooks)
+    asn = _pq_codes(sub, cb)
+    lut = _pq_lut(sub, cb)
     cand = (
         asn.join(
             F.broadcast(lut),
@@ -988,15 +958,10 @@ def _adc_topk(asn: DataFrame, lut: DataFrame) -> DataFrame:
         )
         .agg(F.sum("ddec").alias("adist"))
     )
-    w_top = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        cand.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("adist").cast("double").alias("approx_dist2"),
-        )
+    return _top_k(cand, PQ_TOPK, "adist").select(
+        "query_id",
+        "neighbor_id",
+        F.col("adist").cast("double").alias("approx_dist2"),
     )
 
 
@@ -1063,15 +1028,10 @@ def similarity_opq_rotated_pq_topk(spark: SparkSession, sf_dir: str) -> DataFram
     downstream is byte-identical in cost to plain PQ-ADC — same 4-byte
     codes, same broadcast LUT join.  OPQ is how a production index buys
     recall at zero query-time cost."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
+    v = _embeddings(spark, sf_dir).select(
+        "vec_id", opq_permute(F.col("emb")).alias("emb")
     )
-    v = emb.select("vec_id", opq_permute(F.col("emb")).alias("emb"))
-    sub = _pq_sub(v)
-    cb = _pq_codebook(spark, OPQ_CODEBOOKS)
-    asn = _pq_codes(sub, cb)
-    lut = _pq_lut(sub, cb)
-    return _adc_topk(asn, lut)
+    return _adc_topk(spark, v, OPQ_CODEBOOKS)
 
 
 def _cents_values_sql() -> str:
@@ -1086,11 +1046,7 @@ def _cents_values_sql() -> str:
 @register(
     "similarity_residual_pq_topk",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     cents AS (
         {_cents_values_sql()}
     ),
@@ -1178,13 +1134,8 @@ def similarity_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable at millions of queries).  The residual subtraction is
     a narrow zip_with at encode time; the corpus floats are read once,
     at index build."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    cents_lit = F.lit([[float(x) for x in c] for c in IVF_CENTROIDS])
-    assigned = emb.select(
-        "vec_id", "emb", ivf_cell(F.col("emb")).alias("cell")
-    )
+    cents_lit = _centroids_lit()
+    assigned = _ivf_assigned(spark, sf_dir)
     r = assigned.select(
         "vec_id",
         F.zip_with(
@@ -1193,19 +1144,10 @@ def similarity_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x, c: x - c,
         ).alias("emb"),
     )
-    sub = _pq_sub(r)
+    sub = _pq_sub(r, "vec_id")
     cb = _pq_codebook(spark, RPQ_CODEBOOKS)
     asn = _pq_codes(sub, cb)
-    probes = (
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("q_emb"),
-            F.explode(probe_cells(F.col("emb"), IVF_NPROBE)).alias(
-                "probe_cell"
-            ),
-        )
-    )
+    probes = _probes(assigned)
     qres = probes.select(
         "query_id",
         "probe_cell",
@@ -1215,18 +1157,7 @@ def similarity_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x, c: x - c,
         ).alias("emb"),
     )
-    qsub = qres.select(
-        "query_id",
-        "probe_cell",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("emb"), m * PQ_SUBDIM + 1, PQ_SUBDIM)
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("m", "s"),
-    )
+    qsub = _pq_sub(qres, "query_id", "probe_cell")
     lut = qsub.join(F.broadcast(cb), F.col("m") == F.col("cm")).select(
         F.col("query_id").alias("lq"),
         F.col("probe_cell").alias("lcell"),
@@ -1234,11 +1165,9 @@ def similarity_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "j",
         dist2_exact(F.col("s"), F.col("c")).alias("ddec"),
     )
-    cand = assigned.select("vec_id", "cell").join(
-        F.broadcast(probes.select("query_id", "probe_cell")),
-        (F.col("cell") == F.col("probe_cell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "cell")
+    cand = _probe_candidates(assigned, probes).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "cell"
+    )
     adc = (
         cand.join(asn, F.col("neighbor_id") == asn.vec_id)
         .join(
@@ -1254,16 +1183,11 @@ def similarity_residual_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ddec").alias("adist"),
         )
     )
-    w_top = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cell",
-            F.col("adist").cast("double").alias("approx_dist2"),
-        )
+    return _top_k(adc, PQ_TOPK, "adist").select(
+        "query_id",
+        "neighbor_id",
+        "cell",
+        F.col("adist").cast("double").alias("approx_dist2"),
     )
 
 
@@ -1328,36 +1252,23 @@ def similarity_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     read but never shuffled, and stage 1's costs are the IVF+PQ
     operator's own (cells bound the join, codes bound the bytes)."""
     emb, adc = _ivfpq_adc(spark, sf_dir)
-    w_adc = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= RERANK_SHORTLIST)
-        .select("query_id", "neighbor_id", "adist")
+    short = _top_k(adc, RERANK_SHORTLIST, "adist").select(
+        "query_id", "neighbor_id", "adist"
     )
     nbr = emb.join(
         F.broadcast(short), emb.vec_id == F.col("neighbor_id")
     ).select("query_id", "neighbor_id", "adist", F.col("emb").alias("n_emb"))
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    rer = nbr.join(
-        F.broadcast(q), F.col("query_id") == F.col("q_id")
-    ).select(
+    rer = nbr.join(F.broadcast(_queries(emb, "emb")), "query_id").select(
         "query_id",
         "neighbor_id",
         "adist",
         dist2_exact(F.col("q_emb"), F.col("n_emb")).alias("ed"),
     )
-    w_ex = Window.partitionBy("query_id").orderBy("ed", "neighbor_id")
-    return (
-        rer.withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= PQ_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("ed").cast("double").alias("exact_dist2"),
-            F.col("adist").cast("double").alias("approx_dist2"),
-        )
+    return _top_k(rer, PQ_TOPK, "ed").select(
+        "query_id",
+        "neighbor_id",
+        F.col("ed").cast("double").alias("exact_dist2"),
+        F.col("adist").cast("double").alias("approx_dist2"),
     )
 
 
@@ -1393,11 +1304,7 @@ def _sign_pack_sql(var: str, half: int) -> str:
 @register(
     "similarity_binary_hamming_topk",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     n AS (
         SELECT vec_id, emb,
                sqrt(CAST(list_aggregate(
@@ -1463,49 +1370,32 @@ def similarity_binary_hamming_topk(
     computed ONLY for shortlist survivors — at 100 TB that is the
     entire point (recall floor vs exact ground truth pinned in
     tests/test_round5c_ops.py)."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
+    emb = _embeddings(spark, sf_dir)
     packed = emb.select(
         "vec_id",
         _sign_pack(F.col("emb"), 0).alias("b0"),
         _sign_pack(F.col("emb"), 1).alias("b1"),
     )
-    q_codes = packed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("b0").alias("qb0"),
-        F.col("b1").alias("qb1"),
-    )
     ham = (
-        packed.crossJoin(F.broadcast(q_codes))
+        packed.crossJoin(F.broadcast(_queries(packed, "b0", "b1")))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             (
-                F.bit_count(F.col("qb0").bitwiseXOR(F.col("b0")))
-                + F.bit_count(F.col("qb1").bitwiseXOR(F.col("b1")))
+                F.bit_count(F.col("q_b0").bitwiseXOR(F.col("b0")))
+                + F.bit_count(F.col("q_b1").bitwiseXOR(F.col("b1")))
             )
             .cast("int")
             .alias("hamming"),
         )
     )
-    hw = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    short = ham.withColumn("hrn", F.row_number().over(hw)).filter(
-        F.col("hrn") <= HAMMING_SHORTLIST
-    )
-    with_norm = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
-    q_vecs = with_norm.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
+    short = _top_k(ham, HAMMING_SHORTLIST, "hamming")
     reranked = (
         short.join(
-            with_norm.withColumnRenamed("vec_id", "neighbor_id"),
-            "neighbor_id",
+            emb.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
         )
-        .join(F.broadcast(q_vecs), "query_id")
+        .join(F.broadcast(_queries(emb, "emb", "nrm")), "query_id")
         .select(
             "query_id",
             "neighbor_id",
@@ -1515,11 +1405,8 @@ def similarity_binary_hamming_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        reranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= HAMMING_TOPK)
-        .select("query_id", "neighbor_id", "hamming", "cosine")
+    return _top_k(reranked, HAMMING_TOPK, F.desc("cosine")).select(
+        "query_id", "neighbor_id", "hamming", "cosine"
     )
 
 
@@ -1531,7 +1418,33 @@ RECALL_SWEEP_NPROBES = (1, 2, 4, 8)
 RECALL_TOPK = 10
 
 
-def _recall_branch_sql(nprobe: int) -> str:
+#: The sweeps' oracle base (CTEs v, assigned, cospairs): the IVF index
+#: and the exact query x corpus cosines (the SQL twin of _probe_sweep).
+_SWEEP_BASE_CTES = f"""{_V_CTE},
+    assigned AS (
+        SELECT vec_id, emb,
+               sqrt(CAST(list_aggregate(
+                   list_transform(range(1, 65),
+                                  i -> CAST(emb[i] * emb[i] AS DECIMAL(18,12))),
+                   'sum') AS DOUBLE)) AS nrm,
+               {_argmin_cell_sql()} AS cell
+        FROM v
+    ),
+    cospairs AS (
+        SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
+               CAST(list_aggregate(
+                   list_transform(range(1, 65),
+                                  i -> CAST(q.emb[i] * d.emb[i] AS DECIMAL(18,12))),
+                   'sum') AS DOUBLE) / (q.nrm * d.nrm) AS cosine
+        FROM assigned q
+        JOIN assigned d ON d.vec_id <> q.vec_id
+        WHERE q.vec_id < {N_QUERIES}
+    ),"""
+
+
+def _sweep_ranked_sql(nprobe: int) -> str:
+    """Oracle CTEs probes{n} and ranked{n}: one probe budget's
+    candidates ranked by exact cosine and counted."""
     return f"""
     probes{nprobe} AS (
         SELECT vec_id AS query_id,
@@ -1547,7 +1460,11 @@ def _recall_branch_sql(nprobe: int) -> str:
         JOIN assigned d ON d.cell = p.probe_cell AND d.vec_id <> p.query_id
         JOIN cospairs cos ON cos.query_id = p.query_id
                          AND cos.neighbor_id = d.vec_id
-    ),
+    )"""
+
+
+def _recall_branch_sql(nprobe: int) -> str:
+    return _sweep_ranked_sql(nprobe) + f""",
     eval{nprobe} AS (
         SELECT r.query_id,
                {nprobe} AS nprobe,
@@ -1569,30 +1486,7 @@ def _recall_sweep_full_oracle() -> str:
         for n in RECALL_SWEEP_NPROBES
     )
     return f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, emb,
-               sqrt(CAST(list_aggregate(
-                   list_transform(range(1, 65),
-                                  i -> CAST(emb[i] * emb[i] AS DECIMAL(18,12))),
-                   'sum') AS DOUBLE)) AS nrm,
-               {_argmin_cell_sql()} AS cell
-        FROM v
-    ),
-    cospairs AS (
-        SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-               CAST(list_aggregate(
-                   list_transform(range(1, 65),
-                                  i -> CAST(q.emb[i] * d.emb[i] AS DECIMAL(18,12))),
-                   'sum') AS DOUBLE) / (q.nrm * d.nrm) AS cosine
-        FROM assigned q
-        JOIN assigned d ON d.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    ),
+    WITH {_SWEEP_BASE_CTES}
     exact AS (
         SELECT query_id, neighbor_id FROM (
             SELECT query_id, neighbor_id,
@@ -1607,6 +1501,58 @@ def _recall_sweep_full_oracle() -> str:
            CAST(hits AS DOUBLE) / {RECALL_TOPK} AS recall
     FROM ({unions})
     """
+
+
+def _probe_sweep(spark: SparkSession, sf_dir: str, score: Column) -> DataFrame:
+    """The IVF probe sweep behind the recall and NDCG evals: for each
+    nprobe in RECALL_SWEEP_NPROBES, every query's candidates in its
+    probed cells ranked by exact cosine (``rn``) and counted
+    (``n_candidates``), left-joined to the exact top-RECALL_TOPK
+    (``rel`` = RECALL_TOPK + 1 - exact rank, null off that list).  One
+    row per (query_id, nprobe) with the ``score`` aggregate."""
+    assigned = _ivf_assigned(spark, sf_dir)
+    cospairs = _cosine_pairs(assigned)
+    exact = _top_k(cospairs, RECALL_TOPK, F.desc("cosine")).select(
+        "query_id",
+        "neighbor_id",
+        (F.lit(RECALL_TOPK) + 1 - F.col("rn")).alias("rel"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), "neighbor_id"
+    )
+    evals = []
+    for nprobe in RECALL_SWEEP_NPROBES:
+        cands = (
+            _probes(assigned, nprobe)
+            .select("query_id", "probe_cell")
+            .join(
+                assigned.select(
+                    F.col("vec_id").alias("neighbor_id"),
+                    F.col("cell").alias("probe_cell"),
+                ),
+                "probe_cell",
+            )
+            .filter(F.col("neighbor_id") != F.col("query_id"))
+            .select("query_id", "neighbor_id")
+        )
+        ranked = cands.join(cospairs, ["query_id", "neighbor_id"]).select(
+            "query_id",
+            "neighbor_id",
+            F.row_number().over(w).alias("rn"),
+            F.count(F.lit(1))
+            .over(Window.partitionBy("query_id"))
+            .alias("n_candidates"),
+        )
+        evals.append(
+            ranked.join(exact, ["query_id", "neighbor_id"], "left")
+            .groupBy("query_id")
+            .agg(
+                F.lit(nprobe).cast("int").alias("nprobe"),
+                F.max("n_candidates").alias("n_candidates"),
+                score,
+            )
+        )
+    return functools.reduce(DataFrame.unionByName, evals)
 
 
 @register(
@@ -1631,89 +1577,12 @@ def similarity_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches share one cell-assigned table and differ only in the
     probe-slice width.  n_candidates growth vs recall growth across the
     sweep IS the operator's output."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    assigned = emb.select(
-        "vec_id",
-        "emb",
-        l2_norm_exact(F.col("emb")).alias("nrm"),
-        ivf_cell(F.col("emb")).alias("cell"),
-    )
-    queries = assigned.filter(F.col("vec_id") < N_QUERIES)
-    cospairs = (
-        assigned.crossJoin(
-            F.broadcast(
-                queries.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("emb").alias("q_emb"),
-                    F.col("nrm").alias("q_nrm"),
-                )
-            )
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), "neighbor_id"
-    )
-    exact = (
-        cospairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= RECALL_TOPK)
-        .select("query_id", "neighbor_id")
-        .withColumn("in_exact", F.lit(1))
-    )
-    evals = []
-    for nprobe in RECALL_SWEEP_NPROBES:
-        probes = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(probe_cells(F.col("emb"), nprobe)).alias("probe_cell"),
-        )
-        cands = (
-            probes.join(
-                assigned.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("cell").alias("probe_cell"),
-                ),
-                "probe_cell",
-            )
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-        )
-        ranked = cands.join(cospairs, ["query_id", "neighbor_id"]).select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("query_id"))
-            .alias("n_candidates"),
-        )
-        ev = (
-            ranked.join(exact, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.lit(nprobe).cast("int").alias("nprobe"),
-                F.max("n_candidates").alias("n_candidates"),
-                F.sum(
-                    F.when(
-                        (F.col("rn") <= RECALL_TOPK)
-                        & F.col("in_exact").isNotNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias("hits"),
-            )
-        )
-        evals.append(ev)
-    out = evals[0]
-    for ev in evals[1:]:
-        out = out.unionByName(ev)
-    return out.select(
+    hits = F.sum(
+        F.when(
+            (F.col("rn") <= RECALL_TOPK) & F.col("rel").isNotNull(), 1
+        ).otherwise(0)
+    ).alias("hits")
+    return _probe_sweep(spark, sf_dir, hits).select(
         "nprobe",
         "query_id",
         F.col("n_candidates").cast("bigint").alias("n_candidates"),
@@ -1812,11 +1681,8 @@ def similarity_rerank_depth_eval(
     queries×sample exact pass (5×N, never N²); the four depth branches
     share one ADC table and differ only in a rank cutoff."""
     emb, adc = _ivfpq_adc(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
     ed = (
-        emb.crossJoin(F.broadcast(q))
+        emb.crossJoin(F.broadcast(_queries(emb, "emb")))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -1824,26 +1690,20 @@ def similarity_rerank_depth_eval(
             dist2_exact(F.col("q_emb"), F.col("emb")).alias("ed"),
         )
     )
-    w_ed = Window.partitionBy("query_id").orderBy("ed", "neighbor_id")
     gt = (
-        ed.withColumn("rn", F.row_number().over(w_ed))
-        .filter(F.col("rn") <= PQ_TOPK)
+        _top_k(ed, PQ_TOPK, "ed")
         .select("query_id", "neighbor_id")
         .withColumn("in_gt", F.lit(1))
     )
-    w_adc = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    ranked_adc = adc.withColumn("arn", F.row_number().over(w_adc))
+    ranked_adc = _top_k(adc, max(RERANK_DEPTHS), "adist")
     evals = []
     for L in RERANK_DEPTHS:
-        short = ranked_adc.filter(F.col("arn") <= L).select(
+        short = ranked_adc.filter(F.col("rn") <= L).select(
             "query_id", "neighbor_id"
         )
-        final = (
-            short.join(ed, ["query_id", "neighbor_id"])
-            .withColumn("rn", F.row_number().over(w_ed))
-            .filter(F.col("rn") <= PQ_TOPK)
-            .select("query_id", "neighbor_id")
-        )
+        final = _top_k(
+            short.join(ed, ["query_id", "neighbor_id"]), PQ_TOPK, "ed"
+        ).select("query_id", "neighbor_id")
         evals.append(
             final.join(gt, ["query_id", "neighbor_id"], "left")
             .groupBy("query_id")
@@ -1854,10 +1714,7 @@ def similarity_rerank_depth_eval(
                 ).alias("hits"),
             )
         )
-    out = evals[0]
-    for ev in evals[1:]:
-        out = out.unionByName(ev)
-    return out.select(
+    return functools.reduce(DataFrame.unionByName, evals).select(
         "depth",
         "query_id",
         F.col("hits").cast("bigint").alias("hits"),
@@ -1919,11 +1776,7 @@ def _matryoshka_oracle() -> str:
     )""")
         unions.append(f"SELECT depth, query_id, hits FROM eval{d}")
     return f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     {",".join(n_ctes)},
     {",".join(top_ctes)},
     {",".join(evals)}
@@ -1978,10 +1831,7 @@ def similarity_matryoshka_recall_eval(
     corpus SAMPLE to pick the deployment depth before the 100 TB index
     build."""
     segs = ((1, 8), (9, 8), (17, 16), (33, 32))
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    base = emb.select(
+    base = _embeddings(spark, sf_dir).select(
         "vec_id",
         "emb",
         *[
@@ -1995,11 +1845,7 @@ def similarity_matryoshka_recall_eval(
             for i, d in enumerate(MATRYOSHKA_DEPTHS)
         ],
     )
-    q = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        *[F.col(f"nrm{d}").alias(f"q_nrm{d}") for d in MATRYOSHKA_DEPTHS],
-    )
+    q = _queries(base, "emb", *[f"nrm{d}" for d in MATRYOSHKA_DEPTHS])
     pairs = base.crossJoin(F.broadcast(q)).filter(
         F.col("vec_id") != F.col("query_id")
     )
@@ -2026,14 +1872,9 @@ def similarity_matryoshka_recall_eval(
         "query_id", "neighbor_id", F.col("dc.depth").alias("depth"),
         F.col("dc.cosine").alias("cosine"),
     )
-    w = Window.partitionBy("depth", "query_id").orderBy(
-        F.desc("cosine"), "neighbor_id"
-    )
-    tops = (
-        exploded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= RECALL_TOPK)
-        .select("depth", "query_id", "neighbor_id")
-    )
+    tops = _top_k(
+        exploded, RECALL_TOPK, F.desc("cosine"), by=("depth", "query_id")
+    ).select("depth", "query_id", "neighbor_id")
     truth = (
         tops.filter(F.col("depth") == MATRYOSHKA_DEPTHS[-1])
         .select("query_id", "neighbor_id")
@@ -2071,11 +1912,7 @@ CONTRASTIVE_NEG = 10
 @register(
     "sample_contrastive_pairs",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     n AS (
         SELECT vec_id, emb,
                sqrt(CAST(list_aggregate(
@@ -2129,45 +1966,78 @@ def sample_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ranking swaps for the IVF+PQ shortlist + exact rerank
     (similarity_rerank_two_stage) with the same band cut — this
     operator IS the band-cut contract the ANN variant must honor."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
+    pairs = _cosine_pairs(_embeddings(spark, sf_dir))
+    ranked = _top_k(
+        pairs, CONTRASTIVE_POS + CONTRASTIVE_NEG, F.desc("cosine")
     )
-    with_norm = emb.withColumn("nrm", l2_norm_exact(F.col("emb")))
-    q = with_norm.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    pairs = (
-        with_norm.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("pair_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "pair_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= CONTRASTIVE_POS + CONTRASTIVE_NEG)
-        .select(
-            "query_id",
-            "pair_id",
-            F.col("rank").cast("int").alias("rank"),
-            F.when(
-                F.col("rank") <= CONTRASTIVE_POS, F.lit("positive")
-            ).otherwise(F.lit("hard_negative")).alias("role"),
-            "cosine",
-        )
+    return ranked.select(
+        "query_id",
+        F.col("neighbor_id").alias("pair_id"),
+        F.col("rn").cast("int").alias("rank"),
+        F.when(
+            F.col("rn") <= CONTRASTIVE_POS, F.lit("positive")
+        ).otherwise(F.lit("hard_negative")).alias("role"),
+        "cosine",
     )
 
 
 # ---------------------------------------------------------------------------
 # Per-label centroid separation
 # ---------------------------------------------------------------------------
+
+
+def _flat(emb: DataFrame, *cols: str) -> DataFrame:
+    """(cols..., dim, x): one row per vector component of the raw
+    embeddings table — 0-based ``dim``, the component as a double."""
+    return emb.select(
+        *cols, F.posexplode(_as_double_array("embedding")).alias("dim", "x")
+    )
+
+
+def _centroids(flat: DataFrame, *keys: str | Column) -> DataFrame:
+    """(keys..., dim, c): the per-group centroid components — the
+    DECIMAL(18,12) exact sum over the member count, so the mean is
+    order-independent and matches the oracles bit for bit."""
+    return flat.groupBy(*keys, "dim").agg(
+        (
+            F.sum(F.col("x").cast(_DEC)).cast("double")
+            / F.count(F.lit(1))
+        ).alias("c")
+    )
+
+
+def _centroid_sq(cent: DataFrame, key: str = "label") -> DataFrame:
+    """(key, cc): each centroid's squared norm as a DECIMAL(18,12) sum."""
+    return cent.groupBy(key).agg(
+        F.sum((F.col("c") * F.col("c")).cast(_DEC))
+        .cast("double")
+        .alias("cc")
+    )
+
+
+def _label_moments(emb: DataFrame, cent: DataFrame) -> DataFrame:
+    """(label, n, sxx, cc): per label the member count, the exact sum of
+    member squared norms and the centroid's squared norm — the inputs of
+    the mean-centroid identity sum ||x - c||^2 = sxx - n * cc, so the
+    scatter never touches member pairs."""
+    sq = emb.select(
+        "label",
+        F.aggregate(
+            F.transform(
+                _as_double_array("embedding"),
+                lambda v: (v * v).cast(_DEC),
+            ),
+            F.lit(0).cast(_DEC),
+            lambda acc, v: (acc + v).cast(_DEC),
+        )
+        .cast("double")
+        .alias("sq"),
+    )
+    sx = sq.groupBy("label").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("sq").cast(_DEC)).cast("double").alias("sxx"),
+    )
+    return sx.join(_centroid_sq(cent), "label")
 
 
 @register(
@@ -2232,16 +2102,7 @@ def embedding_centroid_separation(
     label-domain-sized, never corpus-sized, so the op costs one
     corpus scan regardless of SF."""
     emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        "label",
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x"),
-    )
-    cent = flat.groupBy("label", "dim").agg(
-        (
-            F.sum(F.col("x").cast(_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
+    cent = _centroids(_flat(emb, "label"), "label")
     cnt = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
     a, b = cent.alias("a"), cent.alias("b")
     pr = (
@@ -2389,39 +2250,8 @@ def embedding_davies_bouldin_index(
     centroids, |labels|² pairs).  The greatest(0,·) guard absorbs the
     float-identity residue of a zero-scatter cluster."""
     emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        "label",
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x"),
-    )
-    cent = flat.groupBy("label", "dim").agg(
-        (
-            F.sum(F.col("x").cast(_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
-    sq = emb.select(
-        "label",
-        F.aggregate(
-            F.transform(
-                _as_double_array("embedding"),
-                lambda v: (v * v).cast(_DEC),
-            ),
-            F.lit(0).cast(_DEC),
-            lambda acc, v: (acc + v).cast(_DEC),
-        )
-        .cast("double")
-        .alias("sq"),
-    )
-    sx = sq.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("sq").cast(_DEC)).cast("double").alias("sxx"),
-    )
-    cc = cent.groupBy("label").agg(
-        F.sum((F.col("c") * F.col("c")).cast(_DEC))
-        .cast("double")
-        .alias("cc")
-    )
-    scat = sx.join(cc, "label").select(
+    cent = _centroids(_flat(emb, "label"), "label")
+    scat = _label_moments(emb, cent).select(
         "label",
         "n",
         F.sqrt(
@@ -2583,23 +2413,9 @@ def embedding_silhouette_lite(
     cost — linear in the corpus, no member pairs ever); centroid
     tables are label-domain-sized.  The greatest(a, b) denominator is
     safe: b > 0 whenever centroids are distinct."""
-    emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x"),
-    )
-    cent = flat.groupBy(F.col("label").alias("clabel"), F.col("dim")).agg(
-        (
-            F.sum(F.col("x").cast(_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
-    cc = cent.groupBy("clabel").agg(
-        F.sum((F.col("c") * F.col("c")).cast(_DEC))
-        .cast("double")
-        .alias("cc")
-    )
+    flat = _flat(fanout(table(spark, sf_dir, "embeddings")), "vec_id", "label")
+    cent = _centroids(flat, F.col("label").alias("clabel"))
+    cc = _centroid_sq(cent, "clabel")
     sq = flat.groupBy("vec_id").agg(
         F.sum((F.col("x") * F.col("x")).cast(_DEC))
         .cast("double")
@@ -2705,22 +2521,7 @@ def _ndcg_disc_sql(rank_col: str) -> str:
 
 
 def _ndcg_branch_sql(nprobe: int) -> str:
-    return f"""
-    probes{nprobe} AS (
-        SELECT vec_id AS query_id,
-               unnest({_probe_cells_sql(nprobe)}) AS probe_cell
-        FROM assigned WHERE vec_id < {N_QUERIES}
-    ),
-    ranked{nprobe} AS (
-        SELECT p.query_id, d.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY p.query_id
-                                  ORDER BY cos.cosine DESC, d.vec_id) AS rn,
-               count(*) OVER (PARTITION BY p.query_id) AS n_candidates
-        FROM probes{nprobe} p
-        JOIN assigned d ON d.cell = p.probe_cell AND d.vec_id <> p.query_id
-        JOIN cospairs cos ON cos.query_id = p.query_id
-                         AND cos.neighbor_id = d.vec_id
-    ),
+    return _sweep_ranked_sql(nprobe) + f""",
     eval{nprobe} AS (
         SELECT r.query_id,
                {nprobe} AS nprobe,
@@ -2744,30 +2545,7 @@ def _ndcg_sweep_full_oracle() -> str:
         for n in RECALL_SWEEP_NPROBES
     )
     return f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
-    assigned AS (
-        SELECT vec_id, emb,
-               sqrt(CAST(list_aggregate(
-                   list_transform(range(1, 65),
-                                  i -> CAST(emb[i] * emb[i] AS DECIMAL(18,12))),
-                   'sum') AS DOUBLE)) AS nrm,
-               {_argmin_cell_sql()} AS cell
-        FROM v
-    ),
-    cospairs AS (
-        SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id,
-               CAST(list_aggregate(
-                   list_transform(range(1, 65),
-                                  i -> CAST(q.emb[i] * d.emb[i] AS DECIMAL(18,12))),
-                   'sum') AS DOUBLE) / (q.nrm * d.nrm) AS cosine
-        FROM assigned q
-        JOIN assigned d ON d.vec_id <> q.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-    ),
+    WITH {_SWEEP_BASE_CTES}
     exact_rel AS (
         SELECT query_id, neighbor_id, {RECALL_TOPK} + 1 - rn AS rel FROM (
             SELECT query_id, neighbor_id,
@@ -2808,98 +2586,20 @@ def similarity_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, broadcast query set, and candidate join); runs on an
     evaluation sample, never the full corpus — tune nprobe here, then
     commit the 100 TB index build."""
-    emb = fanout(table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double_array("embedding").alias("emb")
-    )
-    assigned = emb.select(
-        "vec_id",
-        "emb",
-        l2_norm_exact(F.col("emb")).alias("nrm"),
-        ivf_cell(F.col("emb")).alias("cell"),
-    )
-    queries = assigned.filter(F.col("vec_id") < N_QUERIES)
-    cospairs = (
-        assigned.crossJoin(
-            F.broadcast(
-                queries.select(
-                    F.col("vec_id").alias("query_id"),
-                    F.col("emb").alias("q_emb"),
-                    F.col("nrm").alias("q_nrm"),
-                )
-            )
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine_exact(
-                F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), "neighbor_id"
-    )
-    exact_rel = (
-        cospairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= RECALL_TOPK)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.lit(RECALL_TOPK) + 1 - F.col("rn")).alias("rel"),
-        )
-    )
     disc = F.lit(0.0)
     for p in range(RECALL_TOPK, 0, -1):
         disc = F.when(
             F.col("rn") == p, F.lit(NDCG_DISCOUNTS[p - 1])
         ).otherwise(disc)
-    evals = []
-    for nprobe in RECALL_SWEEP_NPROBES:
-        probes = queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(probe_cells(F.col("emb"), nprobe)).alias("probe_cell"),
-        )
-        cands = (
-            probes.join(
-                assigned.select(
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("cell").alias("probe_cell"),
-                ),
-                "probe_cell",
-            )
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id")
-        )
-        ranked = cands.join(cospairs, ["query_id", "neighbor_id"]).select(
-            "query_id",
-            "neighbor_id",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1))
-            .over(Window.partitionBy("query_id"))
-            .alias("n_candidates"),
-        )
-        term = F.when(
-            F.col("rn") <= RECALL_TOPK,
-            F.round(
-                F.coalesce(F.col("rel"), F.lit(0)).cast("double") * disc,
-                12,
-            ),
-        ).otherwise(F.lit(0))
-        ev = (
-            ranked.join(exact_rel, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(
-                F.lit(nprobe).cast("int").alias("nprobe"),
-                F.max("n_candidates").alias("n_candidates"),
-                F.sum(term.cast(_DEC)).alias("dcg"),
-            )
-        )
-        evals.append(ev)
-    out = evals[0]
-    for ev in evals[1:]:
-        out = out.unionByName(ev)
-    return out.select(
+    term = F.when(
+        F.col("rn") <= RECALL_TOPK,
+        F.round(
+            F.coalesce(F.col("rel"), F.lit(0)).cast("double") * disc,
+            12,
+        ),
+    ).otherwise(F.lit(0))
+    dcg = F.sum(term.cast(_DEC)).alias("dcg")
+    return _probe_sweep(spark, sf_dir, dcg).select(
         "nprobe",
         "query_id",
         F.col("n_candidates").cast("bigint").alias("n_candidates"),
@@ -3008,49 +2708,14 @@ def embedding_calinski_harabasz(
     semantic-dedup pipeline runs before committing cluster-based
     sampling weights."""
     emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        "label",
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x"),
-    )
-    cent = flat.groupBy("label", "dim").agg(
-        (
-            F.sum(F.col("x").cast(_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("c")
-    )
-    sq = emb.select(
-        "label",
-        F.aggregate(
-            F.transform(
-                _as_double_array("embedding"),
-                lambda v: (v * v).cast(_DEC),
-            ),
-            F.lit(0).cast(_DEC),
-            lambda acc, v: (acc + v).cast(_DEC),
-        )
-        .cast("double")
-        .alias("sq"),
-    )
-    sx = sq.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("sq").cast(_DEC)).cast("double").alias("sxx"),
-    )
-    cc = cent.groupBy("label").agg(
-        F.sum((F.col("c") * F.col("c")).cast(_DEC))
-        .cast("double")
-        .alias("cc")
-    )
-    w = sx.join(cc, "label").select(
+    flat = _flat(emb, "label")
+    cent = _centroids(flat, "label")
+    w = _label_moments(emb, cent).select(
         "label",
         "n",
         (F.col("sxx") - F.col("n") * F.col("cc")).alias("w_i"),
     )
-    gcent = flat.groupBy("dim").agg(
-        (
-            F.sum(F.col("x").cast(_DEC)).cast("double")
-            / F.count(F.lit(1))
-        ).alias("gc")
-    )
+    gcent = _centroids(flat).withColumnRenamed("c", "gc")
     btab = (
         cent.join(F.broadcast(gcent), "dim")
         .groupBy("label")
@@ -3105,12 +2770,40 @@ def _dist2_sql(a: str, b: str) -> str:
 #: squared-L2 neighbor lists).
 HUBNESS_K = 5
 
+
+def _allpairs_d2(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(v, pairs): the embeddings as v (i, emb) and the exact squared L2
+    of every ordered pair of distinct vectors as pairs (i, j, d2) — the
+    small-n exact neighbor lists (the SQL twin is _ALLPAIRS_NN_SQL)."""
+    v = table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("i"),
+        F.col("embedding").cast("array<double>").alias("emb"),
+    )
+    d = v.select(F.col("i").alias("j"), F.col("emb").alias("emb_j"))
+    pairs = v.join(d, F.col("i") != F.col("j")).select(
+        "i",
+        "j",
+        dist2_exact(F.col("emb"), F.col("emb_j")).alias("d2"),
+    )
+    return v, pairs
+
+
+def _two_nn(pairs: DataFrame) -> DataFrame:
+    """(i, d1sq, d2sq): each point's first and second smallest d2 over
+    ``pairs`` (i, j, d2), ties to the lowest j — the TwoNN evidence."""
+    return (
+        _top_k(pairs, 2, "d2", tie="j", by=("i",))
+        .groupBy("i")
+        .agg(
+            F.max(F.when(F.col("rn") == 1, F.col("d2"))).alias("d1sq"),
+            F.max(F.when(F.col("rn") == 2, F.col("d2"))).alias("d2sq"),
+        )
+    )
+
 _ALLPAIRS_NN_SQL = f"""
-    v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    {_V_CTE},
     pairs AS (
         SELECT q.vec_id AS i, d.vec_id AS j,
                {_dist2_sql('q.emb', 'd.emb')} AS d2
@@ -3185,30 +2878,8 @@ def embedding_intrinsic_dimension_twonn(
     (similarity_ivf_probed_topk's cell-pruned candidates) instead of
     the self-join; the estimator (terms -> agg) is unchanged table
     shape and cost O(n)."""
-    from pyspark.sql import Window
-
-    v = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("i"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    d = v.select(
-        F.col("i").alias("j"), F.col("emb").alias("emb_j")
-    )
-    pairs = v.join(d, F.col("i") != F.col("j")).select(
-        "i",
-        "j",
-        dist2_exact(F.col("emb"), F.col("emb_j")).alias("d2"),
-    )
-    w = Window.partitionBy("i").orderBy("d2", "j")
-    two = (
-        pairs.select("i", "d2", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 2)
-        .groupBy("i")
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("d2"))).alias("d1sq"),
-            F.max(F.when(F.col("rn") == 2, F.col("d2"))).alias("d2sq"),
-        )
-    )
+    _, pairs = _allpairs_d2(spark, sf_dir)
+    two = _two_nn(pairs)
     log_mu = F.when(
         F.col("d1sq") > 0,
         F.round(
@@ -3279,22 +2950,9 @@ def embedding_hubness_audit(
     come from the IVF/PQ shortlist kernels and the audit itself stays
     two histogram-sized groupBys (occurrence count, then count-of-
     counts) — map-side combined, no corpus-wide sort."""
-    from pyspark.sql import Window
-
-    v = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("i"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
-    d = v.select(F.col("i").alias("j"), F.col("emb").alias("emb_j"))
-    pairs = v.join(d, F.col("i") != F.col("j")).select(
-        "i",
-        "j",
-        dist2_exact(F.col("emb"), F.col("emb_j")).alias("d2"),
-    )
-    w = Window.partitionBy("i").orderBy("d2", "j")
+    v, pairs = _allpairs_d2(spark, sf_dir)
     occ = (
-        pairs.select("j", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= HUBNESS_K)
+        _top_k(pairs, HUBNESS_K, "d2", tie="j", by=("i",))
         .groupBy("j")
         .agg(F.count(F.lit(1)).alias("n_k"))
     )
@@ -3317,11 +2975,7 @@ def embedding_hubness_audit(
 @register(
     "embedding_twonn_ivf_shortlist",
     oracle=f"""
-    WITH v AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings
-    ),
+    WITH {_V_CTE},
     assigned AS (
         SELECT vec_id, emb, {_argmin_cell_sql()} AS cell FROM v
     ),
@@ -3403,8 +3057,6 @@ def embedding_twonn_ivf_shortlist(
 
     Scale: this IS the scale path (the exact op keeps the small-n
     oracle role); estimator stage O(n) after the cell-bounded join."""
-    from pyspark.sql import Window
-
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double_array("embedding").alias("emb")
     )
@@ -3426,16 +3078,7 @@ def embedding_twonn_ivf_shortlist(
         "j",
         dist2_exact(F.col("qemb"), F.col("emb_j")).alias("d2"),
     )
-    w = Window.partitionBy("i").orderBy("d2", "j")
-    two = (
-        pairs.select("i", "d2", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 2)
-        .groupBy("i")
-        .agg(
-            F.max(F.when(F.col("rn") == 1, F.col("d2"))).alias("d1sq"),
-            F.max(F.when(F.col("rn") == 2, F.col("d2"))).alias("d2sq"),
-        )
-    )
+    two = _two_nn(pairs)
     full_t = v.select("vec_id").join(
         two, F.col("vec_id") == F.col("i"), "left"
     )
@@ -3541,10 +3184,7 @@ def embedding_anisotropy_common_direction(
     here depends on corpus size except the one linear scan; the mean
     vector this flags for removal is exactly what the PCA family
     (embedding_top_pc_power_iteration) then extracts."""
-    emb = fanout(table(spark, sf_dir, "embeddings"))
-    flat = emb.select(
-        F.posexplode(_as_double_array("embedding")).alias("dim", "x")
-    )
+    flat = _flat(fanout(table(spark, sf_dir, "embeddings")))
     per = flat.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("x").cast(_DEC)).alias("s"),
@@ -3816,7 +3456,7 @@ def similarity_rank_distance_ann_eval(
 ) -> DataFrame:
     """RANK-distance quality of the IVF index vs exact search — the
     ordering-sensitive complement of the recall@k harness
-    (similarity_recall_vs_nprobe measures SET overlap; two indexes
+    (similarity_ann_recall_eval measures SET overlap; two indexes
     with identical recall can still order survivors very differently,
     which is what a reranker or a user actually sees).  Per query:
     Fagin's F^(k+1) footrule between the exact brute-force top-10 and
@@ -3838,14 +3478,12 @@ def similarity_rank_distance_ann_eval(
     approx = similarity_ivf_probed_topk(spark, sf_dir).select(
         "query_id", "neighbor_id", "cosine"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), "neighbor_id"
+    # Both lists hold at most ANN_RANK_K rows per query: the cut only ranks.
+    er = _top_k(exact, ANN_RANK_K, F.col("cosine").desc()).select(
+        "query_id", "neighbor_id", F.col("rn").alias("re")
     )
-    er = exact.withColumn("re", F.row_number().over(w)).select(
-        "query_id", "neighbor_id", "re"
-    )
-    ar = approx.withColumn("ra", F.row_number().over(w)).select(
-        "query_id", "neighbor_id", "ra"
+    ar = _top_k(approx, ANN_RANK_K, F.col("cosine").desc()).select(
+        "query_id", "neighbor_id", F.col("rn").alias("ra")
     )
     miss = F.lit(ANN_RANK_K + 1)
     j = er.join(ar, ["query_id", "neighbor_id"], "full_outer")

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
+from kafka_stream_processing_spark.operators.windowed import _event_day
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -283,7 +284,7 @@ def window_l_moments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
+            _event_day().alias("day"),
         )
         .agg(F.sum(dec("value")).alias("x"))
     )
@@ -430,7 +431,7 @@ def window_pinball_loss_daily(
     daily rollup."""
     daily = (
         table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        .groupBy(_event_day().alias("day"))
         .agg(F.sum(dec("value")).alias("x"))
         .select(
             F.datediff(
@@ -571,7 +572,7 @@ def window_crps_empirical_daily(
     events."""
     daily = (
         table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        .groupBy(_event_day().alias("day"))
         .agg(F.sum(dec("value")).alias("x"))
         .select(
             F.datediff(
@@ -931,7 +932,7 @@ def window_expected_shortfall_daily(
         table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
+            _event_day().alias("day"),
         )
         .agg(F.sum(dec("value")).alias("x"))
     )
@@ -1085,7 +1086,7 @@ def window_extremal_index_runs(
         table(spark, sf_dir, "events")
         .groupBy(
             "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
+            _event_day().alias("day"),
         )
         .agg(F.sum(dec("value")).alias("x"))
         .select(
@@ -1241,7 +1242,7 @@ def window_winkler_interval_score(
     day-partitioned, nothing but the first rollup sees raw events."""
     daily = (
         table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        .groupBy(_event_day().alias("day"))
         .agg(F.sum(dec("value")).alias("x"))
         .select(
             F.datediff(
@@ -1430,7 +1431,7 @@ def window_gev_blockmax_shape(
     only corpus-scale stage is the map-side-combined daily rollup."""
     daily = (
         table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        .groupBy(_event_day().alias("day"))
         .agg(F.sum(dec("value")).alias("x"))
         .select(
             F.datediff(
@@ -1585,7 +1586,7 @@ def window_diebold_mariano_naive(
     aggregate; only the daily rollup sees raw events."""
     daily = (
         table(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
+        .groupBy(_event_day().alias("day"))
         .agg(F.sum(dec("value")).cast("double").alias("x"))
         .select(
             F.datediff(

@@ -49,17 +49,32 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+#: The directory that holds the package.  Python workers unpickle UDFs
+#: and pandas folds by module reference, so they need it on their path
+#: whatever the JVM's working directory is.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply semantic + adaptive confs to an existing session (idempotent)."""
+    """Apply semantic + adaptive confs to an existing session, and put
+    the package root on the Python workers' PYTHONPATH (idempotent)."""
     for key, value in RUNTIME_CONF.items():
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - conf may be static in some envs
             pass
+    # The worker environment travels with every Python function created
+    # after this point (UDFs, pandas folds, RDD lambdas).
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "").split(os.pathsep)
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in [_PACKAGE_ROOT, *paths] if p
+        )
     return spark
 
 

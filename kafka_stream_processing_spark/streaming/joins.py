@@ -28,6 +28,7 @@ from kafka_stream_processing_spark.operators.text import (
     DUP_TRIGRAM_FRAC_MAX,
     TOP_BIGRAM_FRAC_MAX,
 )
+from kafka_stream_processing_spark.operators.windowed import _event_day
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
@@ -90,7 +91,7 @@ def _daily_revenue_cells(batch_df: DataFrame) -> DataFrame:
     from kafka_stream_processing_spark.functions.exact import dec
 
     return batch_df.groupBy(
-        F.date_trunc("day", "ts").cast("date").cast("string").alias("day")
+        _event_day().cast("string").alias("day")
     ).agg((F.sum(dec("value")) * F.lit(10**6)).cast("bigint").alias("xm"))
 
 
