@@ -11,7 +11,7 @@ combined.  Split from quality.py in r09; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.registry import register
@@ -221,6 +221,65 @@ ISO_BIN_CHARS = 25
 ISO_TOKEN_THRESHOLD = 40
 
 
+def _long_doc() -> Column:
+    """The length classifier's outcome: 1 for a document of more than
+    ISO_TOKEN_THRESHOLD whitespace tokens, else 0 (the oracles' CASE)."""
+    return F.when(
+        F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD, F.lit(1)
+    ).otherwise(F.lit(0))
+
+
+def _length_bins(docs: DataFrame, n: str, y: str) -> DataFrame:
+    """Per ISO_BIN_CHARS length bin ``b`` of ``docs``: ``n`` documents
+    and ``y`` long ones (exact integer counts, histogram-sized)."""
+    return docs.groupBy(
+        F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
+    ).agg(F.count(F.lit(1)).alias(n), F.sum(_long_doc()).alias(y))
+
+
+def _reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The train/test reliability table the Brier and ECE gates score:
+    per length bin seen on both sides, the held-out src0 slice's
+    ``n_test``/``y_test``, the forecast ``f_pred`` (the training pool's
+    rate in the bin) and the observed test rate ``obs_rate``.  Test
+    bins unseen in training drop (no forecast exists)."""
+    docs = table(spark, sf_dir, "documents").withColumn(
+        "is_test",
+        F.when(F.col("source") == "src0", F.lit(1)).otherwise(F.lit(0)),
+    )
+    train = _length_bins(docs.filter(F.col("is_test") == 0), "nt", "yt")
+    test = _length_bins(
+        docs.filter(F.col("is_test") == 1), "n_test", "y_test"
+    )
+    return test.join(train, "b").select(
+        "b",
+        "n_test",
+        "y_test",
+        (F.col("yt").cast("double") / F.col("nt")).alias("f_pred"),
+        (F.col("y_test").cast("double") / F.col("n_test")).alias(
+            "obs_rate"
+        ),
+    )
+
+
+def _score_hist(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Document length as the classifier score for the long-document
+    outcome: per distinct ``score`` (n_chars) the ``pos``/``neg``
+    documents with and without it, and the 1-row class totals
+    ``n1``/``n0`` — the ROC, precision-recall and threshold-sweep ops'
+    state."""
+    labeled = table(spark, sf_dir, "documents").select(
+        F.col("n_chars").alias("score"), _long_doc().alias("y")
+    )
+    hist = labeled.groupBy("score").agg(
+        F.sum("y").alias("pos"),
+        (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
+    )
+    return hist, hist.agg(F.sum("pos").alias("n1"), F.sum("neg").alias("n0"))
+
+
 @register(
     "quality_isotonic_calibration",
     oracle=f"""
@@ -281,18 +340,7 @@ def quality_isotonic_calibration(
     sketch-sized).  For B beyond that, run the classic O(B) PAVA
     driver-side on the collected bins, exactly as k-means collects
     centroids; the corpus-side cost is identical."""
-    docs = table(spark, sf_dir, "documents")
-    bins = docs.groupBy(
-        F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
-    ).agg(
-        F.count(F.lit(1)).alias("nb"),
-        F.sum(
-            (
-                F.size(F.split(F.col("text"), " "))
-                > ISO_TOKEN_THRESHOLD
-            ).cast("bigint")
-        ).alias("yb"),
-    )
+    bins = _length_bins(table(spark, sf_dir, "documents"), "nb", "yb")
     return isotonic_minimax_fit(bins).select(
         F.col("b").alias("bin"),
         F.col("nb").cast("bigint").alias("n"),
@@ -437,41 +485,7 @@ def quality_brier_calibration_split(
     domain.  Test bins unseen in training drop (no forecast exists) —
     the standard reliability-diagram convention, mirrored on both
     engines."""
-    docs = table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b"),
-        F.when(
-            F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("y"),
-        F.when(F.col("source") == "src0", F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("is_test"),
-    )
-    train = (
-        labeled.filter(F.col("is_test") == 0)
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("nt"), F.sum("y").alias("yt"))
-    )
-    test = (
-        labeled.filter(F.col("is_test") == 1)
-        .groupBy("b")
-        .agg(
-            F.count(F.lit(1)).alias("n_test"),
-            F.sum("y").alias("y_test"),
-        )
-    )
-    bins = test.join(train, "b").select(
-        "b",
-        "n_test",
-        "y_test",
-        (F.col("yt").cast("double") / F.col("nt")).alias("f_pred"),
-        (F.col("y_test").cast("double") / F.col("n_test")).alias(
-            "obs_rate"
-        ),
-    )
+    bins = _reliability_bins(spark, sf_dir)
     tot = bins.agg(
         F.sum("n_test").alias("n"),
         (
@@ -574,20 +588,7 @@ def quality_roc_auc_length_classifier(
     Scale: histogram-sized state (score-distinct), one cumulative
     window over the score domain — the KS/CvM cost class.  Grouped
     AUCs (per source/model) partition the window by group."""
-    docs = table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.col("n_chars").alias("score"),
-        F.when(
-            F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("y"),
-    )
-    hist = labeled.groupBy("score").agg(
-        F.sum("y").alias("pos"),
-        (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
-    )
+    hist, tot = _score_hist(spark, sf_dir)
     from pyspark.sql import Window
 
     prev = Window.orderBy("score").rowsBetween(
@@ -599,9 +600,6 @@ def quality_roc_auc_length_classifier(
         F.coalesce(
             F.sum(F.col("pos") + F.col("neg")).over(prev), F.lit(0)
         ).alias("lt_comb"),
-    )
-    tot = hist.agg(
-        F.sum("pos").alias("n1"), F.sum("neg").alias("n0")
     )
     ranksum = cum.agg(
         F.sum(
@@ -688,40 +686,7 @@ def quality_expected_calibration_error(
 
     Scale: identical to the Brier op — two conditional-sum groupBys
     to bin-sized tables, then bin-domain algebra only."""
-    docs = table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b"),
-        F.when(
-            F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("y"),
-        F.when(F.col("source") == "src0", F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("is_test"),
-    )
-    train = (
-        labeled.filter(F.col("is_test") == 0)
-        .groupBy("b")
-        .agg(F.count(F.lit(1)).alias("nt"), F.sum("y").alias("yt"))
-    )
-    test = (
-        labeled.filter(F.col("is_test") == 1)
-        .groupBy("b")
-        .agg(
-            F.count(F.lit(1)).alias("n_test"),
-            F.sum("y").alias("y_test"),
-        )
-    )
-    bins = test.join(train, "b").select(
-        "b",
-        "n_test",
-        (F.col("yt").cast("double") / F.col("nt")).alias("f_pred"),
-        (F.col("y_test").cast("double") / F.col("n_test")).alias(
-            "obs_rate"
-        ),
-    )
+    bins = _reliability_bins(spark, sf_dir)
     gap = F.abs(F.col("f_pred") - F.col("obs_rate"))
     g = bins.agg(
         (
@@ -914,20 +879,7 @@ def quality_pr_auc_length_classifier(
 
     Scale: histogram-sized state (score-distinct); one window over the
     score domain — identical bound to the ROC op."""
-    docs = table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.col("n_chars").alias("score"),
-        F.when(
-            F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("y"),
-    )
-    hist = labeled.groupBy("score").agg(
-        F.sum("y").alias("pos"),
-        (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
-    )
+    hist, tot = _score_hist(spark, sf_dir)
     from pyspark.sql import Window
 
     desc = Window.orderBy(F.col("score").desc())
@@ -946,7 +898,6 @@ def quality_pr_auc_length_classifier(
             F.lit(0),
         ).alias("tp_prev"),
     )
-    tot = hist.agg(F.sum("pos").alias("n1"), F.sum("neg").alias("n0"))
     terms = cum.select(
         F.round(
             ((F.col("tp") - F.col("tp_prev")) * F.col("tp")).cast(
@@ -1065,21 +1016,7 @@ def quality_mcc_youden_threshold_sweep(
     both engines; Youden is two mirrored divisions.
 
     Scale: histogram-sized state; identical bound to the ROC-AUC op."""
-    docs = table(spark, sf_dir, "documents")
-    labeled = docs.select(
-        F.col("n_chars").alias("score"),
-        F.when(
-            F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("y"),
-    )
-    hist = labeled.groupBy("score").agg(
-        F.sum("y").alias("pos"),
-        (F.count(F.lit(1)) - F.sum("y")).alias("neg"),
-    )
-    tot = hist.agg(F.sum("pos").alias("n1"), F.sum("neg").alias("n0"))
+    hist, tot = _score_hist(spark, sf_dir)
     from pyspark.sql import Window
 
     desc = Window.orderBy(F.col("score").desc()).rowsBetween(

@@ -8,6 +8,16 @@ combined groupBy over DISTINCT VALUES, not rows) and walks it with one
 cumulative window -- state is value-cardinality-sized, independent of
 corpus size, which is what makes the family viable at 100 TB.  Split
 from quality.py in r09; semantics unchanged.
+
+Kernels (``quality_kernel``): the src0-vs-rest gates (KS, Kuiper,
+Watson, CvM, PSI, and the circadian click-vs-purchase split) build
+their histogram and totals with ``_ref_vs_rest_hist`` and walk it with
+``_ecdf`` or ``_midrank_walk``; the per-source gates (Anderson-Darling,
+Hellinger/TV, Wasserstein, energy distance) read
+``_ref_vs_source_walk``.  The oracles build the same CTEs from the
+shared ``_POOLED_HIST_CTE`` / ``_REF_VS_SOURCE_CTE`` text.  Don't
+hand-write another src0-vs-rest histogram here: tests/
+test_quality_drift.py counts them.
 """
 
 
@@ -23,8 +33,14 @@ from kafka_stream_processing_spark.sources.tables import table
 from kafka_stream_processing_spark.operators.quality_kernel import (  # noqa: E501
     CHI2_CRIT_005,
     _CHI2_CRIT_SQL,
+    _POOLED_HIST_CTE,
+    _REF_VS_SOURCE_CTE,
+    _REF_VS_SOURCE_WALK_CTE,
     _WH_Z095,
-    _ref_vs_source_hist,
+    _ecdf,
+    _midrank_walk,
+    _ref_vs_rest_hist,
+    _ref_vs_source_walk,
 )
 
 #: Kolmogorov-Smirnov critical coefficient at alpha = 0.05.
@@ -34,16 +50,7 @@ KS_C005 = 1.358
 @register(
     "quality_ks_drift_nchars",
     oracle=f"""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
+    {_POOLED_HIST_CTE}
     cum AS (
         SELECT v,
                SUM(ca_i) OVER (ORDER BY v) AS ca,
@@ -90,28 +97,7 @@ def quality_ks_drift_nchars(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUE-DISTINCT histogram, not raw rows — for a discrete or binned
     column that is thousands of rows regardless of corpus size (bin
     continuous columns first, the standard KS-on-big-data move)."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
-    )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w = Window.orderBy("v").rangeBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "v",
-        F.sum("ca_i").over(w).alias("ca"),
-        F.sum("cb_i").over(w).alias("cb"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
+    cum = _ecdf(_ref_vs_rest_hist(table(spark, sf_dir, "documents")))
     diff = F.abs(
         F.col("ca").cast("double") / F.col("na")
         - F.col("cb").cast("double") / F.col("nb")
@@ -120,7 +106,7 @@ def quality_ks_drift_nchars(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("na").cast("double") + F.col("nb"))
         / (F.col("na").cast("double") * F.col("nb"))
     )
-    return j.groupBy("na", "nb").agg(
+    return cum.groupBy("na", "nb").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_values"),
         F.max(diff).alias("ks_d"),
         F.any_value(crit).alias("critical_005"),
@@ -617,37 +603,22 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the binned-mass member of the drift-gate family."""
     from pyspark.sql import Window
 
-    rows = table(spark, sf_dir, "documents").select(
-        F.expr(f"n_chars div {PSI_BUCKET_CHARS}").alias("bucket"),
-        F.when(F.col("source") == "src0", F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("is_a"),
-        F.when(F.col("source") == "src0", F.lit(0))
-        .otherwise(F.lit(1))
-        .alias("is_b"),
-    )
-    hist = rows.groupBy("bucket").agg(
-        F.sum("is_a").alias("ca"), F.sum("is_b").alias("cb")
+    hist = _ref_vs_rest_hist(
+        table(spark, sf_dir, "documents"),
+        F.expr(f"n_chars div {PSI_BUCKET_CHARS}"),
     )
     w = Window.partitionBy()
-    t = hist.select(
-        "bucket",
-        "ca",
-        "cb",
-        F.sum("ca").over(w).alias("na"),
-        F.sum("cb").over(w).alias("nb"),
-        F.count(F.lit(1)).over(w).alias("k"),
-    )
-    p_ref = (F.col("ca").cast("double") + F.lit(PSI_SMOOTH)) / (
+    t = hist.select("*", F.count(F.lit(1)).over(w).alias("k"))
+    p_ref = (F.col("ca_i").cast("double") + F.lit(PSI_SMOOTH)) / (
         F.col("na").cast("double") + F.lit(PSI_SMOOTH) * F.col("k")
     )
-    p_cur = (F.col("cb").cast("double") + F.lit(PSI_SMOOTH)) / (
+    p_cur = (F.col("cb_i").cast("double") + F.lit(PSI_SMOOTH)) / (
         F.col("nb").cast("double") + F.lit(PSI_SMOOTH) * F.col("k")
     )
     terms = t.select(
-        "bucket",
-        "ca",
-        "cb",
+        "v",
+        "ca_i",
+        "cb_i",
         p_ref.alias("p_ref"),
         p_cur.alias("p_cur"),
     ).withColumn(
@@ -660,9 +631,9 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     psi = F.sum("term").over(w).cast("double")
     return terms.select(
-        F.col("bucket").cast("bigint").alias("bucket"),
-        F.col("ca").cast("bigint").alias("n_ref"),
-        F.col("cb").cast("bigint").alias("n_cur"),
+        F.col("v").cast("bigint").alias("bucket"),
+        F.col("ca_i").cast("bigint").alias("n_ref"),
+        F.col("cb_i").cast("bigint").alias("n_cur"),
         "p_ref",
         "p_cur",
         F.col("term").cast("double").alias("psi_term"),
@@ -765,50 +736,15 @@ def quality_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost O(distinct values), never O(corpus).  Beyond ~1e8 docs the
     integer 4U term needs DECIMAL(38,0) — documented swap, same
     shape."""
-    docs = table(spark, sf_dir, "documents").select(
-        F.col("n_chars").alias("v"),
-        F.when(F.col("source") == "src0", F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("is_a"),
-        F.when(F.col("source") == "src0", F.lit(0))
-        .otherwise(F.lit(1))
-        .alias("is_b"),
-    )
-    # The value-distinct histogram is materialized once (it is
-    # histogram-sized) so the terms branch and the totals branch share
-    # ONE corpus scan — the plan pin
-    # test_cvm_terms_stay_histogram_sized enforces it.
-    hist = (
-        docs.groupBy("v")
-        .agg(F.sum("is_a").alias("ca"), F.sum("is_b").alias("cb"))
-        .localCheckpoint(eager=True)
-    )
-    tot = hist.agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-    )
-    from pyspark.sql import Window
-
-    prev = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = hist.select(
-        "ca",
-        "cb",
-        F.coalesce(
-            F.sum(F.col("ca") + F.col("cb")).over(prev), F.lit(0)
-        ).alias("lt_comb"),
-        F.coalesce(F.sum("ca").over(prev), F.lit(0)).alias("lt_a"),
-        F.coalesce(F.sum("cb").over(prev), F.lit(0)).alias("lt_b"),
-    )
+    # The value-distinct histogram (with its totals) is materialized
+    # once (it is histogram-sized) so the walk and the totals share ONE
+    # corpus scan — the plan pin test_cvm_terms_stay_histogram_sized
+    # enforces it.
+    hist = _ref_vs_rest_hist(table(spark, sf_dir, "documents"))
+    cum = _midrank_walk(hist.localCheckpoint(eager=True))
 
     def tie_block(c, lt_own):
-        a0 = (
-            F.lit(2) * F.col("lt_comb")
-            + F.col("ca")
-            + F.col("cb")
-            + F.lit(1)
-            - F.lit(2) * lt_own
-        )
+        a0 = F.col("r2") - F.lit(2) * F.col(lt_own)
         t1 = F.expr(f"{c} * ({c} + 1) div 2")
         t2 = F.expr(f"{c} * ({c} + 1) * (2 * {c} + 1) div 6")
         return F.when(
@@ -817,12 +753,14 @@ def quality_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit(0))
 
     terms = cum.select(
-        tie_block("ca", F.col("lt_a")).alias("qa"),
-        tie_block("cb", F.col("lt_b")).alias("qb"),
+        "na",
+        "nb",
+        tie_block("ca_i", "lt_a").alias("qa"),
+        tie_block("cb_i", "lt_b").alias("qb"),
     )
     u4 = (
-        terms.agg(F.sum("qa").alias("sqa"), F.sum("qb").alias("sqb"))
-        .crossJoin(F.broadcast(tot))
+        terms.groupBy("na", "nb")
+        .agg(F.sum("qa").alias("sqa"), F.sum("qb").alias("sqb"))
         .select(
             "na",
             "nb",
@@ -938,22 +876,7 @@ AD2_CRIT_005 = 2.492
 @register(
     "quality_anderson_darling_drift",
     oracle=f"""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
+    {_REF_VS_SOURCE_CTE}
     tot AS (SELECT s, SUM(a) AS na, SUM(b) AS nb FROM merged GROUP BY s),
     walked AS (
         SELECT m.s, m.a, m.b, t.na, t.nb, t.na + t.nb AS nn,
@@ -1015,28 +938,14 @@ def quality_anderson_darling_drift(
     per-(source, value) histogram with map-side combine, cumulative
     windows over distinct values per source, a per-source scalar
     aggregate out.  Nothing corpus-sized ever sorts or shuffles."""
-    from pyspark.sql import Window
-
-    merged = _ref_vs_source_hist(spark, sf_dir)
-    tot = merged.groupBy("s").agg(
-        F.sum("a").alias("na"), F.sum("b").alias("nb")
-    )
-    w_cum = (
-        Window.partitionBy("s")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    walked = (
-        merged.join(tot, "s")
-        .select(
-            "s",
-            "na",
-            "nb",
-            (F.col("na") + F.col("nb")).alias("nn"),
-            (F.col("a") + F.col("b")).alias("l"),
-            F.sum("a").over(w_cum).alias("ca"),
-            F.sum(F.col("a") + F.col("b")).over(w_cum).alias("cc"),
-        )
+    walked = _ref_vs_source_walk(spark, sf_dir).select(
+        "s",
+        "na",
+        "nb",
+        (F.col("na") + F.col("nb")).alias("nn"),
+        (F.col("a") + F.col("b")).alias("l"),
+        "ca",
+        (F.col("ca") + F.col("cb")).alias("cc"),
     )
     diff = F.col("ca") * F.col("nn") - F.col("cc") * F.col("na")
     term = F.round(
@@ -1070,23 +979,8 @@ def quality_anderson_darling_drift(
 
 @register(
     "quality_hellinger_tv_drift",
-    oracle="""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
+    oracle=f"""
+    {_REF_VS_SOURCE_CTE}
     tot AS (SELECT s, SUM(a) AS na, SUM(b) AS nb FROM merged GROUP BY s),
     terms AS (
         SELECT m.s, t.na, t.nb,
@@ -1134,11 +1028,7 @@ def quality_hellinger_tv_drift(
     Scale: the shared ref-vs-source histogram kernel — one map-side
     combined groupBy, histogram-sized algebra, a per-source scalar row
     out."""
-    merged = _ref_vs_source_hist(spark, sf_dir)
-    tot = merged.groupBy("s").agg(
-        F.sum("a").alias("na"), F.sum("b").alias("nb")
-    )
-    t = merged.join(tot, "s")
+    t = _ref_vs_source_walk(spark, sf_dir)
     p = F.col("a").cast("double") / F.col("na")
     q = F.col("b").cast("double") / F.col("nb")
     terms = t.select(
@@ -1169,36 +1059,9 @@ def quality_hellinger_tv_drift(
 
 @register(
     "quality_wasserstein_drift",
-    oracle="""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
-    tot AS (SELECT s, SUM(a) AS na, SUM(b) AS nb FROM merged GROUP BY s),
-    walked AS (
-        SELECT m.s, m.v, t.na, t.nb,
-               SUM(m.a) OVER (PARTITION BY m.s ORDER BY m.v
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS ca,
-               SUM(m.b) OVER (PARTITION BY m.s ORDER BY m.v
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS cb,
-               lead(m.v) OVER (PARTITION BY m.s ORDER BY m.v)
-                   AS v_next
-        FROM merged m JOIN tot t ON t.s = m.s
-    ),
+    oracle=f"""
+    {_REF_VS_SOURCE_CTE}
+    {_REF_VS_SOURCE_WALK_CTE}
     terms AS (
         SELECT s, na, nb,
                round(abs(CAST(ca AS DOUBLE) / na
@@ -1238,27 +1101,7 @@ def quality_wasserstein_drift(
     Scale: the KS/CvM/AD kernel cost exactly — histogram groupBys,
     cumulative + lead windows over distinct values per source, one
     scalar row out per source."""
-    from pyspark.sql import Window
-
-    merged = _ref_vs_source_hist(spark, sf_dir)
-    tot = merged.groupBy("s").agg(
-        F.sum("a").alias("na"), F.sum("b").alias("nb")
-    )
-    w_cum = (
-        Window.partitionBy("s")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_lead = Window.partitionBy("s").orderBy("v")
-    walked = merged.join(tot, "s").select(
-        "s",
-        "v",
-        "na",
-        "nb",
-        F.sum("a").over(w_cum).alias("ca"),
-        F.sum("b").over(w_cum).alias("cb"),
-        F.lead("v").over(w_lead).alias("v_next"),
-    )
+    walked = _ref_vs_source_walk(spark, sf_dir)
     term = F.round(
         F.abs(
             F.col("ca").cast("double") / F.col("na")
@@ -1289,36 +1132,9 @@ def quality_wasserstein_drift(
 
 @register(
     "quality_energy_distance_drift",
-    oracle="""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
-    tot AS (SELECT s, SUM(a) AS na, SUM(b) AS nb FROM merged GROUP BY s),
-    walked AS (
-        SELECT m.s, m.v, t.na, t.nb,
-               SUM(m.a) OVER (PARTITION BY m.s ORDER BY m.v
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS ca,
-               SUM(m.b) OVER (PARTITION BY m.s ORDER BY m.v
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW) AS cb,
-               lead(m.v) OVER (PARTITION BY m.s ORDER BY m.v)
-                   AS v_next
-        FROM merged m JOIN tot t ON t.s = m.s
-    ),
+    oracle=f"""
+    {_REF_VS_SOURCE_CTE}
+    {_REF_VS_SOURCE_WALK_CTE}
     terms AS (
         SELECT s, na, nb,
                round(CAST(v_next - v AS DOUBLE)
@@ -1373,27 +1189,7 @@ def quality_energy_distance_drift(
 
     Scale: the KS/W1 kernel class — histogram groupBys + per-source
     distinct-value windows, scalar rows out."""
-    from pyspark.sql import Window
-
-    merged = _ref_vs_source_hist(spark, sf_dir)
-    tot = merged.groupBy("s").agg(
-        F.sum("a").alias("na"), F.sum("b").alias("nb")
-    )
-    w_cum = (
-        Window.partitionBy("s")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_lead = Window.partitionBy("s").orderBy("v")
-    walked = merged.join(tot, "s").select(
-        "s",
-        "v",
-        "na",
-        "nb",
-        F.sum("a").over(w_cum).alias("ca"),
-        F.sum("b").over(w_cum).alias("cb"),
-        F.lead("v").over(w_lead).alias("v_next"),
-    )
+    walked = _ref_vs_source_walk(spark, sf_dir)
     gap = (F.col("v_next") - F.col("v")).cast("double")
     e_xy = F.round(
         gap
@@ -1468,16 +1264,7 @@ KUIPER_C005 = 1.747
 @register(
     "quality_kuiper_drift",
     oracle=f"""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
+    {_POOLED_HIST_CTE}
     cum AS (
         SELECT v,
                SUM(ca_i) OVER (ORDER BY v) AS ca,
@@ -1531,30 +1318,9 @@ def quality_kuiper_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to the KS kernel — one map-side-combined groupBy
     to the value-distinct histogram, one cumulative window over
     DISTINCT VALUES (bin continuous columns first), scalar output."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
-    )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w = Window.orderBy("v").rangeBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "v",
-        F.sum("ca_i").over(w).alias("ca"),
-        F.sum("cb_i").over(w).alias("cb"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
+    cum = _ecdf(_ref_vs_rest_hist(table(spark, sf_dir, "documents")))
     gplus = F.col("ca") * F.col("nb") - F.col("cb") * F.col("na")
-    gaps = j.groupBy("na", "nb").agg(
+    gaps = cum.groupBy("na", "nb").agg(
         F.greatest(F.lit(0), F.max(gplus))
         .cast("bigint")
         .alias("dplus_num"),
@@ -1597,16 +1363,7 @@ WATSON_U2_CRIT_005 = 0.187
 @register(
     "quality_watson_u2_drift",
     oracle=f"""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
+    {_POOLED_HIST_CTE}
     cum AS (
         SELECT v, ca_i + cb_i AS m,
                SUM(ca_i) OVER (ORDER BY v) AS ca,
@@ -1668,33 +1425,12 @@ def quality_watson_u2_drift(
     Scale: the KS kernel verbatim — one map-side-combined histogram
     groupBy, one cumulative window over DISTINCT VALUES (bin
     continuous columns first), scalar output."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
-    )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w = Window.orderBy("v").rangeBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "v",
-        (F.col("ca_i") + F.col("cb_i")).alias("m"),
-        F.sum("ca_i").over(w).alias("ca"),
-        F.sum("cb_i").over(w).alias("cb"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
+    cum = _ecdf(_ref_vs_rest_hist(table(spark, sf_dir, "documents")))
+    m = F.col("ca_i") + F.col("cb_i")
     g = F.col("ca") * F.col("nb") - F.col("cb") * F.col("na")
-    sums = j.groupBy("na", "nb").agg(
-        F.sum(F.col("m") * g).cast("bigint").alias("s1"),
-        F.sum(F.col("m") * g * g).cast("bigint").alias("s2"),
+    sums = cum.groupBy("na", "nb").agg(
+        F.sum(m * g).cast("bigint").alias("s1"),
+        F.sum(m * g * g).cast("bigint").alias("s2"),
         F.count(F.lit(1)).cast("bigint").alias("n_values"),
     )
     n_comb = F.col("na") + F.col("nb")
@@ -1802,35 +1538,19 @@ def quality_circadian_drift_clicks_purchases(
     map-side-combined 24-row histogram, one 24-row window — the
     cheapest drift gate in the registry; state and output are
     O(24) forever."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
-    is_a = (F.col("event_type") == "click").cast("bigint")
-    rows_t = ev.select(
-        F.hour("ts").cast("bigint").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
+    cum = _ecdf(
+        _ref_vs_rest_hist(
+            ev, F.hour("ts").cast("bigint"), F.col("event_type") == "click"
+        )
     )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w = Window.orderBy("v").rangeBetween(Window.unboundedPreceding, 0)
-    cum = hist.select(
-        "v",
-        (F.col("ca_i") + F.col("cb_i")).alias("m"),
-        F.sum("ca_i").over(w).alias("ca"),
-        F.sum("cb_i").over(w).alias("cb"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = cum.crossJoin(F.broadcast(tot))
+    m = F.col("ca_i") + F.col("cb_i")
     g = F.col("ca") * F.col("nb") - F.col("cb") * F.col("na")
-    sums = j.groupBy("na", "nb").agg(
-        F.sum(F.col("m") * g).cast("bigint").alias("s1"),
-        F.sum(F.col("m") * g * g).cast("bigint").alias("s2"),
+    sums = cum.groupBy("na", "nb").agg(
+        F.sum(m * g).cast("bigint").alias("s1"),
+        F.sum(m * g * g).cast("bigint").alias("s2"),
         F.greatest(F.lit(0), F.max(g)).cast("bigint").alias("dplus_num"),
         F.greatest(F.lit(0), F.max(-g))
         .cast("bigint")

@@ -1,8 +1,21 @@
 """Shared kernel for the quality-operator families: the chi-squared
 critical-value SQL (Wilson-Hilferty beyond the lookup table), the
 normal critical value, the k-anonymity bucketing width, and the
-reference-vs-source value-histogram builder that every two-sample
-drift test walks.
+two-sample drift kernels the EDF and rank families walk:
+
+- ``_ref_vs_rest_hist``: the pooled reference-vs-rest value histogram
+  (``ca_i``/``cb_i`` per distinct value) with its totals ``na``/``nb``;
+  ``_ecdf`` and ``_midrank_walk`` are its two walks (the inclusive
+  ECDF step and the exclusive below-counts of the doubled midrank).
+- ``_ref_vs_source_hist``: src0 against each other source, one
+  histogram per source; ``_ref_vs_source_walk`` adds the per-source
+  totals and the cumulative ``(ca, cb, v_next)`` walk, and
+  ``_mann_whitney_u`` the per-source midrank U statistic and z.
+- ``_source_moments``: the exact per-source (n, sum, sum of squares).
+
+The oracle CTEs those kernels mirror are shared strings too
+(``_POOLED_HIST_CTE``, ``_MIDRANK_WALK_CTE``, ``_REF_VS_SOURCE_CTE``,
+``_REF_VS_SOURCE_WALK_CTE``).
 
 Extracted from the original single-module quality.py (r09 split) so
 each family module imports ONE copy — the shared-kernel guards in
@@ -12,7 +25,7 @@ tests/ pin that batch and streaming callers run the same text.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.sources.tables import table
@@ -70,14 +83,136 @@ Z_CRIT_005 = 1.959963984540054
 
 
 # ---------------------------------------------------------------------------
-# K-sample / effect-size completion of the drift family
+# Two-sample drift kernels: the reference slice against the rest
 # ---------------------------------------------------------------------------
 
-#: Shared two-sample (src0 vs each other source) value histogram — the
-#: kernel under quality_mannwhitney_drift, quality_cliffs_delta_effect
-#: and quality_hodges_lehmann_shift's pair weighting: one row per
+#: Oracle text of ``_ref_vs_rest_hist`` over documents: ``rows_t`` flags
+#: each row's side, ``hist`` counts both sides per distinct value.
+_POOLED_HIST_CTE = """WITH rows_t AS (
+        SELECT n_chars AS v,
+               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
+               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
+        FROM documents
+    ),
+    hist AS (
+        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
+        FROM rows_t GROUP BY v
+    ),"""
+
+
+#: Oracle text of ``_midrank_walk`` (the rows strictly below ``v``).
+_MIDRANK_WALK_CTE = """walk AS (
+        SELECT v, ca_i,
+               coalesce(SUM(ca_i + cb_i) OVER (ORDER BY v
+                    ROWS BETWEEN UNBOUNDED PRECEDING
+                    AND 1 PRECEDING), 0) AS lt,
+               ca_i + cb_i AS m
+        FROM hist
+    ),"""
+
+
+def _ref_vs_rest_hist(
+    rows: DataFrame, v: Column | None = None, is_ref: Column | None = None
+) -> DataFrame:
+    """The pooled two-sample histogram every reference-vs-rest drift
+    gate walks: one row per distinct value ``v`` of ``rows`` with
+    ``ca_i`` reference rows, ``cb_i`` rows of the rest, and the side
+    totals ``na``/``nb`` on every row.  The reference is the rows where
+    ``is_ref`` holds (default: ``source = 'src0'``); every other row is
+    the rest, as in the oracles' ``CASE WHEN`` split.  ``v`` defaults
+    to ``n_chars``.  Counts are exact BIGINTs, and the totals window
+    runs over the value-distinct histogram, never over the rows."""
+    if v is None:
+        v = F.col("n_chars")
+    if is_ref is None:
+        is_ref = F.col("source") == "src0"
+    is_a = F.when(is_ref, F.lit(1)).otherwise(F.lit(0))
+    whole = Window.partitionBy()
+    return (
+        rows.groupBy(v.alias("v"))
+        .agg(F.sum(is_a).alias("ca_i"), F.sum(1 - is_a).alias("cb_i"))
+        .select(
+            "v",
+            "ca_i",
+            "cb_i",
+            F.sum("ca_i").over(whole).alias("na"),
+            F.sum("cb_i").over(whole).alias("nb"),
+        )
+    )
+
+
+def _ecdf(hist: DataFrame) -> DataFrame:
+    """``hist`` (from ``_ref_vs_rest_hist``) with the ECDF numerators
+    ``ca``/``cb``: reference and rest rows at or below ``v``.  The frame
+    ends at the current value, so a tied block enters the step whole
+    (the right-continuous ECDF)."""
+    upto = Window.orderBy("v").rangeBetween(Window.unboundedPreceding, 0)
+    return hist.select(
+        "*",
+        F.sum("ca_i").over(upto).alias("ca"),
+        F.sum("cb_i").over(upto).alias("cb"),
+    )
+
+
+def _midrank_walk(hist: DataFrame) -> DataFrame:
+    """``hist`` (from ``_ref_vs_rest_hist``) with the exclusive
+    below-counts of the doubled-midrank tie convention: ``lt`` pooled
+    rows strictly below ``v`` (``lt_a``/``lt_b`` per side), ``m`` rows
+    tied at ``v``, and ``r2 = 2*lt + m + 1``, twice the midrank every
+    row at ``v`` shares — an exact integer under any ties."""
+    below = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
+    m = F.col("ca_i") + F.col("cb_i")
+    return hist.select(
+        "*",
+        F.coalesce(F.sum(m).over(below), F.lit(0)).alias("lt"),
+        F.coalesce(F.sum("ca_i").over(below), F.lit(0)).alias("lt_a"),
+        F.coalesce(F.sum("cb_i").over(below), F.lit(0)).alias("lt_b"),
+        m.alias("m"),
+    ).withColumn("r2", 2 * F.col("lt") + F.col("m") + 1)
+
+
+#: Oracle text of ``_ref_vs_source_hist``.
+_REF_VS_SOURCE_CTE = """WITH x AS (SELECT source, n_chars AS v FROM documents),
+    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
+    ref_hist AS (
+        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
+    ),
+    src_hist AS (
+        SELECT source AS s, v, count(*) AS b
+        FROM x WHERE source <> 'src0' GROUP BY 1, 2
+    ),
+    merged AS (
+        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
+            SELECT s, v, 0 AS a, b FROM src_hist
+            UNION ALL
+            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
+        ) GROUP BY 1, 2
+    ),"""
+
+
+#: Oracle text of the per-source totals and the walk of
+#: ``_ref_vs_source_walk`` that the transport metrics read.
+_REF_VS_SOURCE_WALK_CTE = """tot AS (SELECT s, SUM(a) AS na, SUM(b) AS nb FROM merged GROUP BY s),
+    walked AS (
+        SELECT m.s, m.v, t.na, t.nb,
+               SUM(m.a) OVER (PARTITION BY m.s ORDER BY m.v
+                   ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW) AS ca,
+               SUM(m.b) OVER (PARTITION BY m.s ORDER BY m.v
+                   ROWS BETWEEN UNBOUNDED PRECEDING
+                   AND CURRENT ROW) AS cb,
+               lead(m.v) OVER (PARTITION BY m.s ORDER BY m.v)
+                   AS v_next
+        FROM merged m JOIN tot t ON t.s = m.s
+    ),"""
+
+
+#: Two-sample (src0 vs each other source) value histogram: one row per
 #: (source s, distinct value v) with the reference count `a` and the
-#: source count `b`.  Histogram-sized, never corpus-sized.
+#: source count `b`.  Histogram-sized, never corpus-sized.  Used by the
+#: per-source walk (Anderson-Darling, Hellinger/TV, Wasserstein, energy
+#: distance), the Mann-Whitney U (the single gate and its BH-FDR
+#: battery) and Cliff's delta.
 def _ref_vs_source_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = table(spark, sf_dir, "documents").select(
         "source", F.col("n_chars").alias("v")
@@ -108,3 +243,93 @@ def _ref_vs_source_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
     )
 
+
+def _ref_vs_source_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``_ref_vs_source_hist`` walked per source in value order: the
+    source's totals ``na``/``nb`` on every row, the cumulative counts
+    ``ca``/``cb`` at or below ``v`` (the two ECDF steps), and the next
+    distinct value ``v_next`` (NULL on the source's last value), so
+    ``v_next - v`` is the width each step spans."""
+    per_source = Window.partitionBy("s")
+    in_order = per_source.orderBy("v")
+    upto = in_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return _ref_vs_source_hist(spark, sf_dir).select(
+        "s",
+        "v",
+        "a",
+        "b",
+        F.sum("a").over(per_source).alias("na"),
+        F.sum("b").over(per_source).alias("nb"),
+        F.sum("a").over(upto).alias("ca"),
+        F.sum("b").over(upto).alias("cb"),
+        F.lead("v").over(in_order).alias("v_next"),
+    )
+
+
+def _mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source Mann-Whitney U of each source against src0, off
+    ``_ref_vs_source_hist``: one row per source ``s`` with the sample
+    sizes ``na``/``nb``, the doubled statistic ``u2 = 2U`` (doubled
+    midranks 2*below + m + 1 keep every rank sum an exact BIGINT) and
+    its z, tie-corrected by Σ(m³−m) — one fixed IEEE chain over the
+    integers, mirrored textually in the oracles."""
+    below = (
+        Window.partitionBy("s")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    m = F.col("a") + F.col("b")
+    ranked = _ref_vs_source_hist(spark, sf_dir).select(
+        "s",
+        "a",
+        "b",
+        m.alias("m"),
+        F.coalesce(F.sum(m).over(below), F.lit(0)).alias("sb"),
+    )
+    stats = ranked.groupBy("s").agg(
+        F.sum("a").alias("na"),
+        F.sum("b").alias("nb"),
+        F.sum(
+            F.col("b") * (2 * F.col("sb") + F.col("m") + 1)
+        ).alias("r2"),
+        F.sum(
+            F.col("m") * F.col("m") * F.col("m") - F.col("m")
+        ).alias("tie"),
+    )
+    scored = stats.select(
+        "s",
+        "na",
+        "nb",
+        (F.col("r2") - F.col("nb") * (F.col("nb") + 1)).alias("u2"),
+        (F.col("na") * F.col("nb")).alias("mu2"),
+        (F.col("na") + F.col("nb")).alias("n"),
+        "tie",
+    )
+    z = (F.col("u2").cast("double") - F.col("mu2").cast("double")) / (
+        F.lit(2.0)
+        * F.sqrt(
+            (F.col("na").cast("double") * F.col("nb") / F.lit(12.0))
+            * (
+                (F.col("n") + F.lit(1.0))
+                - F.col("tie").cast("double")
+                / (F.col("n").cast("double") * (F.col("n") - F.lit(1.0)))
+            )
+        )
+    )
+    return scored.select("s", "na", "nb", "u2", z.alias("z"))
+
+
+def _source_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source exact moments of document length, one
+    map-side-combined groupBy: ``n`` documents, ``s`` = Σ n_chars and
+    ``s2`` = Σ n_chars² (BIGINTs — n_chars is integral, so every
+    variance downstream starts from exact integers)."""
+    return (
+        table(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("n_chars").alias("s"),
+            F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
+        )
+    )

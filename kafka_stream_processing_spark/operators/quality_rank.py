@@ -8,6 +8,15 @@ Midranks come from the same histogram walk as the EDF family (counts
 per distinct value + one cumulative window); rank statistics stay
 exact BIGINTs on doubled/quadrupled grids until ONE final IEEE step.
 Split from quality.py in r09; semantics unchanged.
+
+Kernels (``quality_kernel``): Cucconi, Mood and Ansari-Bradley walk
+``_midrank_walk`` over the pooled ``_ref_vs_rest_hist``; Mann-Whitney
+and its BH-FDR battery share the per-source U statistic and z of
+``_mann_whitney_u``; Cliff's delta reads ``_ref_vs_source_hist``; the
+Welch t, ANOVA F, Welch ANOVA and Bartlett gates start from
+``_source_moments``.  Hodges-Lehmann's pair-difference cross join, the
+k-sample grids (Kruskal-Wallis, Jonckheere, Kendall's W) and the
+chi-squared cells stay per op: each is the only one of its shape.
 """
 
 
@@ -27,8 +36,15 @@ from kafka_stream_processing_spark.operators.quality_kernel import (  # noqa: E5
     KANON_BUCKET_CHARS,
     Z_CRIT_005,
     _CHI2_CRIT_SQL,
+    _MIDRANK_WALK_CTE,
+    _POOLED_HIST_CTE,
+    _REF_VS_SOURCE_CTE,
     _WH_Z095,
+    _mann_whitney_u,
+    _midrank_walk,
+    _ref_vs_rest_hist,
     _ref_vs_source_hist,
+    _source_moments,
 )
 
 # ---------------------------------------------------------------------------
@@ -43,22 +59,7 @@ MWU_Z_CRIT_005 = 1.959963984540054
 @register(
     "quality_mannwhitney_drift",
     oracle=f"""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
+    {_REF_VS_SOURCE_CTE}
     ranked AS (
         SELECT s, v, a, b, a + b AS m,
                COALESCE(SUM(a + b) OVER (
@@ -124,86 +125,13 @@ def quality_mannwhitney_drift(
     corpus-scale sort: ranks come from cumulative counts, not
     row_number (the count-of-counts technique quality_key_skew_gini's
     histogram frontier uses)."""
-    from pyspark.sql import Window
-
-    x = table(spark, sf_dir, "documents").select(
-        "source", F.col("n_chars").alias("v")
-    )
-    srcs = (
-        x.filter(F.col("source") != "src0")
-        .select(F.col("source").alias("s"))
-        .distinct()
-    )
-    ref_hist = (
-        x.filter(F.col("source") == "src0")
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("a"))
-    )
-    src_hist = (
-        x.filter(F.col("source") != "src0")
-        .groupBy(F.col("source").alias("s"), "v")
-        .agg(F.count(F.lit(1)).alias("b"))
-    )
-    merged = (
-        src_hist.select("s", "v", F.lit(0).cast("bigint").alias("a"), "b")
-        .unionByName(
-            srcs.crossJoin(F.broadcast(ref_hist)).select(
-                "s", "v", "a", F.lit(0).cast("bigint").alias("b")
-            )
-        )
-        .groupBy("s", "v")
-        .agg(F.sum("a").alias("a"), F.sum("b").alias("b"))
-    )
-    w_cum = (
-        Window.partitionBy("s")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    m = F.col("a") + F.col("b")
-    ranked = merged.select(
-        "s",
-        "a",
-        "b",
-        m.alias("m"),
-        F.coalesce(F.sum(m).over(w_cum), F.lit(0)).alias("sb"),
-    )
-    stats = ranked.groupBy("s").agg(
-        F.sum("a").alias("na"),
-        F.sum("b").alias("nb"),
-        F.sum(
-            F.col("b") * (2 * F.col("sb") + F.col("m") + 1)
-        ).alias("r2"),
-        F.sum(
-            F.col("m") * F.col("m") * F.col("m") - F.col("m")
-        ).alias("tie"),
-    )
-    scored = stats.select(
-        "s",
-        "na",
-        "nb",
-        (F.col("r2") - F.col("nb") * (F.col("nb") + 1)).alias("u2"),
-        (F.col("na") * F.col("nb")).alias("mu2"),
-        (F.col("na") + F.col("nb")).alias("n"),
-        "tie",
-    )
-    z = (F.col("u2").cast("double") - F.col("mu2").cast("double")) / (
-        F.lit(2.0)
-        * F.sqrt(
-            (F.col("na").cast("double") * F.col("nb") / F.lit(12.0))
-            * (
-                (F.col("n") + F.lit(1.0))
-                - F.col("tie").cast("double")
-                / (F.col("n").cast("double") * (F.col("n") - F.lit(1.0)))
-            )
-        )
-    )
-    return scored.select(
+    return _mann_whitney_u(spark, sf_dir).select(
         F.col("s").alias("source"),
         F.col("na").cast("bigint").alias("n_ref"),
         F.col("nb").cast("bigint").alias("n_src"),
         F.col("u2").cast("bigint").alias("u2"),
-        z.alias("z"),
-        (F.abs(z) > MWU_Z_CRIT_005).alias("drift"),
+        "z",
+        (F.abs(F.col("z")) > MWU_Z_CRIT_005).alias("drift"),
     )
 
 
@@ -869,22 +797,7 @@ CLIFFS_MEDIUM = 0.474
 @register(
     "quality_cliffs_delta_effect",
     oracle=f"""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
+    {_REF_VS_SOURCE_CTE}
     walked AS (
         SELECT s, a, b,
                COALESCE(SUM(a) OVER (
@@ -1214,20 +1127,12 @@ def quality_welch_ttest_drift(
     Scale: one scan -> per-source moment rows (k rows), broadcast the
     1-row reference, k-row algebra out.  Nothing corpus-sized leaves
     the first aggregate."""
-    moms = (
-        table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("s1"),
-            F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
-        )
-    )
+    moms = _source_moments(spark, sf_dir)
     ref = (
         moms.filter(F.col("source") == "src0")
         .select(
             F.col("n").alias("na_"),
-            F.col("s1").alias("ra1"),
+            F.col("s").alias("ra1"),
             F.col("s2").alias("ra2"),
         )
     )
@@ -1239,7 +1144,7 @@ def quality_welch_ttest_drift(
             F.col("na_").alias("na"),
             F.col("n").alias("nb"),
             (F.col("ra1").cast("double") / F.col("na_")).alias("ma"),
-            (F.col("s1").cast("double") / F.col("n")).alias("mb"),
+            (F.col("s").cast("double") / F.col("n")).alias("mb"),
             (
                 (
                     F.col("ra2").cast("double")
@@ -1252,7 +1157,7 @@ def quality_welch_ttest_drift(
             (
                 (
                     F.col("s2").cast("double")
-                    - F.col("s1").cast("double") * F.col("s1") / F.col("n")
+                    - F.col("s").cast("double") * F.col("s") / F.col("n")
                 )
                 / (F.col("n") - F.lit(1.0))
             ).alias("vb"),
@@ -1578,11 +1483,7 @@ def quality_anova_f_drift(
     Scale: ONE map-side-combined groupBy(source) to a k-row moment
     table, then k-row algebra — the cheapest possible omnibus; the
     KW gate costs a value-histogram more."""
-    g = table(spark, sf_dir, "documents").groupBy("source").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("s"),
-        F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
-    )
+    g = _source_moments(spark, sf_dir)
     tot = g.agg(
         F.sum("n").alias("nn"),
         F.sum("s").alias("ss"),
@@ -1714,16 +1615,7 @@ def quality_welch_anova_drift(
 
     Scale: one map-side-combined groupBy(source) + k-row algebra with
     a broadcast totals row — the F gate's exact cost class."""
-    g = (
-        table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("s"),
-            F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
-        )
-        .filter(F.col("n") >= 2)
-    )
+    g = _source_moments(spark, sf_dir).filter(F.col("n") >= 2)
     xbar = F.col("s").cast("double") / F.col("n")
     s2 = (
         F.col("s2").cast("double")
@@ -1863,16 +1755,7 @@ def quality_bartlett_homoscedasticity(
 
     Scale: the F/Welch gates' exact cost class — one
     map-side-combined groupBy(source), k-row algebra."""
-    g = (
-        table(spark, sf_dir, "documents")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_chars").alias("s"),
-            F.sum(F.col("n_chars") * F.col("n_chars")).alias("s2"),
-        )
-        .filter(F.col("n") >= 2)
-    )
+    g = _source_moments(spark, sf_dir).filter(F.col("n") >= 2)
     var_j = (
         F.col("s2").cast("double")
         - F.col("s").cast("double") * F.col("s") / F.col("n")
@@ -1962,22 +1845,7 @@ _BH_Z_SQL = "CASE " + " ".join(
 @register(
     "quality_mw_drift_fdr",
     oracle=f"""
-    WITH x AS (SELECT source, n_chars AS v FROM documents),
-    srcs AS (SELECT DISTINCT source AS s FROM x WHERE source <> 'src0'),
-    ref_hist AS (
-        SELECT v, count(*) AS a FROM x WHERE source = 'src0' GROUP BY v
-    ),
-    src_hist AS (
-        SELECT source AS s, v, count(*) AS b
-        FROM x WHERE source <> 'src0' GROUP BY 1, 2
-    ),
-    merged AS (
-        SELECT s, v, SUM(a) AS a, SUM(b) AS b FROM (
-            SELECT s, v, 0 AS a, b FROM src_hist
-            UNION ALL
-            SELECT srcs.s, r.v, r.a, 0 AS b FROM srcs CROSS JOIN ref_hist r
-        ) GROUP BY 1, 2
-    ),
+    {_REF_VS_SOURCE_CTE}
     ranked_v AS (
         SELECT s, a, b, a + b AS m,
                COALESCE(SUM(a + b) OVER (PARTITION BY s ORDER BY v
@@ -2059,46 +1927,7 @@ def quality_mw_drift_fdr(
     the multiplicity layer is free."""
     from pyspark.sql import Window
 
-    merged = _ref_vs_source_hist(spark, sf_dir)
-    w_cum = (
-        Window.partitionBy("s")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    m = F.col("a") + F.col("b")
-    ranked_v = merged.select(
-        "s",
-        "a",
-        "b",
-        m.alias("m"),
-        F.coalesce(F.sum(m).over(w_cum), F.lit(0)).alias("sb"),
-    )
-    stats = ranked_v.groupBy("s").agg(
-        F.sum("a").alias("na"),
-        F.sum("b").alias("nb"),
-        F.sum(F.col("b") * (2 * F.col("sb") + F.col("m") + 1)).alias(
-            "r2"
-        ),
-        F.sum(
-            F.col("m") * F.col("m") * F.col("m") - F.col("m")
-        ).alias("tie"),
-    )
-    nn = F.col("na") + F.col("nb")
-    z = (
-        (F.col("r2") - F.col("nb") * (F.col("nb") + 1)).cast("double")
-        - (F.col("na") * F.col("nb")).cast("double")
-    ) / (
-        F.lit(2.0)
-        * F.sqrt(
-            (F.col("na").cast("double") * F.col("nb") / F.lit(12.0))
-            * (
-                (nn + F.lit(1.0))
-                - F.col("tie").cast("double")
-                / (nn.cast("double") * (nn - F.lit(1.0)))
-            )
-        )
-    )
-    zs = stats.select("s", z.alias("z"))
+    zs = _mann_whitney_u(spark, sf_dir).select("s", "z")
     w_rank = Window.orderBy(F.abs(F.col("z")).desc(), "s")
     ordered = zs.select(
         "s",
@@ -2194,24 +2023,8 @@ _CUCCONI_C_EXPR = (
 @register(
     "quality_cucconi_drift",
     oracle=f"""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
-    walk AS (
-        SELECT v, ca_i,
-               coalesce(SUM(ca_i + cb_i) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lt,
-               ca_i + cb_i AS m
-        FROM hist
-    ),
+    {_POOLED_HIST_CTE}
+    {_MIDRANK_WALK_CTE}
     tot AS (SELECT SUM(is_a) AS na, SUM(is_b) AS nb FROM rows_t),
     sums AS (
         SELECT CAST(tot.na AS BIGINT) AS na,
@@ -2260,35 +2073,12 @@ def quality_cucconi_drift(
     Scale: the KS kernel verbatim — one map-side-combined histogram
     groupBy, one cumulative window over DISTINCT VALUES (bin
     continuous columns first), scalar output."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
+    walk = _midrank_walk(
+        _ref_vs_rest_hist(table(spark, sf_dir, "documents"))
     )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w_lt = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    walk = hist.select(
-        "ca_i",
-        F.coalesce(
-            F.sum(F.col("ca_i") + F.col("cb_i")).over(w_lt), F.lit(0)
-        ).alias("lt"),
-        (F.col("ca_i") + F.col("cb_i")).alias("m"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = walk.crossJoin(F.broadcast(tot))
-    r2 = 2 * F.col("lt") + F.col("m") + 1
+    r2 = F.col("r2")
     r2c = 2 * (F.col("na") + F.col("nb") + 1) - r2
-    sums = j.groupBy("na", "nb").agg(
+    sums = walk.groupBy("na", "nb").agg(
         F.sum(F.col("ca_i") * r2 * r2).cast("bigint").alias("s4"),
         F.sum(F.col("ca_i") * r2c * r2c).cast("bigint").alias("t4"),
     )
@@ -2330,24 +2120,8 @@ _MOOD_Z_EXPR = (
 @register(
     "quality_mood_scale_drift",
     oracle=f"""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
-    walk AS (
-        SELECT v, ca_i,
-               coalesce(SUM(ca_i + cb_i) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lt,
-               ca_i + cb_i AS m
-        FROM hist
-    ),
+    {_POOLED_HIST_CTE}
+    {_MIDRANK_WALK_CTE}
     tot AS (SELECT SUM(is_a) AS na, SUM(is_b) AS nb FROM rows_t),
     sums AS (
         SELECT CAST(tot.na AS BIGINT) AS na,
@@ -2390,37 +2164,11 @@ def quality_mood_scale_drift(
     Scale: the KS kernel verbatim — one map-side-combined histogram
     groupBy, one cumulative window over DISTINCT VALUES, scalar
     output."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
+    walk = _midrank_walk(
+        _ref_vs_rest_hist(table(spark, sf_dir, "documents"))
     )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w_lt = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    walk = hist.select(
-        "ca_i",
-        F.coalesce(
-            F.sum(F.col("ca_i") + F.col("cb_i")).over(w_lt), F.lit(0)
-        ).alias("lt"),
-        (F.col("ca_i") + F.col("cb_i")).alias("m"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = walk.crossJoin(F.broadcast(tot))
-    devi = (
-        2 * F.col("lt") + F.col("m") + 1
-        - (F.col("na") + F.col("nb") + 1)
-    )
-    sums = j.groupBy("na", "nb").agg(
+    devi = F.col("r2") - (F.col("na") + F.col("nb") + 1)
+    sums = walk.groupBy("na", "nb").agg(
         F.sum(F.col("ca_i") * devi * devi).cast("bigint").alias("m4")
     )
     parts = sums.select(
@@ -2457,26 +2205,10 @@ _AB_Z_EXPR = (
 
 @register(
     "quality_ansari_bradley_drift",
-    oracle="""
-    WITH rows_t AS (
-        SELECT n_chars AS v,
-               CASE WHEN source = 'src0' THEN 1 ELSE 0 END AS is_a,
-               CASE WHEN source = 'src0' THEN 0 ELSE 1 END AS is_b
-        FROM documents
-    ),
-    hist AS (
-        SELECT v, SUM(is_a) AS ca_i, SUM(is_b) AS cb_i
-        FROM rows_t GROUP BY v
-    ),
+    oracle=f"""
+    {_POOLED_HIST_CTE}
     tot AS (SELECT SUM(is_a) AS na, SUM(is_b) AS nb FROM rows_t),
-    walk AS (
-        SELECT v, ca_i,
-               coalesce(SUM(ca_i + cb_i) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lt,
-               ca_i + cb_i AS m
-        FROM hist
-    ),
+    {_MIDRANK_WALK_CTE}
     scored AS (
         SELECT w.ca_i, w.m,
                (tot.na + tot.nb + 1)
@@ -2493,12 +2225,10 @@ _AB_Z_EXPR = (
         FROM scored s, tot GROUP BY tot.na, tot.nb
     )
     SELECT na, nb, t2, sum_s2, sum_s4,
-           {AB_EXPR} AS z_ab,
-           abs({AB_EXPR}) > {ZCRIT} AS scale_drift
+           {_AB_Z_EXPR} AS z_ab,
+           abs({_AB_Z_EXPR}) > {Z_CRIT_005!r} AS scale_drift
     FROM sums
-    """.replace("{AB_EXPR}", _AB_Z_EXPR).replace(
-        "{ZCRIT}", repr(Z_CRIT_005)
-    ),
+    """,
     tags=("quality", "drift", "statistics"),
 )
 def quality_ansari_bradley_drift(
@@ -2527,35 +2257,12 @@ def quality_ansari_bradley_drift(
     Scale: the KS kernel verbatim — one map-side-combined histogram
     groupBy over DISTINCT VALUES, one cumulative window, scalar
     output; state is value-cardinality-sized, never corpus-sized."""
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
-    rows_t = d.select(
-        F.col("n_chars").alias("v"),
-        is_a.alias("is_a"),
-        (1 - is_a).alias("is_b"),
+    walk = _midrank_walk(
+        _ref_vs_rest_hist(table(spark, sf_dir, "documents"))
     )
-    hist = rows_t.groupBy("v").agg(
-        F.sum("is_a").alias("ca_i"), F.sum("is_b").alias("cb_i")
-    )
-    w_lt = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    walk = hist.select(
-        "ca_i",
-        F.coalesce(
-            F.sum(F.col("ca_i") + F.col("cb_i")).over(w_lt), F.lit(0)
-        ).alias("lt"),
-        (F.col("ca_i") + F.col("cb_i")).alias("m"),
-    )
-    tot = rows_t.agg(
-        F.sum("is_a").alias("na"), F.sum("is_b").alias("nb")
-    )
-    j = walk.crossJoin(F.broadcast(tot))
     n1 = F.col("na") + F.col("nb") + 1
-    s2 = n1 - F.abs(2 * F.col("lt") + F.col("m") + 1 - n1)
-    sums = j.groupBy("na", "nb").agg(
+    s2 = n1 - F.abs(F.col("r2") - n1)
+    sums = walk.groupBy("na", "nb").agg(
         F.sum(F.col("ca_i") * s2).cast("bigint").alias("t2"),
         F.sum(F.col("m") * s2).cast("bigint").alias("sum_s2"),
         F.sum(F.col("m") * s2 * s2).cast("bigint").alias("sum_s4"),

@@ -2155,28 +2155,16 @@ def stream_isotonic_recalibration(
     joins run per chunk on bin tables.  Nothing in the streaming
     state store."""
     from kafka_stream_processing_spark.operators.quality_calibration import (
-        ISO_BIN_CHARS,
-        ISO_TOKEN_THRESHOLD,
+        _length_bins,
         isotonic_minimax_fit,
     )
-
-    def bin_hist(b: DataFrame) -> DataFrame:
-        return b.groupBy(
-            F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
-        ).agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(
-                (
-                    F.size(F.split(F.col("text"), " "))
-                    > ISO_TOKEN_THRESHOLD
-                ).cast("bigint")
-            ).alias("yb"),
-        )
 
     stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
         "doc_id", "n_chars", "text"
     )
-    bins = _per_batch_cells(stream, "doc_id", bin_hist)
+    bins = _per_batch_cells(
+        stream, "doc_id", lambda b: _length_bins(b, "nb", "yb")
+    )
     fitted = isotonic_minimax_fit(bins, part=["chunk_min_doc_id"])
     return fitted.select(
         "chunk_min_doc_id",
@@ -2908,30 +2896,16 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram; the train table is bin-sized and computed once.
     Restart replays cleanly (verdicts are per-batch final)."""
     from kafka_stream_processing_spark.operators.quality_calibration import (
-        ISO_BIN_CHARS,
-        ISO_TOKEN_THRESHOLD,
+        _length_bins,
     )
     from kafka_stream_processing_spark.sources.tables import table
-
-    def bin_counts(docs: DataFrame, n: str, y: str) -> DataFrame:
-        return docs.groupBy(
-            F.expr(f"n_chars div {ISO_BIN_CHARS}").alias("b")
-        ).agg(
-            F.count(F.lit(1)).alias(n),
-            F.sum(
-                F.when(
-                    F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD,
-                    F.lit(1),
-                ).otherwise(F.lit(0))
-            ).alias(y),
-        )
 
     path = _stage_doc_chunks(sf_dir, "source = 'src0'", "testdocs")
     stream = file_stream(spark, path).select("doc_id", "n_chars", "text")
     cells = _per_batch_cells(
-        stream, "doc_id", lambda b: bin_counts(b, "n_test", "y_test")
+        stream, "doc_id", lambda b: _length_bins(b, "n_test", "y_test")
     )
-    train = bin_counts(
+    train = _length_bins(
         table(spark, sf_dir, "documents").filter(F.col("source") != "src0"),
         "nt",
         "yt",
