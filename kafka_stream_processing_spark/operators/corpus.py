@@ -39,9 +39,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_stream_processing_spark.operators.dedup import (
-    _word_shingles,
+from kafka_stream_processing_spark.operators.dedup import hash64
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _GRAMS_SQL,
+    _word_counts,
+    _word_grams,
     split_words,
+    words,
 )
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
@@ -49,28 +53,6 @@ from kafka_stream_processing_spark.sources.tables import fanout, table
 #: Tokens per packed training sequence (a stand-in for a model's context
 #: length; the packing math is budget-agnostic).
 PACK_BUDGET = 512
-
-#: DuckDB expression for all (non-distinct) word-3-gram occurrences of a
-#: token list ``t`` — the same construction as dedup.JACCARD_ORACLE's
-#: shingle CTE minus the DISTINCT.
-_GRAMS_SQL = (
-    "list_transform(range(1, greatest(len(t) - 1, 1)), "
-    "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])"
-)
-
-
-def _word_grams_all(toks: Column, n: int = 3) -> Column:
-    """ALL word n-gram occurrences (duplicates kept — unlike
-    dedup._word_shingles, which is distinct-per-doc), for occurrence-
-    weighted repetition metrics."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + off) for off in range(n)]
-    )
-    return F.when(F.size(toks) >= n, F.transform(idx, gram)).otherwise(
-        F.array().cast("array<string>")
-    )
-
 
 @register(
     "pack_sequences_token_budget",
@@ -113,7 +95,7 @@ def pack_sequences_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     d = fanout(table(spark, sf_dir, "documents"))
     toks = d.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
+        "doc_id", "lang", F.size(words()).alias("n_tokens")
     )
     w = (
         Window.partitionBy("lang")
@@ -185,7 +167,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast equi-join.
 
     The per-doc distinct shingle sets come straight from
-    ``_word_shingles`` (array_distinct inside the row), so NO global
+    ``_word_grams`` (array_distinct inside the row), so NO global
     distinct ever shuffles raw shingle strings — measured at sf0.1 the
     exploded-then-``.distinct()`` formulation cost 19 s against 3 s for
     this one.  The per-doc total rides THROUGH the explode as a constant
@@ -213,7 +195,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = split_words(d, "doc_id", "source").select(
         "doc_id",
         "source",
-        _word_shingles(F.col("words")).alias("sh_arr"),
+        F.array_distinct(_word_grams(F.col("words"))).alias("sh_arr"),
     )
     bench = (
         docs.filter(F.col("source") == "src0")
@@ -277,7 +259,7 @@ def quality_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     both formulations ship deliberately, pick by corpus shape."""
     d = fanout(table(spark, sf_dir, "documents"))
     grams = split_words(d, "doc_id").select(
-        "doc_id", F.explode(_word_grams_all(F.col("words"))).alias("gram")
+        "doc_id", F.explode(_word_grams(F.col("words"))).alias("gram")
     )
     counted = grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
     dup_occ = F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(0))
@@ -411,7 +393,7 @@ def corpus_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed BEFORE any shuffle boundary: downstream exchanges move
     32-char digests, not repeated body slices."""
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.split("text", " ")
+    t = words()
     sized = d.select("doc_id", t.alias("t"), F.size(t).alias("n")).withColumn(
         "n_chunks",
         1
@@ -485,7 +467,7 @@ def index_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride the same ``term`` key, so AQE coalesces them into one exchange
     reuse at scale."""
     d = fanout(table(spark, sf_dir, "documents"))
-    occ = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+    occ = d.select("doc_id", F.explode(words()).alias("term"))
     pairs = occ.select("term", "doc_id").distinct()
     dfs = (
         pairs.groupBy("term")
@@ -607,8 +589,6 @@ def corpus_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates two hit bits per doc.  Nothing in the plan grows with
     corpus size except the build scan."""
     d = table(spark, sf_dir, "documents")
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     docs = d.select("doc_id", hash64(F.col("text")).alias("h"))
     corpus = docs.filter(F.col("doc_id") % 5 != 0).select("h").distinct()
     batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -688,8 +668,6 @@ def corpus_bloom_incremental_merge(
     corpus size.  At 100 TB the partial bitmaps are a tiny bucketed
     table keyed on word, and yesterday's serving bitmap never needs the
     raw corpus again."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     d = table(spark, sf_dir, "documents")
     docs = d.select(
         (F.col("doc_id") % 3).alias("day"), hash64(F.col("text")).alias("h")
@@ -755,7 +733,7 @@ def corpus_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline that already deduped gets the card for one narrow
     aggregate over digests."""
     d = table(spark, sf_dir, "documents")
-    n_words = F.size(F.split("text", " "))
+    n_words = F.size(words())
     base = d.select(
         "lang",
         "source",
@@ -901,8 +879,6 @@ def cm_item_col() -> Column:
 
 
 def _cm_bucket(item: Column, r: Column) -> Column:
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     return hash64(F.concat(item, F.lit("#"), r.cast("string"))) % CM_W
 
 
@@ -1010,11 +986,7 @@ def corpus_good_turing_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the quality_key_skew_gini bound), then a single 4-sum scalar
     aggregate."""
     d = table(spark, sf_dir, "documents")
-    cnt = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cnt = _word_counts(d)
     coc = cnt.groupBy("c").agg(F.count(F.lit(1)).alias("m"))
     s = coc.agg(
         F.sum("m").alias("n_types"),
@@ -1119,8 +1091,6 @@ def sketch_bottomk_distinct(
     cost class) then a k-row TakeOrderedAndProject — no global sort;
     per-partition bottom-k merges associatively, which IS the
     production incremental form (same table shape per day/shard)."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     hashes = (
         table(spark, sf_dir, "events")
         .select(hash64(F.col("user_id").cast("string")).alias("h"))
@@ -1215,8 +1185,6 @@ def sketch_bottomk_jaccard(
     scalar aggregates — and the sketch form is MERGEABLE: per-shard
     (h, in_a, in_b) bottom-k tables union-then-recut exactly like the
     distinct sketch."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     flags = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
@@ -1337,7 +1305,7 @@ def corpus_ngram_novelty_curve(
     d = fanout(table(spark, sf_dir, "documents"))
     sh = split_words(d, "doc_id").select(
         "doc_id",
-        F.explode(_word_shingles(F.col("words"))).alias("sh"),
+        F.explode(F.array_distinct(_word_grams(F.col("words")))).alias("sh"),
     )
     marked = sh.withColumn(
         "first_doc", F.min("doc_id").over(Window.partitionBy("sh"))
@@ -1629,15 +1597,8 @@ def corpus_term_dispersion_gries_dp(
     no skew funnel (stop-word heavy hitters spread across the
     (term, source) composite key before the per-term rollup)."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = d.select(
-        "source", F.explode(F.split("text", " ")).alias("term")
-    )
-    tf = toks.groupBy("term", "source").agg(
-        F.count(F.lit(1)).alias("f")
-    )
-    parts = toks.groupBy("source").agg(
-        F.count(F.lit(1)).alias("toks_i")
-    )
+    tf = _word_counts(d, "source", word="term", count="f")
+    parts = tf.groupBy("source").agg(F.sum("f").alias("toks_i"))
     tot = parts.agg(
         F.sum("toks_i").cast("bigint").alias("t_total"),
         F.min("toks_i").cast("bigint").alias("toks_min"),

@@ -18,6 +18,11 @@ from kafka_stream_processing_spark.operators.similarity import (
     cosine_exact,
     lsh_bucket,
 )
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _word_grams,
+    split_words,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -28,30 +33,6 @@ def hash64(col: Column) -> Column:
     Murmur3, DuckDB's hash() — never agree across engines.)
     DuckDB mirror: CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)."""
     return F.conv(F.substring(F.md5(col.cast("binary")), 1, 15), 16, 10).cast("bigint")
-
-
-def split_words(d: DataFrame, *cols: str) -> DataFrame:
-    """Project the whitespace tokenization ONCE (column ``words``) before
-    shingle/gram building.  Generate (explode) is not whole-stage-codegen'd,
-    so an inlined ``split(text)`` inside the shingle ``transform`` is
-    re-evaluated for each of its ~5 textual occurrences per row (guide §4:
-    project before opaque ops; measured 1.71 s → 1.16 s on the minhash
-    signature stage at sf0.1)."""
-    return d.select(*cols, F.split("text", " ").alias("words"))
-
-
-def _word_shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-grams.  NB: Spark's sequence(1, k) DESCENDS when
-    k < 1, so short docs must short-circuit to an empty array.  Pass a
-    pre-projected array COLUMN (see ``split_words``), not an inline
-    ``F.split(...)`` expression — the expression would be inlined ~5×."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + off) for off in range(n)]
-    )
-    return F.when(
-        F.size(toks) >= n, F.array_distinct(F.transform(idx, gram))
-    ).otherwise(F.array().cast("array<string>"))
 
 
 @register(
@@ -154,7 +135,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fanout(table(spark, sf_dir, "documents"))
     sh = (
         split_words(d, "doc_id")
-        .select("doc_id", F.explode(_word_shingles(F.col("words"))).alias("sh"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(_word_grams(F.col("words")))).alias(
+                "sh"
+            ),
+        )
         .distinct()
     )
     # Document frequency via an unordered window over sh: ONE shuffle on
@@ -270,7 +256,8 @@ def minhash_band_rows(d: DataFrame) -> DataFrame:
     per micro-batch.  Stateless: the hash family is literal constants,
     so a batch's band rows never depend on other batches."""
     toks = split_words(d, "doc_id").select(
-        "doc_id", F.explode(_word_shingles(F.col("words"))).alias("tok")
+        "doc_id",
+        F.explode(F.array_distinct(_word_grams(F.col("words")))).alias("tok"),
     )
     based = toks.select(
         "doc_id", (hash64(F.col("tok")) % MINHASH_P).alias("h")
@@ -397,7 +384,8 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     over word-3-gram shingle hashes."""
     d = fanout(table(spark, sf_dir, "documents"))
     toks = split_words(d, "doc_id").select(
-        "doc_id", F.explode(_word_shingles(F.col("words"))).alias("tok")
+        "doc_id",
+        F.explode(F.array_distinct(_word_grams(F.col("words")))).alias("tok"),
     )
     hashed = toks.select("doc_id", hash64(F.col("tok")).alias("h"))
     votes = hashed.groupBy("doc_id").agg(
@@ -549,7 +537,8 @@ def _simhash64_band_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     house hash64 is only 60 bits wide."""
     d = fanout(table(spark, sf_dir, "documents"))
     toks = split_words(d, "doc_id").select(
-        "doc_id", F.explode(_word_shingles(F.col("words"))).alias("tok")
+        "doc_id",
+        F.explode(F.array_distinct(_word_grams(F.col("words")))).alias("tok"),
     )
     md5c = F.md5(F.col("tok").cast("binary"))
     hashed = toks.select(
@@ -1084,14 +1073,13 @@ def dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected: the 100 TB cost is two hash shuffles of (doc, pos, h)
     triples plus a doc-bounded sort."""
     d = fanout(table(spark, sf_dir, "documents"))
-    from kafka_stream_processing_spark.operators.corpus import _word_grams_all
     from pyspark.sql import Window
 
     g = (
         split_words(d, "doc_id")
         .select(
             "doc_id",
-            F.posexplode(_word_grams_all(F.col("words"))).alias(
+            F.posexplode(_word_grams(F.col("words"))).alias(
                 "p0", "gram"
             ),
         )
@@ -1189,8 +1177,8 @@ def dedup_cdc_chunk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = fanout(table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w")
+    occ = d.select(
+        "doc_id", F.posexplode(words()).alias("pos", "w")
     ).withColumn(
         "bf", (hash64(F.col("w")) % CDC_MASK == 0).cast("bigint")
     )
@@ -1199,7 +1187,7 @@ def dedup_cdc_chunk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    numbered = words.withColumn(
+    numbered = occ.withColumn(
         "chunk_id", F.coalesce(F.sum("bf").over(wprev), F.lit(0))
     )
     chunks = numbered.groupBy("doc_id", "chunk_id").agg(
@@ -1329,7 +1317,12 @@ def _containment_frames(
     d = fanout(table(spark, sf_dir, "documents"))
     sh = (
         split_words(d, "doc_id")
-        .select("doc_id", F.explode(_word_shingles(F.col("words"))).alias("sh"))
+        .select(
+            "doc_id",
+            F.explode(F.array_distinct(_word_grams(F.col("words")))).alias(
+                "sh"
+            ),
+        )
         .distinct()
     )
     filtered = (
@@ -1611,7 +1604,8 @@ def dedup_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = fanout(table(spark, sf_dir, "documents"))
     toks = split_words(d, "doc_id").select(
-        "doc_id", F.explode(_word_shingles(F.col("words"))).alias("tok")
+        "doc_id",
+        F.explode(F.array_distinct(_word_grams(F.col("words")))).alias("tok"),
     )
     based = toks.select(
         "doc_id", (hash64(F.col("tok")) % MINHASH_P).alias("h")

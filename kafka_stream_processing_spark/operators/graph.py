@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -499,7 +500,7 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     components/PageRank kernels.  Cited reference scope: the reference
     engine has no iterative operators at all (SURVEY.md §2.1)."""
     d = table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = words()
     shifted = [
         F.slice(toks, k + 1, F.greatest(F.size(toks) - k, F.lit(0)))
         for k in range(1, _TR_WINDOW + 1)

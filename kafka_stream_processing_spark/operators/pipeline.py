@@ -26,6 +26,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.dedup import hash64
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _GRAMS_SQL,
+    _word_grams,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -124,7 +129,7 @@ def gopher_feature_columns(text_col: str = "text") -> list[Column]:
     chars, top-word count, stopword count) over a whitespace-tokenized
     text column.  Exported so robustness tests exercise the operator's
     OWN expressions against degenerate inputs."""
-    toks = F.split(text_col, " ")
+    toks = words(text_col)
     return [
         F.size(toks).alias("n_words"),
         F.aggregate(
@@ -625,7 +630,7 @@ def sample_rho_loss_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as sample_stratified_topn, and the window state per domain is
     a counter, not a buffer."""
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.split(F.lower(F.col("text")), " ")
+    t = words(F.lower(F.col("text")))
 
     def proxy(salt: str) -> Column:
         weight = lambda w: (  # noqa: E731
@@ -667,10 +672,8 @@ ATTRITION_CONTAM_DENOM = 10
 
 
 def _attrition_oracle() -> str:
-    # corpus is imported before this module in registry._load, and
-    # tokenizer has no import edge back to pipeline, so both fragments
-    # resolve at registration time.
-    from kafka_stream_processing_spark.operators.corpus import _GRAMS_SQL
+    # tokenizer has no import edge back to pipeline, so the fragment
+    # resolves at registration time.
     from kafka_stream_processing_spark.operators.tokenizer import (
         _BPE_COUNT_SQL,
     )
@@ -790,13 +793,12 @@ def pipeline_attrition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded via inline — no re-scan per stage, no driver loop.
     Survival is cumulative (a doc counts for stage k only if it passed
     1..k-1), matching how a real pipeline's stages compose."""
-    from kafka_stream_processing_spark.operators.dedup import _word_shingles
     from kafka_stream_processing_spark.operators.tokenizer import (
         bpe_token_count,
     )
 
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = F.split("text", " ")
+    toks = words()
     pool = d.filter(F.col("source") != "src0").select(
         "doc_id",
         toks.alias("t"),
@@ -832,13 +834,12 @@ def pipeline_attrition_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             == 0
         ),
     )
-    sh = flags1.select(
-        "doc_id", F.explode(_word_shingles(F.col("t"))).alias("sh")
-    )
+    shingles = F.explode(F.array_distinct(_word_grams(F.col("t"))))
+    sh = flags1.select("doc_id", shingles.alias("sh"))
     bench = (
         d.filter(F.col("source") == "src0")
         .select(toks.alias("t"))
-        .select(F.explode(_word_shingles(F.col("t"))).alias("sh"))
+        .select(shingles.alias("sh"))
         .distinct()
     )
     tot = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -927,16 +928,14 @@ def dsir_scored_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     back onto the words (see sample_dsir_importance's docstring for
     the full derivation).  Used by the selection op and the ESS
     diagnostic (kernel reuse guard-tested)."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     d = fanout(table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("w")
+    occ = d.select(
+        "doc_id", "source", F.explode(words()).alias("w")
     ).select(
         "doc_id", "source", (hash64(F.col("w")) % DSIR_BUCKETS).alias("b")
     )
     is_t = (F.col("source") == "src0").cast("bigint")
-    buckets = words.groupBy("b").agg(
+    buckets = occ.groupBy("b").agg(
         F.sum(is_t).alias("ct"),
         F.sum(1 - is_t).alias("cr"),
     )
@@ -958,7 +957,7 @@ def dsir_scored_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lr"),
     )
     return (
-        words.filter(F.col("source") != "src0")
+        occ.filter(F.col("source") != "src0")
         .join(F.broadcast(lr), "b")
         .groupBy("doc_id", "source")
         .agg(
@@ -1376,8 +1375,6 @@ def sample_neyman_allocation(
         .cast("bigint")
         .alias("n_alloc"),
     )
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     w_pick = Window.partitionBy("lang").orderBy(
         hash64(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -1962,7 +1959,7 @@ def sample_token_budget_waterfill(
     scan → per-source partials → O(sources) algebra, no second pass."""
     d = table(spark, sf_dir, "documents")
     supply = d.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")))
+        F.sum(F.size(words()))
         .cast("bigint")
         .alias("s")
     )
@@ -2159,7 +2156,7 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES must match, not the plan)."""
     d = fanout(table(spark, sf_dir, "documents")).select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("size"),
+        F.size(words()).cast("bigint").alias("size"),
     )
     tot = d.agg(F.sum("size").cast("bigint").alias("t"))
     hits = distributed_prefix_sum(d).crossJoin(F.broadcast(tot)).select(
@@ -2244,7 +2241,7 @@ def sample_group_kfold_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         (hash64(F.col("source")) % GROUP_KFOLD_K).alias("fold"),
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(F.split("text", " ")))
+        F.sum(F.size(words()))
         .cast("bigint")
         .alias("n_tokens"),
     )
@@ -2364,7 +2361,7 @@ def sample_pps_hansen_hurwitz_eval(
     the y values ride the selection frame."""
     d = fanout(table(spark, sf_dir, "documents")).select(
         "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("size"),
+        F.size(words()).cast("bigint").alias("size"),
         F.col("n_chars").cast("bigint").alias("y"),
     )
     tot = d.agg(

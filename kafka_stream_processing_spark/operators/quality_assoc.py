@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -341,7 +342,7 @@ def quality_spearman_corr(
 
     x = table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("xv"),
-        F.size(F.split(F.col("text"), " ")).alias("yv"),
+        F.size(words()).alias("yv"),
     )
 
     def rank2(col: str) -> DataFrame:
@@ -565,7 +566,7 @@ def quality_kendall_tau_corr(
     domains stay histogram-sized."""
     obs = table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("x"),
-        F.size(F.split(F.col("text"), " ")).alias("y"),
+        F.size(words()).alias("y"),
     )
     cells = obs.groupBy("x", "y").agg(F.count(F.lit(1)).alias("nc"))
     tot = obs.agg(F.count(F.lit(1)).alias("n"))
@@ -1404,7 +1405,7 @@ def quality_dcor_length_vocab(
         (F.col("n_chars") / DCOR_LEN_BUCKET)
         .cast("bigint")
         .alias("xv"),
-        F.size(F.array_distinct(F.split(F.col("text"), " ")))
+        F.size(F.array_distinct(words()))
         .cast("bigint")
         .alias("yv"),
     )

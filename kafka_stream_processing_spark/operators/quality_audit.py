@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -913,7 +914,7 @@ def quality_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(dim(d, "lang", F.col("lang")))
         .unionByName(
             dim(
-                d.select(F.explode(F.split("text", " ")).alias("w")),
+                d.select(F.explode(words()).alias("w")),
                 "word",
                 F.col("w"),
             )
@@ -1523,7 +1524,7 @@ def quality_jackknife_source_variance(
     d = table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_i"),
-        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("s_i"),
+        F.sum(F.size(words())).cast("bigint").alias("s_i"),
     )
     tot = per.agg(
         F.count(F.lit(1)).cast("bigint").alias("g"),

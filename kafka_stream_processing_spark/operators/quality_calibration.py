@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -225,7 +226,7 @@ def _long_doc() -> Column:
     """The length classifier's outcome: 1 for a document of more than
     ISO_TOKEN_THRESHOLD whitespace tokens, else 0 (the oracles' CASE)."""
     return F.when(
-        F.size(F.split("text", " ")) > ISO_TOKEN_THRESHOLD, F.lit(1)
+        F.size(words()) > ISO_TOKEN_THRESHOLD, F.lit(1)
     ).otherwise(F.lit(0))
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import _word_counts
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -181,7 +182,9 @@ def quality_chi2_categorical_drift(
     source/language/format mix shift — the drifts a KS on a single
     numeric column cannot see."""
     d = table(spark, sf_dir, "documents")
-    is_a = (F.col("source") == "src0").cast("bigint")
+    # when/otherwise, not a cast: a NULL source counts with the rest, as
+    # in the oracle's CASE WHEN (a cast would drop it from both sides).
+    is_a = F.when(F.col("source") == "src0", 1).otherwise(0)
     cells = d.select(F.col("lang").alias("cat"), is_a.alias("is_a")).groupBy(
         "cat"
     ).agg(
@@ -312,8 +315,7 @@ def quality_js_divergence_sources(
     This is what makes the docstring's "costs less than one corpus
     scan" claim actually true."""
     d = table(spark, sf_dir, "documents")
-    occ = d.select("source", F.explode(F.split("text", " ")).alias("w"))
-    cnt = occ.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
+    cnt = _word_counts(d, "source")
     tot = cnt.groupBy("source").agg(F.sum("c").alias("n"))
     ln2 = F.log(F.lit(2.0))
     p = cnt.join(tot, "source").select(

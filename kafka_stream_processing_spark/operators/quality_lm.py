@@ -15,6 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.dedup import hash64
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _gram_rows,
+    _word_counts,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -65,11 +71,10 @@ def quality_model_score_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipelines run the cheap linear filter BEFORE any pairwise
     dedup.  Integer arithmetic keeps the keep/drop frontier bit-exact
     across engines (no float dot-product drift)."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.split(F.lower(F.col("text")), " ")
+    t = words(F.lower(F.col("text")))
     weight = lambda w: (  # noqa: E731
         (hash64(w) % MODEL_BUCKETS) * _WEIGHT_MULT % 2001 - 1000
     )
@@ -140,11 +145,10 @@ def quality_ccnet_perplexity_buckets(
     pipelines do.  State per language is a counter, not a buffer."""
     from pyspark.sql import Window
 
-    from kafka_stream_processing_spark.operators.dedup import hash64
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.split(F.lower(F.col("text")), " ")
+    t = words(F.lower(F.col("text")))
     loss = lambda w: (  # noqa: E731
         (hash64(F.concat(w, F.lit("p"))) % MODEL_BUCKETS) * _WEIGHT_MULT % 2001
     )
@@ -223,15 +227,12 @@ def quality_unigram_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences, then ONE groupBy(doc_id).  Bodies never shuffle; if
     vocab ever outgrows broadcast, the join keys are already word-hashed
     and skew-free."""
-    from kafka_stream_processing_spark.operators.dedup import hash64  # noqa: F401
     from kafka_stream_processing_spark.sources.tables import fanout
     from pyspark.sql import Window
 
     d = fanout(table(spark, sf_dir, "documents"))
-    occ = d.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-    )
-    vocab = occ.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    doc_occ = _word_counts(d, "doc_id", "lang", count="k")
+    vocab = doc_occ.groupBy("w").agg(F.sum("k").alias("c"))
     lm = vocab.select(
         "w",
         F.round(
@@ -243,9 +244,6 @@ def quality_unigram_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("decimal(18,6)")
         .alias("surp"),
-    )
-    doc_occ = occ.groupBy("doc_id", "lang", "w").agg(
-        F.count(F.lit(1)).alias("k")
     )
     return (
         doc_occ.join(F.broadcast(lm), "w")
@@ -273,7 +271,7 @@ LM_BOS = "<s>"
 
 #: Shared oracle CTEs: BOS-prefixed bigram occurrences (doc_id, lang,
 #: w1, w2) — the single source both bigram LMs build on (interpolated
-#: and Kneser-Ney), mirrored Spark-side by ``_bos_bigrams``.
+#: and Kneser-Ney), mirrored Spark-side by ``_gram_rows(..., bos=LM_BOS)``.
 _BI_CTES = f"""toks AS (
         SELECT doc_id, lang,
                list_prepend('{LM_BOS}', string_split(text, ' ')) AS t
@@ -283,25 +281,6 @@ _BI_CTES = f"""toks AS (
         SELECT doc_id, lang, t[k] AS w1, t[k + 1] AS w2
         FROM toks, LATERAL unnest(generate_series(1, len(t) - 1)) u(k)
     )"""
-
-
-def _bos_bigrams(d: DataFrame) -> DataFrame:
-    """BOS-prefixed bigram occurrences (doc_id, lang, w1, w2) — the
-    Spark mirror of ``_BI_CTES``."""
-    t = F.concat(F.array(F.lit(LM_BOS)), F.split("text", " "))
-    toks = d.select("doc_id", "lang", t.alias("t"))
-    return toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.arrays_zip(
-                F.slice("t", 1, F.size("t") - 1).alias("w1"),
-                F.slice("t", 2, F.size("t") - 1).alias("w2"),
-            )
-        ).alias("p"),
-    ).select(
-        "doc_id", "lang", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
-    )
 
 
 @register(
@@ -371,7 +350,7 @@ def quality_bigram_lm_interpolated(
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    pairs = _bos_bigrams(d)
+    pairs = _gram_rows(d, 2, "doc_id", "lang", bos=LM_BOS)
     uni = pairs.groupBy(F.col("w2").alias("w")).agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -478,14 +457,14 @@ def quality_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the exact per-doc sum — the shared LM convention.
 
     Scale: identical dataflow to the interpolated model (one BOS-bigram
-    kernel, _bos_bigrams, shared verbatim): two training groupBys plus
+    kernel, _gram_rows, shared verbatim): two training groupBys plus
     one distinct-context groupBy, a shuffle join of per-doc DISTINCT
     bigrams against the O(distinct bigrams) LM table, ONE
     groupBy(doc_id).  Bodies never shuffle."""
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    pairs = _bos_bigrams(d)
+    pairs = _gram_rows(d, 2, "doc_id", "lang", bos=LM_BOS)
     cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     ctx = cb.groupBy("w1").agg(
         F.sum("c").alias("total"), F.count(F.lit(1)).alias("n1fwd")
@@ -627,28 +606,7 @@ def quality_trigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.concat(
-        F.array(F.lit(LM_BOS), F.lit(LM_BOS)), F.split("text", " ")
-    )
-    toks = d.select("doc_id", "lang", t.alias("t"))
-    n = F.size("t")
-    tri = toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.arrays_zip(
-                F.slice("t", 1, n - 2).alias("w1"),
-                F.slice("t", 2, n - 2).alias("w2"),
-                F.slice("t", 3, n - 2).alias("w3"),
-            )
-        ).alias("p"),
-    ).select(
-        "doc_id",
-        "lang",
-        F.col("p.w1").alias("w1"),
-        F.col("p.w2").alias("w2"),
-        F.col("p.w3").alias("w3"),
-    )
+    tri = _gram_rows(d, 3, "doc_id", "lang", bos=LM_BOS)
     c3 = tri.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
     ctx3 = c3.groupBy("w1", "w2").agg(
         F.sum("c3").alias("t3"), F.count(F.lit(1)).alias("n13")
@@ -797,31 +755,7 @@ def quality_fourgram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
-    t = F.concat(
-        F.array(F.lit(LM_BOS), F.lit(LM_BOS), F.lit(LM_BOS)),
-        F.split("text", " "),
-    )
-    toks = d.select("doc_id", "lang", t.alias("t"))
-    n = F.size("t")
-    quad = toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.arrays_zip(
-                F.slice("t", 1, n - 3).alias("w1"),
-                F.slice("t", 2, n - 3).alias("w2"),
-                F.slice("t", 3, n - 3).alias("w3"),
-                F.slice("t", 4, n - 3).alias("w4"),
-            )
-        ).alias("p"),
-    ).select(
-        "doc_id",
-        "lang",
-        F.col("p.w1").alias("w1"),
-        F.col("p.w2").alias("w2"),
-        F.col("p.w3").alias("w3"),
-        F.col("p.w4").alias("w4"),
-    )
+    quad = _gram_rows(d, 4, "doc_id", "lang", bos=LM_BOS)
     c4 = quad.groupBy("w1", "w2", "w3", "w4").agg(
         F.count(F.lit(1)).alias("c4")
     )
@@ -936,14 +870,14 @@ def quality_oov_rate_by_source(
     d = table(spark, sf_dir, "documents")
     vocab = (
         d.filter(F.col("source") == "src0")
-        .select(F.explode(F.split("text", " ")).alias("w"))
+        .select(F.explode(words()).alias("w"))
         .distinct()
         .withColumn("in_vocab", F.lit(True))
     )
-    words = d.filter(F.col("source") != "src0").select(
-        "source", F.explode(F.split("text", " ")).alias("w")
+    occ = d.filter(F.col("source") != "src0").select(
+        "source", F.explode(words()).alias("w")
     )
-    flagged = words.join(F.broadcast(vocab), "w", "left").select(
+    flagged = occ.join(F.broadcast(vocab), "w", "left").select(
         "source", "w", F.col("in_vocab").isNull().alias("oov")
     )
     return flagged.groupBy("source").agg(
@@ -1077,20 +1011,17 @@ def quality_lm_train_heldout_gap(
     k·surp accumulations over (side, word) counts, and the three
     output doubles divide/subtract identical operands on both engines.
 
-    Scale: exactly the unigram LM's plan — ONE train-side
-    groupBy(word) (Heaps-sublinear vocab, broadcastable), scoring
-    joins on (side, word) COUNTS, never raw occurrences; the split
-    predicate is a pushed-down integer filter, no shuffle added."""
-    from pyspark.sql import Window
-
+    Scale: exactly the unigram LM's plan — ONE groupBy(side, word)
+    whose train side is the vocab (Heaps-sublinear, broadcastable);
+    scoring joins on (side, word) COUNTS, never raw occurrences; the
+    split is an integer column, no shuffle added."""
     d = table(spark, sf_dir, "documents")
     held = (F.col("doc_id") % HELDOUT_MOD == 0).cast("int")
-    occ = d.select(
-        held.alias("held"),
-        F.explode(F.split("text", " ")).alias("w"),
+    wcnt = _word_counts(
+        d.select(held.alias("held"), "text"), "held", count="k"
     )
-    vocab = occ.filter(F.col("held") == 0).groupBy("w").agg(
-        F.count(F.lit(1)).alias("c")
+    vocab = wcnt.filter(F.col("held") == 0).select(
+        "w", F.col("k").alias("c")
     )
     consts = vocab.agg(
         F.sum("c").cast("bigint").alias("n_tok"),
@@ -1118,9 +1049,6 @@ def quality_lm_train_heldout_gap(
         )
         .cast("decimal(18,6)")
         .alias("unk_surp")
-    )
-    wcnt = occ.groupBy("held", "w").agg(
-        F.count(F.lit(1)).alias("k")
     )
     scored = (
         wcnt.join(F.broadcast(lm), "w", "left")

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
 from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -2591,8 +2592,8 @@ def quality_kendall_w_concordance(
     d = fanout(table(spark, sf_dir, "documents")).select(
         "doc_id",
         F.length("text").alias("v1"),
-        F.size(F.split(F.col("text"), " ")).alias("v2"),
-        F.size(F.array_distinct(F.split(F.col("text"), " "))).alias(
+        F.size(words()).alias("v2"),
+        F.size(F.array_distinct(words())).alias(
             "v3"
         ),
     )

@@ -44,6 +44,7 @@ from kafka_stream_processing_spark.operators.similarity import (
     _top_k,
     cosine_exact,
 )
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -157,10 +158,10 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     d = fanout(table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
-        F.size(F.split("text", " ")).alias("dl"),
-        F.explode(F.split("text", " ")).alias("term"),
+        F.size(words()).alias("dl"),
+        F.explode(words()).alias("term"),
     )
-    stats = d.select(F.size(F.split("text", " ")).alias("dl")).agg(
+    stats = d.select(F.size(words()).alias("dl")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
@@ -408,7 +409,7 @@ def _ql_scored(
     stream, and the in-vocab query-term frame (query_id, term, mu_pc)."""
     toks, _ = _doc_tokens(spark, sf_dir)
     d = fanout(table(spark, sf_dir, "documents"))
-    ctot = d.select(F.size(F.split("text", " ")).alias("dl")).agg(
+    ctot = d.select(F.size(words()).alias("dl")).agg(
         F.sum("dl").cast("bigint").alias("c")
     )
     qarr = F.array(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import table
 
@@ -198,7 +199,7 @@ def array_word_explode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency).  Scale: explode is pipelined (no shuffle until the agg)."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+        d.select("doc_id", F.explode(words()).alias("word"))
         .filter(F.length("word") >= 4)
         .groupBy("word")
         .agg(
@@ -223,7 +224,7 @@ def array_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions: size, filter, transform+aggregate,
     distinct+sort+join — all JVM-side lambda expressions, no UDFs."""
     d = table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = words()
     return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -234,7 +235,7 @@ def array_higher_order_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         ).alias("total_chars"),
         F.array_join(
-            F.array_sort(F.array_distinct(F.split(F.substring("text", 1, 40), " "))),
+            F.array_sort(F.array_distinct(words(F.substring("text", 1, 40)))),
             ",",
         ).alias("head_vocab"),
     )

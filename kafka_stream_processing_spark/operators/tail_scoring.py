@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
 from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -769,7 +770,7 @@ def quality_conformal_coverage_audit(
         "doc_id",
         (hash64(F.col("doc_id").cast("string")) % 100).alias("bucket"),
         F.col("n_chars").cast("bigint").alias("x"),
-        F.size(F.split("text", " ")).cast("bigint").alias("y"),
+        F.size(words()).cast("bigint").alias("y"),
     )
     tr = feat.filter(F.col("bucket") < CONFORMAL_CAL_LO).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

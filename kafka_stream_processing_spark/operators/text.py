@@ -12,6 +12,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.dedup import hash64
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _gram_rows,
+    _word_counts,
+    _word_grams,
+    split_words,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -26,10 +34,6 @@ _LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
-
-
-def _tokens(col: str = "text") -> Column:
-    return F.split(col, " ")
 
 
 @register(
@@ -52,7 +56,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, unique tokens, a BPE-ish regex
     tokenizer (letter-runs / digit-runs / single punctuation)."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = _tokens()
+    toks = words()
     return d.select(
         "doc_id",
         "lang",
@@ -100,7 +104,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality scoring (Gopher-rules style): length band,
     stopword density, punctuation density → integer score 0..3."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = _tokens()
+    toks = words()
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     feats = d.select(
         "doc_id",
@@ -171,7 +175,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     order for ties; 'und' when no marker hits).  A real pipeline swaps the
     marker lists for character-n-gram profiles — same plan shape."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = _tokens()
+    toks = words()
 
     def score(markers: tuple[str, ...]) -> Column:
         arr = F.array(*[F.lit(w) for w in markers])
@@ -230,14 +234,13 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text",),
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TF-IDF with top-3 terms per document.  Scale: tf and df are two
-    aggregations over the exploded token stream; df (vocabulary-sized) is
-    broadcast back; ln() output rounded to 6 decimals for cross-libm
-    determinism."""
+    """TF-IDF with top-3 terms per document.  Scale: tf is the (doc,
+    term) count of the exploded token stream and df counts its rows per
+    term; df (vocabulary-sized) is broadcast back; ln() output rounded
+    to 6 decimals for cross-libm determinism."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", F.explode(_tokens()).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df = toks.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    tf = _word_counts(d, "doc_id", word="term", count="tf")
+    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = d.count()  # scalar; at scale supply from catalog stats
     scored = (
         tf.join(F.broadcast(df), "term")
@@ -275,7 +278,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct tokens → md5, robust to token order) plus the exact-text hash.
     Both engines md5 identical UTF-8 bytes → identical hex."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = _tokens()
+    toks = words()
     return d.select(
         "doc_id",
         F.md5(
@@ -317,19 +320,8 @@ def text_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = fanout(table(spark, sf_dir, "documents"))
     # Pre-project the split once: Generate is not codegen'd, so an
     # inlined split(text) re-tokenizes per textual occurrence (~4x here).
-    toks = F.col("words")
-    bigrams = d.select(F.split("text", " ").alias("words")).select(
-        F.explode(
-            F.when(
-                F.size(toks) >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("bigram")
+    bigrams = split_words(d).select(
+        F.explode(_word_grams(F.col("words"), 2)).alias("bigram")
     )
     return (
         bigrams.groupBy("bigram")
@@ -399,22 +391,17 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the ~O(2n/w) selected hashes, never the raw grams.  Complements
     dedup_minhash_lsh: minhash bounds the SET-level signature, winnowing
     preserves LOCALITY (which passage matched)."""
-    from kafka_stream_processing_spark.operators.corpus import _word_grams_all
-    from kafka_stream_processing_spark.operators.dedup import hash64
-
     d = fanout(table(spark, sf_dir, "documents"))
-    h = F.transform(_word_grams_all(F.col("words")), hash64)
+    h = F.transform(_word_grams(F.col("words")), hash64)
     # Filter on the RAW word count, not size(h): a predicate on the
     # computed column would inline the whole md5+transform chain and
     # Catalyst pushes filters below the fanout exchange — the heavy
     # expression would then run single-threaded in the scan task AND
     # again in the parallel project (measured 3.7 s of the sf0.1 wall).
     # n_grams = words - 2, so size(h) >= W  <=>  words >= W + 2.
-    grams = d.filter(
-        F.size(F.split("text", " ")) >= _WINNOW_W + 2
-    ).select("doc_id", F.split("text", " ").alias("words")).select(
-        "doc_id", h.alias("h")
-    )
+    grams = split_words(
+        d.filter(F.size(words()) >= _WINNOW_W + 2), "doc_id"
+    ).select("doc_id", h.alias("h"))
     # Sliding-window minimum by log-doubling (sparse-table rows): level k
     # holds pairwise mins at stride 2^(k-1), so each level is one O(n)
     # transform of O(1) element_at lookups — no per-position
@@ -504,13 +491,12 @@ def hashed_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sparse hashed tf-idf vectors as (doc_id, bucket, v) rows —
     the Spark twin of _HASHED_VEC_CTES, shared by the embedding
     exporter below and the sparse-retrieval operator."""
-    from kafka_stream_processing_spark.operators.dedup import hash64
     from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok"),
+        F.explode(words(F.lower(F.col("text")))).alias("tok"),
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -792,7 +778,7 @@ def text_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("decile"),
     )
     occ = deciled.select(
-        "decile", F.explode(F.split("text", " ")).alias("w")
+        "decile", F.explode(words()).alias("w")
     )
     tokens_per = occ.groupBy("decile").agg(F.count(F.lit(1)).alias("toks"))
     first_seen = occ.groupBy("w").agg(F.min("decile").alias("decile"))
@@ -875,12 +861,7 @@ def text_zipf_rank_frequency(
     single-window form stays available as ``rank_mode="exact"``."""
     from pyspark.sql import Window
 
-    d = table(spark, sf_dir, "documents")
-    cnt = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cnt = _word_counts(table(spark, sf_dir, "documents"))
     if rank_mode == "distributed":
         from kafka_stream_processing_spark.operators.frontier import (
             global_rank,
@@ -980,22 +961,7 @@ def text_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     margins, doc totals); no cross-document state whatsoever, so the
     operator is embarrassingly parallel at any corpus size."""
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = F.split("text", " ")
-    n_col = F.size("t")
-    bi = (
-        d.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.arrays_zip(
-                    F.slice("t", 1, n_col - 1).alias("w1"),
-                    F.slice("t", 2, n_col - 1).alias("w2"),
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    )
+    bi = _gram_rows(d, 2, "doc_id")
     c12 = bi.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     c1 = c12.groupBy("doc_id", "w1").agg(F.sum("c").alias("c1"))
     n = c12.groupBy("doc_id").agg(F.sum("c").alias("n"))
@@ -1105,14 +1071,14 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = table(spark, sf_dir, "documents")
-    words = d.select(
+    occ = d.select(
         "doc_id",
-        F.posexplode(F.split("text", " ")).alias("ord", "w"),
+        F.posexplode(words()).alias("ord", "w"),
     ).withColumn(
         "st", F.when(F.col("w").isin(*RAKE_STOPWORDS), 1).otherwise(0)
     )
     w_run = Window.partitionBy("doc_id").orderBy("ord")
-    marked = words.withColumn("pid", F.sum("st").over(w_run))
+    marked = occ.withColumn("pid", F.sum("st").over(w_run))
     phr = (
         marked.filter(F.col("st") == 0)
         .groupBy("doc_id", "pid")
@@ -1130,7 +1096,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wocc = phr.select(
-        "n_words", F.explode(F.split("phrase", " ")).alias("w")
+        "n_words", F.explode(words("phrase")).alias("w")
     )
     wscore = wocc.groupBy("w").agg(
         F.round(
@@ -1147,7 +1113,7 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             "phrase",
             "n_words",
             "n_occurrences",
-            F.explode(F.split("phrase", " ")).alias("w"),
+            F.explode(words("phrase")).alias("w"),
         )
         .join(F.broadcast(wscore), "w")
         .groupBy("phrase", "n_words", "n_occurrences")
@@ -1316,11 +1282,11 @@ def text_word_burstiness(
     kernel's shape) then a vocab-sized moment pass; the top-k never
     sorts the vocab globally — TakeOrderedAndProject keeps k rows per
     partition."""
-    toks = fanout(table(spark, sf_dir, "documents")).select(
-        "doc_id", F.explode(_tokens()).alias("word")
-    )
-    per_doc = toks.groupBy("word", "doc_id").agg(
-        F.count(F.lit(1)).alias("k")
+    per_doc = _word_counts(
+        fanout(table(spark, sf_dir, "documents")),
+        "doc_id",
+        word="word",
+        count="k",
     )
     nd = fanout(table(spark, sf_dir, "documents")).agg(
         F.count(F.lit(1)).alias("nd")
@@ -1415,34 +1381,10 @@ def text_bigram_pmi_collocations(
     Products overflow exact-double range only past ~10¹⁵ tokens —
     switch the rational to DECIMAL(38,0) there."""
     d = fanout(table(spark, sf_dir, "documents"))
-    words = d.select(F.split("text", " ").alias("words"))
-    toks = F.col("words")
-    uni = (
-        words.select(F.explode(toks).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    uni = _word_counts(d, word="word")
     nu = uni.agg(F.sum("c").alias("nu"))
     bi = (
-        words.select(
-            F.explode(
-                F.when(
-                    F.size(toks) >= 2,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(toks) - 1),
-                        lambda i: F.struct(
-                            F.element_at(toks, i).alias("w1"),
-                            F.element_at(toks, i + 1).alias("w2"),
-                        ),
-                    ),
-                ).otherwise(
-                    F.array().cast(
-                        "array<struct<w1:string,w2:string>>"
-                    )
-                )
-            ).alias("bg")
-        )
-        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        _gram_rows(d, 2)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
     )
@@ -1541,7 +1483,7 @@ def text_keyness_loglikelihood(
     vocab-sized); totals broadcast; TakeOrderedAndProject top-k —
     never a global vocab sort."""
     toks = fanout(table(spark, sf_dir, "documents")).select(
-        "source", F.explode(_tokens()).alias("word")
+        "source", F.explode(words()).alias("word")
     )
     is_t = (F.col("source") == "src0").cast("bigint")
     counts = toks.groupBy("word").agg(
@@ -1644,10 +1586,7 @@ def text_yule_k_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one word-count groupBy (map-side combined) → a
     count-of-counts table bounded by max frequency — the corpus
     never reappears after the first shuffle."""
-    words = table(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("w")
-    )
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("m"))
+    wc = _word_counts(table(spark, sf_dir, "documents"), count="m")
     coc = wc.groupBy("m").agg(F.count(F.lit(1)).alias("vm"))
     agg = coc.agg(
         F.sum(F.col("m") * F.col("vm")).alias("n_tokens"),
@@ -1720,10 +1659,7 @@ def text_vocab_coverage_spectrum(
     its few hundred rows — the corpus never reappears.  The
     descending cumulative window runs over the frequency DOMAIN, not
     the vocabulary, so no vocab-scale total-order sort exists."""
-    words = table(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("w")
-    )
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("m"))
+    wc = _word_counts(table(spark, sf_dir, "documents"), count="m")
     coc = wc.groupBy("m").agg(F.count(F.lit(1)).alias("vm"))
     tot = coc.agg(F.sum(F.col("m") * F.col("vm")).alias("n"))
     from pyspark.sql import Window
@@ -2149,12 +2085,7 @@ def text_source_vocab_overlap(
     broadcastable; the corpus is scanned exactly once."""
     from pyspark.sql import Window
 
-    toks = table(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split("text", " ")).alias("w")
-    )
-    counts = toks.groupBy("source", "w").agg(
-        F.count(F.lit(1)).alias("c")
-    )
+    counts = _word_counts(table(spark, sf_dir, "documents"), "source")
     w_top = Window.partitionBy("source").orderBy(F.desc("c"), "w")
     tops = (
         counts.withColumn("rn", F.row_number().over(w_top))
@@ -2216,19 +2147,13 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     by the batch gate below AND stream_repetition_monitor, so the two
     evaluate ONE construction (the shared-kernel discipline the filter
     monitors follow)."""
-    from kafka_stream_processing_spark.operators.corpus import (
-        _word_grams_all,
-    )
-
-    toks = docs.select(
-        "doc_id", F.split(F.col("text"), " ").alias("t")
-    )
+    toks = docs.select("doc_id", words().alias("t"))
     base = toks.select(
         "doc_id", F.size("t").cast("bigint").alias("n_tokens")
     )
     bi = (
         toks.select(
-            "doc_id", F.explode(_word_grams_all(F.col("t"), 2)).alias("g")
+            "doc_id", F.explode(_word_grams(F.col("t"), 2)).alias("g")
         )
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2237,7 +2162,7 @@ def repetition_metrics(docs: DataFrame) -> DataFrame:
     )
     tri = (
         toks.select(
-            "doc_id", F.explode(_word_grams_all(F.col("t"), 3)).alias("g")
+            "doc_id", F.explode(_word_grams(F.col("t"), 3)).alias("g")
         )
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2464,8 +2389,8 @@ def text_sttr_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = fanout(table(spark, sf_dir, "documents")).select(
         "doc_id",
-        F.split("text", " ").alias("toks"),
-        F.size(F.split("text", " ")).cast("bigint").alias("size"),
+        words().alias("toks"),
+        F.size(words()).cast("bigint").alias("size"),
     )
     offs = distributed_prefix_sum(d.select("doc_id", "size"))
     tot = d.agg(F.sum("size").cast("bigint").alias("t"))

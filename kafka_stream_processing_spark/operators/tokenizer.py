@@ -29,6 +29,10 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _word_counts,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
 
@@ -58,7 +62,7 @@ def bpe_unit_count(w: Column) -> Column:
     s = F.trim(F.regexp_replace(w, "(.)", "$1 "))
     for a, b in BPE_MERGES:
         s = F.replace(s, F.lit(f"{a} {b}"), F.lit(a + b))
-    return F.size(F.split(s, " "))
+    return F.size(words(s))
 
 
 def _bpe_units_sql(var: str) -> str:
@@ -134,7 +138,7 @@ def corpus_bpe_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         bpe_token_count("text").alias("n_bpe"),
-        F.size(F.split("text", " ")).alias("n_ws"),
+        F.size(words()).alias("n_ws"),
     )
     w = (
         Window.partitionBy("lang")
@@ -203,7 +207,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted = d.select(
         "lang",
         bpe_token_count("text").alias("n_bpe"),
-        F.size(F.split("text", " ")).alias("n_ws"),
+        F.size(words()).alias("n_ws"),
         F.length("text").alias("n_chars"),
     )
     return counted.groupBy("lang").agg(
@@ -405,21 +409,19 @@ def tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401
 
     d = fanout(table(spark, sf_dir, "documents"))
-    toks = d.select(F.explode(F.split("text", " ")).alias("word"))
-    words = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
+    vocab = (
+        _word_counts(d, word="word", count="freq")
         .filter(
             (F.length("word") >= 1)
             & (F.length("word") <= UNIGRAM_WORD_MAX_LEN)
         )
         .withColumn("L", F.length("word"))
     )
-    subs1 = words.select(
+    subs1 = vocab.select(
         F.explode(F.expr("sequence(1, L)")).alias("i"), "word", "freq"
     ).select(F.expr("substring(word, i, 1)").alias("piece"), "freq")
     subs2 = (
-        words.filter(F.col("L") >= 2)
+        vocab.filter(F.col("L") >= 2)
         .select(
             F.explode(F.expr("sequence(1, L - 1)")).alias("i"),
             "word",
@@ -472,7 +474,7 @@ def tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     newcnt = (
-        words.select("word", "freq")
+        vocab.select("word", "freq")
         .mapInPandas(_segment, "piece string, wcnt long")
         .groupBy("piece")
         .agg(F.sum("wcnt").cast("bigint").alias("cnt"))

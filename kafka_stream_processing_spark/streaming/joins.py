@@ -29,6 +29,12 @@ from kafka_stream_processing_spark.operators.text import (
     TOP_BIGRAM_FRAC_MAX,
 )
 from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.word_kernel import (
+    _word_counts,
+    _word_grams,
+    split_words,
+    words,
+)
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import normalize_events
 from kafka_stream_processing_spark.streaming.unique_users import (
@@ -524,17 +530,20 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason when the bench set (a few MB for any real eval suite) fits in
     a broadcast; this is the decontamination gate a streaming ingest
     pipeline bolts between crawl and corpus-commit."""
-    from kafka_stream_processing_spark.operators.dedup import _word_shingles
     from kafka_stream_processing_spark.sources.tables import table
 
     # persist(): the static side of a stream-static join re-plans every
     # micro-batch — uncached, the bench-set collect_set would re-run
     # once per trigger instead of materializing "ONE broadcast row".
     bench_row = (
-        table(spark, sf_dir, "documents")
-        .filter(F.col("source") == "src0")
-        .select(F.split("text", " ").alias("words"))
-        .select(F.explode(_word_shingles(F.col("words"))).alias("sh"))
+        split_words(
+            table(spark, sf_dir, "documents").filter(F.col("source") == "src0")
+        )
+        .select(
+            F.explode(F.array_distinct(_word_grams(F.col("words")))).alias(
+                "sh"
+            )
+        )
         .agg(F.collect_set("sh").alias("bench_set"))
         .persist()
     )
@@ -547,11 +556,13 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateless shuffle is append-safe).  Measured at sf0.1: 16.4 s ->
     # ~2 s end-to-end for the 3-trigger run.
     stream = (
-        file_stream(spark, path)
-        .repartition(default_parallelism())
-        .select("doc_id", F.split("text", " ").alias("words"))
+        split_words(
+            file_stream(spark, path).repartition(default_parallelism()),
+            "doc_id",
+        )
         .select(
-            "doc_id", _word_shingles(F.col("words")).alias("sh_arr")
+            "doc_id",
+            F.array_distinct(_word_grams(F.col("words"))).alias("sh_arr"),
         )
         .crossJoin(F.broadcast(bench_row))
         .select(
@@ -626,11 +637,7 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    occ = (
-        table(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("w"))
-    )
-    vocab = occ.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    vocab = _word_counts(table(spark, sf_dir, "documents"))
     surp = F.round(
         -F.log(
             F.col("c").cast("double") / F.sum("c").over(Window.partitionBy())
@@ -649,7 +656,7 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     path = _stream_train_docs_source_dir(sf_dir)
-    toks = F.split("text", " ")
+    toks = words()
     # OOV convention: a word missing from the deployed LM artifact makes
     # element_at return NULL — NULLs are FILTERED (not folded, which
     # would silently null the whole document's score), counted into
@@ -1600,21 +1607,8 @@ def stream_good_turing_novelty(
 
     def apply_batch(batch_df) -> None:
         s = batch_df.sparkSession
-        toks = F.split("text", " ")
-        grams = F.when(
-            F.size(toks) >= 3,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 2),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at(toks, i),
-                    F.element_at(toks, i + 1),
-                    F.element_at(toks, i + 2),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
         bc = (
-            batch_df.select(F.explode(grams).alias("w"))
+            batch_df.select(F.explode(_word_grams(words(), 3)).alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("c"))
             .localCheckpoint(eager=True)

@@ -716,9 +716,9 @@ def test_kendall_w_windows_are_histogram_sized(spark, sf_small):
 
 def test_shingle_pipelines_split_text_once(spark, sf_small):
     """r14 optimization pin: the whitespace split feeding shingle/gram
-    builders is projected ONCE (dedup.split_words) before the explode.
-    Generate and interpreted higher-order lambdas are not subexpression-
-    eliminated, so an inline F.split("text") inside _word_shingles is
+    builders is projected ONCE (word_kernel.split_words) before the
+    explode.  Generate and interpreted higher-order lambdas are not
+    subexpression-eliminated, so an inline split inside _word_grams is
     re-tokenized for each of its ~5 textual occurrences per row
     (measured: minhash signature stage 1.71 s → 1.16 s at sf0.1; the
     winnowing gram projection 2.12 s → 1.42 s).  Pin: each kernel's

@@ -141,3 +141,38 @@ def test_mann_whitney_and_fdr_share_z(spark, sf_small):
     }
     assert len(single) == 19
     assert single == battery
+
+
+def test_null_source_counts_with_the_rest(spark, sf_small, tmp_path):
+    """A document with a NULL source: chi-squared counts it with the
+    rest, as the oracle's CASE WHEN does; keyness and DSIR count it on
+    neither side, as their oracles' ``source <> 'src0'`` does."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.oracle_util import run_differential
+
+    src = pathlib.Path(sf_small)
+    for f in src.glob("*.parquet"):
+        shutil.copy(f, tmp_path / f.name)
+    docs = pq.read_table(src / "documents.parquet")
+    i = docs.schema.get_field_index("source")
+    sources = docs.column("source").to_pylist()
+    sources[0] = None
+    docs = docs.set_column(
+        i, docs.schema.field(i), pa.array(sources, pa.string())
+    )
+    (tmp_path / "documents.parquet").chmod(0o644)
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    for name in (
+        "quality_chi2_categorical_drift",
+        "text_keyness_loglikelihood",
+        "sample_dsir_importance",
+    ):
+        spec = SPECS[name]
+        problems = run_differential(
+            spark, str(tmp_path), name, spec.fn, spec.oracle
+        )
+        assert not problems, problems

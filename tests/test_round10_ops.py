@@ -222,8 +222,8 @@ def test_ngram_novelty_conservation_and_decay(spark, sf_small):
     its first doc's bucket), docs partition the corpus, rates live in
     [0,1], and the curve decays front-to-back on the fixture (later
     slices repeat earlier patterns)."""
-    from kafka_stream_processing_spark.operators.dedup import (
-        _word_shingles,
+    from kafka_stream_processing_spark.operators.word_kernel import (
+        _word_grams,
     )
     from kafka_stream_processing_spark.sources.tables import table
 
@@ -235,7 +235,9 @@ def test_ngram_novelty_conservation_and_decay(spark, sf_small):
     n_docs = d.count()
     n_distinct_shingles = (
         d.select(
-            F.explode(_word_shingles(F.split("text", " "))).alias("sh")
+            F.explode(
+                F.array_distinct(_word_grams(F.split("text", " ")))
+            ).alias("sh")
         )
         .select("sh")
         .distinct()

@@ -150,10 +150,12 @@ def test_winnowing_shared_run_guarantee(spark, sf_small):
         }
     # Recompute the full fingerprint sets for the two probe docs directly
     # (checksum equality is not set intersection, so recompute in Spark).
-    from kafka_stream_processing_spark.operators.corpus import _word_grams_all
     from kafka_stream_processing_spark.operators.dedup import hash64
+    from kafka_stream_processing_spark.operators.word_kernel import (
+        _word_grams,
+    )
 
-    h = F.transform(_word_grams_all(F.split("text", " ")), hash64)
+    h = F.transform(_word_grams(F.split("text", " ")), hash64)
     fps = probe.select(
         "doc_id",
         F.array_distinct(
