@@ -1600,8 +1600,6 @@ def dedup_minhash_estimate_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Run on a corpus sample, read the error distribution, then trust the
     sketch at full scale — the same extrapolation contract as the ANN
     recall sweep."""
-    from pyspark.sql import Window  # noqa: F401
-
     d = fanout(table(spark, sf_dir, "documents"))
     toks = split_words(d, "doc_id").select(
         "doc_id",

@@ -4886,8 +4886,6 @@ def window_ljung_box_residuals(
 
     Scale: calendar-sized residual table × {ACF_MAX_LAG} lags — the
     ACF cost class; per-key variants partition the lag join by key."""
-    from pyspark.sql import Window as _W
-
     daily = _events_daily(
         spark, sf_dir, dec_sum("value", "x"), epoch=True
     )

@@ -8,7 +8,11 @@ cluster-specific knobs (executor count/memory) live outside this file.
 from __future__ import annotations
 
 import os
+import weakref
+from urllib.parse import urlparse
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 #: Runtime-settable confs that query semantics/performance rely on.  These
@@ -55,14 +59,69 @@ RUNTIME_CONF: dict[str, str] = {
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+#: Spark's FileSystem-API checkpoint manager; Spark 4.1 moved it into the
+#: ``checkpointing`` package.
+_FS_CHECKPOINT_MANAGERS = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager",
+    "org.apache.spark.sql.execution.streaming."
+    "FileSystemBasedCheckpointFileManager",
+)
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+#: The confs :func:`local_checkpoint_conf` chose, decided once per
+#: SparkContext: the registry wrapper calls ensure_runtime_conf on every
+#: query, and the decision costs py4j round trips.
+_CONTEXT_CONF: weakref.WeakKeyDictionary[SparkContext, dict[str, str]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def local_checkpoint_conf(jvm, hadoop_conf) -> dict[str, str]:
+    """The checkpoint manager conf for a JVM whose default filesystem is
+    ``file://``; empty for any other default filesystem, or when no
+    FileSystem-based manager class loads.
+
+    Spark's default manager renames through Hadoop's FileContext, which
+    on ``file://`` stats both ends of the rename (and their ``.crc``)
+    with ``getFileLinkStatus``.  Without libhadoop that forks one
+    ``readlink`` process per call, about four per rename, and every
+    state-store delta, checkpoint checksum file and offset/commit log
+    entry is a rename.  The FileSystem-based manager renames with
+    ``java.io.File.renameTo`` after the same exists check; Hadoop's
+    ``.crc`` files and Spark's checkpoint checksums are kept.  A cluster
+    whose default filesystem is HDFS keeps the FileContext manager."""
+    if urlparse(hadoop_conf.get("fs.defaultFS") or "").scheme != "file":
+        return {}
+    loader = jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+    for name in _FS_CHECKPOINT_MANAGERS:
+        try:
+            jvm.java.lang.Class.forName(name, False, loader)
+        except Py4JJavaError:
+            continue
+        return {CHECKPOINT_MANAGER_KEY: name}
+    return {}
+
+
+def _context_conf(spark: SparkSession) -> dict[str, str]:
+    sc = spark.sparkContext
+    conf = _CONTEXT_CONF.get(sc)
+    if conf is None:
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        conf = _CONTEXT_CONF[sc] = local_checkpoint_conf(spark._jvm,
+                                                         hadoop_conf)
+    return conf
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply semantic + adaptive confs to an existing session, and put
-    the package root on the Python workers' PYTHONPATH (idempotent)."""
-    for key, value in RUNTIME_CONF.items():
+    """Apply semantic + adaptive confs and the local checkpoint manager
+    to an existing session, and put the package root on the Python
+    workers' PYTHONPATH (idempotent)."""
+    for key, value in {**RUNTIME_CONF, **_context_conf(spark)}.items():
         try:
             spark.conf.set(key, value)
         except Exception:  # pragma: no cover - conf may be static in some envs

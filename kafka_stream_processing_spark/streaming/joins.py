@@ -1608,7 +1608,8 @@ def stream_good_turing_novelty(
     def apply_batch(batch_df) -> None:
         s = batch_df.sparkSession
         bc = (
-            batch_df.select(F.explode(_word_grams(words(), 3)).alias("w"))
+            split_words(batch_df)
+            .select(F.explode(_word_grams(F.col("words"), 3)).alias("w"))
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("c"))
             .localCheckpoint(eager=True)
@@ -4275,7 +4276,6 @@ def stream_ams_f2_incremental(
     explode(16) + map-side-combined SUM.  Restart recovery is
     re-folding from the last persisted Z vector."""
     from kafka_stream_processing_spark.operators.corpus import (
-        AMS_R,
         ams_report,
         ams_z,
         cm_item_col,

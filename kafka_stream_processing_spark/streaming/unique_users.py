@@ -67,19 +67,26 @@ def scoped_state_partitions(spark: SparkSession):
     per-query sizing decision tied to key cardinality and throughput,
     independent of how batch shuffles are sized.  Locally the test
     streams carry O(10k) keys at most, and the HDFS-backed state store
-    pays a FIXED per-partition commit cost (delta-file write + fsync)
-    per stateful operator per trigger, so fewer partitions win until a
-    partition's state stops fitting comfortably: measured at sf0.1
-    (r09, 5 reps, median wall): chained window agg 1.47 s at 8 → 1.20 s
-    at 4 → 1.15 s at 2 (commitTimeMs scales ~linearly with partition
-    count while addBatch is flat); stream_unique_users 1.74 → 1.44 best
-    at 4; session windows 2.28 → 2.17.  Default is 4 — low enough to
-    cut the commit overhead, high enough that the largest local state
-    (~39k minute windows) still spreads ~10k keys/partition.  Earlier
-    steps of the same measurement: 32 → 8 took chained from 3.3 s to
-    1.7 s.  On a cluster, size UP per expected keys instead — same
-    knob, opposite direction.  Restores the session conf on exit;
-    serialized via _STATE_SCOPE_LOCK (see note above)."""
+    pays a FIXED per-partition commit cost per stateful operator per
+    trigger: each delta file and its checkpoint checksum file is
+    written to a temp file and renamed.  Under Spark's default
+    FileContext checkpoint manager, without libhadoop, every rename
+    also forked about four ``readlink`` processes.  On ``file://`` the
+    engine's sessions use the FileSystem-based manager instead
+    (``session.local_checkpoint_conf``), which drops the ``readlink``
+    forks; each file create still forks a ``chmod``.  So fewer
+    partitions still win until a partition's
+    state stops fitting comfortably.  Measured at sf0.1 (4 vCPUs, 5
+    reps interleaved across counts, median wall), FileSystem manager
+    (FileContext manager in brackets): chained window agg 1.06 s at 2
+    [1.59], 1.16 s at 4 [1.82], 1.49 s at 8 [2.31];
+    stream_unique_users_per_minute 1.55 s at 2 [1.85], 1.33 s at 4
+    [1.74], 1.59 s at 8 [1.94].  Default is 4 — best or near-best on
+    both, and high enough that the largest local state (~39k minute
+    windows) still spreads ~10k keys/partition.  On a cluster, size UP
+    per expected keys instead — same knob, opposite direction.
+    Restores the session conf on exit; serialized via
+    _STATE_SCOPE_LOCK (see note above)."""
     n = int(os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "4"))
     key = "spark.sql.shuffle.partitions"
     with _STATE_SCOPE_LOCK:

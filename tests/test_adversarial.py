@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.sources.kafka import (
     REFERENCE_EVENT_SCHEMA,
-    unique_users_topology,
 )
 
 

@@ -17,7 +17,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.streaming.eos_sink import (
     FileTransactionLog,

@@ -6,8 +6,6 @@ the systematic answer to the reference's crash-on-bad-record behavior
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 GOOD = '{"uid": "a", "ts": 1}'

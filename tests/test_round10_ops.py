@@ -868,8 +868,6 @@ def test_semdedup_salted_pair_stage_plan(spark, sf_small):
     df.collect()
     txt = df._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in txt
-    import re
-
     rep = [
         ln for ln in txt.splitlines()
         if "REPARTITION_BY_NUM" in ln and "salt" in ln

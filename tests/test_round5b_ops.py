@@ -5,7 +5,6 @@ score algebra, and the no-Python / no-cartesian plan shapes."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark import registry

@@ -10,7 +10,6 @@ import hashlib
 
 import duckdb
 import numpy as np
-from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark import registry
 from kafka_stream_processing_spark.operators.dedup import CDC_MASK
@@ -19,7 +18,6 @@ from kafka_stream_processing_spark.operators.pipeline import (
     DSIR_KEEP_DEN,
 )
 from kafka_stream_processing_spark.operators.similarity import (
-    HAMMING_SHORTLIST,
     HAMMING_TOPK,
     N_QUERIES,
 )

@@ -309,7 +309,7 @@ def test_stream_wasserstein_chunk_replay(spark, sf_small):
     """Per-chunk W1 vs the src0 reference, replayed with the
     sorted-sample breakpoint sweep over raw values."""
     import itertools
-    from collections import defaultdict
+
     import duckdb
 
     con = duckdb.connect()

@@ -11,8 +11,6 @@ from __future__ import annotations
 import itertools
 import os
 
-from pyspark.sql import functions as F
-
 _uniq = itertools.count()
 
 
