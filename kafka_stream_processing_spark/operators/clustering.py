@@ -32,11 +32,19 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.dedup import (
+    COSINE_DUP_THRESHOLD,
     FUZZY_EDIT_THRESHOLD,
     JACCARD_ORACLE,
+    _EMB_NORM_CTE,
+    _PAIR_COSINE_SQL,
+    dedup_fuzzy_blocked_names,
     dedup_ngram_jaccard,
 )
-from kafka_stream_processing_spark.operators.similarity import dist2_exact
+from kafka_stream_processing_spark.operators.similarity import (
+    _embeddings,
+    cosine_ge_two_tier,
+    dist2_exact,
+)
 from kafka_stream_processing_spark.registry import register
 
 MAX_ITERATIONS = 15
@@ -308,10 +316,6 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of corpus size.  Driver never sees a vector; iterations
     chain lazily (production would localCheckpoint per round like
     connected_components above)."""
-    from kafka_stream_processing_spark.operators.similarity import (
-        _embeddings,
-    )
-
     emb = _embeddings(spark, sf_dir).select("vec_id", "emb")
     cents0 = emb.filter(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("cluster_id"), F.col("emb").alias("cvec")
@@ -364,14 +368,6 @@ def _semdedup_cell_audit(
     at sf0.1 for any k in the sweep); a bare join+filter+count of the
     same pair stage planned as an interpreted SortMergeJoin condition
     and ran 15-60x slower (22-89 s)."""
-    from kafka_stream_processing_spark.operators.dedup import (
-        COSINE_DUP_THRESHOLD,
-    )
-    from kafka_stream_processing_spark.operators.similarity import (
-        _embeddings,
-        cosine_ge_two_tier,
-    )
-
     n = _embeddings(spark, sf_dir)
     cents = n.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("cluster_id"), F.col("emb").alias("cvec")
@@ -453,12 +449,6 @@ def _semdedup_oracle() -> str:
     """Assemble the SemDeDup oracle from dedup.py's shared norm/cosine SQL
     fragments and this module's _SEED_ASSIGN_CTES — single source of truth
     for both the decimal-cosine convention and the assignment frontier."""
-    from kafka_stream_processing_spark.operators.dedup import (
-        _EMB_NORM_CTE,
-        _PAIR_COSINE_SQL,
-        COSINE_DUP_THRESHOLD,
-    )
-
     return f"""{_EMB_NORM_CTE.format(extra="")},
     {_SEED_ASSIGN_CTES},
     m AS (
@@ -516,12 +506,6 @@ SEMDEDUP_K_SWEEP = (2, 4, 8, 16, 32)
 
 
 def _semdedup_k_sweep_oracle() -> str:
-    from kafka_stream_processing_spark.operators.dedup import (
-        _EMB_NORM_CTE,
-        _PAIR_COSINE_SQL,
-        COSINE_DUP_THRESHOLD,
-    )
-
     return f"""{_EMB_NORM_CTE.format(extra="")},
     ks AS (SELECT unnest(ARRAY{list(SEMDEDUP_K_SWEEP)}) AS k),
     d AS (
@@ -685,9 +669,6 @@ def dedup_entity_resolution_parts(
     left join of the part table against the component labels plus one
     window count per canonical key for the cluster size — bodies
     shuffle once."""
-    from kafka_stream_processing_spark.operators.dedup import (
-        dedup_fuzzy_blocked_names,
-    )
     from kafka_stream_processing_spark.sources.tables import table
 
     edges = dedup_fuzzy_blocked_names(spark, sf_dir).select("key_a", "key_b")

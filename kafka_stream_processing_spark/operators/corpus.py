@@ -862,8 +862,6 @@ def sketch_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query set: the 3 injected hot keys + 20 fixed cold ids (present or
     absent) — the same inject-then-exercise convention as
     sketch_heavy_hitters_mg, sharing its item mapping verbatim."""
-    from kafka_stream_processing_spark.sources.tables import table
-
     ev = table(spark, sf_dir, "events")
     items = ev.select(cm_item_col().alias("item"))
     return cm_report(spark, cm_cells(items), items)
@@ -1300,8 +1298,6 @@ def corpus_ngram_novelty_curve(
     the bucket id comes from a broadcast max-id crossJoin (the house
     incremental_daily_rollup pattern), NOT an ntile over a single
     global sort."""
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents"))
     sh = split_words(d, "doc_id").select(
         "doc_id",
@@ -1458,7 +1454,6 @@ def ams_report(
         .groupBy("g")
         .agg(F.sum("z2").cast("bigint").alias("gsum"))
     )
-    from pyspark.sql import Window
 
     ranked = groups.select(
         "gsum",
@@ -1746,7 +1741,6 @@ def sketch_ams_join_size_estimate(
         .groupBy("g")
         .agg(F.sum("p").cast("bigint").alias("gsum"))
     )
-    from pyspark.sql import Window
 
     ranked = groups.select(
         "gsum",

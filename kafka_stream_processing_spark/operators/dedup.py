@@ -9,13 +9,14 @@ its own — they would never agree).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.similarity import (
     _bucket_sql,
     _embeddings,
     cosine_exact,
+    cosine_ge_two_tier,
     lsh_bucket,
 )
 from kafka_stream_processing_spark.operators.word_kernel import (
@@ -130,8 +131,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the shingle join's cost is sum over shingles of df² — bounded
     by dropping stop-shingles with df > MAX_SHINGLE_DF.  Shuffles on
     shingle then on (doc_a, doc_b): both narrow keys."""
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents"))
     sh = (
         split_words(d, "doc_id")
@@ -854,9 +853,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set.  The two-tier filter rejects the ~all non-dup candidates on
     # the cheap float dot; the exact decimal cosine (the op's output
     # column) is computed only for survivors.
-    from kafka_stream_processing_spark.operators.similarity import (
-        cosine_ge_two_tier,
-    )
 
     salt_n = 32
     a = (
@@ -914,10 +910,6 @@ def dedup_embedding_cosine_allpairs(spark: SparkSession, sf_dir: str) -> DataFra
     """Exact all-pairs embedding near-dup — the small-n exactness oracle
     for the bucketed default above (recall baseline; O(n²), never the
     plan to run at 100 TB)."""
-    from kafka_stream_processing_spark.operators.similarity import (
-        cosine_ge_two_tier,
-    )
-
     n = _embeddings(spark, sf_dir)
     a, b = n.alias("a"), n.alias("b")
     cos = cosine_exact(
@@ -1073,7 +1065,6 @@ def dedup_exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected: the 100 TB cost is two hash shuffles of (doc, pos, h)
     triples plus a doc-bounded sort."""
     d = fanout(table(spark, sf_dir, "documents"))
-    from pyspark.sql import Window
 
     g = (
         split_words(d, "doc_id")
@@ -1174,8 +1165,6 @@ def dedup_cdc_chunk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 digests, never chunk bodies twice (the md5 collapses each chunk
     to 32 bytes before the wide exchange).  At 100 TB the digest table
     is the dedup index a storage tier would persist."""
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents"))
     occ = d.select(
         "doc_id", F.posexplode(words()).alias("pos", "w")
@@ -1312,8 +1301,6 @@ def _containment_frames(
     filtered-shingle sizes) — the inverted-index stage of
     dedup_shingle_containment, factored so the keep-policy op below
     reuses the identical frames instead of rescanning."""
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents"))
     sh = (
         split_words(d, "doc_id")
@@ -1757,10 +1744,6 @@ def dedup_threshold_sweep_cosine(
     fan-out x distinct-union) is unchanged and stays
     output-bounded.  The threshold join fans each candidate pair out
     at most {len(DEDUP_SWEEP_THRESHOLDS)}x."""
-    from kafka_stream_processing_spark.operators.similarity import (
-        cosine_ge_two_tier,
-    )
-
     n = _embeddings(spark, sf_dir)
     n_vecs = n.count()  # one scalar, sizes the rate denominator
     a, b = n.alias("a"), n.alias("b")
@@ -1946,8 +1929,6 @@ def dedup_fellegi_sunter_linkage(
     same topology holds; the posterior table generalizes to
     field-specific (m,u) by swapping the CASE on the full pattern
     (2^K literals)."""
-    from pyspark.sql import Window
-
     cust = table(spark, sf_dir, "customer")
     ranked = cust.select(
         "c_custkey",

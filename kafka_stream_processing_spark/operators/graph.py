@@ -40,7 +40,7 @@ its all-seeds case.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.word_kernel import words
@@ -538,7 +538,6 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _TR_DAMPING,
         _TR_ITERATIONS,
     )
-    from pyspark.sql import Window as _W
 
     # Top-k via orderBy().limit(k) → TakeOrderedAndProject (a per-
     # partition k-row heap + driver merge), NOT a global row_number
@@ -546,7 +545,7 @@ def text_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # item 3).  The rank column is re-derived by a window over the
     # k-row result only — bounded by the constant _TR_TOPK.
     top = ranks.orderBy(F.desc("r"), "node").limit(_TR_TOPK)
-    w = _W.orderBy(F.desc("r"), "node")
+    w = Window.orderBy(F.desc("r"), "node")
     return top.select(
         F.row_number().over(w).cast("int").alias("rank"),
         F.col("node").alias("word"),
@@ -787,8 +786,6 @@ def graph_kcore_decomposition(
     (`UniqueUsersCounter.java` is a linear topology) — this extends the
     engine's iterative family (PageRank `graph_pagerank_trade`, components
     `clustering.py`) with the integer-exact member."""
-    from pyspark.sql import Window
-
     edges = _trade_edges_df(spark, sf_dir).localCheckpoint(eager=True)
     hist = edges.groupBy("w").agg(F.count(F.lit(1)).alias("m"))
     need = edges.agg(

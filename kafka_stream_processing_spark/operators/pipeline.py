@@ -1328,8 +1328,6 @@ def sample_neyman_allocation(
     runs on the STRATA table (a handful of rows); the sampling rank is
     per-stratum (the stratified_topn shape).  Budget ≪ every N_h here;
     at true scale add a LEAST(n_h, N_h) cap and re-distribute."""
-    from pyspark.sql import Window
-
     base = table(spark, sf_dir, "documents").select(
         "lang", "doc_id", "n_chars"
     )

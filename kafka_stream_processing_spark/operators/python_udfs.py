@@ -18,7 +18,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import pandas_udf, udtf
 
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
@@ -207,8 +207,6 @@ def udtf_word_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     generators (parsers, tokenizers with state), and this query pins
     that the two paths agree with the oracle.  Bounded to doc_id < 50
     so the row-at-a-time Python cost stays out of the hot sweep."""
-    from pyspark.sql.functions import udtf
-
     @udtf(returnType="idx: int, word: string")
     class SplitWords:
         def eval(self, text: str):
@@ -256,8 +254,6 @@ def _mg_sketch_partition(batches):
     item with local frequency > local_n/HH_K is guaranteed a counter,
     so the union over partitions is a superset of every GLOBAL
     heavy hitter (pigeonhole over the partition sums)."""
-    import pandas as pd
-
     counters: dict[str, int] = {}
     for pdf in batches:
         for item in pdf["item"]:

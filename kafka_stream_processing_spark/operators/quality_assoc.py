@@ -11,13 +11,13 @@ final scalar.  Split from quality.py in r09; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
 from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import table
+from kafka_stream_processing_spark.sources.tables import table, fanout
 
 
 @register(
@@ -84,8 +84,6 @@ def quality_cramers_v_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch-sized for any real categorical pair).  The distinct-value
     frames are the same histogram's projections, so the whole statistic
     is one aggregation plus arithmetic on its result."""
-    from pyspark.sql import Window
-
     docs = table(spark, sf_dir, "documents")
     c = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_obs")
@@ -209,8 +207,6 @@ def quality_mutual_information(
     margins — the Cramér kernel's shape; the two entropy scans are
     marginal-histogram-sized aggregates of the same pass's
     projections."""
-    from pyspark.sql import Window
-
     docs = table(spark, sf_dir, "documents")
     c = docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_obs")
@@ -338,8 +334,6 @@ def quality_spearman_corr(
     ordering, they come from cumulative counts over the value
     histogram.  Doubled-rank moment sums stay under 4n³ — switch the
     two square sums to DECIMAL(38,0) past ~10⁹ rows."""
-    from pyspark.sql import Window
-
     x = table(spark, sf_dir, "documents").select(
         F.col("n_chars").alias("xv"),
         F.size(words()).alias("yv"),
@@ -910,8 +904,6 @@ def quality_hoeffding_d_hourly(
     )
     tot = hourly.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
 
-    from pyspark.sql import Window
-
     def midrank2(col: str, out: str) -> DataFrame:
         # R2 = 2*(#{v' < v}) + #{v' = v} - 1  (= 2*(midrank - 1)),
         # from the marginal histogram — the cumulative window frame is
@@ -1087,8 +1079,6 @@ def quality_blomqvist_beta_hourly(
     discipline); production frontier for an entity-scale variant is
     frontier.quantile_cuts(mode="approx") exactly as the Lorenz/RFM
     swap; one broadcast of the two scalars; one counting aggregate."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("h")
@@ -1475,7 +1465,6 @@ def quality_dcor_tokens_violations(
     from kafka_stream_processing_spark.operators.pipeline import (
         gopher_feature_columns,
     )
-    from kafka_stream_processing_spark.sources.tables import fanout
 
     d = fanout(table(spark, sf_dir, "documents"))
     feats = d.select(*gopher_feature_columns())

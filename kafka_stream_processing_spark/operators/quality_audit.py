@@ -14,7 +14,7 @@ in r09; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.word_kernel import words
@@ -490,8 +490,6 @@ def quality_length_outlier_mad(
     sketch, map-side mergeable, no total-order sort), same downstream
     shape; agreement pinned in tests/test_frontier.py.  Either way the
     per-doc flagging pass broadcasts the two 1-row scalars."""
-    from pyspark.sql import Window
-
     from kafka_stream_processing_spark.operators.frontier import (
         quantile_cuts,
     )
@@ -646,8 +644,6 @@ def quality_key_skew_gini(
     DISTINCT count values, a table bounded by √(2·Σc) rows regardless
     of key cardinality.  Bit-identical to the exact rank form (integer
     arithmetic throughout; pinned in tests/test_frontier.py)."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     freq = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
     if frontier == "histogram":
@@ -1410,7 +1406,6 @@ def quality_t_closeness_audit(
     size via a hash-partitioned window on the QI key — the l-diversity
     cost shape exactly."""
     d = table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
 
     cells = d.groupBy(
         "lang",

@@ -11,7 +11,7 @@ combined.  Split from quality.py in r09; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.word_kernel import words
@@ -169,10 +169,9 @@ def quality_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("decimal(18,6)").alias("m"),
         )
     )
-    from pyspark.sql import Window as _W
 
     ranked = means.withColumn(
-        "rk", F.row_number().over(_W.orderBy("m"))
+        "rk", F.row_number().over(Window.orderBy("m"))
     )
     stats = means.agg(
         F.sum("m").cast("double").alias("s1"),
@@ -360,8 +359,6 @@ def isotonic_minimax_fit(bins: DataFrame, part=None) -> DataFrame:
     Shared by the batch calibration gate and the streaming
     recalibration monitor (kernel reuse guard-tested)."""
     import functools as _ft
-
-    from pyspark.sql import Window
 
     part = list(part or [])
     wcum = (
@@ -590,7 +587,6 @@ def quality_roc_auc_length_classifier(
     window over the score domain — the KS/CvM cost class.  Grouped
     AUCs (per source/model) partition the window by group."""
     hist, tot = _score_hist(spark, sf_dir)
-    from pyspark.sql import Window
 
     prev = Window.orderBy("score").rowsBetween(
         Window.unboundedPreceding, -1
@@ -881,7 +877,6 @@ def quality_pr_auc_length_classifier(
     Scale: histogram-sized state (score-distinct); one window over the
     score domain — identical bound to the ROC op."""
     hist, tot = _score_hist(spark, sf_dir)
-    from pyspark.sql import Window
 
     desc = Window.orderBy(F.col("score").desc())
     cum = hist.select(
@@ -1018,7 +1013,6 @@ def quality_mcc_youden_threshold_sweep(
 
     Scale: histogram-sized state; identical bound to the ROC-AUC op."""
     hist, tot = _score_hist(spark, sf_dir)
-    from pyspark.sql import Window
 
     desc = Window.orderBy(F.col("score").desc()).rowsBetween(
         Window.unboundedPreceding, 0

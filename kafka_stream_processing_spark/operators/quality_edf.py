@@ -23,7 +23,7 @@ test_quality_drift.py counts them.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.word_kernel import _word_counts
@@ -37,7 +37,7 @@ from kafka_stream_processing_spark.operators.quality_kernel import (  # noqa: E5
     _POOLED_HIST_CTE,
     _REF_VS_SOURCE_CTE,
     _REF_VS_SOURCE_WALK_CTE,
-    _WH_Z095,
+    _chi2_crit_005,
     _ecdf,
     _midrank_walk,
     _ref_vs_rest_hist,
@@ -212,17 +212,7 @@ def quality_chi2_categorical_drift(
         F.sum(term).alias("chi2"),
         (F.count(F.lit(1)) - 1).alias("dof"),
     )
-    # Wilson-Hilferty fallback for dof > 30 — same b*b*b spelling as the
-    # oracle CASE so the two engines compare against identical doubles.
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for k, v in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == k, F.lit(v)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return stat.select(
         F.col("dof").cast("int").alias("dof"),
         F.col("chi2").cast("double").alias("chi2"),
@@ -491,7 +481,6 @@ def quality_benford_digit_drift(
         frame.join(hist, "digit", "left")
         .select("digit", F.coalesce("n_obs", F.lit(0)).alias("n_obs"))
     )
-    from pyspark.sql import Window
 
     n = F.sum("n_obs").over(Window.partitionBy())
     p_benford = F.lit(None).cast("double")
@@ -603,8 +592,6 @@ def quality_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the histogram.  Pairs with quality_ks_drift_nchars (same split,
     rank-based) and quality_chi2_categorical_drift (categorical) as
     the binned-mass member of the drift-gate family."""
-    from pyspark.sql import Window
-
     hist = _ref_vs_rest_hist(
         table(spark, sf_dir, "documents"),
         F.expr(f"n_chars div {PSI_BUCKET_CHARS}"),

@@ -65,6 +65,22 @@ _CHI2_CRIT_SQL = "CASE " + " ".join(
 ) + f" ELSE dof * {_WH_B_SQL} * {_WH_B_SQL} * {_WH_B_SQL} END"
 
 
+def _chi2_crit_005(dof: Column) -> Column:
+    """``_CHI2_CRIT_SQL`` as a Spark column over the integer ``dof``:
+    the table value, else the Wilson-Hilferty cube in the same b*b*b
+    spelling, so both engines compare against identical doubles."""
+    dof_d = dof.cast("double")
+    wh_b = (
+        F.lit(1.0)
+        - F.lit(2.0) / (F.lit(9.0) * dof_d)
+        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
+    )
+    crit = dof_d * wh_b * wh_b * wh_b
+    for k, v in CHI2_CRIT_005.items():
+        crit = F.when(dof == k, F.lit(v)).otherwise(crit)
+    return crit
+
+
 # ---------------------------------------------------------------------------
 # Privacy and skew audits
 # ---------------------------------------------------------------------------

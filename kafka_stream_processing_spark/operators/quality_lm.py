@@ -12,7 +12,7 @@ bit-for-bit.  Split from quality.py in r09; semantics unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.dedup import hash64
@@ -22,7 +22,7 @@ from kafka_stream_processing_spark.operators.word_kernel import (
     words,
 )
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import table
+from kafka_stream_processing_spark.sources.tables import table, fanout
 
 
 #: Hashed-feature space and weight granularity for the linear quality
@@ -71,8 +71,6 @@ def quality_model_score_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     production pipelines run the cheap linear filter BEFORE any pairwise
     dedup.  Integer arithmetic keeps the keep/drop frontier bit-exact
     across engines (no float dot-product drift)."""
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     t = words(F.lower(F.col("text")))
     weight = lambda w: (  # noqa: E731
@@ -143,10 +141,6 @@ def quality_ccnet_perplexity_buckets(
     is the natural shard key of a multilingual crawl, so the window
     parallelizes across languages exactly as CCNet's per-language
     pipelines do.  State per language is a counter, not a buffer."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     t = words(F.lower(F.col("text")))
     loss = lambda w: (  # noqa: E731
@@ -227,9 +221,6 @@ def quality_unigram_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrences, then ONE groupBy(doc_id).  Bodies never shuffle; if
     vocab ever outgrows broadcast, the join keys are already word-hashed
     and skew-free."""
-    from kafka_stream_processing_spark.sources.tables import fanout
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents"))
     doc_occ = _word_counts(d, "doc_id", "lang", count="k")
     vocab = doc_occ.groupBy("w").agg(F.sum("k").alias("c"))
@@ -345,10 +336,6 @@ def quality_bigram_lm_interpolated(
     while it fits).  Scoring pre-aggregates per-doc DISTINCT bigrams so
     join input is bounded by doc distinctness, then ONE groupBy(doc_id).
     Bodies never shuffle."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     pairs = _gram_rows(d, 2, "doc_id", "lang", bos=LM_BOS)
     uni = pairs.groupBy(F.col("w2").alias("w")).agg(
@@ -461,8 +448,6 @@ def quality_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     one distinct-context groupBy, a shuffle join of per-doc DISTINCT
     bigrams against the O(distinct bigrams) LM table, ONE
     groupBy(doc_id).  Bodies never shuffle."""
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     pairs = _gram_rows(d, 2, "doc_id", "lang", bos=LM_BOS)
     cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
@@ -470,7 +455,6 @@ def quality_bigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").alias("total"), F.count(F.lit(1)).alias("n1fwd")
     )
     bwd = cb.groupBy("w2").agg(F.count(F.lit(1)).alias("n1bwd"))
-    from pyspark.sql import Window
 
     n1tot = F.count(F.lit(1)).over(Window.partitionBy())
     cb_tot = cb.withColumn("n1tot", n1tot)
@@ -601,10 +585,6 @@ def quality_trigram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     Heaps-sublinear but the largest table in the family, so the join is
     a shuffle join by design with per-doc DISTINCT trigrams as probe
     input.  Bodies never shuffle."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     tri = _gram_rows(d, 3, "doc_id", "lang", bos=LM_BOS)
     c3 = tri.groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
@@ -750,10 +730,6 @@ def quality_fourgram_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     production LMs prune singletons; the scoring join shuffles on
     (w1..w4) with per-doc DISTINCT 4-grams as probe input.  Bodies
     never shuffle."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     quad = _gram_rows(d, 4, "doc_id", "lang", bos=LM_BOS)
     c4 = quad.groupBy("w1", "w2", "w3", "w4").agg(

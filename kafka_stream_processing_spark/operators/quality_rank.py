@@ -22,11 +22,10 @@ chi-squared cells stay per op: each is the only one of its shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafka_stream_processing_spark.functions.exact import dec
-from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.windowed import _events_daily
 from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
@@ -40,7 +39,7 @@ from kafka_stream_processing_spark.operators.quality_kernel import (  # noqa: E5
     _MIDRANK_WALK_CTE,
     _POOLED_HIST_CTE,
     _REF_VS_SOURCE_CTE,
-    _WH_Z095,
+    _chi2_crit_005,
     _mann_whitney_u,
     _midrank_walk,
     _ref_vs_rest_hist,
@@ -210,8 +209,6 @@ def quality_brown_forsythe_drift(
     percentile_approx per group at billions of rows — same statistic
     shape); everything after the |x−med| map is two levels of
     map-side-combined aggregation to a k-row then 1-row table."""
-    from pyspark.sql import Window
-
     d = table(spark, sf_dir, "documents").select(
         "source", "doc_id", "n_chars"
     )
@@ -252,17 +249,7 @@ def quality_brown_forsythe_drift(
         (msb / msw).alias("bf_f"),
         (F.col("k") - 1).alias("dof"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit_chi2 = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit_chi2 = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(
-            crit_chi2
-        )
+    crit_chi2 = _chi2_crit_005(F.col("dof"))
     crit = crit_chi2 / F.col("dof")
     return stat.select(
         "k_groups",
@@ -462,15 +449,7 @@ def quality_runs_test_daily(
     Scale: the series collapse is one map-side-combined groupBy(day);
     both lag windows run over the calendar-sized table.  At 100 TB
     per-key series partition the windows by key."""
-    from pyspark.sql import Window
-
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            _event_day().alias("day")
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir)
     wd = Window.orderBy("day")
     diffs = daily.select(
         "day",
@@ -741,7 +720,6 @@ def quality_hodges_lehmann_shift(
         .groupBy((F.col("vb") - F.col("va")).alias("d"))
         .agg(F.sum(F.col("ca") * F.col("cb")).alias("w"))
     )
-    from pyspark.sql import Window
 
     cum = diffs.select(
         "d",
@@ -862,8 +840,6 @@ def quality_cliffs_delta_effect(
     counts (map-side combined), windows over distinct values per
     source, a per-source scalar aggregate out.  Same bound as the
     KS/U/chi-squared gates."""
-    from pyspark.sql import Window
-
     merged = _ref_vs_source_hist(spark, sf_dir)
     w_below = (
         Window.partitionBy("s")
@@ -986,8 +962,6 @@ def quality_kruskal_wallis_drift(
     cumulative window over DISTINCT VALUES only, then k-row algebra.
     The pooled-value window is single-partition but value-domain-sized
     (same bound as the KS/ROC-AUC gates), never corpus-sized."""
-    from pyspark.sql import Window
-
     hist = (
         table(spark, sf_dir, "documents")
         .groupBy("source", F.col("n_chars").alias("v"))
@@ -1046,15 +1020,7 @@ def quality_kruskal_wallis_drift(
         (h / tie_c).alias("h_tie_corrected"),
         (F.col("k") - 1).cast("int").alias("dof"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return stat.select(
         "k",
         "n",
@@ -1257,8 +1223,6 @@ def quality_friedman_daily_mix(
     Scale: one groupBy(day, type) with map-side combine to a
     b*k-cell grid (days x types — calendar-sized, never event-sized),
     rank windows over k-row blocks, then k-row algebra."""
-    from pyspark.sql import Window
-
     counted = (
         table(spark, sf_dir, "events")
         .groupBy(
@@ -1311,15 +1275,7 @@ def quality_friedman_daily_mix(
         q_stat.alias("q_stat"),
         (F.col("k") - 1).cast("int").alias("dof"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return q.select(
         "n_blocks",
         "k",
@@ -1517,15 +1473,7 @@ def quality_anova_f_drift(
         F.col("dof_between").alias("dof"),
         (F.col("dof_between") * f_stat).alias("chi2_approx"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return q.select(
         "n",
         "k",
@@ -1673,15 +1621,7 @@ def quality_welch_anova_drift(
         w_stat.alias("w_stat"),
         (F.col("k") - 1).cast("int").alias("dof"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return stat.select(
         "k",
         "n_total",
@@ -1801,15 +1741,7 @@ def quality_bartlett_homoscedasticity(
         k2.alias("k2"),
         (F.col("k") - 1).cast("int").alias("dof"),
     )
-    dof_d = F.col("dof").cast("double")
-    wh_b = (
-        F.lit(1.0)
-        - F.lit(2.0) / (F.lit(9.0) * dof_d)
-        + F.lit(_WH_Z095) * F.sqrt(F.lit(2.0) / (F.lit(9.0) * dof_d))
-    )
-    crit = dof_d * wh_b * wh_b * wh_b
-    for kk, vv in CHI2_CRIT_005.items():
-        crit = F.when(F.col("dof") == kk, F.lit(vv)).otherwise(crit)
+    crit = _chi2_crit_005(F.col("dof"))
     return stat.select(
         "k",
         "n_total",
@@ -1926,8 +1858,6 @@ def quality_mw_drift_fdr(
     Scale: the MW kernel's histogram cost (shared shape with
     quality_mannwhitney_drift) plus windows over the m-row z table —
     the multiplicity layer is free."""
-    from pyspark.sql import Window
-
     zs = _mann_whitney_u(spark, sf_dir).select("s", "z")
     w_rank = Window.orderBy(F.abs(F.col("z")).desc(), "s")
     ordered = zs.select(
@@ -2388,8 +2318,6 @@ def quality_jonckheere_terpstra_trend(
     Scale: one map-side-combined histogram groupBy (value-grid-sized),
     a V×G cell grid with per-source cumulative windows, and a
     V×G² equi-join pair fold — corpus rows are touched once."""
-    from pyspark.sql import Window
-
     d = table(spark, sf_dir, "documents")
     hist = d.groupBy(
         "source", F.col("n_chars").cast("bigint").alias("v")
@@ -2587,8 +2515,6 @@ def quality_kendall_w_concordance(
     bounded-domain exception, never corpus-sized).  BIGINT holds n³
     to n ≈ 2M; beyond that the denominator moves to DECIMAL — the
     documented swap."""
-    from pyspark.sql import Window
-
     d = fanout(table(spark, sf_dir, "documents")).select(
         "doc_id",
         F.length("text").alias("v1"),

@@ -1084,8 +1084,6 @@ def join_interval_overlap_sessions(
     temporal concurrency (the thing being measured), not table size;
     bucket width is the knob (too narrow: fan-out; too wide:
     false candidates — the classic interval-index trade)."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     lag = F.lag("ts").over(w)
@@ -1312,8 +1310,6 @@ def join_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (domain-sized, not row-sized); the join back is a broadcast of
     the frontier thresholds.  The quadratic form lives only in the
     oracle."""
-    from pyspark.sql import Window
-
     p = table(spark, sf_dir, "part").select(
         "p_partkey",
         F.col("p_size").cast("int").alias("p_size"),

@@ -22,6 +22,12 @@ event stream (UniqueUsersCounter.java:74-88); these ops extend the
 same daily-rollup spine (events -> day grid -> exact sums) to tail
 and calibration statistics a data-quality deployment of that topology
 would need.
+
+Series: every daily series here comes from windowed.py's
+``_events_daily`` (total or per-type DECIMAL daily sums, keyed by the
+day or its epoch number ``d``), and the pinball, CRPS and Winkler ops
+take their trailing ``PINBALL_WINDOW``-day ensemble from
+``_trailing_window``.
 """
 
 from __future__ import annotations
@@ -30,7 +36,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec
-from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.windowed import (
+    PINBALL_WINDOW,
+    _events_daily,
+    _trailing_window,
+)
 from kafka_stream_processing_spark.operators.word_kernel import words
 from kafka_stream_processing_spark.registry import register
 from kafka_stream_processing_spark.sources.tables import fanout, table
@@ -281,14 +291,7 @@ def window_l_moments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-grid bounded — never a global sort); the weighted sums are one
     map-side-combined aggregate.  At 100 TB with per-key series the
     same shape holds per key."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            _event_day().alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True)
     idx = daily.select(
         "event_type",
         "x",
@@ -351,8 +354,6 @@ def window_l_moments_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # forecaster
 # ---------------------------------------------------------------------------
 
-#: Trailing calendar window (days) forming the forecast ensemble.
-PINBALL_WINDOW = 28
 #: (tau as an exact DECIMAL(2,1) literal string, 1-based type-1
 #: quantile rank ceil(tau * W)) — integer ranks, no interpolation.
 PINBALL_TAUS = (("0.1", 3), ("0.5", 14), ("0.9", 26))
@@ -368,16 +369,21 @@ daily AS (
 )"""
 
 
-PINBALL_ORACLE = f"""
-WITH {_daily_total_sql().lstrip()},
-win AS (
+#: ``_trailing_window`` before its completeness filter, as an oracle CTE
+#: over ``daily``.
+_TRAILING_WINDOW_CTE = f"""win AS (
     SELECT c.d, c.x AS y, p.x AS m,
            row_number() OVER (PARTITION BY c.d
                               ORDER BY p.x, p.d) AS r,
            count(*) OVER (PARTITION BY c.d) AS w
     FROM daily c JOIN daily p
       ON p.d >= c.d - {PINBALL_WINDOW} AND p.d <= c.d - 1
-),
+)"""
+
+
+PINBALL_ORACLE = f"""
+WITH {_daily_total_sql().lstrip()},
+{_TRAILING_WINDOW_CTE},
 q AS MATERIALIZED (
     SELECT d, MAX(y) AS y,
            {", ".join(f"MAX(CASE WHEN r = {rk} THEN m END) AS q_{i}" for i, (_, rk) in enumerate(PINBALL_TAUS))}
@@ -430,43 +436,9 @@ def window_pinball_loss_daily(
     day), the per-day rank windows are day-partitioned; nothing
     scales with raw event count except the first map-side-combined
     daily rollup."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(_event_day().alias("day"))
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
-    )
-    c, p = daily.alias("c"), daily.alias("p")
-    win = (
-        c.join(
-            p,
-            (F.col("p.d") >= F.col("c.d") - PINBALL_WINDOW)
-            & (F.col("p.d") <= F.col("c.d") - 1),
-        )
-        .select(
-            F.col("c.d").alias("d"),
-            F.col("c.x").alias("y"),
-            F.col("p.x").alias("m"),
-            F.col("p.d").alias("pd"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("d").orderBy("m", "pd")
-            ),
-        )
-        .withColumn(
-            "w", F.count(F.lit(1)).over(Window.partitionBy("d"))
-        )
-    )
+    win = _trailing_window(_events_daily(spark, sf_dir, epoch=True))
     q = (
-        win.filter(F.col("w") == PINBALL_WINDOW)
-        .groupBy("d")
+        win.groupBy("d")
         .agg(
             F.max("y").alias("y"),
             *[
@@ -571,36 +543,7 @@ def window_crps_empirical_daily(
     count); both terms are single hashed aggregates partitioned by
     day.  The first daily rollup is the only stage that sees raw
     events."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(_event_day().alias("day"))
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
-    )
-    c, p = daily.alias("c"), daily.alias("p")
-    win = (
-        c.join(
-            p,
-            (F.col("p.d") >= F.col("c.d") - PINBALL_WINDOW)
-            & (F.col("p.d") <= F.col("c.d") - 1),
-        )
-        .select(
-            F.col("c.d").alias("d"),
-            F.col("c.x").alias("y"),
-            F.col("p.x").alias("m"),
-            F.col("p.d").alias("pd"),
-        )
-        .withColumn(
-            "w", F.count(F.lit(1)).over(Window.partitionBy("d"))
-        )
-        .filter(F.col("w") == PINBALL_WINDOW)
-        .drop("w")
-    )
+    win = _trailing_window(_events_daily(spark, sf_dir, epoch=True))
     t1 = win.groupBy("d").agg(
         F.max("y").alias("y"),
         F.sum(
@@ -929,14 +872,7 @@ def window_expected_shortfall_daily(
     calendar-bounded daily frame (never a global sort; the day grid
     is thousands of rows at any corpus size), one map-side-combined
     conditional aggregate per alpha."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            _event_day().alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True)
     idx = daily.select(
         "event_type",
         "x",
@@ -1083,28 +1019,13 @@ def window_extremal_index_runs(
     window over exceedance days, one map-side-combined gap-sum
     aggregate.  Nothing scales with raw event count except the first
     rollup."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            _event_day().alias("day"),
-        )
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            "event_type",
-            "day",
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, by_type=True, epoch=True)
     idx = daily.select(
         "event_type",
         "d",
         "x",
         F.row_number()
-        .over(Window.partitionBy("event_type").orderBy("x", "day"))
+        .over(Window.partitionBy("event_type").orderBy("x", "d"))
         .alias("r"),
         F.count(F.lit(1))
         .over(Window.partitionBy("event_type"))
@@ -1173,14 +1094,7 @@ WINKLER_ALPHAS = (("0.2", 10, 3, 26), ("0.5", 4, 7, 21))
 
 WINKLER_ORACLE = f"""
 WITH {_daily_total_sql().lstrip()},
-win AS (
-    SELECT c.d, c.x AS y, p.x AS m,
-           row_number() OVER (PARTITION BY c.d
-                              ORDER BY p.x, p.d) AS r,
-           count(*) OVER (PARTITION BY c.d) AS w
-    FROM daily c JOIN daily p
-      ON p.d >= c.d - {PINBALL_WINDOW} AND p.d <= c.d - 1
-),
+{_TRAILING_WINDOW_CTE},
 iv AS MATERIALIZED (
     SELECT d, MAX(y) AS y,
            {", ".join(
@@ -1241,40 +1155,7 @@ def window_winkler_interval_score(
     Scale: identical shape to window_pinball_loss_daily — the
     day-grid self-join is calendar-bounded, per-day rank windows are
     day-partitioned, nothing but the first rollup sees raw events."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(_event_day().alias("day"))
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
-    )
-    c, p = daily.alias("c"), daily.alias("p")
-    win = (
-        c.join(
-            p,
-            (F.col("p.d") >= F.col("c.d") - PINBALL_WINDOW)
-            & (F.col("p.d") <= F.col("c.d") - 1),
-        )
-        .select(
-            F.col("c.d").alias("d"),
-            F.col("c.x").alias("y"),
-            F.col("p.x").alias("m"),
-            F.col("p.d").alias("pd"),
-        )
-        .withColumn(
-            "r",
-            F.row_number().over(
-                Window.partitionBy("d").orderBy("m", "pd")
-            ),
-        )
-        .withColumn(
-            "w", F.count(F.lit(1)).over(Window.partitionBy("d"))
-        )
-    )
+    win = _trailing_window(_events_daily(spark, sf_dir, epoch=True))
     agg_cols = [F.max("y").alias("y")]
     for i, (_, _, lo, hi) in enumerate(WINKLER_ALPHAS):
         agg_cols.append(
@@ -1283,11 +1164,7 @@ def window_winkler_interval_score(
         agg_cols.append(
             F.max(F.when(F.col("r") == hi, F.col("m"))).alias(f"hi_{i}")
         )
-    iv = (
-        win.filter(F.col("w") == PINBALL_WINDOW)
-        .groupBy("d")
-        .agg(*agg_cols)
-    )
+    iv = win.groupBy("d").agg(*agg_cols)
     parts = []
     for i, (alpha, two_over, lo, hi) in enumerate(WINKLER_ALPHAS):
         lo_c, hi_c, y = F.col(f"lo_{i}"), F.col(f"hi_{i}"), F.col("y")
@@ -1430,17 +1307,7 @@ def window_gev_blockmax_shape(
     Scale: the block-max frame is calendar-bounded (n_days/7 rows at
     ANY corpus size), so its rank window is structurally tiny; the
     only corpus-scale stage is the map-side-combined daily rollup."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(_event_day().alias("day"))
-        .agg(F.sum(dec("value")).alias("x"))
-        .select(
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
-    )
+    daily = _events_daily(spark, sf_dir, epoch=True)
     blocks = (
         daily.groupBy(
             F.expr(f"d div {GEV_BLOCK_DAYS}").alias("blk")
@@ -1585,16 +1452,11 @@ def window_diebold_mariano_naive(
 
     Scale: two calendar self-joins on the day grid plus one scalar
     aggregate; only the daily rollup sees raw events."""
-    daily = (
-        table(spark, sf_dir, "events")
-        .groupBy(_event_day().alias("day"))
-        .agg(F.sum(dec("value")).cast("double").alias("x"))
-        .select(
-            F.datediff(
-                "day", F.lit("1970-01-01").cast("date")
-            ).alias("d"),
-            "x",
-        )
+    daily = _events_daily(
+        spark,
+        sf_dir,
+        F.sum(dec("value")).cast("double").alias("x"),
+        epoch=True,
     )
     c, l1, l7 = daily.alias("c"), daily.alias("l1"), daily.alias("l7")
     joined = (

@@ -9,7 +9,7 @@ parallel, no shuffle at all (narrow transformations over the scan).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.operators.dedup import hash64
@@ -252,7 +252,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tfidf"),
         )
     )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
     return (
@@ -491,8 +490,6 @@ def hashed_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sparse hashed tf-idf vectors as (doc_id, bucket, v) rows —
     the Spark twin of _HASHED_VEC_CTES, shared by the embedding
     exporter below and the sparse-retrieval operator."""
-    from kafka_stream_processing_spark.sources.tables import fanout
-
     d = fanout(table(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
@@ -614,8 +611,6 @@ def similarity_sparse_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is the classic impact-ordered postings scan, and the rank cap
     bounds per-query output.  No float appears anywhere: scores are
     exact BIGINTs end to end."""
-    from pyspark.sql import Window
-
     vec = hashed_vec(spark, sf_dir)
     q = vec.filter(F.col("doc_id") < SPARSE_N_QUERIES).select(
         F.col("doc_id").alias("query_id"),
@@ -859,8 +854,6 @@ def text_zipf_rank_frequency(
     offsets — bit-identical ranks (the oracle still hashes green), no
     single-task sort (pinned in tests/test_frontier.py); the
     single-window form stays available as ``rank_mode="exact"``."""
-    from pyspark.sql import Window
-
     cnt = _word_counts(table(spark, sf_dir, "documents"))
     if rank_mode == "distributed":
         from kafka_stream_processing_spark.operators.frontier import (
@@ -1068,8 +1061,6 @@ def text_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-sized groupBy (Heaps-sublinear); the final cut is
     orderBy().limit(k) → TakeOrderedAndProject, the per-partition-heap
     top-k that never total-order-sorts the phrase table."""
-    from pyspark.sql import Window
-
     d = table(spark, sf_dir, "documents")
     occ = d.select(
         "doc_id",
@@ -1662,7 +1653,6 @@ def text_vocab_coverage_spectrum(
     wc = _word_counts(table(spark, sf_dir, "documents"), count="m")
     coc = wc.groupBy("m").agg(F.count(F.lit(1)).alias("vm"))
     tot = coc.agg(F.sum(F.col("m") * F.col("vm")).alias("n"))
-    from pyspark.sql import Window
 
     cum = (
         Window.orderBy(F.col("m").desc())
@@ -1973,8 +1963,6 @@ def text_langid_char_ngram_profile(
     into the scoring join; scoring collapses per (doc, lang) with
     map-side combine.  Nothing vocab-scale shuffles except the
     training groupBy, bounded by the trigram domain."""
-    from pyspark.sql import Window
-
     d = table(spark, sf_dir, "documents")
     tris = d.filter(F.length("text") >= 3).select(
         "doc_id",
@@ -2083,8 +2071,6 @@ def text_source_vocab_overlap(
     shuffle), a per-source top-K window over vocab-sized partitions,
     then a K·|sources|-row self-join — |sources|² output, trivially
     broadcastable; the corpus is scanned exactly once."""
-    from pyspark.sql import Window
-
     counts = _word_counts(table(spark, sf_dir, "documents"), "source")
     w_top = Window.partitionBy("source").orderBy(F.desc("c"), "w")
     tops = (

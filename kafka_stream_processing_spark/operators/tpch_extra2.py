@@ -19,7 +19,7 @@ SURVEY.md §2.1 at the depth a TPC-H-class engine needs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec, dec_sum
@@ -362,8 +362,6 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py).  Per-order collect_set state is bounded by
     suppliers-per-order (single digits), not lines; supplier broadcasts;
     the final top-20 is TakeOrderedAndProject."""
-    from pyspark.sql import Window
-
     o = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     li = table(spark, sf_dir, "lineitem")
     # No broadcast hint: status-'F' orders are ~1/3 of the table — at

@@ -26,15 +26,25 @@ ops' per-user lifetimes with the horizon censoring rule; ``_r6`` is the
 half-away-from-zero rounding every pandas fold applies per step; and
 ``_permutation_entropy`` is the one Bandt-Pompe pattern fold over
 ``PERM_PATTERNS`` (the streaming monitor in streaming/joins.py uses it
-too).  The Holt, Holt-Winters, damped and theta recurrences stay per
-op.
+too).  The serial-dependence steps have one home each as well:
+``_demeaned`` mean-centers a day-keyed series (ACF, CCF,
+periodogram); ``_lag_sums`` is the broadcast lag-frame join that
+counts the day pairs and sums the rounded cross-products per lag (ACF,
+CCF, Ljung-Box); ``_move_tolerance`` is the rank-selected match
+tolerance ``r_tol`` of the template-matching ops (SampEn, multiscale
+SampEn, ApEn, BDS, RQA); and ``_trailing_window`` is the
+``PINBALL_WINDOW``-day ensemble self-join of the scoring ops in
+tail_scoring.py (pinball, CRPS, Winkler).  The oracles build their
+repeated CTEs from the shared ``_ORDERS_MICRO_CTE`` and
+``_MOVE_TOL_CTE`` strings.  The Holt, Holt-Winters, damped and theta
+recurrences stay per op.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafka_stream_processing_spark.functions.exact import dec, dec_sum
@@ -68,8 +78,6 @@ def _events_daily(
     replaces ``day`` by ``d``, its day number since 1970-01-01 (the
     integer key the lag and pair joins match on).  ``index`` adds
     ``i``, the day's 1-based position in its series."""
-    from pyspark.sql import Window
-
     keys = ["event_type"] if by_type else []
     daily = (
         table(spark, sf_dir, "events")
@@ -127,6 +135,139 @@ def _orders_daily(
         x = F.sum(dec("o_totalprice")).alias("rev")
     orders = table(spark, sf_dir, "orders")
     return orders.groupBy(F.col("o_orderdate").alias("day")).agg(x)
+
+
+#: ``_orders_daily(..., "micro")`` as an oracle CTE.
+_ORDERS_MICRO_CTE = """daily AS (
+        SELECT o_orderdate AS day,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
+                    AS BIGINT) AS xm
+        FROM orders GROUP BY 1
+    )"""
+
+
+def _demeaned(daily: DataFrame, **series: str) -> DataFrame:
+    """The mean-centered columns of a daily series keyed by the epoch
+    day ``d``: for each ``name=col``, ``name`` is CAST(col AS DOUBLE)
+    minus CAST(SUM(col) AS DOUBLE) / count.  Carries ``n``, the day
+    count, and ``dmin``, the first day."""
+    n = F.count(F.lit(1))
+    tot = daily.agg(
+        n.alias("n"),
+        F.min("d").alias("dmin"),
+        *[(F.sum(c).cast("double") / n).alias(f"mu_{name}")
+          for name, c in series.items()],
+    )
+    return daily.crossJoin(F.broadcast(tot)).select(
+        "d",
+        "n",
+        "dmin",
+        *[(F.col(c).cast("double") - F.col(f"mu_{name}")).alias(name)
+          for name, c in series.items()],
+    )
+
+
+def _lag_sums(
+    dev: DataFrame, ks: range, u: str, v: str, dtype: str
+) -> DataFrame:
+    """Lag products of the day-keyed ``dev``: per lag ``k`` in ``ks``,
+    ``n_pairs``, the count of day pairs (a, b) with b.d = a.d + k, and
+    ``sk``, the exact sum of round(a.u * b.v, 6) cast to ``dtype``.
+    A missing calendar day adds no pair."""
+    lags = dev.sparkSession.range(ks.start, ks.stop).select(
+        F.col("id").cast("int").alias("k")
+    )
+    a, b = dev.alias("a"), dev.alias("b")
+    return (
+        F.broadcast(lags)
+        .crossJoin(a)
+        .join(b, F.col("b.d") == F.col("a.d") + F.col("k"))
+        .groupBy("k")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum(
+                F.round(F.col(f"a.{u}") * F.col(f"b.{v}"), 6).cast(dtype)
+            ).alias("sk"),
+        )
+    )
+
+
+#: Trailing calendar window (days) forming the forecast ensemble of the
+#: scoring ops in tail_scoring.py.
+PINBALL_WINDOW = 28
+
+
+def _trailing_window(daily: DataFrame) -> DataFrame:
+    """The trailing day-grid window of the epoch-day series ``daily``
+    (``d``, ``x``): one row per scored day ``d`` and member day ``pd``
+    in [d - PINBALL_WINDOW, d - 1], with ``y`` the day's value, ``m``
+    the member's and ``r`` the member's 1-based rank by (m, pd).  Only
+    days whose window is complete (PINBALL_WINDOW members) are kept."""
+    c, p = daily.alias("c"), daily.alias("p")
+    return (
+        c.join(
+            p,
+            (F.col("p.d") >= F.col("c.d") - PINBALL_WINDOW)
+            & (F.col("p.d") <= F.col("c.d") - 1),
+        )
+        .select(
+            F.col("c.d").alias("d"),
+            F.col("c.x").alias("y"),
+            F.col("p.x").alias("m"),
+            F.col("p.d").alias("pd"),
+        )
+        .withColumn(
+            "r",
+            F.row_number().over(Window.partitionBy("d").orderBy("m", "pd")),
+        )
+        .withColumn("w", F.count(F.lit(1)).over(Window.partitionBy("d")))
+        .filter(F.col("w") == PINBALL_WINDOW)
+        .drop("w")
+    )
+
+
+#: Tolerance rank for the template-matching ops (sample entropy, ApEn,
+#: BDS, RQA): the q-th percentile (by rank selection, ceil(q·(n-1))-th
+#: smallest) of absolute successive daily moves.  Rank selection keeps
+#: the tolerance an EXACT integer both engines pick identically — the
+#: float-free analog of the classical 0.2σ, scale-free under
+#: heavy-tailed revenue (σ itself would need a sqrt and a float
+#: multiply, reintroducing cross-engine drift into every template
+#: comparison).
+SAMPEN_TOL_RANK_NUM = 4
+SAMPEN_TOL_RANK_DEN = 5
+
+#: ``_move_tolerance`` without partition as an oracle CTE over ``moves``.
+_MOVE_TOL_CTE = f"""tol AS (
+        SELECT mv AS r_tol FROM (
+            SELECT mv, row_number() OVER (ORDER BY mv, day) AS rk,
+                   count(*) OVER () AS nm
+            FROM moves
+        ) WHERE rk = (nm * {SAMPEN_TOL_RANK_NUM}
+                      + {SAMPEN_TOL_RANK_DEN} - 1)
+                     // {SAMPEN_TOL_RANK_DEN}
+    )"""
+
+
+def _move_tolerance(moves: DataFrame, *by: str) -> DataFrame:
+    """The template-match tolerance ``r_tol`` (per ``by`` group): the
+    ceil(n·NUM/DEN)-th smallest of the n one-step moves ``mv``, ties
+    broken by ``day``."""
+    ranked = moves.select(
+        *by,
+        "mv",
+        F.row_number()
+        .over(Window.partitionBy(*by).orderBy("mv", "day"))
+        .alias("rk"),
+        F.count(F.lit(1)).over(Window.partitionBy(*by)).alias("nm"),
+    )
+    return ranked.filter(
+        F.col("rk")
+        == F.expr(
+            f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
+            f" div {SAMPEN_TOL_RANK_DEN}"
+        )
+    ).select(*by, F.col("mv").alias("r_tol"))
 
 
 @register(
@@ -478,12 +619,11 @@ def window_rank_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFram
     single Window operator over one sort — adding functions to a shared
     ordering is free."""
     o = table(spark, sf_dir, "orders")
-    from pyspark.sql import Window as W
 
-    w = W.partitionBy("o_custkey").orderBy(
+    w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), "o_orderkey"
     )
-    wfull = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return o.select(
         "o_orderkey",
         "o_custkey",
@@ -537,7 +677,6 @@ def window_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     both aggregations (AQE reuses the partitioning); integer minute
     indices keep every comparison exact."""
     events = table(spark, sf_dir, "events")
-    from pyspark.sql import Window as W
 
     active = events.select(
         "user_id",
@@ -545,7 +684,7 @@ def window_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("minute_idx"),
     ).distinct()
-    w = W.partitionBy("user_id").orderBy("minute_idx")
+    w = Window.partitionBy("user_id").orderBy("minute_idx")
     islands = (
         active.withColumn(
             "island_key", F.col("minute_idx") - F.row_number().over(w)
@@ -592,7 +731,6 @@ def window_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality to months-of-history; lag over a raw fact would funnel.
     First month's growth is NULL (no predecessor), matching the oracle."""
     o = table(spark, sf_dir, "orders")
-    from pyspark.sql import Window as W
 
     monthly = (
         o.groupBy(
@@ -600,7 +738,7 @@ def window_mom_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(dec("o_totalprice")).alias("rev"))
     )
-    w = W.orderBy("month")
+    w = Window.orderBy("month")
     return monthly.select(
         "month",
         F.col("rev").cast("double").alias("revenue"),
@@ -657,10 +795,8 @@ def scd2_user_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all three windows partition on user_id — one shuffle, one
     sort, reused across the whole chain; output size is the number of
     CHANGES, not events (the compression that makes SCD2 storable)."""
-    from pyspark.sql import Window as W
-
     events = table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     marked = events.withColumn(
         "is_change",
         F.when(
@@ -672,8 +808,8 @@ def scd2_user_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs = marked.withColumn(
         "run_id",
         F.sum("is_change").over(
-            W.partitionBy("user_id").orderBy("ts", "event_id")
-            .rowsBetween(W.unboundedPreceding, 0)
+            Window.partitionBy("user_id").orderBy("ts", "event_id")
+            .rowsBetween(Window.unboundedPreceding, 0)
         ),
     )
     hist = runs.groupBy("user_id", "event_type", "run_id").agg(
@@ -681,7 +817,7 @@ def scd2_user_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # run_id tiebreak keeps lead() deterministic when two runs of a user
     # share a min(ts) (identical-ts events of different types).
-    wh = W.partitionBy("user_id").orderBy("valid_from", "run_id")
+    wh = Window.partitionBy("user_id").orderBy("valid_from", "run_id")
     return hist.select(
         "user_id",
         "event_type",
@@ -961,8 +1097,6 @@ def window_rfm_segmentation(
     identical table shape; a bucket can differ from the exact rank
     form only for customers whose metric EQUALS a cut value (value
     semantics keep ties together), pinned in tests/test_frontier.py."""
-    from pyspark.sql import Window as W
-
     o = table(spark, sf_dir, "orders")
     horizon = o.agg(F.max("o_orderdate").alias("h"))
     base = (
@@ -1031,10 +1165,10 @@ def window_rfm_segmentation(
                 F.lit("M"), mb.cast("string"),
             ).alias("segment"),
         )
-    rr = F.row_number().over(W.orderBy("recency_days", "c_custkey"))
-    rf = F.row_number().over(W.orderBy(F.desc("frequency"), "c_custkey"))
-    rm = F.row_number().over(W.orderBy(F.desc("monetary"), "c_custkey"))
-    n = F.count(F.lit(1)).over(W.partitionBy())
+    rr = F.row_number().over(Window.orderBy("recency_days", "c_custkey"))
+    rf = F.row_number().over(Window.orderBy(F.desc("frequency"), "c_custkey"))
+    rm = F.row_number().over(Window.orderBy(F.desc("monetary"), "c_custkey"))
+    n = F.count(F.lit(1)).over(Window.partitionBy())
     ranked = base.select(
         "*", rr.alias("rr"), rf.alias("rf"), rm.alias("rm"), n.alias("n")
     )
@@ -1209,8 +1343,6 @@ def window_cusum_changepoint(
     bounded by the calendar, never by event volume.  At 100 TB the
     same statement monitors per-(source, day) partitions with the
     window partitioned by source."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir, F.count(F.lit(1)).alias("x"))
     tot = daily.agg(
         F.count(F.lit(1)).alias("n"), F.sum("x").alias("t")
@@ -1320,8 +1452,6 @@ def window_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding K-day window since 2^-k vanishes past the mantissa (the
     docstring's closed recursion needs a fold; the pair form is the
     relational equivalent both engines express)."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir, F.count(F.lit(1)).alias("x"))
     idx = daily.select(
         "day",
@@ -1423,8 +1553,6 @@ def window_seasonal_naive_backtest(
     (series × calendar)-sized daily table; the lag window is
     partitioned per series (no global sort), and the scoring aggregate
     is series-sized.  Volume-independent beyond the first scan."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir, by_type=True)
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.withColumn(
@@ -1535,8 +1663,6 @@ def window_theil_sen_trend(
     are partitioned per series).  For multi-year horizons switch to
     the repeated-median variant (median-of-medians per anchor point,
     same windows, O(n) memory per rank partition)."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir, by_type=True, epoch=True)
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, "event_type").filter(
@@ -1653,36 +1779,14 @@ def window_acf_daily_revenue(
     map-side-combined pass; the lag join is days × 7 rows.  At 100 TB
     with per-key series, partition the deviation table by series key
     and the same join computes every series' ACF in one shuffle."""
-    daily = _events_daily(spark, sf_dir, epoch=True)
-    tot = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
-    )
-    dev = daily.crossJoin(F.broadcast(tot)).select(
-        "d", (F.col("x").cast("double") - F.col("mu")).alias("e")
-    )
+    dev = _demeaned(_events_daily(spark, sf_dir, epoch=True), e="x")
     den = dev.agg(
         F.sum(
             F.round(F.col("e") * F.col("e"), 6).cast("decimal(18,6)")
         ).alias("s0")
     )
-    ks = spark.range(1, ACF_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("k")
-    )
-    a, b = dev.alias("a"), dev.alias("b")
-    num = (
-        F.broadcast(ks)
-        .crossJoin(a)
-        .join(b, F.col("b.d") == F.col("a.d") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                F.round(F.col("a.e") * F.col("b.e"), 6).cast(
-                    "decimal(18,6)"
-                )
-            ).alias("sk"),
-        )
+    num = _lag_sums(
+        dev, range(1, ACF_MAX_LAG + 1), "e", "e", "decimal(18,6)"
     )
     return num.crossJoin(F.broadcast(den)).select(
         F.col("k").cast("int").alias("lag_k"),
@@ -1765,8 +1869,6 @@ def window_rolling_zscore_anomalies(
     calendar-sized series; the window runs over DAYS.  At 100 TB the
     same statement monitors per-(key, day) series with the window
     partitioned by key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir)
     w = (
         Window.orderBy("day").rowsBetween(-ROLLZ_WIN, -1)
@@ -1889,8 +1991,6 @@ def risk_table(life: DataFrame, part=None) -> DataFrame:
     (total departures minus departures strictly before t).  The base
     under the Kaplan-Meier curves (``km_curve``), the Nelson-Aalen
     hazard, and the log-rank test (reuse guard-tested)."""
-    from pyspark.sql import Window
-
     part = list(part or [])
     steps = life.groupBy(*part, "t").agg(
         F.sum(F.lit(1) - F.col("censored")).alias("d"),
@@ -1926,8 +2026,6 @@ def km_curve(life: DataFrame, part=None) -> DataFrame:
     (round-6 decimal ln sums).  Absorbed steps (d = n_at_risk)
     excluded.  Shared by the global retention curve and the per-cohort
     variant (kernel reuse guard-tested)."""
-    from pyspark.sql import Window
-
     part = list(part or [])
     risk = risk_table(life, part)
     kept = risk.filter(
@@ -2023,8 +2121,6 @@ def window_lorenz_curve_customers(
     semantics keep ties together; ntile splits them by custkey) —
     agreement pinned in tests/test_frontier.py.  Revenue aggregation
     itself is one map-side-combined groupBy either way."""
-    from pyspark.sql import Window
-
     cust = table(spark, sf_dir, "customer").select("c_custkey")
     orders = table(spark, sf_dir, "orders").select(
         "o_custkey", dec("o_totalprice").alias("p")
@@ -2140,8 +2236,6 @@ def window_debounce_events(
     Scale: one lag window partitioned by (user, type) — the shuffle is
     the same user-key shuffle every sessionization op pays; the output
     aggregate is map-side combined.  No global sort anywhere."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts", "event_id"
@@ -2635,8 +2729,6 @@ def window_classical_decomposition(
     window, weekday means, and variance aggregates all run over
     CALENDAR-sized tables.  Per-key decompositions partition every
     window by key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir)
     half = DECOMP_PERIOD // 2
     w = Window.orderBy("day").rowsBetween(-half, half)
@@ -3121,8 +3213,6 @@ def window_pettitt_changepoint(
     windows run over the CALENDAR-sized series (the O(n²) pair form
     this replaces would not survive a 10-year calendar).  Per-key
     variants partition both windows by key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir)
     ranked = daily.select(
         "day",
@@ -3226,8 +3316,6 @@ def window_markov_event_transitions(
     normalizing window is over a domain-bounded frame.  At 100 TB the
     only large exchange is the user_id repartition, shared with every
     other per-user sequence op."""
-    from pyspark.sql import Window
-
     seq = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("to_type"),
         F.lag("event_type")
@@ -3339,15 +3427,7 @@ def window_ccf_click_purchase(
         ).alias("y"),
         epoch=True,
     )
-    tot = daily.agg(
-        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mx"),
-        (F.sum("y").cast("double") / F.count(F.lit(1))).alias("my"),
-    )
-    dev = daily.crossJoin(F.broadcast(tot)).select(
-        "d",
-        (F.col("x").cast("double") - F.col("mx")).alias("ex"),
-        (F.col("y").cast("double") - F.col("my")).alias("ey"),
-    )
+    dev = _demeaned(daily, ex="x", ey="y")
     den = dev.agg(
         F.sum(
             F.round(F.col("ex") * F.col("ex"), 6).cast("decimal(18,6)")
@@ -3356,23 +3436,12 @@ def window_ccf_click_purchase(
             F.round(F.col("ey") * F.col("ey"), 6).cast("decimal(18,6)")
         ).alias("sy"),
     )
-    ks = spark.range(-CCF_MAX_LAG, CCF_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("k")
-    )
-    a, b = dev.alias("a"), dev.alias("b")
-    num = (
-        F.broadcast(ks)
-        .crossJoin(a)
-        .join(b, F.col("b.d") == F.col("a.d") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                F.round(F.col("a.ex") * F.col("b.ey"), 6).cast(
-                    "decimal(18,6)"
-                )
-            ).alias("sk"),
-        )
+    num = _lag_sums(
+        dev,
+        range(-CCF_MAX_LAG, CCF_MAX_LAG + 1),
+        "ex",
+        "ey",
+        "decimal(18,6)",
     )
     return num.crossJoin(F.broadcast(den)).select(
         F.col("k").cast("int").alias("lag_k"),
@@ -3583,8 +3652,6 @@ def window_page_hinkley_drift(
     Scale: everything after the map-side-combined daily collapse runs
     over the CALENDAR-sized series; per-key variants partition all
     four windows by key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir)
     cum = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -3928,8 +3995,6 @@ def window_decomposition_strength_by_type(
     partition by series key, so a million series parallelize across
     tasks with CALENDAR-sized state each; one shuffle on the series
     key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir, by_type=True)
     half = DECOMP_PERIOD // 2
     w = (
@@ -4068,8 +4133,6 @@ def window_markov_entropy_rate(
     Scale: identical to window_markov_event_transitions (one user_id
     lag shuffle, domain-bounded cells); the entropy arithmetic runs
     over 25 rows."""
-    from pyspark.sql import Window
-
     seq = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("to_type"),
         F.lag("event_type")
@@ -4177,8 +4240,6 @@ def window_interevent_burstiness(
     Scale: one shuffle on event_type (or (type, shard-day) for
     monster types), then constant-size per-type state — the cheapest
     possible shape for a per-key second-moment statistic."""
-    from pyspark.sql import Window
-
     gaps = table(spark, sf_dir, "events").select(
         "event_type",
         (
@@ -4277,8 +4338,6 @@ def window_top_event_paths(
     ≤ |types|³ (125 here) so the top-k runs on a domain-bounded
     table — TakeOrderedAndProject, no global sort of anything
     corpus-sized."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = table(spark, sf_dir, "events").select(
         F.col("event_type").alias("e"),
@@ -4371,8 +4430,6 @@ def window_record_days_trend(
     Scale: CALENDAR-sized windows after the map-side-combined daily
     collapse; the harmonic frame is n rows.  Per-key variants
     partition the prefix-max by key."""
-    from pyspark.sql import Window
-
     daily = _events_daily(spark, sf_dir)
     prev = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, -1
@@ -4677,8 +4734,6 @@ def window_user_growth_curve(
     it becomes the capture-recapture estimate
     (quality_capture_recapture_users) when the base is still
     growing."""
-    from pyspark.sql import Window
-
     first_seen = (
         table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -4911,23 +4966,8 @@ def window_ljung_box_residuals(
             F.round(F.col("v") * F.col("v"), 6).cast("decimal(38,6)")
         ).alias("s0")
     )
-    ks = spark.range(1, ACF_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("k")
-    )
-    a, b = dev.alias("a"), dev.alias("b")
-    num = (
-        F.broadcast(ks)
-        .crossJoin(a)
-        .join(b, F.col("b.d") == F.col("a.d") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                F.round(F.col("a.v") * F.col("b.v"), 6).cast(
-                    "decimal(38,6)"
-                )
-            ).alias("sk"),
-        )
+    num = _lag_sums(
+        dev, range(1, ACF_MAX_LAG + 1), "v", "v", "decimal(38,6)"
     )
     rho = num.crossJoin(F.broadcast(den)).select(
         "k",
@@ -5040,8 +5080,6 @@ def window_cohort_ltv_curve(
     event-scale.  Ages ≥ {LTV_AGE_WEEKS} weeks truncate (the
     reported-horizon convention; the grid is already complete for
     shorter ages)."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events")
     first_seen = ev.groupBy("user_id").agg(
         F.min(_event_day()).alias("cohort_day")
@@ -5171,7 +5209,6 @@ def window_nelson_aalen_hazard(
     (calendar-sized), via the SAME shared kernel (reuse
     guard-tested)."""
     life = _user_lifetimes(spark, sf_dir)
-    from pyspark.sql import Window
 
     risk = risk_table(life).filter(F.col("d") > 0)
     wlog = Window.orderBy("t").rowsBetween(
@@ -5293,8 +5330,6 @@ def window_logrank_test_cohorts(
     steps, then ALL work is on the (calendar x 2)-sized grid — the
     zero-filled grid join keeps each cohort's at-risk count defined at
     every pooled event time without a per-user scan."""
-    from pyspark.sql import Window
-
     life = _user_lifetimes(
         spark, sf_dir, (F.col("user_id") % 2).alias("g")
     )
@@ -5647,8 +5682,6 @@ def window_croston_intermittent(
     window over demand occurrences only (~J rows per part, J ~ tens),
     one aggregate — a million-part catalog is a million independent
     J-row series, nothing global."""
-    from pyspark.sql import Window
-
     weekly = (
         table(spark, sf_dir, "lineitem")
         .groupBy(
@@ -6219,8 +6252,6 @@ def window_shewhart_imr_chart(
     Scale: one map-side-combined groupBy to the (series x calendar)
     table, one lag window per series, a per-series limits row
     broadcast back — calendar-sized everything."""
-    from pyspark.sql import Window
-
     daily = _events_daily(
         spark, sf_dir, dec_sum("value", "x"), by_type=True
     )
@@ -6390,8 +6421,6 @@ def window_permutation_entropy_daily(
     combined groupBy; the lead() window runs on the GRID (one
     partition of ~2.4k rows — span-bounded, documented single-pass),
     and the pattern fold is a 6-column conditional aggregate."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir)
     w = Window.orderBy("day")
     lagged = daily.select(
@@ -6483,8 +6512,6 @@ def window_multiscale_permutation_entropy(
     max(2s) leads at once, then a |scales| × grid explode and a
     6-column conditional aggregate per scale.  The window still runs on
     the span-bounded day grid (~2.4k rows), never corpus rows."""
-    from pyspark.sql import Window
-
     offsets = sorted({k * s for s in MPE_SCALES for k in (1, 2)})
     daily = _orders_daily(spark, sf_dir)
     w = Window.orderBy("day")
@@ -6514,26 +6541,10 @@ def window_multiscale_permutation_entropy(
     return _permutation_entropy(stacked, "scale")
 
 
-#: Tolerance rank for sample entropy: the q-th percentile (by rank
-#: selection, ceil(q·(n-1))-th smallest) of absolute successive daily
-#: moves.  Rank selection keeps the tolerance an EXACT integer both
-#: engines pick identically — the float-free analog of the classical
-#: 0.2σ, scale-free under heavy-tailed revenue (σ itself would need a
-#: sqrt and a float multiply, reintroducing cross-engine drift into
-#: every template comparison).
-SAMPEN_TOL_RANK_NUM = 4
-SAMPEN_TOL_RANK_DEN = 5
-
-
 @register(
     "window_sample_entropy_daily",
     oracle=f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     seq AS (
         SELECT day, xm,
                lead(xm, 1) OVER (ORDER BY day) AS x1,
@@ -6544,15 +6555,7 @@ SAMPEN_TOL_RANK_DEN = 5
     moves AS (
         SELECT abs(x1 - xm) AS mv, day FROM seq WHERE x1 IS NOT NULL
     ),
-    tol AS (
-        SELECT mv AS r_tol FROM (
-            SELECT mv, row_number() OVER (ORDER BY mv, day) AS rk,
-                   count(*) OVER () AS nm
-            FROM moves
-        ) WHERE rk = (nm * {SAMPEN_TOL_RANK_NUM}
-                      + {SAMPEN_TOL_RANK_DEN} - 1)
-                     // {SAMPEN_TOL_RANK_DEN}
-    ),
+    {_MOVE_TOL_CTE},
     tpl AS (
         SELECT day, xm, x1, x2 FROM seq WHERE x2 IS NOT NULL
     ),
@@ -6603,8 +6606,6 @@ def window_sample_entropy_daily(
     documented span-bounded class as the hourly dCor/Hoeffding pair
     kernels; re-grid to weeks for multi-decade spans.  The corpus
     itself is touched once, by the map-side-combined daily groupBy."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
@@ -6621,25 +6622,7 @@ def window_sample_entropy_daily(
     moves = seq.filter(F.col("x1").isNotNull()).select(
         F.abs(F.col("x1") - F.col("xm")).alias("mv"), "day"
     )
-    wm = Window.orderBy("mv", "day")
-    wn = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    tol = (
-        moves.select(
-            "mv",
-            F.row_number().over(wm).alias("rk"),
-            F.count(F.lit(1)).over(wn).alias("nm"),
-        )
-        .filter(
-            F.col("rk")
-            == F.expr(
-                f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
-                f" div {SAMPEN_TOL_RANK_DEN}"
-            )
-        )
-        .select(F.col("mv").alias("r_tol"))
-    )
+    tol = _move_tolerance(moves)
     tpl = seq.filter(F.col("x2").isNotNull())
     a, b = tpl.alias("a"), tpl.alias("b")
     pairs = (
@@ -6716,12 +6699,7 @@ def _hurst_slope_expr() -> str:
 @register(
     "window_hurst_rs_daily",
     oracle=f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     idx AS (
         SELECT xm, row_number() OVER (ORDER BY day) - 1 AS t FROM daily
     ),
@@ -6820,8 +6798,6 @@ def window_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode the grid ×|sizes| (calendar-bounded); per-block windows
     partition by (s, block) — thousands of tiny partitions, no global
     sort; everything after the grid is span-sized."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
@@ -6955,12 +6931,7 @@ def _vr_oracle() -> str:
         for q in VR_Q_PERIODS
     )
     return f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     lagd AS (
         SELECT day, xm,
                lag(xm, 1) OVER (ORDER BY day) AS p1,
@@ -7050,8 +7021,6 @@ def window_variance_ratio_daily(
     window pass over the span-bounded grid (~2.4k rows) produces all
     |Q|+1 lags; the explode is grid × |Q| and the rest is a 4-group
     aggregate.  The corpus is touched exactly once."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     lagd = daily.select(
@@ -7143,12 +7112,7 @@ def _msse_oracle() -> str:
         for s in SAMPEN_SCALES
     )
     return f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     seq AS (
         SELECT day, xm,
                {lead_cols}
@@ -7238,8 +7202,6 @@ def window_multiscale_sample_entropy(
     calendar-bounded day grid (~4 × 2.9M comparisons at the TPC-H
     span) — the same documented span-bounded class as the hourly
     dCor/Hoeffding kernels; the corpus is touched once."""
-    from pyspark.sql import Window
-
     offsets = sorted({k * s for s in SAMPEN_SCALES for k in (1, 2)})
     daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
@@ -7267,24 +7229,7 @@ def window_multiscale_sample_entropy(
     moves = stacked.filter(F.col("x1").isNotNull()).select(
         "scale", F.abs(F.col("x1") - F.col("x0")).alias("mv"), "day"
     )
-    wm = Window.partitionBy("scale").orderBy("mv", "day")
-    wp = Window.partitionBy("scale")
-    tol = (
-        moves.select(
-            "scale",
-            "mv",
-            F.row_number().over(wm).alias("rk"),
-            F.count(F.lit(1)).over(wp).alias("nm"),
-        )
-        .filter(
-            F.col("rk")
-            == F.expr(
-                f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
-                f" div {SAMPEN_TOL_RANK_DEN}"
-            )
-        )
-        .select("scale", F.col("mv").alias("r_tol"))
-    )
+    tol = _move_tolerance(moves, "scale")
     tpl = stacked.filter(F.col("x2").isNotNull())
     a, b = tpl.alias("a"), tpl.alias("b")
     pairs = (
@@ -7348,12 +7293,7 @@ def _apen_oracle() -> str:
         " 12) AS DECIMAL(38,12))) AS DOUBLE) / CAST(MAX(nn) AS DOUBLE)"
     )
     return f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     seq AS (
         SELECT day, xm,
                lead(xm, 1) OVER (ORDER BY day) AS x1,
@@ -7440,8 +7380,6 @@ def window_approximate_entropy_daily(
     Scale: the two count stages are grid² on the calendar day grid —
     the documented span-bounded class (the corpus is touched once by
     the daily groupBy); re-grid to weeks for multi-decade spans."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
@@ -7460,25 +7398,7 @@ def window_approximate_entropy_daily(
     moves = seq.filter(F.col("x1").isNotNull()).select(
         F.abs(F.col("x1") - F.col("xm")).alias("mv"), "day"
     )
-    wm = Window.orderBy("mv", "day")
-    wn = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    tol = (
-        moves.select(
-            "mv",
-            F.row_number().over(wm).alias("rk"),
-            F.count(F.lit(1)).over(wn).alias("nm"),
-        )
-        .filter(
-            F.col("rk")
-            == F.expr(
-                f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
-                f" div {SAMPEN_TOL_RANK_DEN}"
-            )
-        )
-        .select(F.col("mv").alias("r_tol"))
-    )
+    tol = _move_tolerance(moves)
 
     def phi_frame(tpl: DataFrame, cols: tuple[str, ...]) -> DataFrame:
         a, b = tpl.alias("a"), tpl.alias("b")
@@ -7695,8 +7615,6 @@ def window_dfa_alpha_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined groupBy to the day grid, ×|sizes| calendar-bounded block
     explode, per-block windows partitioned by (s, block), slope on one
     pivoted row.  The corpus is touched once."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "count")
     idx = daily.select(
         "xm",
@@ -7894,12 +7812,7 @@ _BDS_Z = (
 @register(
     "window_bds_test_daily",
     oracle=f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     seq AS (
         SELECT day, xm,
                lead(xm, 1) OVER (ORDER BY day) AS x1
@@ -7908,15 +7821,7 @@ _BDS_Z = (
     moves AS (
         SELECT abs(x1 - xm) AS mv, day FROM seq WHERE x1 IS NOT NULL
     ),
-    tol AS (
-        SELECT mv AS r_tol FROM (
-            SELECT mv, row_number() OVER (ORDER BY mv, day) AS rk,
-                   count(*) OVER () AS nm
-            FROM moves
-        ) WHERE rk = (nm * {SAMPEN_TOL_RANK_NUM}
-                      + {SAMPEN_TOL_RANK_DEN} - 1)
-                     // {SAMPEN_TOL_RANK_DEN}
-    ),
+    {_MOVE_TOL_CTE},
     tpl AS (
         SELECT day, xm AS x0, x1 FROM seq WHERE x1 IS NOT NULL
     ),
@@ -7981,8 +7886,6 @@ def window_bds_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair pass (calendar-bounded, ~2.9M flag rows at the TPC-H span)
     feeds both the global P1/P2 fold and the per-point count fold;
     the corpus is touched once."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     w = Window.orderBy("day")
     seq = daily.select(
@@ -7991,25 +7894,7 @@ def window_bds_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves = seq.filter(F.col("x1").isNotNull()).select(
         F.abs(F.col("x1") - F.col("xm")).alias("mv"), "day"
     )
-    wm = Window.orderBy("mv", "day")
-    wn = Window.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    tol = (
-        moves.select(
-            "mv",
-            F.row_number().over(wm).alias("rk"),
-            F.count(F.lit(1)).over(wn).alias("nm"),
-        )
-        .filter(
-            F.col("rk")
-            == F.expr(
-                f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
-                f" div {SAMPEN_TOL_RANK_DEN}"
-            )
-        )
-        .select(F.col("mv").alias("r_tol"))
-    )
+    tol = _move_tolerance(moves)
     tpl = seq.filter(F.col("x1").isNotNull()).select(
         "day", F.col("xm").alias("x0"), "x1"
     )
@@ -8164,8 +8049,6 @@ def window_higuchi_fd_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing is a |K|-way self-equi-join on the day index (narrow,
     calendar-bounded); everything after the (k, m) aggregate is
     |K|·k_max rows on one pivoted row.  The corpus is touched once."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "count")
     idx = daily.select(
         "xm",
@@ -8236,12 +8119,7 @@ RQA_LMIN = 2
 @register(
     "window_rqa_determinism_daily",
     oracle=f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     idx AS (
         SELECT xm, day,
                row_number() OVER (ORDER BY day) - 1 AS t,
@@ -8252,15 +8130,7 @@ RQA_LMIN = 2
         SELECT abs(lead(xm) OVER (ORDER BY day) - xm) AS mv, day
         FROM idx QUALIFY mv IS NOT NULL
     ),
-    tol AS (
-        SELECT mv AS r_tol FROM (
-            SELECT mv, row_number() OVER (ORDER BY mv, day) AS rk,
-                   count(*) OVER () AS nm
-            FROM moves
-        ) WHERE rk = (nm * {SAMPEN_TOL_RANK_NUM}
-                      + {SAMPEN_TOL_RANK_DEN} - 1)
-                     // {SAMPEN_TOL_RANK_DEN}
-    ),
+    {_MOVE_TOL_CTE},
     rec AS MATERIALIZED (
         SELECT b.t - a.t AS d, a.t AS i
         FROM idx a JOIN idx b ON a.t < b.t, tol
@@ -8324,8 +8194,6 @@ def window_rqa_determinism_daily(
     precedent — bounded by the date domain, not the corpus); the
     islands window partitions by diagonal (≤ n partitions, rows =
     recurrent pairs only).  One corpus scan builds the day grid."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
@@ -8344,18 +8212,7 @@ def window_rqa_determinism_daily(
         )
         .filter(F.col("mv").isNotNull())
     )
-    ranked = moves.select(
-        "mv",
-        F.row_number().over(Window.orderBy("mv", "day")).alias("rk"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("nm"),
-    )
-    tol = ranked.filter(
-        F.col("rk")
-        == F.expr(
-            f"(nm * {SAMPEN_TOL_RANK_NUM} + {SAMPEN_TOL_RANK_DEN} - 1)"
-            f" div {SAMPEN_TOL_RANK_DEN}"
-        )
-    ).select(F.col("mv").alias("r_tol"))
+    tol = _move_tolerance(moves)
     a = idx.select(F.col("t").alias("ta"), F.col("xm").alias("xa"))
     b = idx.select(F.col("t").alias("tb"), F.col("xm").alias("xb"))
     rec = (
@@ -8646,12 +8503,7 @@ def _lyap_oracle() -> str:
         f"CAST(n_{k} AS BIGINT) AS n_{k}, y_{k}" for k in LYAP_HORIZONS
     )
     return f"""
-    WITH daily AS (
-        SELECT o_orderdate AS day,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) * 1000000
-                    AS BIGINT) AS xm
-        FROM orders GROUP BY 1
-    ),
+    WITH {_ORDERS_MICRO_CTE},
     idx AS (
         SELECT xm, row_number() OVER (ORDER BY day) - 1 AS t FROM daily
     ),
@@ -8723,8 +8575,6 @@ def window_lyapunov_rosenstein_daily(
     corpus); the argmin is one window partitioned by point; horizon
     tracking is |K| self-equi-joins on the day index.  One corpus scan
     builds the grid."""
-    from pyspark.sql import Window
-
     daily = _orders_daily(spark, sf_dir, "micro")
     idx = daily.select(
         "xm",
@@ -8907,15 +8757,8 @@ def window_periodogram_daily(
     on |periods| rows.  Per-key spectra at 100 TB: partition dev by
     series key, same plan."""
     daily = _events_daily(spark, sf_dir, epoch=True)
-    tot = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
-        F.min("d").alias("dmin"),
-    )
-    dev = daily.crossJoin(F.broadcast(tot)).select(
-        (F.col("d") - F.col("dmin")).alias("t"),
-        (F.col("x").cast("double") - F.col("mu")).alias("e"),
-        "n",
+    dev = _demeaned(daily, e="x").select(
+        (F.col("d") - F.col("dmin")).alias("t"), "e", "n"
     )
     ps = spark.range(
         PERIODOGRAM_PERIODS[0], PERIODOGRAM_PERIODS[-1] + 1
@@ -8945,11 +8788,10 @@ def window_periodogram_daily(
             / F.col("n_days")
         ).alias("power"),
     )
-    from pyspark.sql import Window as _W
 
     ranked = powr.withColumn(
         "rk",
-        F.row_number().over(_W.orderBy(F.col("power").desc(), "p")),
+        F.row_number().over(Window.orderBy(F.col("power").desc(), "p")),
     )
     return ranked.select(
         F.col("p").cast("int").alias("period"),

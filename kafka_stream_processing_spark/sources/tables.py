@@ -11,7 +11,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 #: All tables the driver generates (TESTDATA.md).
 TABLES = (
@@ -73,9 +74,6 @@ def normalize_events(df: DataFrame) -> DataFrame:
     spark.sql.legacy.parquet.nanosAsLong it arrives as a bigint of epoch
     nanos.  Convert to TimestampType at microsecond resolution (floor), the
     same truncation DuckDB applies when it reads the nanos column."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
     if isinstance(df.schema["ts"].dataType, LongType):
         # Integer division — a double-precision detour would corrupt the
         # low microsecond digits (epoch nanos exceed 2^53).

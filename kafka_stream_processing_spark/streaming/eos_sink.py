@@ -49,7 +49,7 @@ import json
 import os
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 class TransactionalProducer:
@@ -267,8 +267,6 @@ def _register_roundtrip_query() -> None:
     gets a driver-checked oracle row, not just crash tests."""
     import shutil
     import itertools
-
-    from pyspark.sql import SparkSession
 
     from kafka_stream_processing_spark.registry import register
     from kafka_stream_processing_spark.sources.tables import normalize_events

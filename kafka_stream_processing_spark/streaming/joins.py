@@ -9,14 +9,20 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from kafka_stream_processing_spark.operators.corpus import (
     AMS_F2_ORACLE,
+    BOTTOMK_K,
     CM_AUDIT_ORACLE,
     CONTAMINATION_ORACLE,
+    ams_report,
+    ams_z,
+    cm_cells,
+    cm_item_col,
+    cm_report,
 )
 from kafka_stream_processing_spark.operators.tail_scoring import (
     _FS_THETA_V1_SQL,
@@ -27,8 +33,15 @@ from kafka_stream_processing_spark.operators.tail_scoring import (
 from kafka_stream_processing_spark.operators.text import (
     DUP_TRIGRAM_FRAC_MAX,
     TOP_BIGRAM_FRAC_MAX,
+    repetition_flag,
+    repetition_metrics,
 )
-from kafka_stream_processing_spark.operators.windowed import _event_day
+from kafka_stream_processing_spark.operators.windowed import (
+    PETTITT_LN40,
+    _PERM_ENTROPY_EXPR,
+    _event_day,
+    _permutation_entropy,
+)
 from kafka_stream_processing_spark.operators.word_kernel import (
     _word_counts,
     _word_grams,
@@ -36,7 +49,10 @@ from kafka_stream_processing_spark.operators.word_kernel import (
     words,
 )
 from kafka_stream_processing_spark.registry import register
-from kafka_stream_processing_spark.sources.tables import normalize_events
+from kafka_stream_processing_spark.sources.tables import (
+    normalize_events,
+    table,
+)
 from kafka_stream_processing_spark.streaming.unique_users import (
     _stream_chunked_source_dir,
     _stream_source_dir,
@@ -110,10 +126,6 @@ def _walk_against_src0(
     present in either, with the reference count ``a`` and batch count
     ``b`` (0 where absent), the running counts ``ca``/``cb`` up to and
     including ``v``, and the chunk totals ``na``/``nb``.  All integers."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.sources.tables import table
-
     ref = (
         table(spark, sf_dir, "documents")
         .filter(F.col("source") == "src0")
@@ -458,8 +470,6 @@ def stream_ingest_dedup_static_corpus(spark: SparkSession, sf_dir: str) -> DataF
     explicit instead of implicit in producer retries."""
     path = _stream_doc_batch_source_dir(sf_dir)
 
-    from kafka_stream_processing_spark.sources.tables import table
-
     # persist(): a stream-static join re-plans the STATIC side every
     # micro-batch — uncached, the full-corpus distinct would re-run once
     # per trigger (3x here, every trigger at scale).
@@ -530,8 +540,6 @@ def stream_contamination_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason when the bench set (a few MB for any real eval suite) fits in
     a broadcast; this is the decontamination gate a streaming ingest
     pipeline bolts between crawl and corpus-commit."""
-    from kafka_stream_processing_spark.sources.tables import table
-
     # persist(): the static side of a stream-static join re-plans every
     # micro-batch — uncached, the bench-set collect_set would re-run
     # once per trigger instead of materializing "ONE broadcast row".
@@ -633,9 +641,6 @@ def stream_lm_surprisal_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exactly how a CCNet-style gate deploys: model artifact fixed,
     stream scored against it)."""
     from kafka_stream_processing_spark.session import default_parallelism
-    from kafka_stream_processing_spark.sources.tables import table
-
-    from pyspark.sql import Window
 
     vocab = _word_counts(table(spark, sf_dir, "documents"))
     surp = F.round(
@@ -729,8 +734,6 @@ def stream_cdc_last_writer_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarting the stream needs no state recovery, only the last
     generation pointer."""
     import os
-
-    from pyspark.sql import Window
 
     import shutil
 
@@ -917,13 +920,6 @@ def stream_countmin_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in the accumulator, not the state store — restart recovery is
     re-folding from the last persisted sketch, exactly how a daily
     sketch pipeline resumes."""
-    from kafka_stream_processing_spark.operators.corpus import (
-        cm_cells,
-        cm_item_col,
-        cm_report,
-    )
-    from kafka_stream_processing_spark.sources.tables import table
-
     path = _stream_chunked_source_dir(sf_dir)
     acc: dict[tuple[int, int], int] = {}
 
@@ -1160,8 +1156,6 @@ def stream_benford_digit_monitor(
     Scale: per-trigger state is the 9-cell histogram regardless of
     batch size (map-side combined); nothing enters the streaming state
     store; verdicts are per-batch final, so a restart loses no state."""
-    from pyspark.sql import Window
-
     from kafka_stream_processing_spark.operators.quality_edf import BENFORD_P
     from kafka_stream_processing_spark.operators.quality_kernel import (
         CHI2_CRIT_005,
@@ -1820,14 +1814,11 @@ def stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈ max(n_chars)/100 cells whatever the batch size); the reference
     histogram is computed once; nothing in the state store — restart
     re-reads the reference, verdicts are per-batch final."""
-    from pyspark.sql import Window
-
     from kafka_stream_processing_spark.operators.quality_edf import (
         PSI_BUCKET_CHARS,
         PSI_DRIFT_THRESHOLD,
         PSI_SMOOTH,
     )
-    from kafka_stream_processing_spark.sources.tables import table
 
     def bucket_hist(b: DataFrame) -> DataFrame:
         return b.groupBy(
@@ -2177,10 +2168,6 @@ def stream_isotonic_recalibration(
 
 
 def _pettitt_monitor_oracle() -> str:
-    from kafka_stream_processing_spark.operators.windowed import (
-        PETTITT_LN40,
-    )
-
     return f"""
     WITH ordered AS (
         SELECT event_id, ts, value,
@@ -2270,12 +2257,6 @@ def stream_pettitt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-trigger driver traffic is one daily histogram
     (≤ calendar days); nothing in the streaming state store — verdicts
     are per-batch final and a restart loses no state."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.operators.windowed import (
-        PETTITT_LN40,
-    )
-
     stream = normalize_events(
         file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
@@ -2408,8 +2389,6 @@ def stream_markov_transition_monitor(
     map-side-combined groupBy; driver state is the domain-bounded
     transition table.  Nothing in the streaming state store —
     verdicts per-batch final, restart loses nothing."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
 
     def transitions(b: DataFrame) -> DataFrame:
@@ -2730,7 +2709,6 @@ def stream_attribution_monitor(
         ATTRIB_LOOKBACK_DAYS,
     )
     from kafka_stream_processing_spark.functions.exact import dec
-    from pyspark.sql import Window
 
     def channel_credit(batch_df: DataFrame) -> DataFrame:
         k = F.get_json_object("props", "$.k").cast("bigint")
@@ -2893,7 +2871,6 @@ def stream_ece_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafka_stream_processing_spark.operators.quality_calibration import (
         _length_bins,
     )
-    from kafka_stream_processing_spark.sources.tables import table
 
     path = _stage_doc_chunks(sf_dir, "source = 'src0'", "testdocs")
     stream = file_stream(spark, path).select("doc_id", "n_chars", "text")
@@ -3017,8 +2994,6 @@ def stream_quantile_monitor(
     batch; for unbounded-domain columns the documented swap is the
     approx_percentile sketch (quality_approx_quantiles), same
     table shape."""
-    from pyspark.sql import Window
-
     hist = _train_length_histograms(spark, sf_dir)
     keys = hist.groupBy("chunk_min_doc_id").agg(
         F.sum("c").alias("nb")
@@ -3248,8 +3223,6 @@ def stream_scd2_incremental(
     import re
     import shutil
 
-    from pyspark.sql import Window
-
     path = _source_path or _stream_chunked_source_dir(sf_dir)
     base = fresh_run_dir(sf_dir, "kssp_scd2_target")
     # Expected chunk ordinals, read from the staged filenames once —
@@ -3439,8 +3412,6 @@ def stream_scd2_incremental(
 # ---------------------------------------------------------------------------
 
 def _bottomk_stream_oracle() -> str:
-    from kafka_stream_processing_spark.operators.corpus import BOTTOMK_K
-
     return f"""
     WITH ordered AS (
         SELECT event_id, user_id,
@@ -3521,7 +3492,6 @@ def stream_bottomk_maintenance(
     k-row TakeOrderedAndProject collect; the merge is O(k log k) on
     the driver.  This is the pattern for ANY mergeable sketch riding
     foreachBatch."""
-    from kafka_stream_processing_spark.operators.corpus import BOTTOMK_K
     from kafka_stream_processing_spark.operators.dedup import hash64
 
     path = _stream_chunked_source_dir(sf_dir)
@@ -3813,8 +3783,6 @@ def stream_wasserstein_monitor(
     histogram computes once; verdict math is windows over distinct
     values per chunk — zero state store, order-independent batch keys,
     relational chunk reconstruction in the oracle."""
-    from pyspark.sql import Window
-
     hist = _train_length_histograms(spark, sf_dir)
     walked = _walk_against_src0(spark, sf_dir, hist).withColumn(
         "v_next",
@@ -3960,8 +3928,6 @@ def stream_circadian_monitor(
     Scale: per-trigger state is a ≤24-cell integer histogram whatever
     the batch size; nothing in the streaming state store — restarts
     lose no state, verdicts are per-batch final."""
-    from pyspark.sql import Window
-
     from kafka_stream_processing_spark.operators.quality_edf import (
         WATSON_U2_CRIT_005,
     )
@@ -4116,11 +4082,6 @@ def stream_repetition_monitor(
     collapse to one flag per document; per-trigger driver traffic is
     two integers.  Zero streaming state, verdicts final per batch,
     min-doc_id keyed so batch order cannot matter."""
-    from kafka_stream_processing_spark.operators.text import (
-        repetition_flag,
-        repetition_metrics,
-    )
-
     stream = file_stream(spark, _stream_train_docs_source_dir(sf_dir)).select(
         "doc_id", "text"
     )
@@ -4145,10 +4106,6 @@ def stream_repetition_monitor(
 
 
 def _perm_entropy_monitor_oracle() -> str:
-    from kafka_stream_processing_spark.operators.windowed import (
-        _PERM_ENTROPY_EXPR,
-    )
-
     return """
     WITH ordered AS (
         SELECT event_id, ts, value,
@@ -4229,12 +4186,6 @@ def stream_permutation_entropy_monitor(
     (≤ calendar days, the documented histogram-sized-by-construction
     collect); no streaming state store — verdicts are per-batch final
     and a restart loses no state."""
-    from pyspark.sql import Window
-
-    from kafka_stream_processing_spark.operators.windowed import (
-        _permutation_entropy,
-    )
-
     stream = normalize_events(
         file_stream(spark, _stream_chunked_source_dir(sf_dir))
     )
@@ -4275,13 +4226,6 @@ def stream_ams_f2_incremental(
     Count-Min contract verbatim); per-batch executor work is one
     explode(16) + map-side-combined SUM.  Restart recovery is
     re-folding from the last persisted Z vector."""
-    from kafka_stream_processing_spark.operators.corpus import (
-        ams_report,
-        ams_z,
-        cm_item_col,
-    )
-    from kafka_stream_processing_spark.sources.tables import table
-
     path = _stream_chunked_source_dir(sf_dir)
     acc: dict[int, int] = {}
 
@@ -4398,8 +4342,6 @@ def stream_tail_es_monitor(
     post-stream math runs on histogram-sized frames.  For
     unbounded-domain value columns the documented swap is the
     approx_percentile sketch, same table shape."""
-    from pyspark.sql import Window
-
     hist = _train_length_histograms(spark, sf_dir)
     keys = hist.groupBy("chunk_min_doc_id").agg(
         F.sum("c").cast("bigint").alias("nb")

@@ -17,7 +17,7 @@ from collections.abc import Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -103,7 +103,6 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = run_to_memory(updated, mode="update")
     # The memory sink holds one emission per (user, batch); the final one
     # per user (max n_events — counts are monotone) is the answer.
-    from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (

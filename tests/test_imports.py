@@ -1,4 +1,5 @@
-"""Unused imports, found with the standard library's ``ast``.
+"""Unused and misplaced imports, found with the standard library's
+``ast``.
 
 The repository runs no linter, so an import that nothing reads survives
 every refactor that removes its last use.  This check walks every
@@ -6,6 +7,12 @@ module of the package, the tests, the entry points and the benchmark,
 and fails on an import whose bound name is never read in the scope
 that imports it: the module for a module-level import, the function
 (nested functions and lambdas included) for a function-level one.
+
+A second check fails on a function-level import, inside the package,
+of a module its file already imports at top level: that import breaks
+no cycle (the module is loaded with the file anyway) and belongs at the
+top.  Lazy imports of modules the file does not import at top level
+are left alone.
 """
 
 from __future__ import annotations
@@ -47,20 +54,48 @@ def _bound_names(node: ast.Import | ast.ImportFrom) -> list[str]:
     return names
 
 
-def _own_imports(scope: ast.AST) -> list[str]:
-    """The names imported directly in ``scope``'s body (inside its
+def _own_import_nodes(scope: ast.AST) -> list[ast.Import | ast.ImportFrom]:
+    """The import statements directly in ``scope``'s body (inside its
     if/try/with/for blocks too), not in nested functions or classes."""
-    found: list[str] = []
+    found: list[ast.Import | ast.ImportFrom] = []
     stack = list(ast.iter_child_nodes(scope))
     while stack:
         node = stack.pop()
         if isinstance(node, (ast.Import, ast.ImportFrom)):
-            found.extend(_bound_names(node))
+            found.append(node)
         elif not isinstance(
             node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef,
                    ast.Lambda)
         ):
             stack.extend(ast.iter_child_nodes(node))
+    return found
+
+
+def _own_imports(scope: ast.AST) -> list[str]:
+    """The names imported directly in ``scope``'s body."""
+    return [n for node in _own_import_nodes(scope) for n in _bound_names(node)]
+
+
+def _imported_modules(node: ast.Import | ast.ImportFrom) -> list[str]:
+    if isinstance(node, ast.ImportFrom):
+        return [node.module] if node.level == 0 else []
+    return [alias.name for alias in node.names]
+
+
+def hoistable_imports(tree: ast.Module, rel: str) -> list[str]:
+    """Function-level imports of a module that ``tree`` already imports
+    at top level."""
+    top = {m for node in _own_import_nodes(tree)
+           for m in _imported_modules(node)}
+    found = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in sorted(_own_import_nodes(fn), key=lambda n: n.lineno):
+            found += [
+                f"{rel}:{node.lineno} {fn.name}: {m}"
+                for m in _imported_modules(node) if m in top
+            ]
     return found
 
 
@@ -127,3 +162,37 @@ def test_scan_sees_function_and_module_imports():
     assert sorted(_own_imports(f)) == ["_W", "kept"]
     assert {"kept", "used"} <= _read_names(tree)
     assert not {"os", "_W"} & _read_names(tree)
+
+
+def test_no_function_import_of_a_top_level_module():
+    pkg = ROOT / "kafka_stream_processing_spark"
+    found = [
+        h
+        for path in sorted(pkg.rglob("*.py"))
+        for h in hoistable_imports(
+            ast.parse(path.read_text()), path.relative_to(ROOT).as_posix()
+        )
+    ]
+    assert not found, (
+        "function-level imports of a module already imported at top "
+        "level:\n" + "\n".join(found)
+    )
+
+
+def test_hoist_scan_flags_only_top_level_modules():
+    tree = ast.parse(
+        "import os\n"
+        "from pyspark.sql import DataFrame\n"
+        "def f():\n"
+        "    import os\n"
+        "    from pyspark.sql import Window as _W\n"
+        "    from pyspark.sql.types import LongType\n"
+        "    def g():\n"
+        "        from pyspark.sql import Column\n"
+        "    return _W, LongType, g\n"
+    )
+    assert hoistable_imports(tree, "m.py") == [
+        "m.py:4 f: os",
+        "m.py:5 f: pyspark.sql",
+        "m.py:8 g: pyspark.sql",
+    ]

@@ -2,17 +2,28 @@
 
 from __future__ import annotations
 
+import ast
 import inspect
 import math
 import os
 import pathlib
+import re
 import subprocess
 import sys
 
 import duckdb
+import numpy as np
 
 import kafka_stream_processing_spark
 from kafka_stream_processing_spark.operators import windowed
+
+
+def _package_texts() -> dict[str, str]:
+    package = pathlib.Path(kafka_stream_processing_spark.__file__).parent
+    return {
+        str(p.relative_to(package)): p.read_text()
+        for p in sorted(package.rglob("*.py"))
+    }
 
 
 def test_windowed_operators_share_one_daily_series():
@@ -24,11 +35,7 @@ def test_windowed_operators_share_one_daily_series():
     ``_permutation_entropy``."""
     source = inspect.getsource(windowed)
     assert source.count('F.col("o_orderdate").alias("day")') == 1
-    package = pathlib.Path(kafka_stream_processing_spark.__file__).parent
-    texts = {
-        str(p.relative_to(package)): p.read_text()
-        for p in sorted(package.rglob("*.py"))
-    }
+    texts = _package_texts()
     day_buckets = {
         name: n
         for name, text in texts.items()
@@ -108,3 +115,174 @@ def test_r6_rounds_like_duckdb_round():
     assert [(g, math.copysign(1.0, g)) for g in got] == [
         (w, math.copysign(1.0, w)) for w in want
     ]
+
+
+def _calls(node: ast.AST, name: str) -> list[ast.Call]:
+    """Calls under ``node`` of ``name`` (a bare name or an attribute)."""
+    return [
+        n for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and (getattr(n.func, "attr", None) or getattr(n.func, "id", None))
+        == name
+    ]
+
+
+def _is_value_sum(call: ast.Call) -> bool:
+    """``F.sum(dec("value"))``."""
+    return (
+        getattr(call.func, "attr", None) == "sum"
+        and len(call.args) == 1
+        and isinstance(call.args[0], ast.Call)
+        and getattr(call.args[0].func, "id", None) == "dec"
+        and [getattr(a, "value", None) for a in call.args[0].args]
+        == ["value"]
+    )
+
+
+def test_tail_and_rank_operators_share_one_events_daily_series():
+    """The events daily series (the events table grouped on
+    ``_event_day()`` and aggregated with ``F.sum(dec("value"))``) is
+    built once, in ``_events_daily``; tail_scoring.py and
+    quality_rank.py call it."""
+    copies = []
+    for name, text in _package_texts().items():
+        for agg in _calls(ast.parse(text), "agg"):
+            grouped = agg.func.value
+            if (
+                isinstance(grouped, ast.Call)
+                and getattr(grouped.func, "attr", None) == "groupBy"
+                and _calls(grouped, "_event_day")
+                and any(
+                    getattr(a, "value", None) == "events"
+                    for t in _calls(grouped.func.value, "table")
+                    for a in t.args
+                )
+                and any(_is_value_sum(c) for c in _calls(agg, "sum"))
+            ):
+                copies.append(f"{name}:{agg.lineno}")
+    assert len(copies) == 1 and copies[0].startswith("operators/windowed.py")
+
+
+def test_serial_dependence_kernels_have_one_home():
+    """The Spark-side move-tolerance rank, the lag-product join and the
+    Wilson-Hilferty chi-square fallback are written once each:
+    ``_move_tolerance`` and ``_lag_sums`` in windowed.py,
+    ``_chi2_crit_005`` in quality_kernel.py."""
+    texts = _package_texts()
+    joined = "\n".join(texts.values())
+    tol_rank = re.compile(r'SAMPEN_TOL_RANK_DEN\} - 1\)"\s*f" div ')
+    assert len(tol_rank.findall(joined)) == 1
+    assert joined.count('F.col("b.d") == F.col("a.d") + F.col("k")') == 1
+    users = sorted(
+        name for name, text in texts.items()
+        if any(
+            isinstance(n, ast.Name) and n.id == "_WH_Z095"
+            or isinstance(n, ast.alias) and n.name == "_WH_Z095"
+            for n in ast.walk(ast.parse(text))
+        )
+    )
+    assert users == ["operators/quality_kernel.py"]
+
+
+def _frame(spark, rows, schema):
+    """``rows`` as an inline VALUES table: planned in the JVM, with a
+    size estimate, and run without Python workers (a parallelized list
+    runs one per partition and plans range joins as cartesians)."""
+    fields = [f.split() for f in schema.split(", ")]
+    values = ", ".join(
+        "(" + ", ".join(
+            f"CAST({v} AS {t})" for v, (_, t) in zip(r, fields)
+        ) + ")"
+        for r in rows
+    )
+    names = ", ".join(n for n, _ in fields)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names})")
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def test_move_tolerance_picks_the_rank_by_mv_then_day(spark):
+    """``r_tol`` is the ceil(4n/5)-th smallest move in (mv, day) order:
+    exactly one row per group even when the rank falls inside a run of
+    tied moves, unpartitioned for n = 1..7 and per ``scale``."""
+    moves = [3, 1, 3, 3, 0, 7, 3]  # ties at 3; day = list position
+    want = {}
+    rows = []
+    for n in range(1, len(moves) + 1):
+        ranked = sorted((mv, day) for day, mv in enumerate(moves[:n]))
+        want[n] = ranked[-(-n * 4 // 5) - 1][0]
+        rows += [(n, day, mv) for day, mv in enumerate(moves[:n])]
+        df = _frame(
+            spark,
+            [(day, mv) for day, mv in enumerate(moves[:n])],
+            "day int, mv bigint",
+        )
+        assert _rows(windowed._move_tolerance(df), "r_tol") == [(want[n],)]
+    per_scale = _frame(spark, rows, "scale int, day int, mv bigint")
+    assert _rows(
+        windowed._move_tolerance(per_scale, "scale"), "scale", "r_tol"
+    ) == sorted(want.items())
+
+
+def test_lag_sums_match_numpy_acf_over_calendar_gaps(spark):
+    """``_demeaned`` + ``_lag_sums`` give numpy's lagged cross-product
+    sums over the calendar (the ACF for u = v, the CCF for u != v):
+    days 3 and 6 are missing, so a lag that would cross them adds no
+    pair.  Integer values and means keep every product exact."""
+    days = [0, 1, 2, 4, 5, 7, 8, 9]
+    xs = [5, 9, 2, 8, 4, 6, 1, 13]  # mean 6
+    ys = [1, 0, 4, 2, 2, 3, 0, 4]  # mean 2
+    daily = _frame(spark, list(zip(days, xs, ys)), "d int, x bigint, y int")
+    dev = windowed._demeaned(daily, e="x", f="y")
+    grid = {}
+    for name, vals in (("e", xs), ("f", ys)):
+        grid[name] = np.full(days[-1] + 1, np.nan)
+        grid[name][days] = np.array(vals, dtype=float) - np.mean(vals)
+
+    def numpy_sums(u, v, ks):
+        out = []
+        for k in ks:
+            a = grid[u][max(0, -k): len(grid[u]) - max(0, k)]
+            b = grid[v][max(0, k): len(grid[v]) - max(0, -k)]
+            prods = (a * b)[~np.isnan(a * b)]
+            out.append((k, len(prods), float(prods.sum())))
+        return out
+
+    for u, v in (("e", "e"), ("e", "f")):
+        got = _rows(
+            windowed._lag_sums(dev, range(-2, 4), u, v, "decimal(18,6)"),
+            "k", "n_pairs", "sk",
+        )
+        assert [(k, n, float(s)) for k, n, s in got] == numpy_sums(
+            u, v, range(-2, 4)
+        )
+    s0 = float(np.nansum(grid["e"] * grid["e"]))
+    acf = [s / s0 for _, _, s in numpy_sums("e", "e", range(1, 4))]
+    got = _rows(
+        windowed._lag_sums(dev, range(1, 4), "e", "e", "decimal(18,6)"),
+        "k", "sk",
+    )
+    assert [float(s) / s0 for _, s in got] == acf
+
+
+def test_trailing_window_keeps_only_complete_windows(spark):
+    """Only days whose trailing PINBALL_WINDOW days are all present are
+    scored; members are ranked by (m, pd), so tied values rank by day."""
+    w = windowed.PINBALL_WINDOW
+    days = [d for d in range(w + 7) if d != w + 3]
+    x = {d: d % 4 for d in days}  # many ties
+    daily = _frame(spark, [(d, x[d]) for d in days], "d int, x bigint")
+    got = _rows(
+        windowed._trailing_window(daily), "d", "pd", "y", "m", "r"
+    )
+    want = []
+    for d in days:
+        members = [p for p in range(d - w, d) if p in x]
+        if len(members) < w:
+            continue
+        ranked = sorted(members, key=lambda p: (x[p], p))
+        want += [(d, p, x[d], x[p], ranked.index(p) + 1) for p in members]
+    assert sorted({r[0] for r in want}) == [w, w + 1, w + 2]
+    assert got == sorted(want)
