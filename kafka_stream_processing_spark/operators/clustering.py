@@ -1,9 +1,14 @@
 """Near-dup clustering: connected components over the Jaccard pair graph.
 
 Pairwise near-dup detection (dedup.py) yields EDGES; deduplication needs
-CLUSTERS (each component keeps one canonical document).  Components are
-computed by iterative min-label propagation — the canonical Spark pattern
-for iterative graph algorithms:
+CLUSTERS (each component keeps one canonical document).  Components come
+from one of two kernels, both labelling a node with the minimum node id
+of its component; which applies depends on whether the edges carry a
+block key.
+
+Edges with no block key (the Jaccard pair graph, whose shingle joins
+link any two documents) go through iterative min-label propagation, the
+canonical Spark pattern for iterative graph algorithms:
 
     label(v) ← min(label(v), min over neighbors(label(u)))   until fixpoint
 
@@ -18,6 +23,12 @@ is diameter-bounded — near-dup components are short chains, so a handful of
 rounds; a hard cap turns pathological graphs into an explicit error rather
 than a hang.
 
+Edges produced by a blocked equi-join (entity resolution's brand blocks)
+never cross a block, so neither does a component: ``_blocked_components``
+hash-partitions the edges on the block key and closes each partition's
+components in one vectorized pandas call.  That is a lazy plan with one
+shuffle, no checkpoint, no driver round trip and no round cap.
+
 Scale: the propagated state is (doc_id, label) pairs — 16 bytes/doc —
 and only documents that appear in at least one near-dup pair enter the
 graph at all (at 100 TB that's a small fraction of the corpus).
@@ -27,6 +38,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -46,12 +59,16 @@ from kafka_stream_processing_spark.operators.similarity import (
     dist2_exact,
 )
 from kafka_stream_processing_spark.registry import register
+from kafka_stream_processing_spark.sources.tables import fanout, table
 
 MAX_ITERATIONS = 15
 #: Min-label rounds per checkpoint, i.e. per Spark action.  MAX_ITERATIONS
-#: must stay a multiple of it, or the cap moves.  On the sf0.01
-#: entity-resolution pass (6 rounds) 2 hops per action cost 35 jobs, 3
-#: cost 30-31 and 4 cost 32-33; 3 was also the fastest.
+#: must stay a multiple of it, or the cap moves.  On dedup_cluster_components
+#: at sf0.01 (4 vCPUs, 10 warm runs each, order alternating) 1 hop per
+#: action cost 22 jobs and a median 1.11 s, 3 cost 22 jobs and 1.16 s, 5
+#: cost 24-25 jobs and 1.30 s; 2 and 4, which would move the cap, cost 19
+#: and 23-24 jobs.  No divisor of the cap beat 3 beyond the run-to-run
+#: spread (0.9-1.3 s), so 3 stays.
 _HOPS_PER_ACTION = 3
 
 
@@ -101,6 +118,57 @@ def connected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {MAX_ITERATIONS} iterations"
+    )
+
+
+def _blocked_components(
+    edges: DataFrame, block: str, src: str, dst: str
+) -> DataFrame:
+    """Connected components of an undirected edge list whose edges never
+    cross a block: every node has one ``block`` value, so a component
+    lies inside one block.  Returns (node, label) for every node on an
+    edge, label = the minimum node id of its component (the same labels
+    as ``connected_components``).  Ids are longs.
+
+    The edges are hash-repartitioned on ``block``: by column, never
+    ``rebalance``, because AQE merges whole shuffle partitions but never
+    splits one key's rows, so each partition holds whole blocks.  One
+    ``mapInPandas`` call per partition then closes its components in
+    numpy: every root hooks onto the smallest root across its edges,
+    and pointer jumping flattens the trees until each label is a root.
+    A label only ever falls to a smaller node of the same component,
+    so the loop ends at the exact minimum; it needs no round cap."""
+
+    def close(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        e = pd.concat(frames)
+        a, b = e[src].to_numpy("int64"), e[dst].to_numpy("int64")
+        nodes, ends = np.unique(np.concatenate((a, b)), return_inverse=True)
+        u, v = np.split(ends, 2)
+        # Labels index the sorted ``nodes``, so the smallest index is the
+        # smallest id; every label is a root at the top of the loop.
+        label = np.arange(len(nodes))
+        while True:
+            lu, lv = label[u], label[v]
+            cross = lu != lv
+            if not cross.any():
+                break
+            np.minimum.at(
+                label, np.maximum(lu, lv)[cross], np.minimum(lu, lv)[cross]
+            )
+            while True:
+                jumped = label[label]
+                if np.array_equal(jumped, label):
+                    break
+                label = jumped
+        yield pd.DataFrame({"node": nodes, "label": nodes[label]})
+
+    return (
+        edges.repartition(block)
+        .select(src, dst)
+        .mapInPandas(close, "node long, label long")
     )
 
 
@@ -190,8 +258,6 @@ def dedup_pipeline_keep_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup subgraph; the final audit joins the (doc_id, cluster_id)
     labels — a table the size of the duplicate set, broadcastable at any
     realistic dup rate — back to a single scan of documents."""
-    from kafka_stream_processing_spark.sources.tables import fanout, table
-
     edges = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(edges, "doc_a", "doc_b")
     d = fanout(table(spark, sf_dir, "documents"))
@@ -654,25 +720,26 @@ def dedup_entity_resolution_parts(
     as one operator: blocked fuzzy matching (dedup_fuzzy_blocked_names'
     kernel, reused verbatim: brand-blocked equi-join + bounded edit
     distance ≤ 3) emits the match edges, min-label connected components
-    (the shared iterative kernel) transitively closes them — A~B and
-    B~C merge even when A,C differ by 6 edits, exactly the closure
-    pairwise matching cannot express — and every part is assigned its
-    cluster's canonical survivor (min key), singletons included.  This
+    (the blocked kernel) transitively close them — A~B and B~C merge
+    even when A,C differ by 6 edits, exactly the closure pairwise
+    matching cannot express — and every part is assigned its cluster's
+    canonical survivor (min key), singletons included.  This
     is the master-data-management dedup shape: match → cluster →
     golden-record election.
 
-    Scale: the match join is Σ_block(block²) (the blocking knob), the
-    closure iterates on the EDGE LIST only (cluster diameters are small
-    for edit-distance graphs, so min-label converges in a handful of
-    rounds, three per localCheckpoint, each group one Spark action that
-    also counts the convergence flag), and the final assignment is one
-    left join of the part table against the component labels plus one
-    window count per canonical key for the cluster size — bodies
-    shuffle once."""
-    from kafka_stream_processing_spark.sources.tables import table
-
-    edges = dedup_fuzzy_blocked_names(spark, sf_dir).select("key_a", "key_b")
-    labels = connected_components(edges, "key_a", "key_b").select(
+    Scale: the match join is Σ_block(block²) (the blocking knob).
+    Every match edge joins two parts of one brand, so no component
+    crosses a brand block and the closure never needs a round that
+    crosses blocks: ``_blocked_components`` shuffles the edges once by
+    brand and closes each partition's blocks in one pandas call, whose
+    memory is that partition's edges (16 bytes each, Σ block² bounds
+    their count).  The final assignment is one left join of the part
+    table against the component labels plus one window count per
+    canonical key for the cluster size — bodies shuffle once.  The whole
+    result is one lazy plan: building it runs no Spark job, and the
+    caller's action runs it."""
+    edges = dedup_fuzzy_blocked_names(spark, sf_dir)
+    labels = _blocked_components(edges, "p_brand", "key_a", "key_b").select(
         F.col("node").alias("p_partkey"), F.col("label").alias("canonical")
     )
     parts = table(spark, sf_dir, "part").select("p_partkey")
@@ -765,8 +832,6 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     coreset seeding, and each pass's shuffle carries one row per
     partition after partial max).  The K collected rows are scalars —
     no data returns to the driver beyond the chosen ids."""
-    from kafka_stream_processing_spark.sources.tables import fanout, table
-
     v = (
         fanout(table(spark, sf_dir, "embeddings"))
         .select(
@@ -830,8 +895,6 @@ def _pca_load_centered(spark: SparkSession, sf_dir: str):
     """Load the embedding corpus (cast double, checkpointed) plus the
     per-dimension mean vector and row count — the shared setup of every
     power-iteration variant."""
-    from kafka_stream_processing_spark.sources.tables import table
-
     emb = table(spark, sf_dir, "embeddings").select(
         F.transform(
             F.col("embedding"), lambda e: e.cast("double")
